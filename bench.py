@@ -12,6 +12,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
@@ -154,9 +155,13 @@ def main() -> None:
     # the one-line stdout contract can never outgrow the driver's capture
     # buffer (round 10's line was truncated from the front and failed to
     # parse — r11 verdict item 2). The side file is the same payload the
-    # line used to carry; tools/bench_diff.py reads either.
+    # line used to carry; tools/bench_diff.py reads either, and pairs the
+    # side file with a line only when both carry this run's ``run_id``.
+    run_id = uuid.uuid4().hex
     with open(os.path.join(REPO_ROOT, "BENCH_PLANS.json"), "w") as f:
-        json.dump({"sf": sf, "plans": plans}, f, indent=1, sort_keys=True)
+        json.dump(
+            {"sf": sf, "run_id": run_id, "plans": plans}, f, indent=1, sort_keys=True
+        )
 
     total = round(sum(timings.values()), 3)
     line = json.dumps(
@@ -170,12 +175,16 @@ def main() -> None:
             "ingest_sec": ingest_sec,
             "jobs": jobs,
             "sf": sf,
+            "run_id": run_id,
         }
     )
-    spark.stop()
-    # the contract line prints LAST (post-stop), so no late JVM/log output
-    # can land after it in the driver's captured tail
-    print(line)
+    try:
+        spark.stop()
+    finally:
+        # the contract line prints LAST (post-stop), so no late JVM/log
+        # output can land after it in the driver's captured tail — and it
+        # prints even when stop() raises during JVM teardown
+        print(line)
 
 
 if __name__ == "__main__":

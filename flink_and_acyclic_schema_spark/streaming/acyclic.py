@@ -112,6 +112,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .topk import _run_parallel
+
 WEIGHT = "weight"
 BUCKET = "_bucket"  # reserved: hash-bucket partition column of bucketed state
 
@@ -661,41 +663,11 @@ class IncrementalAcyclicQuery:
         # rewrite/compaction, an UPPER BOUND while log-structured segments
         # accumulate — appends add their row count, nets only shrink it).
         # Rides the state write's observe() for free and feeds the
-        # cost-based probe-pruning gate (_prune_worthwhile, optimization
-        # r11): pruning a state whose full scan is cheaper than the probe's
-        # two driver round-trips is a net loss at any scale.
+        # cost-based probe-pruning gate (_prune_worthwhile against
+        # PRUNE_MIN_STATE_ROWS, optimization r11): pruning a state whose full
+        # scan is cheaper than the probe's two driver round-trips is a net
+        # loss at any scale.
         self._state_rows: dict[str, int] = {}
-        self.prune_min_state_rows = int(
-            os.environ.get("SPARK_GRAFT_PRUNE_MIN_STATE_ROWS", "65536")
-        )
-        # optimization r12 (guide §2.3/§2.4): merge-mode commits of a bucketed
-        # relation route around the full-state shuffle when the tracked state
-        # is large and the batch's netted delta is provably small — see
-        # _merge_write. min_state_rows gates engagement: the delta path costs
-        # two extra bounded jobs (the netted-delta checkpoint and its count),
-        # which a full-state exchange only outweighs once the state is
-        # multi-million rows (measured at sf0.1: probing 100-600 k-row states
-        # cost ~3 s across the bench stacks for shuffles that cost less); at
-        # 100 TB every bucketed state worth the detour is far past 4M rows.
-        # max_rows bounds the broadcast of the netted delta's keys.
-        # SPARK_GRAFT_MERGE_DELTA_MIN_STATE_ROWS=0 forces the delta path
-        # wherever state is nonempty (the A/B + plan-evidence escape hatch).
-        self.merge_delta_min_state_rows = int(
-            os.environ.get("SPARK_GRAFT_MERGE_DELTA_MIN_STATE_ROWS", str(1 << 22))
-        )
-        self.merge_delta_max_rows = int(
-            os.environ.get("SPARK_GRAFT_MERGE_DELTA_MAX_ROWS", str(1 << 20))
-        )
-        # rel -> (last netted-delta row count, state rows at that probe) —
-        # in-memory only. The delta path must materialize the netted delta
-        # BEFORE it can size-gate the broadcast, so a stream whose deltas are
-        # persistently too big would pay that probe every batch just to fall
-        # back; the remembered size skips the probe while it stays hopeless,
-        # and a ≥2x growth of the state since the probe re-engages it (the
-        # ratio can only have improved). The exact post-materialization count
-        # still decides the broadcast, so a stale "small" can never admit an
-        # oversized one. Resume re-probes once.
-        self._delta_rows: dict[str, tuple[int, int]] = {}
         # last persisted emitted-changelog {"batch": id, "path": dir} — lets a
         # crash-replayed batch hand downstream engines the exact view delta
         self._emitted: dict | None = None
@@ -709,21 +681,6 @@ class IncrementalAcyclicQuery:
         self.last_profile: dict[str, dict] = {}
         self._phase_seq = 0
         self._profile_lock = threading.Lock()
-        # optimization round r11 (guide §2.6 "overlap independent jobs"):
-        # a batch's per-relation state commits (and the aggregate/histogram
-        # commits) are INDEPENDENT actions — each reads only pre-batch
-        # segments (deleted strictly post-manifest) plus its own delta and
-        # writes its own versioned path — so they run concurrently from a
-        # bounded driver thread pool instead of serializing their job
-        # latencies. At bench scale that overlaps the 4-6 write jobs of a
-        # Q10-shaped batch; on a cluster the same overlap back-fills
-        # executors idled by another write's straggler tail. Pool width is
-        # a conf knob (2-3 in flight is typically plenty — guide §2.6);
-        # SPARK_GRAFT_COMMIT_PARALLELISM=1 restores strictly sequential
-        # commits (the equivalence-test escape hatch).
-        self.commit_parallelism = int(
-            os.environ.get("SPARK_GRAFT_COMMIT_PARALLELISM", "4")
-        )
         # engine-unique job-group namespace: two instrumented engines in one
         # JVM (e.g. a profiler's repeat run) would otherwise reuse gids and
         # getJobIdsForGroup would attribute BOTH engines' jobs to each
@@ -731,7 +688,7 @@ class IncrementalAcyclicQuery:
         # round 10/11: telescoped ΔJ over tree-shaped virtual trees
         # (_factored_chain) — shares the new-relation joins across delta
         # terms. On by default (exact by distributivity); False forces the
-        # per-term path (the equivalence-test escape hatch). The flag is
+        # per-term path the equivalence tests compare against. The flag is
         # plan-shape-only (results are identical either way) but it IS
         # persisted in the manifest so resume=True keeps an operator's
         # explicit opt-out instead of silently re-enabling the factored
@@ -1132,6 +1089,9 @@ class IncrementalAcyclicQuery:
     # distinct probe keys above this are not pushed into the scan (bucket
     # pruning still applies); keeps the per-term driver read bounded
     KEY_PUSHDOWN_CAP = 1024
+    # bucketed states at or below this many rows skip probe pruning: the
+    # full bucket scan is cheaper than the probe's two driver round-trips
+    PRUNE_MIN_STATE_ROWS = 1 << 16
 
     def _prune_worthwhile(self, rel: str) -> bool:
         """Cost-based gate for probe pruning (optimization r11; guide §1.2
@@ -1146,12 +1106,11 @@ class IncrementalAcyclicQuery:
         ENGAGED — at 100 TB every state worth pruning is far past the
         threshold, so the skip can only fire where it wins. Skipping is
         exact: pruning is a superset restriction and the unpruned scan is
-        the trivial superset. ``SPARK_GRAFT_PRUNE_MIN_STATE_ROWS=0`` restores
-        unconditional pruning (the A/B escape hatch)."""
+        the trivial superset. The threshold is ``PRUNE_MIN_STATE_ROWS``."""
         if not self._segments.get(rel):
             return False  # no committed state: nothing a probe could prune
         n = self._state_rows.get(rel)
-        return n is None or n > self.prune_min_state_rows
+        return n is None or n > self.PRUNE_MIN_STATE_ROWS
 
     def _probe_pruning(
         self,
@@ -1529,7 +1488,7 @@ class IncrementalAcyclicQuery:
         # branch whose suffix fails to resolve keeps the whole tree on the
         # per-term fallback, exactly as the inline form did.
         delta_is = [i for i in range(len(path)) if path[i].name in term_delta]
-        built = self._parallel_map(
+        built = _run_parallel(
             [lambda i=i: build_branch_a(i) for i in delta_is]
         )
         branch_as: dict[int, DataFrame | None] = dict(zip(delta_is, built))
@@ -1713,67 +1672,19 @@ class IncrementalAcyclicQuery:
         overlaps another's instead of serializing. Thunks must be mutually
         independent: they may only read pre-batch state files (two-phase
         commit keeps those on disk until post-manifest cleanup) and write
-        their own versioned paths. ``inheritable_thread_target`` propagates
-        the calling thread's JVM-local properties (the stream's job group /
-        description), so attribution and cancellation behave exactly as in
-        the sequential form; ``_phase`` re-scopes per thread. Errors
+        their own versioned paths. ``_phase`` re-scopes per thread. Errors
         propagate after all tasks settle — the caller's snapshot/restore
         retry discipline is unchanged (versioned paths make a failed
         batch's partial writes plain overwrites on retry)."""
-        if self.commit_parallelism <= 1 or len(tasks) <= 1:
-            for name, fn in tasks:
+
+        def scoped(name: str, fn: Callable[[], None]) -> Callable[[], None]:
+            def run() -> None:
                 with self._phase(name):
                     fn()
-            return
-        from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+            return run
 
-        def run(name: str, fn: Callable[[], None]) -> None:
-            with self._phase(name):
-                fn()
-
-        target = inheritable_thread_target(run)
-        with ThreadPoolExecutor(
-            max_workers=min(self.commit_parallelism, len(tasks))
-        ) as pool:
-            futures = [pool.submit(target, name, fn) for name, fn in tasks]
-        err = None
-        for f in futures:
-            e = f.exception()
-            if err is None and e is not None:
-                err = e
-        if err is not None:
-            raise err
-
-    def _parallel_map(self, fns: list) -> list:
-        """Ordered results of independent thunks, run concurrently from the
-        bounded commit pool (guide §2.6). Used for term construction, whose
-        eager probe-pruning collects / partial-join materializations are
-        independent across delta relations — submitted from worker threads
-        they overlap instead of serializing their driver round-trips.
-        ``inheritable_thread_target`` propagates the submitting thread's JVM
-        local properties, so jobs stay attributed to the enclosing phase.
-        Errors propagate after all thunks settle."""
-        if self.commit_parallelism <= 1 or len(fns) <= 1:
-            return [fn() for fn in fns]
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        targets = [inheritable_thread_target(fn) for fn in fns]
-        with ThreadPoolExecutor(
-            max_workers=min(self.commit_parallelism, len(fns))
-        ) as pool:
-            futures = [pool.submit(t) for t in targets]
-        err = None
-        for f in futures:
-            e = f.exception()
-            if err is None and e is not None:
-                err = e
-        if err is not None:
-            raise err
-        return [f.result() for f in futures]
+        _run_parallel([scoped(name, fn) for name, fn in tasks])
 
     def process_batch(
         self,
@@ -2096,7 +2007,7 @@ class IncrementalAcyclicQuery:
                     # their eager probe collects concurrently, keeping the
                     # union's term order deterministic (guide §2.6)
                     terms.extend(
-                        self._parallel_map(
+                        _run_parallel(
                             [
                                 lambda i=i, ri=ri: build_term(i, ri)
                                 for i, ri in enumerate(vlist)
@@ -2315,12 +2226,7 @@ class IncrementalAcyclicQuery:
         if self.compact_every == 1:
             nxt = self._version[rel] + 1
             p = self._path(rel, nxt)
-            n_rows, wrote = self._merge_write(rel, merged, delta, p, net_fn)
-            if not wrote:
-                # the batch's netted delta was EMPTY: the post-batch net
-                # multiset IS the pre-batch one — keep the live segments
-                # (no write, no version bump, no cleanup; r12)
-                return
+            n_rows = self._net_write(rel, merged, p, net_fn)
             if n_rows is not None:
                 self._state_rows[rel] = n_rows  # exact: full rewrite
             self._version[rel] = nxt
@@ -2369,104 +2275,6 @@ class IncrementalAcyclicQuery:
                 }
             self._rebucket_written(rel, cp, cleanup, n_rows=n_rows)
 
-    # delta path only when the netted delta is at most 1/RATIO of the
-    # tracked state rows: at parity the two extra map-side state scans and
-    # the checkpoint job cost about what the full-union shuffle saves
-    MERGE_DELTA_STATE_RATIO = 4
-
-    def _merge_write(
-        self, rel: str, merged: DataFrame | None, delta: DataFrame, path: str, net_fn=None
-    ) -> tuple[int | None, bool]:
-        """Write one merge-mode state version. Optimization r12 (guide
-        §2.3 "shuffle keys/metadata instead of payloads" + §3.1): the
-        classic form shuffles the FULL pre-batch state through the fused
-        net+write exchange every batch — the last known full-state shuffle
-        per batch at scale. When the tracked state is large
-        (``merge_delta_min_state_rows``) and the batch's netted delta is
-        small enough to broadcast (``merge_delta_max_rows``, and at most
-        state/RATIO), route rows instead of shuffling them:
-
-        1. net the delta alone — the commit's ONE delta-sized exchange
-           (repartitioned by ``_bucket`` so the groupBy's own exchange is
-           elided, exactly like the full-union form);
-        2. split the old state MAP-SIDE on key membership in the broadcast
-           delta keys (null-safe: the net's groupBy treats NULL keys as
-           equal, so the join must too): untouched rows flow scan→write
-           with no exchange, touched rows (≤ one netted row per delta key)
-           join the delta in a second delta-sized net.
-
-        Exact by linearity: every pre-batch state row lands in exactly one
-        branch, and net(touched ∪ Δnet) = the merged rows the full-union
-        form would produce for those keys. The write itself (O(state) IO)
-        is merge mode's defining cost — the log-structured regime, not this
-        path, is the O(Δ)-IO answer; this removes the full-state NETWORK
-        pass. An empty netted delta skips the rewrite outright
-        (``wrote=False``: the post-batch state is the pre-batch state).
-
-        Falls back to the classic full-union net+write (reusing the already
-        -netted delta) when the gate disengages; non-bucketed relations
-        (agg, hist) and custom ``net_fn`` reductions always take the
-        classic path. Returns (observed written rows | None, wrote)."""
-        n_state = self._state_rows.get(rel)
-        r = self._by_name.get(rel)
-        if (
-            r is None
-            or r.buckets == 0
-            or delta is None
-            or net_fn is not None
-            or n_state is None
-            or n_state == 0
-            or n_state < max(self.merge_delta_min_state_rows, 1)
-            # a cross-regime resume (log-structured manifest reopened with
-            # compact_every=1) leaves MULTIPLE raw segments: merge-mode reads
-            # skip the lazy net, so the first commit must net everything —
-            # the delta path's untouched branch would pass raw rows through
-            or len(self._segments.get(rel, ())) != 1
-        ):
-            return self._net_write(rel, merged, path, net_fn), True
-        force = self.merge_delta_min_state_rows == 0  # A/B escape hatch
-        last = self._delta_rows.get(rel)
-        if (
-            not force
-            and last is not None
-            and n_state < 2 * last[1]  # state hasn't doubled since the probe
-            and (
-                last[0] > self.merge_delta_max_rows
-                or last[0] * self.MERGE_DELTA_STATE_RATIO > n_state
-            )
-        ):
-            # the last probed delta was hopeless for this state size — skip
-            # the probe outright this batch (classic write, no extra jobs)
-            return self._net_write(rel, merged, path, net_fn), True
-        dnet = self._conform(
-            rel,
-            self._net(
-                self._conform(rel, delta).repartition(
-                    self._buckets[rel], F.col(BUCKET)
-                )
-            ),
-        ).localCheckpoint()
-        n_delta = dnet.count()  # over the checkpoint's cached blocks
-        self._delta_rows[rel] = (n_delta, n_state)
-        if n_delta == 0:
-            return None, False
-        old = self._read_paths(rel, self._segments.get(rel, []))
-        if n_delta > self.merge_delta_max_rows or (
-            not force and n_delta * self.MERGE_DELTA_STATE_RATIO > n_state
-        ):
-            return self._net_write(rel, old.unionByName(dnet), path, net_fn), True
-        keys = [c for c in dnet.columns if c != WEIGHT]
-        st, ck = old.alias("_st"), F.broadcast(dnet.select(*keys).alias("_ck"))
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(f"_st.{k}").eqNullSafe(F.col(f"_ck.{k}"))
-        untouched = st.join(ck, cond, "left_anti")
-        touched = st.join(ck, cond, "left_semi")
-        out = self._conform(rel, untouched).unionByName(
-            self._conform(rel, self._net(touched.unionByName(dnet)))
-        )
-        return self._write_state(rel, out, path, pre_partitioned=True), True
-
     def _net_write(self, rel: str, df: DataFrame, path: str, net_fn=None) -> int | None:
         """Net a (possibly unmerged) weighted multiset and write it as one
         state version — in ONE full-state shuffle (round 9). A bucketed
@@ -2504,7 +2312,7 @@ class IncrementalAcyclicQuery:
         return F.floor(ts / F.lit(w))
 
     def _rebucket_written(
-        self, rel: str, path: str, cleanup: list[str], n_rows: int | None = None
+        self, rel: str, path: str, cleanup: list[str], n_rows: int
     ) -> None:
         """Adaptive bucket-count growth, applied ONLY where state was just
         fully rewritten (merge-mode write / log-structured compaction), so
@@ -2519,20 +2327,14 @@ class IncrementalAcyclicQuery:
         form re-executed the whole merge plan in a ``df.count()``, the
         round-9 form replaced that with a footer-metadata read that was
         cheap but still one scheduled job per bucketed relation per
-        merge-mode batch. ``n_rows=None`` (callers without an observed
-        write) falls back to the footer read. Growth itself then rewrites
-        the materialized files once — rare, amortized, and reading parquet
-        beats re-running the merge."""
+        merge-mode batch. Growth itself then rewrites the materialized files
+        once — rare, amortized, and reading parquet beats re-running the
+        merge."""
         r = self._by_name.get(rel)
         if r is None or r.bucket_target_rows <= 0 or r.buckets == 0:
             return
-        n = (
-            n_rows
-            if n_rows is not None
-            else self.spark.read.parquet(path).count()  # footer metadata only
-        )
         want = r.buckets
-        while n / want > r.bucket_target_rows:
+        while n_rows / want > r.bucket_target_rows:
             want *= 2
         want = max(want, self._buckets[rel])  # monotone under compaction churn
         if want == self._buckets[rel]:

@@ -65,10 +65,26 @@ WEIGHT = "weight"
 BUCKET = "_bucket"  # reserved shard column, engine streaming/acyclic.py
 
 
-def _parallel_writes() -> bool:
-    """Shared knob with the engine's commit pool (guide §2.6):
-    SPARK_GRAFT_COMMIT_PARALLELISM=1 restores strictly sequential writes."""
-    return int(os.environ.get("SPARK_GRAFT_COMMIT_PARALLELISM", "4")) > 1
+def _run_parallel(thunks: list) -> list:
+    """Ordered results of independent thunks, run concurrently from one
+    bounded driver thread pool (width ``min(4, len(thunks))``; guide §2.6)
+    so their Spark jobs' scheduling/commit latencies overlap instead of
+    serializing. The one pool behind the engine's state commits and term
+    builds and GroupedTopKView's shard writes. ``inheritable_thread_target`` propagates the
+    submitting thread's JVM-local properties (job group / description), so
+    attribution and cancellation behave as on the calling thread. Every
+    thunk settles before the first error (in submission order) is raised;
+    one thunk runs inline."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrapped = [inheritable_thread_target(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=min(4, len(wrapped))) as pool:
+        futures = [pool.submit(t) for t in wrapped]
+    return [f.result() for f in futures]
 
 
 def _publish_manifest(manifest_path: str, data: dict, adopt=None, gc=None) -> None:
@@ -1059,18 +1075,7 @@ class GroupedTopKView:
         thunks = [lambda df=df, name=name: _write_shards(df, name) for df, name, _ in targets]
         if pre_topk is not None:
             thunks.append(_write_emit)
-        if _parallel_writes():
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            wrapped = [inheritable_thread_target(t) for t in thunks]
-            with ThreadPoolExecutor(max_workers=len(wrapped)) as pool:
-                futures = [pool.submit(t) for t in wrapped]
-            results = [f.result() for f in futures]
-        else:
-            results = [t() for t in thunks]
-        paths = results[:2]
+        paths = _run_parallel(thunks)[:2]
         written = []
         for path, (_, _, mp) in zip(paths, targets):
             present = {
@@ -1130,9 +1135,8 @@ class GroupedTopKView:
             return None
         # the emitted dir is manifest-held (self._emitted after adopt), so
         # the GC above preserved it — replay/resume read it via emitted_df().
-        # The live return is the persist()ed frame the write just filled
-        # (r12); the previous batch's handoff frame is past its consumption
-        # window and unpersisted here.
+        # The live return is the parquet read-back of the emit dir just
+        # written: the same replay frame, no in-memory handoff.
         return self._spark.read.parquet(epath)
 
     def _maybe_grow(self) -> None:

@@ -138,7 +138,7 @@ def test_bucket_pruning_reaches_the_state_scan(spark, tmp_path):
     eng = _engine(spark, tmp_path, spec)
     # the r11 cost-based gate would (correctly) skip pruning a 40-row state;
     # this test pins the pruning MACHINERY, so engage it unconditionally
-    eng.prune_min_state_rows = 0
+    eng.PRUNE_MIN_STATE_ROWS = 0
     _feed(spark, eng, BATCHES[:1])  # seed 40-order state across buckets
     # one-order delta: its l_key probe set covers exactly one bucket
     delta = eng._conform(
@@ -189,7 +189,7 @@ def test_transitive_pruning_reaches_two_hop_state(spark, tmp_path):
         measures={"qty": lambda: F.col("l_qty")},
     )
     eng = _engine(spark, tmp_path, spec)
-    eng.prune_min_state_rows = 0  # pin the pruning machinery (r11 gate)
+    eng.PRUNE_MIN_STATE_ROWS = 0  # pin the pruning machinery (r11 gate)
     eng.process_batch(
         {
             "customer": spark.createDataFrame(CUST, CUST_SCHEMA),
@@ -499,7 +499,7 @@ def test_multicolumn_probe_key_pushdown(spark, tmp_path):
 
     bucketed = {"buckets": 8, "bucket_key": ("l_key", "l_cust")}
     eng = _engine(spark, tmp_path, spec(bucketed))
-    eng.prune_min_state_rows = 0  # pin the pruning machinery (r11 gate)
+    eng.PRUNE_MIN_STATE_ROWS = 0  # pin the pruning machinery (r11 gate)
     eng.process_batch(
         {
             "orders": spark.createDataFrame(
@@ -646,8 +646,8 @@ def test_adaptive_rebucket_log_structured_only_at_compaction(spark, tmp_path):
 def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
     """The r11 cost-based gate: probe pruning (two bounded driver jobs per
     probed state) is SKIPPED against empty state (batch 0 — nothing to
-    prune) and against state below ``prune_min_state_rows`` (the full scan
-    is cheaper than the round-trips), while a ``prune_min_state_rows=0``
+    prune) and against state below ``PRUNE_MIN_STATE_ROWS`` (the full scan
+    is cheaper than the round-trips), while a ``PRUNE_MIN_STATE_ROWS = 0``
     twin prunes as before — and both produce identical results, because
     skipping is the trivial superset restriction."""
     import flink_and_acyclic_schema_spark.streaming.acyclic as am
@@ -676,7 +676,7 @@ def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
 
     calls["n"] = 0
     pruning = _engine(spark, tmp_path, spec)
-    pruning.prune_min_state_rows = 0
+    pruning.PRUNE_MIN_STATE_ROWS = 0
     want = _feed(spark, pruning, BATCHES)
     assert calls["n"] > 0  # the unconditional twin probes
     assert got == want and got  # identical, non-trivial results
@@ -707,49 +707,49 @@ def test_state_rows_tracking_and_resume(spark, tmp_path):
     assert resumed._state_rows["lineitem"] == true_rows
 
 
-def test_merge_delta_path_equivalent_and_engaged(spark, tmp_path):
-    """Merge-mode commits of a bucketed relation route around the full-state
-    shuffle once state exists (r12 ``_merge_write``). Forced on via the =0
-    escape hatch, the delta path must (a) produce results identical to the
-    classic full-union engine — updates, deletes and cancellations included,
-    (b) actually bypass ``_net_write`` for the bucketed relation after the
-    first commit, (c) keep the written state NETTED (merge-mode reads skip
-    the lazy net, so a delete must physically cancel its state row), and
-    (d) skip the rewrite outright when the batch's delta nets to zero."""
+def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
+    """Merge-mode state is always NETTED (merge-mode reads skip the lazy
+    net, so a delete must physically cancel its state row) — also after a
+    cross-regime resume: a log-structured engine leaves ONE raw appended
+    segment holding a duplicate-key row and a +1/-1 pair; reopened with
+    compact_every=1, its first commit on OTHER keys must net that segment,
+    keep ``_state_rows`` exact, and answer like a merge-mode engine fed the
+    same batches from the start."""
     spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
-    classic = _feed(spark, _engine(spark, tmp_path, spec), BATCHES)
-    eng = _engine(spark, tmp_path, spec)
-    eng.merge_delta_min_state_rows = 0  # force wherever state is nonempty
-    calls: list[str] = []
-    orig = eng._net_write
-
-    def spy(rel, df, path, net_fn=None):
-        calls.append(rel)
-        return orig(rel, df, path, net_fn)
-
-    eng._net_write = spy
-    got = _feed(spark, eng, BATCHES)
-    assert got == classic and got
-    # batch 0 (no state yet) takes the classic path; batch 1's lineitem
-    # commit takes the delta path — no second classic call. Non-bucketed
-    # relations (orders, agg) stay classic every batch.
-    assert calls.count("lineitem") == 1
-    assert calls.count("orders") == 2
+    b0 = (
+        [(o, o % 4, 1) for o in range(8)],
+        # (1, 2) twice: a duplicate-key row; (30, 3) +1/-1: a zero-net pair
+        [(o, o + 1, 1) for o in range(8)] + [(1, 2, 1), (30, 3, 1), (30, 3, -1)],
+    )
+    b1 = ([(20, 1, 1)], [(20, 5, 1), (21, 6, 1)])
+    state_dir = str(tmp_path / "cross_regime")
+    log = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
+    _feed(spark, log, [b0])
+    assert [p.rsplit("/", 1)[-1] for p in log._segments["lineitem"]] == [
+        "lineitem_seg0"
+    ]
+    raw = log._read_state("lineitem")
+    assert raw.count() > raw.dropDuplicates(["l_key", "l_qty"]).count()
+    eng = IncrementalAcyclicQuery(
+        spark, state_dir, spec, compact_every=1, resume=True
+    )
+    eng.process_batch(
+        {
+            "orders": spark.createDataFrame(b1[0], ORD_SCHEMA),
+            "lineitem": spark.createDataFrame(b1[1], LI_SCHEMA),
+        },
+        batch_id=1,
+    )
     st = eng._read_state("lineitem")
     key_cols = [c for c in st.columns if c != "weight"]
-    assert st.count() == st.dropDuplicates(key_cols).count()  # netted
-    # the batch-1 delete (3, 4, -1) must have canceled batch 0's (3, 4, 1)
-    assert st.filter("l_key = 3 AND l_qty = 4").count() == 0
-    assert eng._state_rows["lineitem"] == st.count()  # observe stays exact
-    # (d) zero-net delta: no write, no version bump, segments untouched
-    v0, segs0 = eng._version["lineitem"], list(eng._segments["lineitem"])
-    eng.process_batch(
-        {"lineitem": spark.createDataFrame([(50, 1, 1), (50, 1, -1)], LI_SCHEMA)},
-        batch_id=2,
-    )
-    assert eng._version["lineitem"] == v0
-    assert eng._segments["lineitem"] == segs0
-    assert sorted(tuple(r) for r in eng.result().collect()) == classic
+    assert st.count() == st.dropDuplicates(key_cols).count()  # unique keys
+    assert st.filter("weight = 0").count() == 0
+    assert st.filter("l_key = 30").count() == 0  # the +1/-1 pair canceled
+    assert st.filter("l_key = 1 AND l_qty = 2").first()["weight"] == 2
+    assert eng._state_rows["lineitem"] == st.count()
+    got = sorted(tuple(r) for r in eng.result().collect())
+    want = _feed(spark, _engine(spark, tmp_path, spec), [b0, b1])
+    assert got == want and got
 
 
 def test_state_rows_unknown_base_stays_unknown_across_appends(spark, tmp_path):

@@ -12,6 +12,7 @@ Exit code 1 if any plan shape changed (usable as a CI tripwire).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 
@@ -19,13 +20,25 @@ def _load(path: str) -> dict:
     doc = _load_raw(path)
     if "plans" not in doc:
         # r12: bench.py moved the bulky plan metrics out of the contract line
-        # into a side file so the line can never outgrow the driver's capture
-        import os
-
+        # into a side file so the line can never outgrow the driver's capture.
+        # The side file is overwritten by every run, so it is attached only
+        # when it records the SAME run (run_id + sf) — grafting one payload
+        # onto two documents would make plan regressions vanish from the diff
         side = os.path.join(os.path.dirname(os.path.abspath(path)), "BENCH_PLANS.json")
         if os.path.exists(side):
             with open(side) as fh:
-                doc = {**doc, "plans": json.load(fh).get("plans", {})}
+                plans_doc = json.load(fh)
+            same_run = doc.get("run_id") is not None and all(
+                plans_doc.get(k) == doc.get(k) for k in ("run_id", "sf")
+            )
+            if same_run:
+                doc = {**doc, "plans": plans_doc.get("plans", {})}
+            else:
+                print(
+                    f"warning: {side} records a different run than {path}; "
+                    "diffing it without plans",
+                    file=sys.stderr,
+                )
     return doc
 
 
