@@ -555,7 +555,9 @@ class IncrementalAcyclicQuery:
     (each delta carries the relation's columns + a signed ``weight``); read
     the maintained result any time with ``result()``. Relations absent from a
     batch are treated as Δ=∅: their term is skipped and their state is not
-    rewritten — per-batch cost tracks the delta, not the schema.
+    rewritten — per-batch cost tracks the delta, not the schema. A relation
+    present with an EMPTY delta is skipped the same way once it has
+    committed state (see ``_skippable``), unless every delta is empty.
     """
 
     # process-cumulative count of virtual trees folded via the factored
@@ -1166,9 +1168,9 @@ class IncrementalAcyclicQuery:
         # duplicated FK deltas), so the exact attempt is kept there.
         # Round 10: the count is memoized per PROBE SOURCE (``rows_key``,
         # the delta relation for one-hop probes) — one scan-only job per
-        # relation per batch, not one per (delta, state) pair; the first
-        # count still doubles as the delta's lazy-localCheckpoint
-        # materialization, later pairs read the memo.
+        # relation per batch, not one per (delta, state) pair, and none at
+        # all where the batch's ingest job already counted the delta (the
+        # caller seeds the memo from it).
         if memo is not None and rows_key is not None:
             if rows_key not in memo:
                 memo[rows_key] = probe_df.count()
@@ -1686,6 +1688,60 @@ class IncrementalAcyclicQuery:
 
         _run_parallel([scoped(name, fn) for name, fn in tasks])
 
+    def _skippable(self, rel: str) -> bool:
+        """May an EMPTY delta of ``rel`` leave its state as it is? Only when
+        the relation has committed state that needs no rewrite: any live
+        state in log-structured mode (reads net lazily there), and in merge
+        mode a single netted ``_v`` version — merge-mode reads skip the net,
+        so a raw ``_seg`` left by a log-structured → merge resume must
+        still be netted by this batch's write."""
+        segs = self._segments.get(rel)
+        if not segs:
+            return False
+        return self.compact_every > 1 or segs == [self._path(rel, self._version[rel])]
+
+    def _ingest_counts(self, filt: Mapping[str, DataFrame]) -> dict[str, int]:
+        """Row count of every delta from ONE job: the lazily-checkpointed
+        deltas, each projected to a relation tag, union into a noop write
+        whose ``observe()`` counts rows per tag. The write materializes every
+        checkpoint on the way, so later consumers read the blocks."""
+        from pyspark.sql import Observation
+
+        names = list(filt)
+        tagged = reduce(
+            lambda a, b: a.unionByName(b),
+            [filt[n].select(F.lit(i).alias("_rel")) for i, n in enumerate(names)],
+        )
+        obs = Observation()
+        counts = [F.count_if(F.col("_rel") == i).alias(f"n{i}") for i in range(len(names))]
+        with self._phase("ingest"):
+            tagged.observe(obs, *counts).write.format("noop").mode("overwrite").save()
+        got = obs.get
+        return {n: int(got[f"n{i}"]) for i, n in enumerate(names)}
+
+    @staticmethod
+    def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+        """Eager localCheckpoint plus its row count, observed on the same
+        job (no extra count action)."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+        return out, int(obs.get["rows"])
+
+    def _broadcast_if_small(self, df: DataFrame, n_rows: int) -> DataFrame:
+        """Broadcast hint for a checkpointed frame of known row count. The
+        planner sees no statistics on a checkpoint (its size estimate is
+        ``defaultSizeInBytes``), so a join against it plans a sort-merge join
+        that AQE converts to a broadcast only after shuffling both sides.
+        This applies the planner's own rule — rows × (8 + the schema's
+        default row size) within ``spark.sql.autoBroadcastJoinThreshold`` —
+        to the size it cannot see."""
+        jdf = df._jdf
+        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+        size = n_rows * (8 + jdf.schema().defaultSize())
+        return F.broadcast(df) if 0 <= size <= limit else df
+
     def process_batch(
         self,
         deltas: Mapping[str, DataFrame],
@@ -1798,9 +1854,25 @@ class IncrementalAcyclicQuery:
             # delta relation, the presence gates, and the state write's
             # union — and without materialization every consumer re-scans
             # the source (for a streaming micro-batch, the parquet chunk).
-            # Lazy, so a relation whose delta no consumer executes (e.g.
-            # everything-filtered) never pays a job.
+            # Lazy, so the ingest count below materializes ALL deltas in one
+            # job; without it, each delta's first consumer does.
             filt[r.name] = self._conform(r.name, d).localCheckpoint(eager=False)
+
+        # skip empty deltas (Cquirrel: a relation without an update sends no
+        # delta down the tree): ONE ingest job counts every delta, and an
+        # empty one whose state needs no rewrite leaves the batch entirely —
+        # no ΔJ branch, no watermark read, no state commit. Exact: an empty
+        # delta contributes no term and no state change, and never advances
+        # a ttl watermark. An all-empty batch keeps the full path, so its
+        # top-k feed, emit_delta return and committed-batch count are as
+        # before.
+        counts: dict[str, int] = {}
+        if len(filt) >= 2 and any(self._skippable(n) for n in filt):
+            counts = self._ingest_counts(filt)
+            if any(counts.values()):
+                for name, n in counts.items():
+                    if n == 0 and self._skippable(name):
+                        del filt[name]
 
         # watermark advance + late-data drop (RelSpec.ttl): the watermark is
         # the running max event time over ingested deltas — ONE bounded 1-row
@@ -1959,7 +2031,15 @@ class IncrementalAcyclicQuery:
 
         anti_rels = tuple(r for r in rels if r.anti)
         terms: list[DataFrame] = []
-        bucket_memo: dict = {}
+        # the ingest counts are the one-hop probes' row counts wherever the
+        # term delta IS the ingested delta (not a gate's presence delta, not
+        # a ttl delta the watermark filtered and eviction extended)
+        bucket_memo: dict = {
+            ("rowcount", r.name): counts[r.name]
+            for r in rels
+            if r.name in counts and r.name in filt
+            and not (r.semi or r.anti) and r.ttl is None
+        }
         # term construction is NOT pure plan-building: the delta-first order
         # runs probe-pruning collects (bucket ids + capped key values per
         # bucketed state scan) and transitive partial-join localCheckpoints
@@ -2061,16 +2141,21 @@ class IncrementalAcyclicQuery:
             # of touched groups before any state file changes. Preserve-
             # padded rows can flip on a parent-only delta with no join rows,
             # so the preserved relation's delta keys count as touched too.
+            # agg_delta is grouped by group_by, so its keys are already
+            # distinct: only the preserve union needs a distinct of its own.
             with self._phase("join_fold"):
-                agg_delta = agg_delta.localCheckpoint()
+                agg_delta, n_touched = self._counted_checkpoint(agg_delta)
             if gb:
                 touched_groups = agg_delta.select(*gb)
                 if self.spec.preserve is not None and self.spec.preserve in filt:
                     touched_groups = touched_groups.unionByName(
                         filt[self.spec.preserve].select(*gb)
                     )
-                with self._phase("touched"):
-                    touched_groups = touched_groups.distinct().localCheckpoint()
+                    with self._phase("touched"):
+                        touched_groups, n_touched = self._counted_checkpoint(
+                            touched_groups.distinct()
+                        )
+                touched_groups = self._broadcast_if_small(touched_groups, n_touched)
 
         # two-phase commit: every write of this batch executes BEFORE any
         # superseded files are deleted — the agg write's lazy plan still scans
@@ -2181,7 +2266,8 @@ class IncrementalAcyclicQuery:
                 epath = os.path.join(self.state_dir, f"emitted_b{batch_id}")
                 with self._phase("emitted_write"):
                     changelog.write.mode("overwrite").parquet(epath)
-                changelog = self.spark.read.parquet(epath)
+                # pinned schema: parquet schema inference is one more job
+                changelog = self.spark.read.schema(changelog.schema).parquet(epath)
                 if self._emitted is not None:
                     cleanup.append(self._emitted["path"])
                 self._emitted = {"batch": batch_id, "path": epath}

@@ -1050,8 +1050,7 @@ class GroupedTopKView:
             return path
 
         epath = os.path.join(self.state_dir, f"emit_v{v}")
-
-        def _write_emit() -> str:
+        if pre_topk is not None:
             # post top-k ranks the candidate frame DIRECTLY: ``cand`` is the
             # exact content of the freshly written touched shards (every
             # candidate row hashes into a touched bucket), so this is the
@@ -1068,6 +1067,8 @@ class GroupedTopKView:
             # even with canChangeCachedPlanOutputPartitioning=true it only
             # broke even with this read-back, which stays the replay frame.)
             delta = self._net_delta(pre_topk, self._topk_of(cand))
+
+        def _write_emit() -> str:
             delta.write.mode("overwrite").parquet(epath)
             return epath
 
@@ -1136,8 +1137,9 @@ class GroupedTopKView:
         # the emitted dir is manifest-held (self._emitted after adopt), so
         # the GC above preserved it — replay/resume read it via emitted_df().
         # The live return is the parquet read-back of the emit dir just
-        # written: the same replay frame, no in-memory handoff.
-        return self._spark.read.parquet(epath)
+        # written: the same replay frame, no in-memory handoff. The pinned
+        # schema spares the parquet schema-inference job.
+        return self._spark.read.schema(delta.schema).parquet(epath)
 
     def _maybe_grow(self) -> None:
         """Adaptive shard growth (durable + ``bucket_target_rows`` only):

@@ -358,6 +358,23 @@ def test_empty_batch_advances_last_batch(spark, tmp_path):
     eng.process_batch({}, batch_id=1)  # no deltas at all
     resumed = IncrementalAcyclicQuery(spark, sdir, _spec(), resume=True)
     assert resumed._last_batch == 1  # offset-aligned even for empty batches
+    # every delta present but empty: no relation is skipped, the batch
+    # commits as before and emit_delta returns an (empty) changelog
+    paths = {rel: resumed._path(rel, 2) for rel in ("orders", "lineitem", "customer")}
+    ch = resumed.process_batch(
+        {
+            "orders": spark.createDataFrame([], ORD_SCHEMA),
+            "lineitem": spark.createDataFrame([], LI_SCHEMA),
+            "customer": spark.createDataFrame([], CUST_SCHEMA),
+        },
+        batch_id=2,
+        emit_delta=True,
+    )
+    assert ch is not None and ch.count() == 0
+    assert resumed._last_batch == 2 and resumed._committed_batches == 2
+    assert {rel: resumed._segments[rel] for rel in paths} == {
+        rel: [p] for rel, p in paths.items()
+    }
 
 
 def test_bucketed_state_survives_resume(spark, tmp_path):
@@ -383,11 +400,18 @@ def test_bucketed_state_survives_resume(spark, tmp_path):
         {
             "orders": spark.createDataFrame(o1, ORD_SCHEMA),
             "lineitem": spark.createDataFrame(l1, LI_SCHEMA),
+            # empty: skipped, its batch-0 state stays live
+            "customer": spark.createDataFrame([], CUST_SCHEMA),
         },
         batch_id=1,
     )
+    assert resumed._segments["customer"] == eng._segments["customer"]
     plain = _feed(spark, _engine(spark, tmp_path, _spec()), BATCHES)
     assert sorted(tuple(r) for r in resumed.result().collect()) == plain
+    # resume after the skipping batch: same manifest paths, same result
+    again = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
+    assert again._segments == resumed._segments
+    assert sorted(tuple(r) for r in again.result().collect()) == plain
 
 
 def test_salt_composes_with_buckets(spark, tmp_path):
@@ -649,15 +673,20 @@ def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
     prune) and against state below ``PRUNE_MIN_STATE_ROWS`` (the full scan
     is cheaper than the round-trips), while a ``PRUNE_MIN_STATE_ROWS = 0``
     twin prunes as before — and both produce identical results, because
-    skipping is the trivial superset restriction."""
+    skipping is the trivial superset restriction. The twin's one-hop probes
+    find their delta's row count already memoized from the batch's ingest
+    job, so no probe pays a count job of its own."""
     import flink_and_acyclic_schema_spark.streaming.acyclic as am
 
     spec = _spec(li_extra={"buckets": 8, "bucket_key": ("l_key",)})
     calls = {"n": 0}
+    seeded = []  # per one-hop probe: was its delta's row count memoized?
     orig = am.IncrementalAcyclicQuery._probe_pruning
 
     def spy(self, *a, **kw):
         calls["n"] += 1
+        if kw.get("rows_key") is not None:
+            seeded.append(kw["rows_key"] in a[3])
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(am.IncrementalAcyclicQuery, "_probe_pruning", spy)
@@ -679,6 +708,7 @@ def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
     pruning.PRUNE_MIN_STATE_ROWS = 0
     want = _feed(spark, pruning, BATCHES)
     assert calls["n"] > 0  # the unconditional twin probes
+    assert seeded and all(seeded)
     assert got == want and got  # identical, non-trivial results
 
 
@@ -712,44 +742,46 @@ def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
     net, so a delete must physically cancel its state row) — also after a
     cross-regime resume: a log-structured engine leaves ONE raw appended
     segment holding a duplicate-key row and a +1/-1 pair; reopened with
-    compact_every=1, its first commit on OTHER keys must net that segment,
-    keep ``_state_rows`` exact, and answer like a merge-mode engine fed the
-    same batches from the start."""
+    compact_every=1, its first commit — on OTHER keys, or with an EMPTY
+    lineitem delta, which must not skip the rewrite of raw state — must net
+    that segment, keep ``_state_rows`` exact, and answer like a merge-mode
+    engine fed the same batches from the start."""
     spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
     b0 = (
         [(o, o % 4, 1) for o in range(8)],
         # (1, 2) twice: a duplicate-key row; (30, 3) +1/-1: a zero-net pair
         [(o, o + 1, 1) for o in range(8)] + [(1, 2, 1), (30, 3, 1), (30, 3, -1)],
     )
-    b1 = ([(20, 1, 1)], [(20, 5, 1), (21, 6, 1)])
-    state_dir = str(tmp_path / "cross_regime")
-    log = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
-    _feed(spark, log, [b0])
-    assert [p.rsplit("/", 1)[-1] for p in log._segments["lineitem"]] == [
-        "lineitem_seg0"
-    ]
-    raw = log._read_state("lineitem")
-    assert raw.count() > raw.dropDuplicates(["l_key", "l_qty"]).count()
-    eng = IncrementalAcyclicQuery(
-        spark, state_dir, spec, compact_every=1, resume=True
-    )
-    eng.process_batch(
-        {
-            "orders": spark.createDataFrame(b1[0], ORD_SCHEMA),
-            "lineitem": spark.createDataFrame(b1[1], LI_SCHEMA),
-        },
-        batch_id=1,
-    )
-    st = eng._read_state("lineitem")
-    key_cols = [c for c in st.columns if c != "weight"]
-    assert st.count() == st.dropDuplicates(key_cols).count()  # unique keys
-    assert st.filter("weight = 0").count() == 0
-    assert st.filter("l_key = 30").count() == 0  # the +1/-1 pair canceled
-    assert st.filter("l_key = 1 AND l_qty = 2").first()["weight"] == 2
-    assert eng._state_rows["lineitem"] == st.count()
-    got = sorted(tuple(r) for r in eng.result().collect())
-    want = _feed(spark, _engine(spark, tmp_path, spec), [b0, b1])
-    assert got == want and got
+    for case, li_delta in (("other_keys", [(20, 5, 1), (21, 6, 1)]), ("empty", [])):
+        b1 = ([(20, 1, 1)], li_delta)
+        state_dir = str(tmp_path / f"cross_regime_{case}")
+        log = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
+        _feed(spark, log, [b0])
+        assert [p.rsplit("/", 1)[-1] for p in log._segments["lineitem"]] == [
+            "lineitem_seg0"
+        ]
+        raw = log._read_state("lineitem")
+        assert raw.count() > raw.dropDuplicates(["l_key", "l_qty"]).count()
+        eng = IncrementalAcyclicQuery(
+            spark, state_dir, spec, compact_every=1, resume=True
+        )
+        eng.process_batch(
+            {
+                "orders": spark.createDataFrame(b1[0], ORD_SCHEMA),
+                "lineitem": spark.createDataFrame(b1[1], LI_SCHEMA),
+            },
+            batch_id=1,
+        )
+        st = eng._read_state("lineitem")
+        key_cols = [c for c in st.columns if c != "weight"]
+        assert st.count() == st.dropDuplicates(key_cols).count(), case  # unique keys
+        assert st.filter("weight = 0").count() == 0
+        assert st.filter("l_key = 30").count() == 0  # the +1/-1 pair canceled
+        assert st.filter("l_key = 1 AND l_qty = 2").first()["weight"] == 2
+        assert eng._state_rows["lineitem"] == st.count()
+        got = sorted(tuple(r) for r in eng.result().collect())
+        want = _feed(spark, _engine(spark, tmp_path, spec), [b0, b1])
+        assert got == want and got, case
 
 
 def test_state_rows_unknown_base_stays_unknown_across_appends(spark, tmp_path):
@@ -815,3 +847,94 @@ def test_wide_probe_sample_covering_all_buckets_skips_fallback_scan(
     ).localCheckpoint()
     ids2, key_vals2 = eng._probe_pruning(narrow, spec.relations[2], ("o_key",))
     assert calls["n"] == 1 and key_vals2 == ([7],) and len(ids2) == 1
+
+
+# --- per-batch job budget of the continuous Q10 top-20 -------------------------
+Q10_LI = "l_orderkey int, l_extendedprice double, l_discount double, l_returnflag string, weight int"
+Q10_ORD = "o_orderkey int, o_custkey int, o_orderdate timestamp_ntz, weight int"
+Q10_CUST = "c_custkey int, c_name string, c_acctbal double, c_nationkey int, weight int"
+Q10_NAT = "n_nationkey int, n_name string, weight int"
+
+
+def _q10_batch(spark, where, lineitem=(), orders=(), customer=(), nation=()):
+    """One Q10 micro-batch, each delta read from parquet files as the
+    streaming source delivers it (file deltas carry size statistics; a
+    createDataFrame from local rows would hide them from the planner)."""
+    from datetime import datetime
+
+    day = datetime(1995, 11, 1)  # inside the Q10 order-date window
+    frames = {
+        "lineitem": spark.createDataFrame(
+            [(k, p, 0.1, "R", w) for k, p, w in lineitem], Q10_LI
+        ),
+        "orders": spark.createDataFrame([(k, c, day, w) for k, c, w in orders], Q10_ORD),
+        "customer": spark.createDataFrame(
+            [(c, f"cust{c}", 10.0 * c, c % 5, w) for c, w in customer], Q10_CUST
+        ),
+        "nation": spark.createDataFrame([(n, f"n{n}", w) for n, w in nation], Q10_NAT),
+    }
+    batch_dir = where / uuid.uuid4().hex[:8]
+    out = {}
+    for rel, df in frames.items():
+        df.write.parquet(str(batch_dir / rel))
+        out[rel] = spark.read.schema(df.schema).parquet(str(batch_dir / rel))
+    return out
+
+
+Q10_BOOT = dict(
+    lineitem=[(o, 100.0 + o, 1) for o in range(120)],
+    orders=[(o, o % 60, 1) for o in range(120)],
+    # more customers than the top-20's k + slack: the buffer has a boundary
+    customer=[(c, 1) for c in range(60)],
+    nation=[(n, 1) for n in range(5)],
+)
+# a trickle: nation untouched, one order retracted with its lineitem, one
+# order re-inserted under another customer, one customer re-keyed
+Q10_TRICKLE = dict(
+    lineitem=[(7, 107.0, -1), (120, 500.0, 1)],
+    orders=[(7, 7, -1), (120, 3, 1)],
+    customer=[(59, -1), (60, 1)],
+)
+
+
+def _q10_topk(eng):
+    return sorted(tuple(r) for r in eng.topk_result().collect())
+
+
+def test_q10_trickle_batch_job_budget(spark, tmp_path):
+    """A trickle batch of the continuous Q10 top-20 whose nation delta is
+    empty schedules no nation commit and no touched-set action, its two
+    touched-group restrictions plan as broadcasts (≤2 jobs each instead of
+    AQE's shuffle-then-convert 4), and the whole batch — phases plus
+    unphased jobs such as a read-back's schema inference — stays within 22
+    jobs. The top-20 equals a fresh engine fed the same rows in one batch,
+    and an all-empty batch after it changes nothing and emits nothing."""
+    from flink_and_acyclic_schema_spark.plans.ivm_topk_ext import _q10_topk_spec
+
+    eng = _engine(spark, tmp_path, _q10_topk_spec())
+    eng.instrument = True
+    eng.process_batch(_q10_batch(spark, tmp_path, **Q10_BOOT), batch_id=0)
+    trickle = _q10_batch(spark, tmp_path, **Q10_TRICKLE)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    eng.process_batch(trickle, batch_id=1)
+    unphased = len(set(tracker.getJobIdsForGroup(None)) - before)
+    prof = eng.last_profile
+    assert "state_write:nation" not in prof and "touched" not in prof
+    assert prof["emit_pre"]["jobs"] <= 2 and prof["emitted_write"]["jobs"] <= 2
+    assert sum(p["jobs"] for p in prof.values()) + unphased <= 22, (prof, unphased)
+    assert [p.rsplit("/", 1)[-1] for p in eng._segments["nation"]] == ["nation_v1"]
+
+    once = _engine(spark, tmp_path, _q10_topk_spec())
+    merged = {k: Q10_BOOT[k] + Q10_TRICKLE.get(k, []) for k in Q10_BOOT}
+    once.process_batch(_q10_batch(spark, tmp_path, **merged), batch_id=0)
+    assert _q10_topk(eng) == _q10_topk(once) and _q10_topk(once)
+
+    # all-empty batch: the full path as before — a (empty) changelog is
+    # returned, the top-k emits nothing, the committed-batch count advances
+    committed = eng._committed_batches
+    ch = eng.process_batch(_q10_batch(spark, tmp_path), batch_id=2, emit_delta=True)
+    assert ch is not None and ch.count() == 0
+    assert eng.topk_delta().count() == 0
+    assert eng._committed_batches == committed + 1
+    assert _q10_topk(eng) == _q10_topk(once)

@@ -11,10 +11,16 @@ durable top-20) — on real TPC-H data at sf1 with
 executes inside a phase-tagged Spark job group, and the status tracker's
 job/stage counts plus wall time land in ``last_profile``. Phases:
 
+- ``ingest``        — one job that materializes every delta and counts its
+                      rows, so empty deltas skip the batch (runs when ≥2
+                      relations carry deltas and one has committed state);
 - ``join_fold``     — the ΔJ union of delta-join terms + the grouped fold,
                       materialized by the emit_delta localCheckpoint;
-- ``touched``/``emit_pre``/``emit_post`` — the touched-group restriction and
-                      the pre/post view snapshots the changelog diffs;
+- ``touched``       — the distinct touched-group set; runs only with
+                      ``preserve`` (otherwise the fold's group keys are the
+                      set, broadcast to the restrictions below);
+- ``emit_pre``/``emit_post`` — the pre/post view snapshots the changelog
+                      diffs, restricted to the touched groups;
 - ``state_write:R`` — relation R's net+write state commit (round 9: ONE
                       fused full-state shuffle; was the merge exchange plus
                       the write repartition);
