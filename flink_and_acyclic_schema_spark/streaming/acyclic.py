@@ -99,6 +99,7 @@ recompute over ``ts >= horizon(max ts)`` regardless of arrival interleaving
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import threading
@@ -931,10 +932,6 @@ class IncrementalAcyclicQuery:
             .filter(F.col(WEIGHT) != 0)
         )
 
-    @classmethod
-    def _merge(cls, state: DataFrame, delta: DataFrame) -> DataFrame:
-        return cls._net(state.unionByName(delta))
-
     @staticmethod
     def _bucket_expr(cols, n: int) -> Column:
         """Bucket id of a key tuple (column names or Columns). Cast to string
@@ -1220,6 +1217,90 @@ class IncrementalAcyclicQuery:
             memo[memo_key] = out
         return out
 
+    def _join_state(
+        self,
+        acc: DataFrame,
+        r: RelSpec,
+        side: DataFrame,
+        pairs: tuple,
+        r_cols: tuple[str, ...],
+        w_col: str,
+        memo: dict | None = None,
+        hop: tuple[str, DataFrame] | None = None,
+    ) -> DataFrame:
+        """One state-side join step of a ΔJ term, shared by the per-term
+        (``_join_chain``) and telescoped (``_factored_chain``) ΔJ paths:
+        join the probing frame ``acc`` to relation ``r``'s frame ``side``
+        on the tree edge ``pairs``, ``r_cols`` being r's side of it.
+
+        When ``r`` is bucketed on exactly ``r_cols`` and pruning is
+        worthwhile, the side is first restricted to the bucket ids (and
+        probe-key ``In`` sets) the probe can reach. ``hop = (name, delta)``
+        says the probe is that relation's raw delta, one tree hop away: its
+        pruning set and row count are memoized per batch in ``memo``, since
+        the same delta probes across every virtual tree. Otherwise pruning is
+        TRANSITIVE: the probe collect is an eager action over ``acc``'s
+        lineage and the join re-executes it, so ``acc`` is localCheckpointed
+        once for both. The side's weight is renamed to ``w_col``; broadcast
+        and salt follow the relation spec."""
+        pruning = None
+        if (
+            r.buckets > 0
+            and BUCKET in side.columns
+            and tuple(r.bucket_key) == r_cols
+            and self._prune_worthwhile(r.name)
+        ):
+            owns = tuple(o for o, _ in pairs)
+            probe = tuple(e for _, e in pairs) if r_cols == owns else owns
+            if hop is not None:
+                # memo key includes the probing (delta) relation: two delta
+                # relations probing the same bucketed state with identically
+                # named probe columns must not reuse each other's sets
+                name, delta = hop
+                pruning = self._probe_pruning(
+                    delta,
+                    r,
+                    probe,
+                    memo,
+                    (name, r.name, probe),
+                    rows_key=("rowcount", name),
+                )
+            else:
+                acc = acc.localCheckpoint()
+                with self._profile_lock:
+                    self.last_checkpoints += 1
+                pruning = self._probe_pruning(acc, r, probe)
+        side = side.withColumnRenamed(WEIGHT, w_col)
+        if pruning is not None:
+            bucket_ids, key_vals = pruning
+            side = side.filter(F.col(BUCKET).isin(bucket_ids))
+            if key_vals is not None:
+                # superset restriction (non-matching keys can't join): pushes
+                # to the parquet scan as one In filter per bucket_key column,
+                # pruned by page/rowgroup stats of the key-sorted bucket files
+                for c, vs in zip(r.bucket_key, key_vals):
+                    side = side.filter(F.col(c).isin(vs))
+        side = side.drop(BUCKET)
+        if r.broadcast_state:
+            side = F.broadcast(side)
+        cond = reduce(
+            Column.__and__,
+            [F.col(own) == F.col(earlier) for own, earlier in pairs],
+        )
+        if r.salt > 0:
+            # replicate state side ×salt; scatter the probing side by a
+            # deterministic full-row hash so a hot join key fans out
+            side = side.withColumn(
+                "_salt_s", F.explode(F.array(*[F.lit(i) for i in range(r.salt)]))
+            )
+            acc = acc.withColumn(
+                "_salt_a",
+                F.pmod(F.hash(*[F.col(c) for c in acc.columns]), F.lit(r.salt)),
+            )
+            cond = cond & (F.col("_salt_a") == F.col("_salt_s"))
+            return acc.join(side, cond).drop("_salt_a", "_salt_s")
+        return acc.join(side, cond)
+
     def _join_chain(
         self,
         versions: Mapping[str, DataFrame],
@@ -1227,7 +1308,6 @@ class IncrementalAcyclicQuery:
         delta_name: str | None = None,
         bucket_memo: dict | None = None,
         apply_residual: bool = True,
-        any_order_edges: bool = False,
         steps: list | None = None,
     ) -> DataFrame:
         """k-way join over one version assignment; output weight ``_w`` is the
@@ -1237,102 +1317,32 @@ class IncrementalAcyclicQuery:
 
         The version ASSIGNMENT (new/Δ/old by spec position) fixes the term's
         semantics; the join EXECUTION order is free, and ``delta_name``
-        selects the delta-first BFS order plus bucket pruning: a bucketed
-        relation probed directly from the delta (one tree hop) reads only the
-        delta's bucket partitions; deeper bucketed relations are pruned
-        TRANSITIVELY from the accumulated (delta-bounded) join's probe keys,
-        one capped collect per term. Falls back to sequential spec order
-        when the edge graph doesn't resolve statically — callers for whom
-        the sequential fallback would be WRONG (the factored path's
-        reordered suffixes, where ``rels`` is not in spec order) pass their
-        precomputed ``steps`` instead, which this method then uses verbatim
-        (round 11, closing the r10 advice: the fallback can no longer be
-        reached on a reordered sub-tree)."""
+        selects the delta-first BFS order plus bucket pruning (see
+        ``_join_state``): a bucketed relation probed directly from the delta
+        reads only the delta's bucket partitions; deeper bucketed relations
+        are pruned TRANSITIVELY from the accumulated (delta-bounded) join.
+        Falls back to sequential spec order when the edge graph doesn't
+        resolve statically — callers for whom the sequential fallback would
+        be WRONG (the factored path's reordered suffixes, where ``rels`` is
+        not in spec order) pass their precomputed ``steps`` instead, which
+        this method then uses verbatim."""
         rels = self.spec.relations if rels is None else rels
-        columns = {r.name: versions[r.name].columns for r in rels}
         if steps is None and delta_name is not None and len(rels) > 1:
-            steps = self._delta_first_order(
-                rels, delta_name, columns, any_order=any_order_edges
-            )
+            columns = {r.name: versions[r.name].columns for r in rels}
+            steps = self._delta_first_order(rels, delta_name, columns)
         if steps is None:
             first = rels[0]
             chain = [(r, r.join_pairs(), None, ()) for r in rels[1:]]
         else:
             first = next(r for r in rels if r.name == delta_name)
             chain = steps
-
-        def prep(r: RelSpec, pruning=None) -> DataFrame:
-            df = versions[r.name].withColumnRenamed(WEIGHT, f"_w_{r.name}")
-            if pruning is not None:
-                bucket_ids, key_vals = pruning
-                df = df.filter(F.col(BUCKET).isin(bucket_ids))
-                if key_vals is not None:
-                    # superset restriction (non-matching keys can't join):
-                    # pushes to the parquet scan as one In filter per
-                    # bucket_key column, pruned by page/rowgroup stats of
-                    # the key-sorted bucket files
-                    for c, vs in zip(r.bucket_key, key_vals):
-                        df = df.filter(F.col(c).isin(vs))
-            return df.drop(BUCKET)
-
-        acc = prep(first)
+        acc = versions[first.name].withColumnRenamed(WEIGHT, f"_w_{first.name}").drop(BUCKET)
         for r, pairs, via, add_cols in chain:
-            pruning = None
-            if (
-                r.buckets > 0
-                and via is not None
-                and BUCKET in columns[r.name]
-                and tuple(r.bucket_key) == add_cols
-                and self._prune_worthwhile(r.name)
-            ):
-                owns = tuple(o for o, _ in pairs)
-                probe = tuple(e for _, e in pairs) if add_cols == owns else owns
-                if via == delta_name:
-                    # memo key includes the probing (delta) relation: two
-                    # delta relations probing the same bucketed state with
-                    # identically-named probe columns must not reuse each
-                    # other's pruning sets
-                    pruning = self._probe_pruning(
-                        versions[via],
-                        r,
-                        probe,
-                        bucket_memo,
-                        (via, r.name, probe),
-                        rows_key=("rowcount", via),
-                    )
-                else:
-                    # transitive: the accumulated join is delta-bounded, so
-                    # its probe-key set prunes deeper state scans too. The
-                    # probe collect is an eager action over acc's lineage, and
-                    # the same lineage re-executes inside the final term plan —
-                    # localCheckpoint materializes the partial join ONCE so
-                    # both the probe and the term reuse it instead of
-                    # computing the delta-bounded join twice per term
-                    acc = acc.localCheckpoint()
-                    with self._profile_lock:
-                        self.last_checkpoints += 1
-                    pruning = self._probe_pruning(acc, r, probe)
-            side = prep(r, pruning)
-            if r.broadcast_state:
-                side = F.broadcast(side)
-            cond = reduce(
-                Column.__and__,
-                [F.col(own) == F.col(earlier) for own, earlier in pairs],
+            hop = (via, versions[via]) if via is not None and via == delta_name else None
+            acc = self._join_state(
+                acc, r, versions[r.name], pairs, add_cols, f"_w_{r.name}",
+                bucket_memo, hop,
             )
-            if r.salt > 0:
-                # replicate state side ×salt; scatter the probing side by a
-                # deterministic full-row hash so a hot join key fans out
-                side = side.withColumn(
-                    "_salt_s", F.explode(F.array(*[F.lit(i) for i in range(r.salt)]))
-                )
-                acc = acc.withColumn(
-                    "_salt_a",
-                    F.pmod(F.hash(*[F.col(c) for c in acc.columns]), F.lit(r.salt)),
-                )
-                cond = cond & (F.col("_salt_a") == F.col("_salt_s"))
-                acc = acc.join(side, cond).drop("_salt_a", "_salt_s")
-            else:
-                acc = acc.join(side, cond)
         if self.spec.residual is not None and apply_residual:
             # non-tree cycle edges: σ distributes over the decomposition terms
             # (apply_residual=False for the factored path's SUFFIX joins,
@@ -1341,6 +1351,43 @@ class IncrementalAcyclicQuery:
             acc = acc.filter(self.spec.residual())
         w = reduce(Column.__mul__, [F.col(f"_w_{r.name}") for r in rels])
         return acc.withColumn("_w", w)
+
+    @staticmethod
+    def _leaf_peel(vlist: tuple[RelSpec, ...], adj: dict) -> tuple | None:
+        """Leaf-peeling enumeration of a resolved tree (``_factored_chain``):
+        ``(path, edges)`` where ``path[i]`` is e_i and ``edges[i]`` is
+        ``(pairs, e_i's join columns)`` of the tree edge from e_i to its
+        unique neighbor still in the suffix, recorded at peel time, when that
+        neighbor is e_i's only remaining edge. Deterministic: spec-earliest
+        leaf first, preferring the leaf adjacent to the last-peeled node.
+        ``None`` unless ``adj`` is one tree: a cycle never exposes a leaf,
+        and a disconnected forest ends in ≥2 isolated nodes."""
+        posv = {r.name: i for i, r in enumerate(vlist)}
+        byname = {r.name: r for r in vlist}
+        remaining = {n: {o for o, _, _ in adj[n]} for n in adj}
+        orig_nbrs = {n: {o for o, _, _ in adj[n]} for n in adj}
+        order: list[str] = []
+        edges: dict[int, tuple] = {}
+        while len(remaining) > 1:
+            leaves = sorted(
+                (n for n in remaining if len(remaining[n]) == 1),
+                key=lambda n: posv[n],
+            )
+            if not leaves:
+                return None
+            near = [n for n in leaves if order and order[-1] in orig_nbrs[n]]
+            pick = (near or leaves)[0]
+            nb = next(iter(remaining[pick]))
+            _, pairs, nb_is_child = next(e for e in adj[pick] if e[0] == nb)
+            # the spec-CHILD owns the pairs' (own, earlier) columns; peel
+            # direction is free of spec direction
+            side = 1 if nb_is_child else 0
+            edges[len(order)] = (pairs, tuple(p[side] for p in pairs))
+            order.append(pick)
+            del remaining[pick]
+            remaining[nb].discard(pick)
+        order.append(next(iter(remaining)))
+        return tuple(byname[n] for n in order), edges
 
     def _factored_chain(
         self,
@@ -1378,91 +1425,39 @@ class IncrementalAcyclicQuery:
         neighbor inside the suffix (two would close a cycle) for the
         new_i ⋈ B_{i+1} branch's join condition. Round 10 realized this
         only for Hamiltonian-path enumerations (path graphs); round 11
-        observes that a LEAF-PEELING order — repeatedly remove a leaf of
-        the remaining tree — provides suffix connectivity for EVERY tree
-        (removing a leaf keeps the remainder connected, and the reversed
-        removal order's suffixes are exactly those remainders), so genuine
-        degree-≥3 stars (the registered ``incremental_star_stream``'s
-        lineitem–{orders,part,supplier}, Q2's 5-relation tree) now factor
-        instead of declining to the per-term fallback. The peel is
-        deterministic — spec-earliest leaf first, then prefer the leaf
-        adjacent to the last-peeled node — which reproduces the round-10
-        endpoint walk exactly on path-shaped trees (their plans are
-        unchanged). Weights multiply into a single running ``_w``; the
-        residual filter is applied once over the full join (σ commutes
-        with ∪ and ⋈)."""
+        observes that a LEAF-PEELING order (``_leaf_peel``) — repeatedly
+        remove a leaf of the remaining tree — provides suffix connectivity
+        for EVERY tree (removing a leaf keeps the remainder connected, and
+        the reversed removal order's suffixes are exactly those remainders),
+        so genuine degree-≥3 stars (the registered
+        ``incremental_star_stream``'s lineitem–{orders,part,supplier}, Q2's
+        5-relation tree) factor instead of declining to the per-term
+        fallback. On path-shaped trees the peel reproduces the round-10
+        endpoint walk exactly (their plans are unchanged). Weights multiply
+        into a single running ``_w``; the residual filter is applied once
+        over the full join (σ commutes with ∪ and ⋈)."""
         if len(vlist) < 2 or sum(1 for r in vlist if r.name in term_delta) < 2:
             return None  # nothing to share — per-term path is already minimal
         columns = {r.name: term_new[r.name].columns for r in vlist}
         adj = self._edge_steps(vlist, columns, any_order=True)
-        if adj is None:
+        # a virtual sub-tree can drop an edge whose owner left the subset:
+        # the peel then declines the disconnected remainder
+        peeled = None if adj is None else self._leaf_peel(vlist, adj)
+        if peeled is None:
             return None
-        posv = {r.name: i for i, r in enumerate(vlist)}
-        byname = {r.name: r for r in vlist}
-        # connectivity over the resolved edges (a virtual sub-tree can drop
-        # an edge whose owner left the subset): BFS must reach every node
-        reach, stack = {vlist[0].name}, [vlist[0].name]
-        while stack:
-            for o, _, _ in adj[stack.pop()]:
-                if o not in reach:
-                    reach.add(o)
-                    stack.append(o)
-        if len(reach) != len(vlist):
-            return None
-        # leaf-peel: order[i] is e_i, edges[i] the tree edge from e_i to its
-        # unique neighbor still in the suffix (recorded at peel time, when
-        # that neighbor is e_i's only remaining edge)
-        remaining = {n: {o for o, _, _ in adj[n]} for n in adj}
-        orig_nbrs = {n: {o for o, _, _ in adj[n]} for n in adj}
-        order: list[str] = []
-        edges: dict[int, tuple] = {}
-        while len(remaining) > 1:
-            leaves = sorted(
-                (n for n in remaining if len(remaining[n]) == 1),
-                key=lambda n: posv[n],
-            )
-            if not leaves:
-                return None  # not a tree (cycle) — decline, per-term fallback
-            near = [
-                n for n in leaves if order and order[-1] in orig_nbrs[n]
-            ]
-            pick = (near or leaves)[0]
-            nb = next(iter(remaining[pick]))
-            _, pairs, nb_is_child = next(e for e in adj[pick] if e[0] == nb)
-            # the spec-CHILD owns the pairs' (own, earlier) columns; peel
-            # direction is free of spec direction
-            if nb_is_child:
-                pick_cols = tuple(e for _, e in pairs)
-                nb_cols = tuple(o for o, _ in pairs)
-            else:
-                pick_cols = tuple(o for o, _ in pairs)
-                nb_cols = tuple(e for _, e in pairs)
-            edges[len(order)] = (pairs, pick_cols, nb_cols)
-            order.append(pick)
-            del remaining[pick]
-            remaining[nb].discard(pick)
-        order.append(next(iter(remaining)))
-        path = tuple(byname[n] for n in order)
-
-        def datacols(name: str) -> list[str]:
-            return [c for c in columns[name] if c not in (WEIGHT, BUCKET)]
+        path, edges = peeled
 
         def build_branch_a(i: int) -> DataFrame | None:
             ri = path[i]
             suffix = path[i:]
             if len(suffix) == 1:
-                d = term_delta[ri.name]
-                if BUCKET in d.columns:
-                    d = d.drop(BUCKET)
-                return d.withColumnRenamed(WEIGHT, "_w")
+                return term_delta[ri.name].drop(BUCKET).withColumnRenamed(WEIGHT, "_w")
             # the suffix must resolve as its own subtree — it always
             # should (leaf-peeling keeps every suffix connected, and
             # a connected subset of an unambiguous tree resolves
             # unambiguously) — and the resolved steps are passed
             # straight into _join_chain, so a reordered suffix can
-            # NEVER hit the sequential spec-order fallback (r10
-            # advice: the outer `columns` and _join_chain's own
-            # re-resolution can no longer diverge)
+            # NEVER hit the sequential spec-order fallback
             steps = self._delta_first_order(
                 suffix, ri.name, columns, any_order=True
             )
@@ -1479,111 +1474,46 @@ class IncrementalAcyclicQuery:
                 apply_residual=False,
                 steps=steps,
             )
-            keep = [c for rj in suffix for c in datacols(rj.name)]
+            keep = [
+                c for rj in suffix for c in columns[rj.name] if c not in (WEIGHT, BUCKET)
+            ]
             return t.select(*keep, "_w")
 
         # the Δ branches are mutually independent (each joins its own delta
         # against OLD-state suffixes; memo keys are per delta relation), so
         # their eager probe collects / partial-join materializations run
-        # concurrently from the commit pool (guide §2.6; optimization round
-        # r11) — the sequential B spine below consumes them ready-made. A
-        # branch whose suffix fails to resolve keeps the whole tree on the
-        # per-term fallback, exactly as the inline form did.
+        # concurrently from the commit pool — the sequential B spine below
+        # consumes them ready-made. A branch whose suffix fails to resolve
+        # keeps the whole tree on the per-term fallback.
         delta_is = [i for i in range(len(path)) if path[i].name in term_delta]
         built = _run_parallel(
             [lambda i=i: build_branch_a(i) for i in delta_is]
         )
-        branch_as: dict[int, DataFrame | None] = dict(zip(delta_is, built))
         if any(b is None for b in built):
             return None
+        branch_as: dict[int, DataFrame] = dict(zip(delta_is, built))
 
         B: DataFrame | None = None
-        # probe-side bookkeeping: when B is still the RAW bottom delta it is
-        # already lazily localCheckpointed at ingest and its probe is the
-        # same one-hop probe the per-term path memoizes — reuse both instead
-        # of re-materializing; b_mat marks a B we already checkpointed
-        b_is_delta_of: str | None = None
-        b_mat = False
+        # while B is still the RAW bottom delta (already lazily checkpointed
+        # at ingest), its probe is the same one-hop probe the per-term path
+        # memoizes: ``hop`` hands that delta to the join step
+        hop = None
         for i in range(len(path) - 1, -1, -1):
             ri = path[i]
-            suffix = path[i:]
             branch_a = branch_as.get(i)
             branch_b = None
             if B is not None:
-                pairs, ri_cols, probe_cols = edges[i]
-                pruning = None
-                if (
-                    ri.buckets > 0
-                    and BUCKET in columns[ri.name]
-                    and tuple(ri.bucket_key) == ri_cols
-                    and self._prune_worthwhile(ri.name)
-                ):
-                    probe = probe_cols
-                    if b_is_delta_of is not None:
-                        # one tree hop from the raw delta — share the
-                        # per-term path's memoized probe and row count
-                        pruning = self._probe_pruning(
-                            B,
-                            ri,
-                            probe,
-                            bucket_memo,
-                            (b_is_delta_of, ri.name, probe),
-                            rows_key=("rowcount", b_is_delta_of),
-                        )
-                    else:
-                        # same transitive-pruning contract as _join_chain:
-                        # the probe collect is an eager action over B's
-                        # lineage and the join re-executes it — materialize
-                        # B once for both
-                        if not b_mat:
-                            B = B.localCheckpoint()
-                            b_mat = True
-                            with self._profile_lock:
-                                self.last_checkpoints += 1
-                        pruning = self._probe_pruning(B, ri, probe)
-                side = term_new[ri.name].withColumnRenamed(WEIGHT, "_w_r")
-                if pruning is not None:
-                    bucket_ids, key_vals = pruning
-                    side = side.filter(F.col(BUCKET).isin(bucket_ids))
-                    if key_vals is not None:
-                        for c, vs in zip(ri.bucket_key, key_vals):
-                            side = side.filter(F.col(c).isin(vs))
-                if BUCKET in side.columns:
-                    side = side.drop(BUCKET)
-                if ri.broadcast_state:
-                    side = F.broadcast(side)
-                cond = reduce(
-                    Column.__and__,
-                    [F.col(own) == F.col(earlier) for own, earlier in pairs],
-                )
-                if ri.salt > 0:
-                    side = side.withColumn(
-                        "_salt_s",
-                        F.explode(F.array(*[F.lit(x) for x in range(ri.salt)])),
-                    )
-                    B = B.withColumn(
-                        "_salt_a",
-                        F.pmod(
-                            F.hash(*[F.col(c) for c in B.columns]), F.lit(ri.salt)
-                        ),
-                    )
-                    cond = cond & (F.col("_salt_a") == F.col("_salt_s"))
-                    branch_b = B.join(side, cond).drop("_salt_a", "_salt_s")
-                else:
-                    branch_b = B.join(side, cond)
-                branch_b = branch_b.withColumn(
-                    "_w", F.col("_w") * F.col("_w_r")
-                ).drop("_w_r")
+                pairs, ri_cols = edges[i]
+                branch_b = self._join_state(
+                    B, ri, term_new[ri.name], pairs, ri_cols, "_w_r",
+                    bucket_memo, hop,
+                ).withColumn("_w", F.col("_w") * F.col("_w_r")).drop("_w_r")
             if branch_a is not None and branch_b is not None:
                 B = branch_a.unionByName(branch_b)
             else:
                 B = branch_a if branch_a is not None else branch_b
-            b_mat = False
-            b_is_delta_of = (
-                ri.name
-                if branch_b is None and branch_a is not None and len(suffix) == 1
-                else None
-            )
+            last = i == len(path) - 1
+            hop = (ri.name, B) if last and branch_a is not None else None
         if B is not None and self.spec.residual is not None:
             B = B.filter(self.spec.residual())
         return B
@@ -1667,26 +1597,27 @@ class IncrementalAcyclicQuery:
                 p["stages"] += stages
                 p["sec"] += sec
 
-    def _parallel(self, tasks: list[tuple[str, Callable[[], None]]]) -> None:
-        """Run independent per-batch actions concurrently (guide §2.6):
-        each task is a (phase name, thunk) whose Spark jobs are submitted
-        from its own driver thread, so one write's scheduling/commit latency
-        overlaps another's instead of serializing. Thunks must be mutually
-        independent: they may only read pre-batch state files (two-phase
-        commit keeps those on disk until post-manifest cleanup) and write
-        their own versioned paths. ``_phase`` re-scopes per thread. Errors
-        propagate after all tasks settle — the caller's snapshot/restore
-        retry discipline is unchanged (versioned paths make a failed
-        batch's partial writes plain overwrites on retry)."""
+    def _parallel(self, tasks: list[tuple[str, Callable[[], object]]]) -> list:
+        """Run independent per-batch actions concurrently (guide §2.6) and
+        return their results in task order: each task is a (phase name,
+        thunk) whose Spark jobs are submitted from its own driver thread, so
+        one write's scheduling/commit latency overlaps another's instead of
+        serializing. Thunks must be mutually independent: they may only read
+        pre-batch state files (two-phase commit keeps those on disk until
+        post-manifest cleanup) and write their own versioned paths.
+        ``_phase`` re-scopes per thread. Errors propagate after all tasks
+        settle — the caller's snapshot/restore retry discipline is unchanged
+        (versioned paths make a failed batch's partial writes plain
+        overwrites on retry)."""
 
-        def scoped(name: str, fn: Callable[[], None]) -> Callable[[], None]:
-            def run() -> None:
+        def scoped(name: str, fn: Callable[[], object]) -> Callable[[], object]:
+            def run() -> object:
                 with self._phase(name):
-                    fn()
+                    return fn()
 
             return run
 
-        _run_parallel([scoped(name, fn) for name, fn in tasks])
+        return _run_parallel([scoped(name, fn) for name, fn in tasks])
 
     def _skippable(self, rel: str) -> bool:
         """May an EMPTY delta of ``rel`` leave its state as it is? Only when
@@ -1771,6 +1702,12 @@ class IncrementalAcyclicQuery:
         cannot double-count (versioned paths make the retry's writes plain
         overwrites of the orphans).
         """
+        # per-batch observability counters, reset for EVERY call: a replayed
+        # batch must not report the previous batch's figures as its own
+        self.last_profile = {}
+        self.last_evicted = {}
+        self.last_factored = 0
+        self.last_checkpoints = 0
         # idempotent replay skip: after checkpoint recovery, foreachBatch
         # redelivers the last uncommitted batch — if our manifest already
         # committed it, applying it again would double-count. A replayed
@@ -1783,9 +1720,6 @@ class IncrementalAcyclicQuery:
             and self._last_batch is not None
             and batch_id <= self._last_batch
         ):
-            # replayed batches report their own (near-empty) profile — a
-            # stale previous-batch profile must not be read as this batch's
-            self.last_profile = {}
             ch = None
             if (
                 want_delta
@@ -1822,8 +1756,11 @@ class IncrementalAcyclicQuery:
         batch_id: int | None,
         emit_delta: bool,
     ) -> DataFrame | None:
-        self.last_profile = {}
-        self.last_evicted = {}
+        """One batch as a pipeline of stages, each named after the profile
+        phase it records: ingest → ttl → gate presence → term_build →
+        join_fold → commit wave → emit. Stages pass plain values; the
+        manifest write at the end is the batch's atomic commit point, and
+        superseded files are deleted only after it."""
         if self._auto_regime:
             # monotone merge -> log-structured switch at the measured
             # amortization point; recomputed from the manifest-persisted
@@ -1833,13 +1770,55 @@ class IncrementalAcyclicQuery:
                 if self._committed_batches < self.AUTO_SWITCH_BATCHES
                 else self.AUTO_COMPACT_EVERY
             )
-        rels = self.spec.relations
-        known = {r.name for r in rels}
-        unknown = set(deltas) - known
-        if unknown:
-            raise KeyError(f"deltas for unknown relations {sorted(unknown)}; spec has {sorted(known)}")
+        filt, bucket_memo = self._ingest(deltas)
+        seg_range = self._ttl(filt)
+        term_new, term_old, term_delta = self._gate_presence(filt)
+        terms = self._term_build(term_new, term_old, term_delta, bucket_memo)
+        if not terms:
+            # empty batch: no state changes, but still record batch_id so
+            # last_batch stays aligned with the stream's committed offsets
+            if batch_id is not None:
+                self._last_batch = batch_id
+                self._commit_manifest()
+            return None
+        agg_delta, hist_deltas, touched = self._join_fold(terms, filt, emit_delta)
+        # the PRE-batch view of the touched groups joins the commit wave: it
+        # reads only pre-batch state files, which two-phase commit keeps on
+        # disk until the post-manifest cleanup. Its plan is built HERE, on the
+        # main thread — ``result`` resolves segment paths at plan-build time
+        # and the wave's commits swap ``_segments`` to the new versions.
+        pre_plan = self.result(touched) if emit_delta else None
+        cleanup: list[str] = []
+        pre_view = self._commit_wave(
+            filt, seg_range, agg_delta, hist_deltas, pre_plan, cleanup
+        )
+        changelog = None
+        if emit_delta:
+            changelog = self._emit_changelog(touched, pre_view, batch_id, cleanup)
+        if batch_id is not None:
+            self._last_batch = batch_id
+        # count only state-writing batches (empty batches cost no IO in
+        # either regime, so they don't advance the auto switch)
+        self._committed_batches += 1
+        self._commit_manifest()  # atomic commit point; cleanup is post-commit
+        for p in cleanup:
+            shutil.rmtree(p, ignore_errors=True)
+        return changelog
 
-        # ingest-time filters; capture schemas for empty-state templates
+    def _ingest(
+        self, deltas: Mapping[str, DataFrame]
+    ) -> tuple[dict[str, DataFrame], dict]:
+        """Ingest stage: each delta filtered, projected, conformed to its
+        relation's state schema and lazily checkpointed; empty deltas whose
+        state needs no rewrite leave the batch. Returns the batch's deltas
+        and the probe memo, seeded with the ingest row counts."""
+        rels = self.spec.relations
+        unknown = set(deltas) - set(self._by_name)
+        if unknown:
+            raise KeyError(
+                f"deltas for unknown relations {sorted(unknown)}; "
+                f"spec has {sorted(self._by_name)}"
+            )
         filt: dict[str, DataFrame] = {}
         for r in rels:
             if r.name not in deltas:
@@ -1873,18 +1852,39 @@ class IncrementalAcyclicQuery:
                 for name, n in counts.items():
                     if n == 0 and self._skippable(name):
                         del filt[name]
+        # the ingest counts are the one-hop probes' row counts wherever the
+        # term delta IS the ingested delta (not a gate's presence delta, not
+        # a ttl delta the watermark filtered and eviction extended)
+        memo = {
+            ("rowcount", r.name): counts[r.name]
+            for r in rels
+            if r.name in counts and r.name in filt
+            and not (r.semi or r.anti) and r.ttl is None
+        }
+        return filt, memo
 
-        # watermark advance + late-data drop (RelSpec.ttl): the watermark is
-        # the running max event time over ingested deltas — ONE bounded 1-row
-        # driver read per ttl relation per batch, which also constant-folds
-        # BOTH horizon values (old and new) in the same job so the eviction
-        # step below needs no extra driver round-trip. Rows below the new
-        # horizon are dropped NOW: the eviction band below only ever sweeps
-        # forward, so a late row that slipped into state would never be
-        # revisited.
-        # rel -> (old_wm, new_wm, old horizon value | None, new horizon value)
-        advanced: dict[str, tuple] = {}
-        for r in rels:
+    def _ttl(self, filt: dict[str, DataFrame]) -> dict[str, tuple]:
+        """ttl stage (RelSpec.ttl), one pass per ttl relation with a delta:
+        advance the watermark, drop late rows, and append the eviction band
+        to the delta as retractions. Updates ``filt`` in place and returns
+        rel -> the driver-side superset ts range of this batch's segment.
+
+        The watermark is the running max event time over ingested deltas —
+        ONE bounded 1-row driver read per relation, which also constant-folds
+        BOTH horizon values (old and new) in the same job, so the band below
+        needs no extra round-trip. Rows below the new horizon are dropped
+        NOW: the band only ever sweeps forward, so a late row that slipped
+        into state would never be revisited. State rows crossing the horizon
+        re-enter the batch as retraction deltas — join terms, presence gates,
+        value histograms, HAVING and chains all retract them through the
+        ordinary algebra. Only the closing band [old horizon, new horizon)
+        is read, pruned at TWO levels: the manifest's per-segment ts ranges
+        skip whole segments driver-side (the only pruning available to
+        key-sorted bucketed state), and the pushed range filter lets parquet
+        rowgroup statistics prune within the ts-sorted segments that
+        remain."""
+        seg_range: dict[str, tuple] = {}
+        for r in self.spec.relations:
             if r.ttl is None or r.name not in filt:
                 continue
             ts_col, horizon = _ttl_parts(r)
@@ -1895,12 +1895,15 @@ class IncrementalAcyclicQuery:
                 )
             old_wm = self._watermarks.get(r.name)
             dtype = self._schemas[r.name][ts_col].dataType
-            old_lit = F.lit(str(old_wm) if old_wm is not None else None).cast(dtype)
+
+            def lit(v, dtype=dtype) -> Column:
+                return F.lit(None if v is None else str(v)).cast(dtype)
+
             # greatest(NULL, old) = old, so an empty/regressing batch folds
             # the horizon of the UNCHANGED watermark; F.max over a constant
             # keeps the non-delta expressions legal inside the global agg
             eff = (
-                F.greatest(F.max(ts_col), old_lit)
+                F.greatest(F.max(ts_col), lit(old_wm))
                 if old_wm is not None
                 else F.max(ts_col)
             )
@@ -1909,9 +1912,7 @@ class IncrementalAcyclicQuery:
                     F.max(ts_col).alias("_bm"),
                     horizon(eff).alias("_hi"),  # expression OVER the aggregate
                     F.max(
-                        horizon(old_lit)
-                        if old_wm is not None
-                        else F.lit(None).cast(dtype)
+                        horizon(lit(old_wm)) if old_wm is not None else lit(None)
                     ).alias("_lo"),
                 ).first()
             batch_max, h_new_v, h_old_v = row["_bm"], row["_hi"], row["_lo"]
@@ -1920,40 +1921,19 @@ class IncrementalAcyclicQuery:
                 if batch_max is None or (old_wm is not None and batch_max <= old_wm)
                 else batch_max
             )
+            # a segment written without a horizon advance holds rows within
+            # the current window: (unbounded, wm] is a safe superset
+            seg_range[r.name] = (None, new_wm)
             if new_wm is None:
                 continue
             self._watermarks[r.name] = new_wm
-            advanced[r.name] = (old_wm, new_wm, h_old_v, h_new_v)
-            cutoff = horizon(F.lit(str(new_wm)).cast(dtype))
+            cut = horizon(lit(new_wm))
             filt[r.name] = filt[r.name].filter(
-                F.col(ts_col).isNull() | (F.col(ts_col) >= cutoff)
+                F.col(ts_col).isNull() | (F.col(ts_col) >= cut)
             )
-
-        old = {r.name: self._read_state(r.name) for r in rels}
-
-        # eviction (RelSpec.ttl): state rows crossing the horizon re-enter
-        # the batch as retraction deltas — every downstream mechanism (join
-        # terms, presence gates, value histograms, HAVING, chains) retracts
-        # them through the ordinary algebra. Only the closing band
-        # [old horizon, new horizon) is read, pruned at TWO levels: the
-        # manifest's per-segment ts ranges skip whole segments driver-side
-        # (the only pruning available to key-sorted bucketed state), and the
-        # pushed range filter lets parquet rowgroup statistics prune within
-        # the ts-sorted segments that remain. Horizon VALUES cost one 1-row
-        # constant-fold job per ttl relation per batch (bounded).
-        seg_range: dict[str, tuple] = {}  # rel -> this batch's segment range
-        for r in rels:
-            if r.ttl is None or r.name not in advanced:
-                continue
-            ts_col, horizon = _ttl_parts(r)
-            old_wm, new_wm, h_old_v, h_new_v = advanced[r.name]
-            if old_wm == new_wm and old_wm is not None:
+            if old_wm == new_wm:
                 continue  # horizon unchanged: nothing can have crossed it
-            dtype = self._schemas[r.name][ts_col].dataType
-            lit = lambda v: F.lit(str(v)).cast(dtype)  # noqa: E731
-            # horizon VALUES were constant-folded inside the watermark
-            # advance's single agg job — no extra driver round-trip here
-            band = F.col(ts_col) < horizon(lit(new_wm))
+            band = F.col(ts_col) < cut
             if old_wm is not None:
                 band = band & (F.col(ts_col) >= horizon(lit(old_wm)))
             ranges = self._seg_ts.get(r.name, {})
@@ -1974,42 +1954,34 @@ class IncrementalAcyclicQuery:
             # this batch's write holds fresh rows (>= new horizon, <= wm) and
             # the band's negations (>= old horizon) — a cheap driver-side
             # superset range, no extra jobs
-            lo = h_old_v  # None (= -inf) on the first advance
             hi = new_wm if (h_new_v is None or h_new_v <= new_wm) else None
-            seg_range[r.name] = (lo, hi)
-        # post-batch relation view for the ΔJ terms and presence gates: the
-        # UNMERGED union old ∪ Δ in BOTH state regimes — algebraically
-        # identical to the netted multiset in every join (weights multiply)
-        # and aggregate (weights sum) by linearity, a (+w, −w) pair
-        # contributing exactly zero. Round 9: merge mode previously handed
-        # the terms the MERGED state, so every term referencing a new-side
-        # relation re-executed the net's groupBy inside its own (pruned)
-        # plan, and the state write then paid the same groupBy again plus
-        # its bucket repartition. Now the net runs exactly once per changed
-        # relation, inside the write, fused with the bucket repartition into
-        # a single full-state shuffle (_net_write).
-        new = {
-            r.name: old[r.name].unionByName(filt[r.name])
-            if r.name in filt
-            else old[r.name]
-            for r in rels
-        }
+            seg_range[r.name] = (h_old_v, hi)  # h_old_v None = -inf
+        return seg_range
 
-        # semi gates: swap the relation's multiset for its 0/1 PRESENCE view,
-        # and its raw delta for the presence DELTA (keys whose net count
-        # crossed zero this batch, computed over touched keys only)
+    def _gate_presence(self, filt: Mapping[str, DataFrame]) -> tuple[dict, dict, dict]:
+        """Gate presence stage: each relation's (new, old, Δ) versions for the
+        ΔJ terms. The post-batch view is the UNMERGED union old ∪ Δ in BOTH
+        state regimes — identical to the netted multiset in every join
+        (weights multiply) and aggregate (weights sum) by linearity, a
+        (+w, −w) pair contributing exactly zero — so the net runs once per
+        changed relation, inside its state write (``_net_write``). Semi/anti
+        gates swap the relation's multiset for its 0/1 PRESENCE view, and
+        its raw delta for the presence DELTA (keys whose net count crossed
+        zero this batch, computed over touched keys only)."""
         term_new: dict[str, DataFrame] = {}
         term_old: dict[str, DataFrame] = {}
         term_delta: dict[str, DataFrame] = {}
-        for r in rels:
+        for r in self.spec.relations:
+            old = self._read_state(r.name)
+            new = old.unionByName(filt[r.name]) if r.name in filt else old
             if not (r.semi or r.anti):
-                term_new[r.name], term_old[r.name] = new[r.name], old[r.name]
+                term_new[r.name], term_old[r.name] = new, old
                 if r.name in filt:
                     term_delta[r.name] = filt[r.name]
                 continue
             keys = [own for own, _ in r.join_pairs()]
-            old_p = self._presence(old[r.name], keys)
-            new_p = self._presence(new[r.name], keys)
+            old_p = self._presence(old, keys)
+            new_p = self._presence(new, keys)
             term_new[r.name], term_old[r.name] = new_p, old_p
             if r.name in filt:
                 touched = filt[r.name].select(*keys).distinct()
@@ -2020,88 +1992,86 @@ class IncrementalAcyclicQuery:
                     WEIGHT, F.lit(-1)
                 )
                 term_delta[r.name] = appeared.unionByName(vanished)
+        return term_new, term_old, term_delta
 
-        # ΔJ: one term per relation-with-delta per virtual tree. Anti gates
-        # expand by inclusion–exclusion — Q = Σ_S (−1)^|S| J(tree ∪ S) over
-        # subsets S of the anti relations (each participating as presence) —
-        # and each J's own sequential decomposition applies; every term is
-        # projected to a uniform (group key, w·measure…, hist value…, _w)
-        # row so trees with different column sets union cleanly.
-        import itertools
+    def _term_build(
+        self,
+        term_new: Mapping[str, DataFrame],
+        term_old: Mapping[str, DataFrame],
+        term_delta: Mapping[str, DataFrame],
+        bucket_memo: dict,
+    ) -> list[DataFrame]:
+        """term_build stage: ΔJ as a list of projected terms. One term per
+        relation-with-delta per virtual tree, or one telescoped term per tree
+        (``_factored_chain``). Anti gates expand by inclusion–exclusion —
+        Q = Σ_S (−1)^|S| J(tree ∪ S) over subsets S of the anti relations
+        (each participating as presence) — and each J's own decomposition
+        applies; every term is projected to a uniform (group key,
+        w·measure…, hist value…, _w) row so trees with different column sets
+        union cleanly.
 
+        Not pure plan-building: the delta-first order runs probe-pruning
+        collects and transitive partial-join localCheckpoints eagerly —
+        phase-scoped so the profile shows this cost instead of leaving it in
+        the unattributed gap."""
+        rels = self.spec.relations
         anti_rels = tuple(r for r in rels if r.anti)
         terms: list[DataFrame] = []
-        # the ingest counts are the one-hop probes' row counts wherever the
-        # term delta IS the ingested delta (not a gate's presence delta, not
-        # a ttl delta the watermark filtered and eviction extended)
-        bucket_memo: dict = {
-            ("rowcount", r.name): counts[r.name]
-            for r in rels
-            if r.name in counts and r.name in filt
-            and not (r.semi or r.anti) and r.ttl is None
-        }
-        # term construction is NOT pure plan-building: the delta-first order
-        # runs probe-pruning collects (bucket ids + capped key values per
-        # bucketed state scan) and transitive partial-join localCheckpoints
-        # eagerly — phase-scoped so the profile shows this cost instead of
-        # leaving it in the unattributed gap
-        self.last_factored = 0
-        self.last_checkpoints = 0
         with self._phase("term_build"):
             for k in range(len(anti_rels) + 1):
                 for S in itertools.combinations(anti_rels, k):
                     vlist = tuple(r for r in rels if not r.anti or r in S)
-                    sign = -1 if k % 2 else 1
+                    fact = None
                     if self.factor_terms:
                         fact = self._factored_chain(
                             vlist, term_new, term_old, term_delta, bucket_memo
                         )
-                        if fact is not None:
-                            self.last_factored += 1
-                            # process-cumulative engagement counter (test
-                            # observability for registered queries whose
-                            # engines are function-local)
-                            IncrementalAcyclicQuery.factored_global += 1
-                            if sign < 0:
-                                fact = fact.withColumn("_w", -F.col("_w"))
-                            terms.append(self._term_project(fact))
-                            continue
-                    def build_term(i: int, ri: RelSpec, vlist=vlist, sign=sign):
-                        versions = {}
-                        for j, rj in enumerate(vlist):
-                            if j < i:
-                                versions[rj.name] = term_new[rj.name]
-                            elif j == i:
-                                versions[rj.name] = term_delta[rj.name]
-                            else:
-                                versions[rj.name] = term_old[rj.name]
-                        t = self._join_chain(
-                            versions, vlist, delta_name=ri.name, bucket_memo=bucket_memo
-                        )
-                        if sign < 0:
-                            t = t.withColumn("_w", -F.col("_w"))
-                        return self._term_project(t)
-
-                    # per-term decomposition: the terms are independent
-                    # (distinct delta relations, distinct memo keys) — run
-                    # their eager probe collects concurrently, keeping the
-                    # union's term order deterministic (guide §2.6)
-                    terms.extend(
-                        _run_parallel(
+                    if fact is not None:
+                        self.last_factored += 1
+                        # process-cumulative engagement counter (test
+                        # observability for registered queries whose
+                        # engines are function-local)
+                        IncrementalAcyclicQuery.factored_global += 1
+                        parts = [fact]
+                    else:
+                        # per-term decomposition: the terms are independent
+                        # (distinct delta relations, distinct memo keys) —
+                        # run their eager probe collects concurrently,
+                        # keeping the union's term order deterministic
+                        parts = _run_parallel(
                             [
-                                lambda i=i, ri=ri: build_term(i, ri)
+                                lambda i=i, vlist=vlist: self._join_chain(
+                                    {
+                                        rj.name: (
+                                            term_new if j < i
+                                            else term_delta if j == i
+                                            else term_old
+                                        )[rj.name]
+                                        for j, rj in enumerate(vlist)
+                                    },
+                                    vlist,
+                                    delta_name=vlist[i].name,
+                                    bucket_memo=bucket_memo,
+                                )
                                 for i, ri in enumerate(vlist)
                                 if ri.name in term_delta
                             ]
                         )
-                    )
-        if not terms:
-            # empty batch: no state changes, but still record batch_id so
-            # last_batch stays aligned with the stream's committed offsets
-            if batch_id is not None:
-                self._last_batch = batch_id
-                self._commit_manifest()
-            return None
+                    for t in parts:
+                        if k % 2:
+                            t = t.withColumn("_w", -F.col("_w"))
+                        terms.append(self._term_project(t))
+        return terms
+
+    def _join_fold(
+        self, terms: list[DataFrame], filt: Mapping[str, DataFrame], emit_delta: bool
+    ) -> tuple[DataFrame, dict[str, DataFrame], DataFrame | None]:
+        """join_fold stage: fold ΔJ into the grouped aggregate delta and the
+        value-histogram deltas (measures were multiplied by ``_w`` per term
+        in ``_term_project``; summing here is the same algebra). With
+        ``emit_delta`` the aggregate delta is materialized once — it feeds
+        the commit and the touched-group set, returned third (``None``
+        without ``emit_delta`` or group keys)."""
         dj = reduce(lambda a, b: a.unionByName(b), terms)
         if self.spec.hist_measures:
             # ≥2 consumers of the raw ΔJ (the aggregate fold below plus one
@@ -2112,182 +2082,134 @@ class IncrementalAcyclicQuery:
             # rows and the blocks are MEMORY_AND_DISK, so this spills rather
             # than re-joins at scale.
             dj = dj.localCheckpoint(eager=False)
-
-        # fold ΔJ into grouped aggregate state (measures were multiplied by
-        # _w per term in _term_project; summing here is the same algebra)
         gb = list(self.spec.group_by)
         aggs = [F.sum(name).alias(name) for name in self.spec.measures] + [
             F.sum("_w").alias("support")
         ]
         agg_delta = self._conform("agg", dj.groupBy(*gb).agg(*aggs))
         # build (and schema-pin) the hist deltas BEFORE any emit_delta
-        # pre-view: _emit reads hist state, and on the first batch that state
-        # is empty with no schema yet — conforming here pins it so the
+        # pre-view: ``result`` reads hist state, and on the first batch that
+        # state is empty with no schema yet — conforming here pins it so the
         # pre-view sees an empty typed histogram instead of raising
-        hist_deltas: dict[str, DataFrame] = {}
-        for name in self.spec.hist_measures:
-            hist_deltas[name] = self._conform(
+        hist_deltas = {
+            name: self._conform(
                 f"hist::{name}",
                 dj.groupBy(*gb, F.col(f"_hv_{name}").alias("_v")).agg(
                     F.sum("_w").alias(WEIGHT)
                 ),
             )
+            for name in self.spec.hist_measures
+        }
+        if not emit_delta:
+            return agg_delta, hist_deltas, None
+        with self._phase("join_fold"):
+            agg_delta, n_touched = self._counted_checkpoint(agg_delta)
+        if not gb:
+            return agg_delta, hist_deltas, None
+        # agg_delta is grouped by group_by, so its keys are already distinct:
+        # only the preserve union needs a distinct of its own. Preserve-padded
+        # rows can flip on a parent-only delta with no join rows, so the
+        # preserved relation's delta keys count as touched too.
+        touched = agg_delta.select(*gb)
+        if self.spec.preserve is not None and self.spec.preserve in filt:
+            touched = touched.unionByName(filt[self.spec.preserve].select(*gb))
+            with self._phase("touched"):
+                touched, n_touched = self._counted_checkpoint(touched.distinct())
+        return agg_delta, hist_deltas, self._broadcast_if_small(touched, n_touched)
 
-        touched_groups = None
-        pre_view_box: list = [None]
-        if emit_delta:
-            # materialize the delta-join once (it feeds the commit below and
-            # the touched-group set), then snapshot the PRE-batch view rows
-            # of touched groups before any state file changes. Preserve-
-            # padded rows can flip on a parent-only delta with no join rows,
-            # so the preserved relation's delta keys count as touched too.
-            # agg_delta is grouped by group_by, so its keys are already
-            # distinct: only the preserve union needs a distinct of its own.
-            with self._phase("join_fold"):
-                agg_delta, n_touched = self._counted_checkpoint(agg_delta)
-            if gb:
-                touched_groups = agg_delta.select(*gb)
-                if self.spec.preserve is not None and self.spec.preserve in filt:
-                    touched_groups = touched_groups.unionByName(
-                        filt[self.spec.preserve].select(*gb)
-                    )
-                    with self._phase("touched"):
-                        touched_groups, n_touched = self._counted_checkpoint(
-                            touched_groups.distinct()
-                        )
-                touched_groups = self._broadcast_if_small(touched_groups, n_touched)
-
-        # two-phase commit: every write of this batch executes BEFORE any
-        # superseded files are deleted — the agg write's lazy plan still scans
-        # the pre-batch relation segments
-        cleanup: list[str] = []
-        changed = [r.name for r in rels if r.name in filt]
-        for r in rels:
-            # ttl segment written without a horizon advance: rows are all
-            # within the current window — (unbounded, wm] is a safe superset
-            if r.ttl is not None and r.name in filt and r.name not in seg_range:
-                seg_range[r.name] = (None, self._watermarks.get(r.name))
-        # the per-relation, aggregate, and histogram commits are mutually
-        # independent (each reads pre-batch segments + its own delta, writes
-        # its own versioned path) — run them from a bounded thread pool so
-        # their job latencies overlap (guide §2.6; optimization round r11)
-        commit_tasks: list[tuple[str, Callable[[], None]]] = []
-
-        def _rel_task(rel: str) -> Callable[[], None]:
-            return lambda: self._commit_state(
-                rel, new[rel], filt[rel], cleanup, ts_range=seg_range.get(rel)
+    def _commit_wave(
+        self,
+        filt: Mapping[str, DataFrame],
+        seg_range: Mapping[str, tuple],
+        agg_delta: DataFrame,
+        hist_deltas: Mapping[str, DataFrame],
+        pre_plan: DataFrame | None,
+        cleanup: list[str],
+    ) -> DataFrame | None:
+        """Commit wave: every relation, aggregate and histogram state write of
+        the batch, plus the materialization of ``pre_plan`` (the pre-batch
+        emitted view, when given; returned). The tasks are mutually
+        independent — each reads pre-batch segments plus its own delta and
+        writes its own versioned path — so they run from one bounded thread
+        pool and their job latencies overlap (guide §2.6). Two-phase commit:
+        superseded paths only go to ``cleanup``, deleted after the
+        manifest."""
+        tasks: list[tuple[str, Callable[[], object]]] = [
+            (
+                f"state_write:{rel}",
+                lambda rel=rel: self._commit_state(
+                    rel, filt[rel], cleanup, ts_range=seg_range.get(rel)
+                ),
             )
-
-        for rel in changed:
-            commit_tasks.append((f"state_write:{rel}", _rel_task(rel)))
-        agg_old = self._read_paths("agg", self._segments.get("agg", []))
-
-        def _agg_task() -> None:
-            if self.compact_every == 1:
-                self._commit_state(
-                    "agg",
-                    agg_old.unionByName(agg_delta),
-                    agg_delta,
-                    cleanup,
-                    net_fn=self._agg_net,
-                )
-            else:
-                self._commit_state(
-                    "agg", None, agg_delta, cleanup, net_fn=self._agg_net
-                )
-
-        commit_tasks.append(("agg_write", _agg_task))
-
+            for rel in filt
+        ]
+        tasks.append(
+            (
+                "agg_write",
+                lambda: self._commit_state(
+                    "agg", agg_delta, cleanup, net_fn=self._agg_net
+                ),
+            )
+        )
         # value-histogram state for non-invertible aggregates: same ΔJ,
         # grouped one level finer — (group key, value) -> net weight
-        def _hist_task(rel: str, hd: DataFrame) -> Callable[[], None]:
-            def run() -> None:
-                if self.compact_every == 1:
-                    h_old = self._read_paths(rel, self._segments.get(rel, []))
-                    self._commit_state(rel, h_old.unionByName(hd), hd, cleanup)
-                else:
-                    self._commit_state(rel, None, hd, cleanup)
-
-            return run
-
-        for name in self.spec.hist_measures:
-            commit_tasks.append(
-                (f"hist_write:{name}", _hist_task(f"hist::{name}", hist_deltas[name]))
+        tasks += [
+            (
+                f"hist_write:{name}",
+                lambda name=name: self._commit_state(
+                    f"hist::{name}", hist_deltas[name], cleanup
+                ),
             )
-        if emit_delta:
-            # the PRE-batch view snapshot reads only pre-batch state files,
-            # which two-phase commit keeps on disk until the post-manifest
-            # cleanup — so its EXECUTION is independent of every state write
-            # above and joins the same parallel wave (guide §2.6;
-            # optimization r11). The plan is built HERE on the main thread —
-            # _emit resolves segment paths at plan-build time, and the
-            # concurrent commits swap self._segments to the new versions —
-            # so the snapshot is pinned to the pre-batch files before any
-            # commit task can run.
-            pre_plan = self._emit(touched_groups)
+            for name in hist_deltas
+        ]
+        if pre_plan is not None:
+            tasks.append(("emit_pre", pre_plan.localCheckpoint))
+        done = self._parallel(tasks)
+        return done[-1] if pre_plan is not None else None
 
-            def _pre_task() -> None:
-                pre_view_box[0] = pre_plan.localCheckpoint()
+    def _emit_changelog(
+        self,
+        touched: DataFrame | None,
+        pre_view: DataFrame,
+        batch_id: int | None,
+        cleanup: list[str],
+    ) -> DataFrame:
+        """Emit stage: the batch's changelog of the emitted view, pre(−1) ∪
+        post(+1), un-netted. A touched group whose emitted row did not change
+        contributes an identical ± pair that nets to zero in every consumer
+        (downstream engines sum weights; the top-k buffer pops and readmits
+        the same row). The post-batch view reads the freshly written
+        (pre-manifest) state; the pre side is the wave-materialized
+        checkpoint.
 
-            commit_tasks.append(("emit_pre", _pre_task))
-        self._parallel(commit_tasks)
-        pre_view = pre_view_box[0]
-        if batch_id is not None:
-            self._last_batch = batch_id
-        changelog = None
-        if emit_delta:
-            # pre(−1) ∪ post(+1), un-netted: a touched group whose emitted
-            # row did not actually change contributes an identical ± pair
-            # that nets to zero in every consumer (downstream engines sum
-            # weights; the top-k buffer pops and readmits the same row).
-            # Groups touched only through zero-net contributions (a delta
-            # canceling against state rows inside the unmerged union) are
-            # the round-9 source of such pairs — bounded by touched groups.
-            # The post-batch view reads the freshly written (pre-manifest)
-            # state; the pre side is the wave-materialized checkpoint.
-            changelog = self._emit(touched_groups).withColumn(
-                WEIGHT, F.lit(1)
-            ).unionByName(pre_view.withColumn(WEIGHT, F.lit(-1)))
-            if batch_id is not None:
-                # persist the emitted changelog INSIDE this batch's atomic
-                # commit so a crash-replayed batch can still hand the exact
-                # view delta to downstream engines / sinks (see replay skip).
-                # The post-view plan executes INSIDE this write — fused into
-                # one action (optimization r11: the former emit_post
-                # localCheckpoint + emitted_write pair cost two sequential
-                # jobs per batch). Downstream consumers get the written file
-                # read back, exactly the replay path's frame. r12 measured an
-                # in-memory handoff alternative (persist() filled by this
-                # same write) and REVERTED it: caching materializes the plan
-                # WITHOUT AQE's partition coalescing (grouped stack 36→46 s
-                # at sf0.1), and even with canChangeCachedPlanOutputPartitioning
-                # =true it only broke even with this read-back — the tiny
-                # emitted file re-scans are already at the floor.
-                epath = os.path.join(self.state_dir, f"emitted_b{batch_id}")
-                with self._phase("emitted_write"):
-                    changelog.write.mode("overwrite").parquet(epath)
-                # pinned schema: parquet schema inference is one more job
-                changelog = self.spark.read.schema(changelog.schema).parquet(epath)
-                if self._emitted is not None:
-                    cleanup.append(self._emitted["path"])
-                self._emitted = {"batch": batch_id, "path": epath}
-            else:
-                # no durable emission requested: materialize the post view so
-                # the returned changelog does not re-execute it per consumer
-                with self._phase("emit_post"):
-                    changelog = changelog.localCheckpoint()
-        # count only state-writing batches (empty batches cost no IO in
-        # either regime, so they don't advance the auto switch)
-        self._committed_batches += 1
-        self._commit_manifest()  # atomic commit point; cleanup is post-commit
-        for p in cleanup:
-            shutil.rmtree(p, ignore_errors=True)
-        return changelog
+        With a ``batch_id`` the changelog is persisted INSIDE this batch's
+        atomic commit, so a crash-replayed batch can still hand the exact
+        view delta to downstream engines and sinks (see the replay skip),
+        and the return is the written file read back — exactly the replay
+        path's frame. The post-view plan executes inside that write, one
+        action. r12 measured an in-memory handoff (persist() filled by the
+        same write) and REVERTED it: caching materializes the plan without
+        AQE's partition coalescing (grouped stack 36→46 s at sf0.1)."""
+        changelog = self.result(touched).withColumn(WEIGHT, F.lit(1)).unionByName(
+            pre_view.withColumn(WEIGHT, F.lit(-1))
+        )
+        if batch_id is None:
+            # no durable emission requested: materialize the post view so
+            # the returned changelog does not re-execute it per consumer
+            with self._phase("emit_post"):
+                return changelog.localCheckpoint()
+        epath = os.path.join(self.state_dir, f"emitted_b{batch_id}")
+        with self._phase("emitted_write"):
+            changelog.write.mode("overwrite").parquet(epath)
+        if self._emitted is not None:
+            cleanup.append(self._emitted["path"])
+        self._emitted = {"batch": batch_id, "path": epath}
+        # pinned schema: parquet schema inference is one more job
+        return self.spark.read.schema(changelog.schema).parquet(epath)
 
     def _commit_state(
         self,
         rel: str,
-        merged: DataFrame | None,
         delta: DataFrame,
         cleanup: list[str],
         net_fn=None,
@@ -2295,15 +2217,14 @@ class IncrementalAcyclicQuery:
     ) -> None:
         """Persist one relation's post-batch state.
 
-        merge-and-rewrite mode receives the UNMERGED union old ∪ Δ in
-        ``merged`` and nets it INSIDE the write (``_net_write`` — one
-        full-state shuffle, not the round-8 merge-exchange + write-exchange
-        pair); log-structured mode appends ``delta`` as a new segment
-        (O(Δ) IO) and, past ``compact_every`` live segments, compacts the
-        union back to the net multiset. ``net_fn`` picks the reduction
-        (default ``_net``; ``_agg_net`` for the aggregate). Superseded paths
-        go to ``cleanup``, deleted only after the whole batch's writes
-        executed.
+        merge-and-rewrite mode nets the UNMERGED union old ∪ Δ INSIDE the
+        write (``_net_write`` — one full-state shuffle, not the round-8
+        merge-exchange + write-exchange pair); log-structured mode appends
+        ``delta`` as a new segment (O(Δ) IO) and, past ``compact_every``
+        live segments, compacts the union back to the net multiset.
+        ``net_fn`` picks the reduction (default ``_net``; ``_agg_net`` for
+        the aggregate). Superseded paths go to ``cleanup``, deleted only
+        after the whole batch's writes executed.
 
         ``ts_range`` (ttl relations) is this write's driver-side superset of
         its rows' event times; merged/compacted paths take the union of
@@ -2312,6 +2233,7 @@ class IncrementalAcyclicQuery:
         if self.compact_every == 1:
             nxt = self._version[rel] + 1
             p = self._path(rel, nxt)
+            merged = self._read_state(rel).unionByName(delta)
             n_rows = self._net_write(rel, merged, p, net_fn)
             if n_rows is not None:
                 self._state_rows[rel] = n_rows  # exact: full rewrite
@@ -2347,9 +2269,7 @@ class IncrementalAcyclicQuery:
         if len(self._segments[rel]) > self.compact_every:
             nxt = self._version[rel] + 1
             cp = self._path(rel, nxt)
-            n_rows = self._net_write(
-                rel, self._read_paths(rel, self._segments[rel]), cp, net_fn
-            )
+            n_rows = self._net_write(rel, self._read_state(rel), cp, net_fn)
             if n_rows is not None:
                 self._state_rows[rel] = n_rows  # exact again post-compaction
             self._version[rel] = nxt
@@ -2504,14 +2424,6 @@ class IncrementalAcyclicQuery:
         return int(obs.get["rows"]) if obs is not None else None
 
     # --- result -------------------------------------------------------------
-    def result(self, touched: DataFrame | None = None) -> DataFrame:
-        """Maintained view, optionally RESTRICTED to the groups in ``touched``
-        (group-key rows): the restriction pushes into every state read as a
-        semi-join (see ``_emit``), so reading a subset of groups costs
-        O(subset ⋈ state) — the hook downstream consumers (chained engines,
-        GroupedTopKView refills) use to avoid full-view scans."""
-        return self._emit(touched)
-
     def topk_result(self) -> DataFrame:
         """The maintained ``ORDER BY … LIMIT k`` (spec.top_k) as a DataFrame
         — the view's schema, restricted and ranked. Global form: the bounded
@@ -2525,7 +2437,7 @@ class IncrementalAcyclicQuery:
             return self._topk.result()
         schema = self._topk._schema
         if schema is None:
-            schema = self._emit().schema
+            schema = self.result().schema
         rows = [
             tuple(r[f.name] for f in schema.fields)
             for r in self._topk.result_rows()
@@ -2547,19 +2459,20 @@ class IncrementalAcyclicQuery:
             )
         return self._topk.emitted_df()
 
-    def _emit(self, touched: DataFrame | None = None) -> DataFrame:
-        """Build the emitted view; ``touched`` (group-key rows) restricts the
-        output to those groups BEFORE ``finalize`` — used by emit_delta, which
-        therefore treats finalize as row-wise over group rows (a finalize that
-        aggregates ACROSS groups should be expressed as a chained engine via
-        emit_delta instead — that is exactly what the hook is for).
+    def result(self, touched: DataFrame | None = None) -> DataFrame:
+        """Maintained view, optionally RESTRICTED to the groups in ``touched``
+        (group-key rows) BEFORE ``finalize`` — the hook downstream consumers
+        (emit_delta, chained engines, GroupedTopKView refills) use to avoid
+        full-view scans. emit_delta therefore treats finalize as row-wise
+        over group rows (a finalize that aggregates ACROSS groups should be
+        expressed as a chained engine via emit_delta instead — that is
+        exactly what the hook is for).
 
-        The touched restriction is PUSHED DOWN onto every state read (it
-        commutes with the per-group reductions, which never mix groups), so
-        an emit_delta snapshot aggregates only touched groups' state rows —
-        per-batch emit work is O(touched ⋈ state), not O(all groups). At
-        100 TB with bucketed/keyed state the same semi-join is a co-located
-        point lookup per touched group."""
+        The touched restriction is PUSHED DOWN onto every state read as a
+        semi-join (it commutes with the per-group reductions, which never mix
+        groups), so reading a subset of groups costs O(subset ⋈ state), not
+        O(all groups). At 100 TB with bucketed/keyed state the same
+        semi-join is a co-located point lookup per touched group."""
         gb = list(self.spec.group_by)
 
         def restrict(df: DataFrame) -> DataFrame:

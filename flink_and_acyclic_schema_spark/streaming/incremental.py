@@ -9,13 +9,13 @@ B1-B3), this maintains, per micro-batch of weighted deltas (ΔL, ΔO, ΔC, ΔN):
     ΔJ = ΔL⋈O₀⋈C₀⋈N₀  ∪  L₁⋈ΔO⋈C₀⋈N₀  ∪  L₁⋈O₁⋈ΔC⋈N₀  ∪  L₁⋈O₁⋈C₁⋈ΔN
 
 (X₀ = state before the batch, X₁ = X₀+ΔX — the standard sequential delta-join
-decomposition; weights multiply across the join; since round 10 the engine
-executes the algebraically-identical TELESCOPED form over path-shaped trees,
-B_i = Δ_i⋈old-suffix ∪ new_i⋈B_{i+1}, reordering the enumeration along the
-tree's Hamiltonian path when one exists (the telescoping nets identically in
-any order), so each new-side relation is joined once per batch instead of
-once per term — streaming/acyclic.py ``_factored_chain``) and folds ΔJ into
-the grouped
+decomposition; weights multiply across the join; the engine executes the
+algebraically-identical TELESCOPED form, B_i = Δ_i⋈old-suffix ∪ new_i⋈B_{i+1},
+over any tree: the enumeration follows a leaf-peeling order — repeatedly
+remove a leaf of the remaining tree — so every suffix stays a connected
+subtree (the telescoping nets identically in any order), and each new-side
+relation is joined once per batch instead of once per term —
+streaming/acyclic.py ``_factored_chain``) and folds ΔJ into the grouped
 aggregate state: revenue += Σ w·price·(1−disc), support += Σ w. Groups keep
 living in state while support ≠ 0 and surface while support > 0. Per batch the
 work is O(Δ ⋈ state) — never a recompute.

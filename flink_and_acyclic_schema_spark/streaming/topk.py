@@ -701,16 +701,11 @@ class GroupedTopKView:
     reattaches WITHOUT the O(view) ``prime()`` re-rank that the previous
     localCheckpoint (non-replicated storage) design forced. Replayed
     batches (``batch_id`` ≤ last committed) are skipped — idempotent under
-    foreachBatch crash-replay redelivery. With ``state_dir=None`` state
-    lives in localCheckpoint blocks instead: cheap for short-lived/test
-    pipelines, explicitly NOT fault-tolerant mid-run — which is why that
-    mode requires the explicit ``ephemeral=True`` opt-in (round 8); the
-    durable path is the default and the only one the spec-level knob wires.
+    foreachBatch crash-replay redelivery.
 
     NULL order values never enter candidates (SQL NULLS LAST for a LIMIT
     the non-NULL rows satisfy). The structure is a pure function of the
-    live view, so even a lost ephemeral instance can always be rebuilt with
-    ``prime()``.
+    live view, so it can always be rebuilt from it with ``prime()``.
     """
 
     def __init__(
@@ -720,31 +715,17 @@ class GroupedTopKView:
         group_cols: tuple[str, ...],
         key_cols: tuple[str, ...],
         refill,
+        state_dir: str,
+        spark,
         descending: bool = True,
         slack: int | None = None,
-        state_dir: str | None = None,
-        spark=None,
         buckets: int = 8,
         bucket_target_rows: int = 0,
         resume: bool = False,
         emit: bool = False,
-        ephemeral: bool = False,
     ):
         if k < 1:
             raise ValueError("k must be >= 1")
-        if state_dir is None and not ephemeral:
-            # the fragile mode must be an explicit CHOICE, not a default: with
-            # no state_dir, candidate/boundary state lives in localCheckpoint
-            # blocks — cheap for tests/short-lived pipelines, NOT fault-
-            # tolerant mid-run (an executor loss or restart loses it; recovery
-            # is an O(view) prime()). Production streams pass state_dir (the
-            # spec-level TopKSpec knob always does).
-            raise ValueError(
-                "GroupedTopKView without state_dir keeps state in "
-                "localCheckpoint blocks (not fault-tolerant mid-run); pass "
-                "state_dir=... for manifest-committed durable state, or opt "
-                "in explicitly with ephemeral=True for test/short-lived use"
-            )
         if not group_cols or not key_cols:
             raise ValueError("group_cols and key_cols must be non-empty")
         if set(group_cols) & set(key_cols):
@@ -763,12 +744,9 @@ class GroupedTopKView:
         # (IncrementalAcyclicQuery.result's touched semantics)
         self._refill_fn = refill
         self.state_dir = state_dir
-        self.durable = state_dir is not None
         self.buckets = buckets
         self.bucket_target_rows = bucket_target_rows
         self._spark = spark
-        self._cand: DataFrame | None = None  # ephemeral candidates (view cols)
-        self._bound: DataFrame | None = None  # group_cols + _bv + _bk0..n
         self._schema = None  # StructType of candidate rows, pinned at first use
         self._bschema = None  # StructType of boundary rows
         self._version = 0
@@ -779,34 +757,30 @@ class GroupedTopKView:
         # emit=True: apply() additionally returns the PER-GROUP TOP-K view's
         # own netted ±changelog (entries/exits across touched groups) — the
         # same composition hook TopKView provides, Spark-side: two ranks
-        # over the touched shards and an O(touched top-k) net. Persisted in
-        # durable mode, so replay redelivers the same rows (sink contract).
+        # over the touched shards and an O(touched top-k) net. Persisted, so
+        # replay redelivers the same rows (sink contract).
         self.emit = emit
-        # durable: {"batch": id, "path": parquet dir} of the last emitted
-        # top-k delta — an explicit manifest-held path (survives growth
-        # rewrites, which bump versions without emitting)
+        # {"batch": id, "path": parquet dir} of the last emitted top-k
+        # delta — an explicit manifest-held path (survives growth rewrites,
+        # which bump versions without emitting)
         self._emitted: dict | None = None
-        self._last_emitted: DataFrame | None = None  # ephemeral mode
         # observability: tools assert the touched-restriction cost model
         self.instrument = False
         self.last_touched_buckets = 0
         self.last_read_rows = 0
         self.last_plan = ""  # physical plan of the last batch's candidate rebuild
-        if self.durable:
-            if spark is None:
-                raise ValueError("durable mode (state_dir) needs spark")
-            if resume and os.path.exists(self._manifest_path()):
-                self._load_manifest()
-            else:
-                if os.path.exists(state_dir):
-                    shutil.rmtree(state_dir)
-                os.makedirs(state_dir)
-                # initial empty commit (see TopKView.__init__): a restart
-                # during batch 0 must resume to "complete over the empty
-                # view" and rebuild from the replayed changelog — not
-                # re-prime from the already-updated view and emit an empty
-                # first delta into an exactly-once sink
-                self._write_manifest()
+        if resume and os.path.exists(self._manifest_path()):
+            self._load_manifest()
+        else:
+            if os.path.exists(state_dir):
+                shutil.rmtree(state_dir)
+            os.makedirs(state_dir)
+            # initial empty commit (see TopKView.__init__): a restart
+            # during batch 0 must resume to "complete over the empty
+            # view" and rebuild from the replayed changelog — not
+            # re-prime from the already-updated view and emit an empty
+            # first delta into an exactly-once sink
+            self._write_manifest()
 
     # --- internals -----------------------------------------------------------
     def _order(self):
@@ -889,12 +863,7 @@ class GroupedTopKView:
     def _empty(self, schema) -> DataFrame:
         return self._spark.createDataFrame([], schema)
 
-    def _read(self, mp: dict[str, str], schema, ephemeral, buckets) -> DataFrame:
-        if not self.durable:
-            df = ephemeral if ephemeral is not None else self._empty(schema)
-            if buckets is not None:
-                df = df.filter(self._bexpr().isin([int(b) for b in buckets]))
-            return df
+    def _read(self, mp: dict[str, str], schema, buckets) -> DataFrame:
         want = None if buckets is None else {str(b) for b in buckets}
         paths = [p for b, p in mp.items() if want is None or b in want]
         if not paths:
@@ -902,12 +871,12 @@ class GroupedTopKView:
         return self._spark.read.schema(schema).parquet(*paths)
 
     def _read_cand(self, buckets=None) -> DataFrame:
-        return self._read(self._cand_map, self._schema, self._cand, buckets)
+        return self._read(self._cand_map, self._schema, buckets)
 
     def _read_bound(self, buckets=None) -> DataFrame:
-        return self._read(self._bound_map, self._bschema, self._bound, buckets)
+        return self._read(self._bound_map, self._bschema, buckets)
 
-    # --- manifest (atomic commit point, durable mode) ------------------------
+    # --- manifest (atomic commit point) --------------------------------------
     def _manifest_path(self) -> str:
         return os.path.join(self.state_dir, "MANIFEST.json")
 
@@ -989,34 +958,15 @@ class GroupedTopKView:
         pre_topk: DataFrame | None = None,
     ) -> DataFrame | None:
         """Publish the post-batch state of the TOUCHED shards; untouched
-        shards carry forward untouched (their files in durable mode, their
-        rows in ephemeral mode). Durable commit = versioned parquet writes,
-        then ONE atomic manifest replace — every referenced path is fully
-        written first, superseded dirs are GC'd after (two-phase, the
+        shards' files carry forward untouched. Commit = versioned parquet
+        writes, then ONE atomic manifest replace — every referenced path is
+        fully written first, superseded dirs are GC'd after (two-phase, the
         engine's discipline). With ``emit`` (pre_topk given), the top-k
-        view's netted ±changelog is computed from the freshly WRITTEN shards
-        (no recompute of the candidate plan), persisted inside the same
-        commit, and returned."""
+        view's netted ±changelog is computed from the post-batch candidate
+        frame (no recompute of the candidate plan), persisted inside the
+        same commit, and returned."""
         fields = [f.name for f in self._schema.fields]
         cand = cand.select(*fields)
-        if not self.durable:
-            keep = ~self._bexpr().isin([int(b) for b in touched])
-            self._cand = (
-                self._read_cand().filter(keep).unionByName(cand).localCheckpoint()
-            )
-            self._bound = (
-                self._read_bound().filter(keep).unionByName(bound).localCheckpoint()
-            )
-            if batch_id is not None:
-                self._last_batch = batch_id
-            delta = None
-            if pre_topk is not None:
-                delta = self._net_delta(
-                    pre_topk, self._topk_of(self._read_cand(touched))
-                ).localCheckpoint()
-                self._last_emitted = delta
-                self._emitted = {"batch": batch_id}
-            return delta
         # version bumps BEFORE any write: if this commit fails mid-way, a
         # same-instance retry writes v+1 and can never overwrite a dir the
         # (still-committed) live maps reference. All map/row-count/emitted/
@@ -1135,19 +1085,18 @@ class GroupedTopKView:
         if pre_topk is None:
             return None
         # the emitted dir is manifest-held (self._emitted after adopt), so
-        # the GC above preserved it — replay/resume read it via emitted_df().
-        # The live return is the parquet read-back of the emit dir just
-        # written: the same replay frame, no in-memory handoff. The pinned
-        # schema spares the parquet schema-inference job.
-        return self._spark.read.schema(delta.schema).parquet(epath)
+        # the GC above preserved it. The live return is the replay frame
+        # itself — the read-back of the emit dir just written, no in-memory
+        # handoff.
+        return self.emitted_df()
 
     def _maybe_grow(self) -> None:
-        """Adaptive shard growth (durable + ``bucket_target_rows`` only):
+        """Adaptive shard growth (``bucket_target_rows`` only):
         when mean rows/shard exceeds the target, double the shard count and
         rewrite ALL shards — rare and amortized, exactly the engine's
         ``bucket_target_rows`` compaction discipline. Keeps the touched-
         shard read O(target) as groups grow 1000×."""
-        if not self.durable or self.bucket_target_rows <= 0:
+        if self.bucket_target_rows <= 0:
             return
         total = sum(self._bucket_rows.values())
         want = self.buckets
@@ -1168,10 +1117,9 @@ class GroupedTopKView:
 
     def prime(self) -> None:
         """(Re)build candidates from the full view — initial attach to an
-        existing view, or recovery of an EPHEMERAL instance. A durable
-        instance restarts via ``resume=True`` instead (no view scan)."""
+        existing view. A restart resumes via ``resume=True`` instead (no
+        view scan)."""
         view = self._refill_fn(None)
-        self._spark = self._spark or view.sparkSession
         self._pin_schemas(view)
         view = self._non_null_order(view)
         ranked = self._rank(view)
@@ -1191,7 +1139,7 @@ class GroupedTopKView:
 
         With ``emit=True`` returns the PER-GROUP TOP-K view's own netted
         ±changelog for this batch (entries/exits/value-updates across the
-        touched groups) — persisted in durable mode, so a replayed batch
+        touched groups) — persisted, so a replayed batch
         returns the SAME rows (the exactly-once sink contract)."""
         if changelog is None:
             return None
@@ -1207,7 +1155,6 @@ class GroupedTopKView:
             ):
                 return self.emitted_df()
             return None
-        self._spark = self._spark or changelog.sparkSession
         self._pin_schemas(changelog.drop(WEIGHT))
         gk = [*self.group_cols, *self.key_cols]
         # the batch's shard footprint: ≤ ``buckets`` ints to the driver
@@ -1231,7 +1178,7 @@ class GroupedTopKView:
         cand0 = self._read_cand(tb)
         pre_topk = self._topk_of(cand0) if self.emit else None
         bound0 = self._read_bound(tb)
-        if self.instrument and self.durable:
+        if self.instrument:
             # metadata-only counts of the shards this batch will read
             self.last_read_rows = cand0.count()
         neg = changelog.filter(F.col(WEIGHT) < 0).select(*gk)
@@ -1367,13 +1314,16 @@ class GroupedTopKView:
     # --- emission ------------------------------------------------------------
     def emitted_df(self) -> DataFrame | None:
         """The last committed batch's emitted per-group top-k changelog
-        (``emit=True``) — durable mode reads the manifest-held path, so a
-        crash-replayed batch hands a downstream sink the SAME rows."""
+        (``emit=True``), read from the manifest-held path — so a
+        crash-replayed batch hands a downstream sink the SAME rows. The
+        schema is pinned (candidate columns plus the int ``weight``
+        ``_net_delta`` writes), which spares parquet schema inference."""
         if not self.emit or self._emitted is None:
             return None
-        if not self.durable:
-            return self._last_emitted
-        return self._spark.read.parquet(self._emitted["path"])
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        schema = StructType([*self._schema.fields, StructField(WEIGHT, IntegerType())])
+        return self._spark.read.schema(schema).parquet(self._emitted["path"])
 
     def result(self) -> DataFrame:
         """Exact per-group top-k: rank candidates only — never the view."""

@@ -1,0 +1,101 @@
+"""Structure guard for the streaming engine — pure Python, no Spark session.
+
+The continuous engine's batch pipeline is a sequence of stage methods
+(``IncrementalAcyclicQuery._process_batch_inner``); this keeps any one
+function of ``streaming/acyclic.py`` from growing back into a monolith, and
+keeps ``streaming/`` free of environment-variable knobs."""
+
+from __future__ import annotations
+
+import ast
+import io
+import tokenize
+from pathlib import Path
+
+STREAMING = (
+    Path(__file__).resolve().parent.parent / "flink_and_acyclic_schema_spark" / "streaming"
+)
+MAX_FUNCTION_CODE_LINES = 100
+
+
+def _code_lines(src: str) -> tuple[ast.Module, set[int]]:
+    """The parsed module and the line numbers that hold code: blank lines,
+    comment-only lines and docstrings do not count."""
+    tree = ast.parse(src)
+    docstrings: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            first = node.body[0] if node.body else None
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Constant)
+                and isinstance(first.value.value, str)
+            ):
+                docstrings.update(range(first.lineno, first.end_lineno + 1))
+    skip = {
+        tokenize.COMMENT,
+        tokenize.NL,
+        tokenize.NEWLINE,
+        tokenize.INDENT,
+        tokenize.DEDENT,
+        tokenize.ENDMARKER,
+    }
+    lines: set[int] = set()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type not in skip:
+            lines.update(range(tok.start[0], tok.end[0] + 1))
+    return tree, lines - docstrings
+
+
+def _function_sizes(src: str) -> dict[str, int]:
+    """Code lines per function (nested functions count toward their
+    enclosing function too), keyed ``name:line``."""
+    tree, lines = _code_lines(src)
+    return {
+        f"{node.name}:{node.lineno}": sum(
+            1 for ln in lines if node.lineno <= ln <= node.end_lineno
+        )
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def test_code_line_counter_skips_docstrings_comments_and_blanks():
+    src = '''"""Module docstring."""
+
+
+def f(x):
+    """Docstring
+    over two lines."""
+    # a comment
+    y = (x +
+         1)  # trailing comment
+
+    return y
+'''
+    assert _function_sizes(src) == {"f:4": 4}
+
+
+def test_no_acyclic_function_exceeds_code_line_limit():
+    sizes = _function_sizes((STREAMING / "acyclic.py").read_text())
+    assert "_process_batch_inner" in {k.split(":")[0] for k in sizes}
+    over = {k: n for k, n in sizes.items() if n > MAX_FUNCTION_CODE_LINES}
+    assert not over, f"functions over {MAX_FUNCTION_CODE_LINES} code lines: {over}"
+
+
+def test_streaming_reads_no_environment_variables():
+    hits = []
+    for path in sorted(STREAMING.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name in ("environ", "getenv") for a in node.names)
+            ):
+                hits.append(f"{path.name}:{node.lineno}")
+    assert not hits, f"environment reads in streaming/: {hits}"

@@ -209,12 +209,11 @@ GK, GSLACK = 2, 1
 
 
 def _gpair(spark, tmp_path):
-    eng = IncrementalAcyclicQuery(
-        spark, str(tmp_path / f"g{uuid.uuid4().hex[:8]}"), G_SPEC
-    )
+    tag = uuid.uuid4().hex[:8]
+    eng = IncrementalAcyclicQuery(spark, str(tmp_path / f"g{tag}"), G_SPEC)
     topk = GroupedTopKView(
         GK, "total", ("g",), ("kid",), refill=lambda t: eng.result(t),
-        slack=GSLACK, ephemeral=True,
+        slack=GSLACK, state_dir=str(tmp_path / f"gtk{tag}"), spark=spark,
     )
     return eng, topk
 
@@ -322,7 +321,7 @@ def test_grouped_topk_prime_attaches_to_existing_view(spark, tmp_path):
     )
     topk = GroupedTopKView(
         GK, "total", ("g",), ("kid",), refill=lambda t: eng.result(t),
-        slack=GSLACK, ephemeral=True,
+        slack=GSLACK, state_dir=str(tmp_path / "gtk"), spark=spark,
     )
     topk.prime()
     assert _ggot(topk) == _gmodel(ops)
@@ -650,7 +649,7 @@ def test_grouped_topk_replayed_changelog_is_idempotent(spark, tmp_path):
     topk.apply(delta)  # redelivered verbatim
     assert _ggot(topk) == want
     # candidate multiset holds no duplicates: (g, kid) unique
-    cand = topk._cand
+    cand = topk._read_cand()
     assert cand.count() == cand.select("g", "kid").distinct().count()
 
 
@@ -1477,6 +1476,42 @@ def test_grouped_topk_emits_changelog_and_replay_returns_same_rows(spark, tmp_pa
     assert replay == emitted
 
 
+def test_grouped_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
+    """A resumed grouped view's ``emitted_df()`` is the last batch's
+    persisted changelog read with its schema pinned: the same rows as the
+    live ``apply()`` return, and building the frame launches no Spark job
+    (no parquet schema inference) — the chain handoff's read-back."""
+    import time
+
+    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
+    topk = _gdurable(spark, tmp_path, eng, False, emit=True)
+    ops = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
+    d0 = eng.process_batch(
+        {"items": spark.createDataFrame(ops, G_SCHEMA)}, batch_id=0, emit_delta=True
+    )
+    want = sorted(tuple(r) for r in topk.apply(d0, batch_id=0).collect())
+    assert want
+
+    re = _gdurable(spark, tmp_path, eng, True, emit=True)
+    sc = spark.sparkContext
+    gid = f"emitted_df_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "resumed emitted_df")
+    try:
+        got = re.emitted_df()
+        # one-job sentinel: the status listener sees jobs in submission
+        # order, so once it shows up every earlier job of the group has too
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(gid) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup(gid)) == 1
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
 def test_topk_knob_full_stack_stream_kill_and_recover(spark, tmp_path):
     """Full-stack kill-and-recover for the spec-level top-k + ordered sink:
     a REAL Structured Streaming query (readStream → foreachBatch, real
@@ -1817,14 +1852,6 @@ def test_topk_chained_engine_property_prefix_closure(
         _chain_step(spark, up, down, rows, i)
         seen.extend(rows)
         assert _chain_got(down) == _chain_model(seen)
-
-
-def test_grouped_topk_ephemeral_requires_opt_in():
-    """state_dir=None silently constructed the fragile localCheckpoint mode
-    (not fault-tolerant mid-run); round 8 makes that an explicit choice —
-    omitting BOTH state_dir and ephemeral=True is a constructor error."""
-    with pytest.raises(ValueError, match="ephemeral=True"):
-        GroupedTopKView(GK, "total", ("g",), ("kid",), refill=lambda t: None)
 
 
 def test_grouped_topk_changelog_chains_into_engine(spark, tmp_path):
