@@ -70,8 +70,7 @@ per term — so the whole tree's state reads track the delta neighbourhood;
 probe sets wider than the cap degrade gracefully to bucket-id pruning, then
 to the plain full-scan join. Filters are applied to deltas at ingest so state only ever
 holds filter-surviving tuples — the same state-size reduction the
-reference's alive-gating achieves. A hot join key concentrating a term's
-shuffle is spread with ``RelSpec.salt``.
+reference's alive-gating achieves.
 
 BOUNDED STATE FOR UNBOUNDED STREAMS (``RelSpec.ttl``): the reference's host
 engine (Flink) bounds keyed state with event-time watermarks and state TTL;
@@ -262,13 +261,6 @@ class RelSpec:
     on by the high-churn neighbour (e.g. lineitem state bucketed by
     ``l_orderkey`` for orders deltas). ``_bucket`` is a reserved column name.
 
-    ``salt`` (shuffle-spread for skew): a hot join key concentrates a term's
-    shuffle on one task; ``salt=s`` replicates this relation's state s× with
-    a salt column and scatters the probing side across the s copies by a
-    deterministic row hash, so the hot key fans out over s tasks. Exact —
-    each probe row meets each state row exactly once. Incompatible with
-    ``broadcast_state`` (broadcast joins never shuffle).
-
     ``ttl=(ts_col, horizon)`` (watermark-driven retention): ``horizon`` maps
     the relation's watermark — a typed literal Column holding the running
     max of ``ts_col`` over ingested deltas — to the window's lower bound,
@@ -299,7 +291,6 @@ class RelSpec:
     anti: bool = False
     buckets: int = 0
     bucket_key: tuple[str, ...] | None = None
-    salt: int = 0
     # (ts_col, horizon) or (ts_col, horizon, delay) — see class docstring
     ttl: tuple | None = None
     # ttl_zone (bucketed+ttl relations): a coarse event-time zone width —
@@ -387,20 +378,16 @@ class TopKSpec:
     structure's keyed upsert — the engine cannot check an FD statically, so
     declare a narrow key only when the schema guarantees it. ``slack``
     extra buffered rows amortize refills over ≥slack top-region deletions
-    (default k). ``buckets`` / ``bucket_target_rows`` shard the per-group
-    candidate state."""
+    (default k)."""
 
     k: int
     # a single emitted column name, or a tuple of names / (name,
     # "asc"|"desc") pairs for a multi-key ORDER BY (e.g. continuous Q3's
-    # ``revenue DESC, o_orderdate``); bare names take ``descending``
+    # ``revenue DESC, o_orderdate``); bare names rank descending
     order_by: str | tuple
     partition_by: tuple[str, ...] = ()
     key: tuple[str, ...] | None = None
     slack: int | None = None
-    descending: bool = True
-    buckets: int = 8
-    bucket_target_rows: int = 0
     # per-group form only: also maintain the top-k view's OWN ±changelog
     # per batch (read with topk_delta()) — two extra ranks over the touched
     # shards per batch, so opt-in. The global form emits for free (O(k)
@@ -410,11 +397,9 @@ class TopKSpec:
     def __post_init__(self):
         if self.k < 1:
             raise ValueError("top_k: k must be >= 1")
-        if self.buckets < 1:
-            raise ValueError("top_k: buckets must be >= 1")
         from .topk import _norm_order
 
-        _norm_order(self.order_by, self.descending)  # fail bad shapes at spec time
+        _norm_order(self.order_by)  # fail bad shapes at spec time
 
 
 @dataclass(frozen=True)
@@ -528,17 +513,12 @@ class AcyclicQuerySpec:
                 "gates via chained views (emit_delta) instead"
             )
         for r in self.relations:
-            if r.buckets < 0 or r.salt < 0:
-                raise ValueError(f"relation {r.name!r}: buckets/salt must be >= 0")
+            if r.buckets < 0:
+                raise ValueError(f"relation {r.name!r}: buckets must be >= 0")
             if r.buckets > 0 and not r.bucket_key:
                 raise ValueError(f"relation {r.name!r}: buckets > 0 needs bucket_key")
             if r.bucket_key and not r.buckets:
                 raise ValueError(f"relation {r.name!r}: bucket_key needs buckets > 0")
-            if r.salt > 0 and r.broadcast_state:
-                raise ValueError(
-                    f"relation {r.name!r}: salt spreads a shuffle; "
-                    "broadcast_state joins never shuffle"
-                )
             if (r.semi or r.anti) and r.buckets > 0:
                 own = tuple(o for o, _ in r.join_pairs())
                 if tuple(r.bucket_key) != own:
@@ -567,20 +547,12 @@ class IncrementalAcyclicQuery:
     # factorization, without threading counters through every wiring
     factored_global = 0
 
-    # compact_every="auto": switch merge -> log-structured after this many
-    # committed batches (the measured amortization point — non-compaction
-    # batches only win once their O(Δ) savings outrun the every-k
-    # compaction cost, ~8-10 batches at sf1 per
-    # LOG_STRUCTURED_AMORTIZATION.json), then compact every k segments
-    AUTO_SWITCH_BATCHES = 8
-    AUTO_COMPACT_EVERY = 3
-
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
         spec: AcyclicQuerySpec,
-        compact_every: int | str = 1,
+        compact_every: int = 1,
         resume: bool = False,
     ):
         """``compact_every`` selects the state-IO regime:
@@ -603,16 +575,10 @@ class IncrementalAcyclicQuery:
           (~9-10 s) — so it is the recommended regime for LONG-RUNNING
           streams; the default stays 1 (simplest to inspect, and short
           pipelines never amortize the compaction).
-        - ``"auto"`` (round 11): start in merge-and-rewrite and switch to
-          log-structured ``compact_every=3`` once the stream has committed
-          ``AUTO_SWITCH_BATCHES`` batches — the measured amortization point
-          (~8-10 batches, LOG_STRUCTURED_AMORTIZATION.json). Short
-          pipelines keep the inspectable single-segment state; long streams
-          get the −18% regime without an operator decision. The switch is
-          one-way (monotone), derived from the manifest-persisted committed
-          -batch count so resume lands in the same regime, and exact by the
-          same linearity argument as compaction itself
-          (test_acyclic_ivm.py::test_auto_regime_switches_and_matches_merge).
+
+        The regime is a property of the engine instance, not of the state
+        dir: a stream may be resumed under either regime. Live state that is
+        not a single netted version is netted on read in both.
 
         ``resume=True`` reattaches to an existing state dir: state is loaded
         from the last atomically-committed MANIFEST (see ``process_batch``),
@@ -625,15 +591,9 @@ class IncrementalAcyclicQuery:
         self.spark = spark
         self.state_dir = state_dir
         self.spec = spec
-        self._auto_regime = compact_every == "auto"
-        if self._auto_regime:
-            compact_every = 1  # until AUTO_SWITCH_BATCHES commits
-        elif not isinstance(compact_every, int) or compact_every < 1:
-            raise ValueError("compact_every must be >= 1 or 'auto'")
+        if not isinstance(compact_every, int) or compact_every < 1:
+            raise ValueError("compact_every must be an integer >= 1")
         self.compact_every = compact_every
-        # committed-batch count (manifest-persisted): the auto regime's
-        # switch criterion, so a resumed stream lands in the same regime
-        self._committed_batches = 0
         # per-relation state versions (monotone; parquet path carries version
         # so a batch never reads and overwrites the same files)
         self._version: dict[str, int] = {r.name: 0 for r in spec.relations}
@@ -691,11 +651,9 @@ class IncrementalAcyclicQuery:
         # round 10/11: telescoped ΔJ over tree-shaped virtual trees
         # (_factored_chain) — shares the new-relation joins across delta
         # terms. On by default (exact by distributivity); False forces the
-        # per-term path the equivalence tests compare against. The flag is
-        # plan-shape-only (results are identical either way) but it IS
-        # persisted in the manifest so resume=True keeps an operator's
-        # explicit opt-out instead of silently re-enabling the factored
-        # plan mid-stream (r10 advice). last_factored counts virtual trees
+        # per-term path the equivalence tests compare against — the flag is
+        # plan-shape-only (results are identical either way), so it is not
+        # persisted. last_factored counts virtual trees
         # the last batch folded via the factored path; last_checkpoints
         # counts the term-build localCheckpoint materializations of the
         # last batch (transitive-probe partials + factored-B unions) — the
@@ -708,12 +666,6 @@ class IncrementalAcyclicQuery:
         self.last_evicted: dict[str, int] = {}
         if resume and os.path.exists(self._manifest_path()):
             self._load_manifest()
-            if self._auto_regime and self._committed_batches >= self.AUTO_SWITCH_BATCHES:
-                # re-land in the post-switch regime BEFORE any read: result()
-                # keys its lazy net reduction off compact_every, and the
-                # on-disk state is already log-structured (possibly un-netted
-                # segments) — a merge-mode read of it would skip the net
-                self.compact_every = self.AUTO_COMPACT_EVERY
         else:
             if os.path.exists(state_dir):
                 shutil.rmtree(state_dir)
@@ -747,12 +699,9 @@ class IncrementalAcyclicQuery:
                     t.partition_by,
                     key,
                     refill=self.result,
-                    descending=t.descending,
-                    slack=t.slack,
                     state_dir=tdir,
                     spark=spark,
-                    buckets=t.buckets,
-                    bucket_target_rows=t.bucket_target_rows,
+                    slack=t.slack,
                     resume=resume,
                     emit=t.emit_changelog,
                 )
@@ -764,11 +713,10 @@ class IncrementalAcyclicQuery:
                     t.order_by,
                     key,
                     refill=self.result,
-                    descending=t.descending,
-                    slack=t.slack,
-                    prime=need_prime,
                     state_dir=tdir,
                     spark=spark,
+                    slack=t.slack,
+                    prime=need_prime,
                     resume=resume,
                 )
 
@@ -784,25 +732,15 @@ class IncrementalAcyclicQuery:
         leaves either the old or the new state fully consistent (orphan dirs
         are GC'd on resume). The engine's in-memory fields are the staging
         area itself (``_snapshot``/``_restore`` roll them back on failure),
-        so no adopt/gc closures are needed here."""
+        so no adopt/gc closures are needed here. The manifest holds exactly
+        the ``_snapshot`` fields, with watermark values JSON-encoded."""
         from .topk import _publish_manifest
 
-        data = {
-            "version": self._version,
-            "segments": self._segments,
-            "appends": self._appends,
-            "last_batch": self._last_batch,
-            "compact_every": self.compact_every,
-            "committed_batches": self._committed_batches,
-            "factor_terms": self.factor_terms,
-            "emitted": self._emitted,
-            "buckets": self._buckets,
-            "state_rows": self._state_rows,
-            "watermarks": {r: _wm_dump(v) for r, v in self._watermarks.items()},
-            "seg_ts": {
-                rel: {p: [_wm_dump(v[0]), _wm_dump(v[1])] for p, v in m.items()}
-                for rel, m in self._seg_ts.items()
-            },
+        data = self._snapshot()
+        data["watermarks"] = {r: _wm_dump(v) for r, v in data["watermarks"].items()}
+        data["seg_ts"] = {
+            rel: {p: [_wm_dump(lo), _wm_dump(hi)] for p, (lo, hi) in m.items()}
+            for rel, m in data["seg_ts"].items()
         }
         _publish_manifest(self._manifest_path(), data)
 
@@ -815,10 +753,6 @@ class IncrementalAcyclicQuery:
         self._segments = data["segments"]
         self._appends = data["appends"]
         self._last_batch = data["last_batch"]
-        self._committed_batches = data.get("committed_batches", 0)
-        # plan-shape knob, not state semantics — persisted anyway so a
-        # resumed engine keeps the operator's explicit factor_terms opt-out
-        self.factor_terms = data.get("factor_terms", True)
         self._emitted = data.get("emitted")
         self._buckets.update(data.get("buckets", {}))
         # absent in pre-r11 manifests: pruning stays engaged until the next
@@ -1242,7 +1176,7 @@ class IncrementalAcyclicQuery:
         TRANSITIVE: the probe collect is an eager action over ``acc``'s
         lineage and the join re-executes it, so ``acc`` is localCheckpointed
         once for both. The side's weight is renamed to ``w_col``; broadcast
-        and salt follow the relation spec."""
+        follows the relation spec."""
         pruning = None
         if (
             r.buckets > 0
@@ -1287,18 +1221,6 @@ class IncrementalAcyclicQuery:
             Column.__and__,
             [F.col(own) == F.col(earlier) for own, earlier in pairs],
         )
-        if r.salt > 0:
-            # replicate state side ×salt; scatter the probing side by a
-            # deterministic full-row hash so a hot join key fans out
-            side = side.withColumn(
-                "_salt_s", F.explode(F.array(*[F.lit(i) for i in range(r.salt)]))
-            )
-            acc = acc.withColumn(
-                "_salt_a",
-                F.pmod(F.hash(*[F.col(c) for c in acc.columns]), F.lit(r.salt)),
-            )
-            cond = cond & (F.col("_salt_a") == F.col("_salt_s"))
-            return acc.join(side, cond).drop("_salt_a", "_salt_s")
         return acc.join(side, cond)
 
     def _join_chain(
@@ -1530,7 +1452,6 @@ class IncrementalAcyclicQuery:
             "emitted": self._emitted,
             "last_batch": self._last_batch,
             "buckets": dict(self._buckets),
-            "committed_batches": self._committed_batches,
             "state_rows": dict(self._state_rows),
         }
 
@@ -1543,7 +1464,6 @@ class IncrementalAcyclicQuery:
         self._emitted = snap["emitted"]
         self._last_batch = snap["last_batch"]
         self._buckets = snap["buckets"]
-        self._committed_batches = snap["committed_batches"]
         self._state_rows = snap["state_rows"]
 
     @contextmanager
@@ -1619,17 +1539,23 @@ class IncrementalAcyclicQuery:
 
         return _run_parallel([scoped(name, fn) for name, fn in tasks])
 
+    def _netted(self, rel: str) -> bool:
+        """Is ``rel``'s live state already its net multiset — none, or the
+        single version ``_path(rel, version)`` that every merge-mode write,
+        compaction and rebucket produces? Anything else (appended ``_seg``
+        segments, also those a log-structured → merge resume leaves behind)
+        must be netted by whoever reads it per group."""
+        return self._segments.get(rel, []) in ([], [self._path(rel, self._version[rel])])
+
     def _skippable(self, rel: str) -> bool:
         """May an EMPTY delta of ``rel`` leave its state as it is? Only when
         the relation has committed state that needs no rewrite: any live
-        state in log-structured mode (reads net lazily there), and in merge
-        mode a single netted ``_v`` version — merge-mode reads skip the net,
-        so a raw ``_seg`` left by a log-structured → merge resume must
-        still be netted by this batch's write."""
-        segs = self._segments.get(rel)
-        if not segs:
+        state in log-structured mode, and in merge mode netted state — a raw
+        ``_seg`` left by a log-structured → merge resume must still be
+        netted by this batch's write, since merge mode keeps state netted."""
+        if not self._segments.get(rel):
             return False
-        return self.compact_every > 1 or segs == [self._path(rel, self._version[rel])]
+        return self.compact_every > 1 or self._netted(rel)
 
     def _ingest_counts(self, filt: Mapping[str, DataFrame]) -> dict[str, int]:
         """Row count of every delta from ONE job: the lazily-checkpointed
@@ -1761,15 +1687,6 @@ class IncrementalAcyclicQuery:
         join_fold → commit wave → emit. Stages pass plain values; the
         manifest write at the end is the batch's atomic commit point, and
         superseded files are deleted only after it."""
-        if self._auto_regime:
-            # monotone merge -> log-structured switch at the measured
-            # amortization point; recomputed from the manifest-persisted
-            # committed-batch count so retry/resume land in the same regime
-            self.compact_every = (
-                1
-                if self._committed_batches < self.AUTO_SWITCH_BATCHES
-                else self.AUTO_COMPACT_EVERY
-            )
         filt, bucket_memo = self._ingest(deltas)
         seg_range = self._ttl(filt)
         term_new, term_old, term_delta = self._gate_presence(filt)
@@ -1797,9 +1714,6 @@ class IncrementalAcyclicQuery:
             changelog = self._emit_changelog(touched, pre_view, batch_id, cleanup)
         if batch_id is not None:
             self._last_batch = batch_id
-        # count only state-writing batches (empty batches cost no IO in
-        # either regime, so they don't advance the auto switch)
-        self._committed_batches += 1
         self._commit_manifest()  # atomic commit point; cleanup is post-commit
         for p in cleanup:
             shutil.rmtree(p, ignore_errors=True)
@@ -1843,8 +1757,7 @@ class IncrementalAcyclicQuery:
         # no ΔJ branch, no watermark read, no state commit. Exact: an empty
         # delta contributes no term and no state change, and never advances
         # a ttl watermark. An all-empty batch keeps the full path, so its
-        # top-k feed, emit_delta return and committed-batch count are as
-        # before.
+        # top-k feed and emit_delta return are as before.
         counts: dict[str, int] = {}
         if len(filt) >= 2 and any(self._skippable(n) for n in filt):
             counts = self._ingest_counts(filt)
@@ -2487,8 +2400,8 @@ class IncrementalAcyclicQuery:
                     return df.join(touched.select(*on), on=on, how="left_semi")
             return df
 
-        agg = restrict(self._read_paths("agg", self._segments.get("agg", [])))
-        if self.compact_every > 1:
+        agg = restrict(self._read_state("agg"))
+        if not self._netted("agg"):
             agg = self._agg_net(agg)  # lazy reduction over live segments
         out = agg.filter(F.col("support") > 0)
         # non-invertible measures: reduce each value histogram over the
@@ -2497,10 +2410,8 @@ class IncrementalAcyclicQuery:
         # (Σ_v w_v = support), so no surfaced group can lack histogram rows.
         fns = {"min": F.min, "max": F.max, "count_distinct": F.count_distinct}
         for name, (kind, _) in self.spec.hist_measures.items():
-            h = restrict(
-                self._read_paths(f"hist::{name}", self._segments.get(f"hist::{name}", []))
-            )
-            if self.compact_every > 1:
+            h = restrict(self._read_state(f"hist::{name}"))
+            if not self._netted(f"hist::{name}"):
                 h = self._net(h)  # lazy reduction over unmerged segments
             per_group = (
                 h.filter(F.col(WEIGHT) > 0).groupBy(*gb).agg(fns[kind]("_v").alias(name))
@@ -2513,7 +2424,7 @@ class IncrementalAcyclicQuery:
             # left-outer padding: live preserved groups the inner aggregate
             # doesn't surface, with NULL measures (coalesce in finalize)
             pstate = restrict(self._read_state(self.spec.preserve))
-            if self.compact_every > 1:
+            if not self._netted(self.spec.preserve):
                 pstate = self._net(pstate)
             pgroups = pstate.filter(F.col(WEIGHT) > 0).select(*gb).distinct()
             padded = pgroups.join(out.select(*gb), on=gb, how="left_anti")

@@ -37,11 +37,11 @@ plans/streaming_plans.py keeps that form as the documented baseline, the
 At 100 TB: the changelog filters are broadcast-size literals (≤ buffer
 rows), the refill is the only O(groups) touch and is rate-bounded by actual
 top-region churn, and the buffer itself is O(k) driver memory. Restart
-recovery: the buffer is a pure function of the live view, so one
-``refill()`` against the engine's committed state always suffices — or,
-with ``state_dir`` (round 7), the buffer/boundary/emitted-changelog persist
-behind an atomic manifest and ``resume=True`` reattaches with no view scan
-and exactly-once replay semantics for downstream sinks.
+recovery: the buffer/boundary/emitted-changelog persist under ``state_dir``
+behind an atomic manifest, and ``resume=True`` reattaches with no view scan
+and exactly-once replay semantics for downstream sinks (the buffer is also
+a pure function of the live view, so one ``refill()`` against the engine's
+committed state can always rebuild it).
 
 Declaring ``AcyclicQuerySpec.top_k`` (TopKSpec, streaming/acyclic.py) wires
 either view into the engine itself — construction, feeding, durability,
@@ -116,20 +116,20 @@ def _publish_manifest(manifest_path: str, data: dict, adopt=None, gc=None) -> No
         gc()
 
 
-def _norm_order(order_by, descending: bool) -> tuple[tuple[str, bool], ...]:
+def _norm_order(order_by) -> tuple[tuple[str, bool], ...]:
     """Normalize an ORDER BY declaration to ``((column, desc_bool), ...)``.
 
     Accepted forms (TopKSpec.order_by and both views' order parameter):
-    a single column name (direction = the ``descending`` default), or a
-    sequence whose entries are column names or ``(column, direction)``
-    pairs, direction being "asc"/"desc" or a bool (True = descending) —
-    the continuous twin of a multi-key ``ORDER BY v DESC, d ASC``."""
+    a single column name (ranked descending), or a sequence whose entries
+    are column names (descending) or ``(column, direction)`` pairs,
+    direction being "asc"/"desc" or a bool (True = descending) — the
+    continuous twin of a multi-key ``ORDER BY v DESC, d ASC``."""
     if isinstance(order_by, str):
-        return ((order_by, descending),)
+        return ((order_by, True),)
     out = []
     for e in order_by:
         if isinstance(e, str):
-            out.append((e, descending))
+            out.append((e, True))
         else:
             c, d = e
             out.append(
@@ -148,14 +148,23 @@ class TopKView:
     ``order_col``  — the ranking ORDER BY of the view: a single column name,
                      or a sequence of names / ``(name, "asc"|"desc")`` pairs
                      for a multi-key ``ORDER BY v DESC, d ASC`` (round 8);
-                     bare names take the ``descending`` default.
+                     bare names rank descending (largest first).
     ``key_cols``   — columns forming a UNIQUE key of view rows (the group-by
                      key of the upstream engine); also the deterministic
                      ascending tiebreak, mirroring ``ORDER BY v DESC, key``.
     ``refill``     — zero-arg callable returning the full current view as a
                      DataFrame (e.g. ``engine.result``); invoked only when
                      retraction drains the buffer below k, and once at start.
-    ``descending`` — rank direction of ``order_col`` (default: largest first).
+    ``state_dir``  — DURABILITY root: after every batch the buffer,
+                     boundary, and the batch's emitted top-k changelog are
+                     persisted as tiny parquet files behind an atomic
+                     manifest (the engine's os.replace discipline), so
+                     ``resume=True`` reattaches with no refill and a
+                     crash-REPLAYED batch (``batch_id`` ≤ last committed)
+                     is skipped, returning the PERSISTED changelog — the
+                     exactly-once contract an emission sink composes with.
+                     O(k) rows per write.
+    ``spark``      — the session that reads the persisted changelog back.
     ``slack``      — extra buffered rows beyond k (default k): each refill
                      then survives at least ``slack`` top-region deletions.
     ``prime``      — whether to refill from the view at construction.
@@ -164,15 +173,6 @@ class TopKView:
                      empty buffer with no boundary is exactly "complete over
                      the empty view", so the first batches build the buffer
                      from the changelog alone without ever scanning state.
-    ``state_dir``  — optional DURABILITY root: after every batch the buffer,
-                     boundary, and the batch's emitted top-k changelog are
-                     persisted as tiny parquet files behind an atomic
-                     manifest (the engine's os.replace discipline), so
-                     ``resume=True`` reattaches with no refill and a
-                     crash-REPLAYED batch (``batch_id`` ≤ last committed)
-                     is skipped, returning the PERSISTED changelog — the
-                     exactly-once contract an emission sink composes with.
-                     O(k) rows per write. Requires ``spark``.
     """
 
     def __init__(
@@ -181,11 +181,10 @@ class TopKView:
         order_col: str,
         key_cols: tuple[str, ...],
         refill: Callable[[], DataFrame],
-        descending: bool = True,
+        state_dir: str,
+        spark,
         slack: int | None = None,
         prime: bool = True,
-        state_dir: str | None = None,
-        spark=None,
         resume: bool = False,
     ):
         if k < 1:
@@ -193,9 +192,8 @@ class TopKView:
         self.k = k
         # multi-key ORDER BY (round 8): ((col, desc), ...) — ``order_col``
         # accepts a single name or a sequence of name/(name, dir) entries
-        self.order_cols = _norm_order(order_col, descending)
+        self.order_cols = _norm_order(order_col)
         self.key_cols = tuple(key_cols)
-        self.descending = descending
         self.slack = k if slack is None else slack
         self._refill_fn = refill
         # key tuple -> full row dict; bounded by k + 2*slack between trims
@@ -210,33 +208,28 @@ class TopKView:
         self.applied_rows = 0
         self.applied_rows_total = 0
         self.state_dir = state_dir
-        self.durable = state_dir is not None
         self._spark = spark
         self._schema = None  # StructType of buffer rows, pinned at first use
         self._version = 0
         self._last_batch: int | None = None
         self._emitted_batch: int | None = None
-        if self.durable:
-            if spark is None:
-                raise ValueError("durable mode (state_dir) needs spark")
-            if resume and os.path.exists(self._manifest_path()):
-                self._load_manifest()
-                return  # committed buffer restored — no refill, no re-prime
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.makedirs(state_dir)
+        if resume and os.path.exists(self._manifest_path()):
+            self._load_manifest()
+            return  # committed buffer restored — no refill, no re-prime
+        if os.path.exists(state_dir):
+            shutil.rmtree(state_dir)
+        os.makedirs(state_dir)
         if prime:
             self.refill()
-        if self.durable:
-            # commit an INITIAL manifest even before the first batch: an
-            # unprimed fresh stream persists "empty buffer, no boundary" =
-            # complete-over-empty, so a restart DURING batch 0 (engine
-            # committed, top-k not yet) resumes here and the replayed
-            # batch-0 changelog rebuilds the buffer AND emits the true
-            # delta — where a manifest-less dir would re-prime from the
-            # already-updated view and persist an EMPTY batch-0 delta, a
-            # permanently lost first emission for an exactly-once sink.
-            self._persist(None, None)
+        # commit an INITIAL manifest even before the first batch: an
+        # unprimed fresh stream persists "empty buffer, no boundary" =
+        # complete-over-empty, so a restart DURING batch 0 (engine
+        # committed, top-k not yet) resumes here and the replayed
+        # batch-0 changelog rebuilds the buffer AND emits the true
+        # delta — where a manifest-less dir would re-prime from the
+        # already-updated view and persist an EMPTY batch-0 delta, a
+        # permanently lost first emission for an exactly-once sink.
+        self._persist(None, None)
 
     # --- total order ---------------------------------------------------------
     def _skey(self, row: dict) -> tuple:
@@ -273,7 +266,7 @@ class TopKView:
             rows.sort(key=lambda r, _c=c: r[_c], reverse=desc)
         return rows
 
-    # --- durability (optional): tiny parquet behind an atomic manifest -------
+    # --- durability: tiny parquet behind an atomic manifest -----------------
     def _manifest_path(self) -> str:
         return os.path.join(self.state_dir, "MANIFEST.json")
 
@@ -281,14 +274,21 @@ class TopKView:
         if self._schema is None:
             self._schema = template.schema
 
+    def _emitted_schema(self):
+        """Schema of the persisted top-k changelog: buffer columns plus an
+        int ``weight``."""
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        return StructType([*self._schema.fields, StructField(WEIGHT, IntegerType())])
+
     def _write_rows(self, path: str, schema, rows: list[dict]) -> None:
         """ONE parquet file via a DRIVER-SIDE arrow write: the buffer is
         O(k) rows of plain Python values already resident on the driver, so
         persisting it must not cost Spark jobs (the previous design spent
         2-3 ``createDataFrame().write`` round-trips per batch on ≤60 rows).
         The layout mirrors a Spark-written dir (part file inside a
-        directory), so the sink-facing ``emitted_df`` stays a plain
-        ``spark.read.parquet`` and old Spark-written state dirs resume
+        directory), so the sink-facing ``emitted_df`` stays a Spark
+        parquet read and old Spark-written state dirs resume
         unchanged (pyarrow dataset discovery skips ``_SUCCESS``)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -315,7 +315,7 @@ class TopKView:
         Everything written is O(k) rows — the buffer IS bounded driver
         state, so its durable twin is bounded too, and the whole commit is
         driver-side file IO (no Spark jobs)."""
-        from pyspark.sql.types import IntegerType, StructField, StructType
+        from pyspark.sql.types import StructType
 
         v = self._version + 1
         vdir = os.path.join(self.state_dir, f"v{v}")
@@ -337,10 +337,7 @@ class TopKView:
             )
             self._write_rows(os.path.join(vdir, "bnd"), bschema, [brow])
         if out is not None and batch_id is not None:
-            eschema = StructType(
-                list(self._schema.fields) + [StructField(WEIGHT, IntegerType())]
-            )
-            self._write_rows(os.path.join(vdir, "emitted"), eschema, out)
+            self._write_rows(os.path.join(vdir, "emitted"), self._emitted_schema(), out)
             emitted_batch = batch_id
         else:
             # each version dir is self-contained; a commit without an emitted
@@ -411,11 +408,12 @@ class TopKView:
 
     def emitted_df(self) -> DataFrame | None:
         """The last committed batch's emitted top-k changelog as a DataFrame
-        (durable mode) — the exactly-once feed for a downstream sink: a
-        crash-replayed batch reads back the SAME rows."""
-        if not self.durable or self._emitted_batch is None:
+        — the exactly-once feed for a downstream sink: a crash-replayed
+        batch reads back the SAME rows. The schema is pinned, which spares
+        parquet schema inference."""
+        if self._emitted_batch is None:
             return None
-        return self._spark.read.parquet(
+        return self._spark.read.schema(self._emitted_schema()).parquet(
             os.path.join(self.state_dir, f"v{self._version}", "emitted")
         )
 
@@ -428,8 +426,6 @@ class TopKView:
             F.col(c).desc() if d else F.col(c).asc() for c, d in self.order_cols
         ]
         view = self._refill_fn()
-        if self._spark is None:
-            self._spark = view.sparkSession
         self._pin_schema(view)
         df = view
         for c, _ in self.order_cols:
@@ -571,7 +567,7 @@ class TopKView:
         the same composition hook the engine's emit_delta provides, so a
         maintained top-k TABLE can sit at the end of a chain.
 
-        Durable mode + ``batch_id``: a replayed batch (≤ last committed) is
+        With ``batch_id``, a replayed batch (≤ last committed) is
         not re-applied — the PERSISTED changelog of that batch is returned
         instead, so a downstream sink's overwrite lands the same rows."""
         if changelog is None:
@@ -581,13 +577,11 @@ class TopKView:
             and self._last_batch is not None
             and batch_id <= self._last_batch
         ):
-            if self.durable and self._emitted_batch == batch_id:
+            if self._emitted_batch == batch_id:
                 return [r.asDict() for r in self.emitted_df().collect()]
             return None
-        if self._spark is None:
-            self._spark = changelog.sparkSession
         self._pin_schema(changelog.drop(WEIGHT))
-        # committed snapshot for commit-failure rollback (durable mode): the
+        # committed snapshot for commit-failure rollback: the
         # fold below mutates the buffer BEFORE _persist, so if the manifest
         # replace fails the in-memory state must return to the committed
         # batch — otherwise an in-process retry re-folds idempotently
@@ -628,27 +622,26 @@ class TopKView:
         post = {self._skey(r): r for r in self.result_rows()}
         out = [{**pre[s], WEIGHT: -1} for s in pre if s not in post]
         out += [{**post[s], WEIGHT: 1} for s in post if s not in pre]
-        if self.durable:
-            try:
-                self._persist(out, batch_id)
-            except BaseException:
-                # roll the fold back to the committed batch (see `snap`): a
-                # retry then re-applies against committed state and emits
-                # the true delta instead of an idempotent empty one. BUT
-                # only while the commit was NOT adopted — _version moved ⇒
-                # the manifest replace succeeded and the exception came from
-                # the post-adoption tail (GC/interrupt); the fold must stand
-                # or memory falls one batch behind the durable state.
-                if self._version == snap[5]:
-                    (
-                        self._buffer,
-                        self._boundary,
-                        self.refills,
-                        self.applied_rows,
-                        self.applied_rows_total,
-                        _,
-                    ) = snap
-                raise
+        try:
+            self._persist(out, batch_id)
+        except BaseException:
+            # roll the fold back to the committed batch (see `snap`): a
+            # retry then re-applies against committed state and emits
+            # the true delta instead of an idempotent empty one. BUT
+            # only while the commit was NOT adopted — _version moved ⇒
+            # the manifest replace succeeded and the exception came from
+            # the post-adoption tail (GC/interrupt); the fold must stand
+            # or memory falls one batch behind the durable state.
+            if self._version == snap[5]:
+                (
+                    self._buffer,
+                    self._boundary,
+                    self.refills,
+                    self.applied_rows,
+                    self.applied_rows_total,
+                    _,
+                ) = snap
+            raise
         return out
 
     # --- emission ------------------------------------------------------------
@@ -717,7 +710,6 @@ class GroupedTopKView:
         refill,
         state_dir: str,
         spark,
-        descending: bool = True,
         slack: int | None = None,
         buckets: int = 8,
         bucket_target_rows: int = 0,
@@ -734,10 +726,9 @@ class GroupedTopKView:
             raise ValueError("buckets must be >= 1")
         self.k = k
         # multi-key ORDER BY (round 8), same forms as TopKView
-        self.order_cols = _norm_order(order_col, descending)
+        self.order_cols = _norm_order(order_col)
         self.group_cols = tuple(group_cols)
         self.key_cols = tuple(key_cols)
-        self.descending = descending
         self.slack = k if slack is None else slack
         # refill: Callable[[DataFrame | None], DataFrame] — the full view,
         # optionally restricted to the given group-key rows

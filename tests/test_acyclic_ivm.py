@@ -1738,16 +1738,14 @@ def test_factored_random_tree_shapes_match_per_term(
     assert results[0] == results[1]
 
 
-def test_auto_regime_switches_and_matches_merge(spark, tmp_path):
-    """compact_every="auto" (round 11): merge-and-rewrite for the first
-    AUTO_SWITCH_BATCHES committed batches, then the log-structured
-    compact_every=3 regime — the switch must actually happen (monotone),
-    survive resume via the manifest-persisted committed-batch count, and
-    every prefix must match a merge-mode twin exactly (linearity: the
-    regimes differ only in when segments are netted)."""
-    n = IncrementalAcyclicQuery.AUTO_SWITCH_BATCHES + 4
+def test_merge_engine_resumed_log_structured_continues_exactly(spark, tmp_path):
+    """A merge-mode stream resumed mid-stream with compact_every=3 continues
+    exactly: every prefix equals a merge-mode twin's, appended segments
+    accumulate on top of the netted merge-mode version, and the third
+    log-structured batch compacts them back to one netted version
+    (linearity: the regimes differ only in when segments are netted)."""
     ops = []
-    for i in range(n):
+    for i in range(4):
         batch = {
             "fact": [(i % 3 + 1, 10 * i + 1, 1)],
             "mid": [(i % 3 + 1, 100 + i, 1)],
@@ -1757,31 +1755,25 @@ def test_auto_regime_switches_and_matches_merge(spark, tmp_path):
             batch["leaf"].append((100 + (i - 2), (i - 2) % 4 + 1, -1))
         ops.append(batch)
     dfs = _chain_batches(spark, ops)
-    eng_a = IncrementalAcyclicQuery(
-        spark, str(tmp_path / "auto"), CHAIN_SPEC, compact_every="auto"
-    )
-    eng_m = IncrementalAcyclicQuery(spark, str(tmp_path / "merge"), CHAIN_SPEC)
-    switch_at = None
+    sdir = str(tmp_path / "switch")
+    eng = IncrementalAcyclicQuery(spark, sdir, CHAIN_SPEC)
+    twin = IncrementalAcyclicQuery(spark, str(tmp_path / "merge"), CHAIN_SPEC)
     for i, b in enumerate(dfs):
-        eng_a.process_batch({k: v for k, v in b.items()}, batch_id=i)
-        eng_m.process_batch({k: v for k, v in b.items()}, batch_id=i)
-        if switch_at is None and eng_a.compact_every > 1:
-            switch_at = i
-            # resume mid-stream AFTER the switch: the manifest's committed
-            # count must land the resumed engine in the same regime
-            eng_a = IncrementalAcyclicQuery(
-                spark,
-                str(tmp_path / "auto"),
-                CHAIN_SPEC,
-                compact_every="auto",
-                resume=True,
+        if i == 1:
+            eng = IncrementalAcyclicQuery(
+                spark, sdir, CHAIN_SPEC, compact_every=3, resume=True
             )
-        assert _chain_result(eng_a.result()) == _chain_result(eng_m.result())
-    assert switch_at == IncrementalAcyclicQuery.AUTO_SWITCH_BATCHES
-    # post-switch: appends accumulate (log-structured path actually taken)
-    assert eng_a.compact_every == IncrementalAcyclicQuery.AUTO_COMPACT_EVERY
-    assert any(len(v) > 1 for v in eng_a._segments.values())
-    assert _chain_result(eng_a.result())  # non-trivial
+            assert eng._segments["leaf"] == [eng._path("leaf", 1)]
+        eng.process_batch(b, batch_id=i)
+        twin.process_batch(b, batch_id=i)
+        assert _chain_result(eng.result()) == _chain_result(twin.result())
+        if i == 2:  # two appended segments on top of the merge-mode version
+            assert len(eng._segments["leaf"]) == 3
+            assert len(eng._segments["agg"]) == 3
+    # the third appended segment tipped compaction: one netted version again
+    assert eng._segments["leaf"] == [eng._path("leaf", 2)]
+    assert eng._segments["agg"] == [eng._path("agg", 2)]
+    assert _chain_result(eng.result())  # non-trivial
 
 
 @full_tier_only
@@ -1806,34 +1798,3 @@ def test_registered_degree3_shapes_engage_factored_path(spark):
         >= 0
     )
     assert IncrementalAcyclicQuery.factored_global > after_star
-
-
-def test_factor_terms_optout_survives_resume(spark, tmp_path):
-    """factor_terms is a plan-shape escape hatch; an operator who disabled
-    it must not get it silently re-enabled by resume=True (r10 advice: the
-    flag is persisted in the manifest at every batch commit)."""
-    sd = tmp_path / "ft_resume"
-    eng = IncrementalAcyclicQuery(spark, str(sd), CHAIN_SPEC)
-    eng.factor_terms = False
-    b = _chain_batches(
-        spark,
-        [{
-            "fact": [(1, 10, 1)],
-            "mid": [(1, 100, 1)],
-            "leaf": [(100, 5, 1)],
-        }],
-    )[0]
-    eng.process_batch(b, batch_id=0)
-    assert eng.last_factored == 0
-    eng2 = IncrementalAcyclicQuery(spark, str(sd), CHAIN_SPEC, resume=True)
-    assert eng2.factor_terms is False
-    b2 = _chain_batches(
-        spark,
-        [{
-            "mid": [(1, 101, 1)],
-            "leaf": [(101, 2, 1), (100, 5, -1)],
-        }],
-    )[0]
-    eng2.process_batch(b2, batch_id=1)
-    assert eng2.last_factored == 0  # opt-out held across resume
-    assert _chain_result(eng2.result()) == {1: 10 * 2}

@@ -7,10 +7,6 @@
   Checked two ways: result equivalence against the unbucketed engine AND the
   pruning itself (the term plan carries a ``_bucket`` partition filter with
   strictly fewer bucket ids than the relation has buckets).
-- SALT: replicate-state/scatter-probe skew spreading is a multiset identity
-  (each probe row meets each state row exactly once) — equivalence under a
-  deliberately skewed changelog (one key = 50% of deltas) plus a plan check
-  that the join condition fans out over the salt column.
 - PERSISTED EMITTED CHANGELOG: a crash-replayed ``emit_delta`` batch returns
   the batch's persisted view delta instead of None, so chained engines /
   sinks recover exactly-once ACROSS the chain, not just per engine.
@@ -275,37 +271,6 @@ def test_bucketed_semi_gate_equivalent(spark, tmp_path):
     assert bucketed == plain and plain
 
 
-def test_salted_join_equivalent_under_skew(spark, tmp_path):
-    """1 hot order key carries 50% of the lineitem deltas; the salted state
-    relation must still produce the exact unsalted result."""
-    hot = [(0, q, 1) for q in range(1, 21)]  # 20 deltas on l_key=0
-    cold = [(o, 1, 1) for o in range(1, 21)]
-    batches = [
-        ([(o, o % 4, 1) for o in range(21)], hot[:10] + cold[:10]),
-        ([(0, 0, -1)], hot[10:] + cold[10:] + [(0, 1, -1)]),
-    ]
-    plain = _feed(spark, _engine(spark, tmp_path, _spec()), batches)
-    salted = _feed(
-        spark, _engine(spark, tmp_path, _spec(li_extra={"salt": 4})), batches
-    )
-    assert salted == plain and plain
-
-
-def test_salted_join_fans_out_in_plan(spark, tmp_path):
-    spec = _spec(li_extra={"salt": 4})
-    eng = _engine(spark, tmp_path, spec)
-    _feed(spark, eng, BATCHES[:1])
-    delta = eng._conform("orders", spark.createDataFrame([(7, 3, 1)], ORD_SCHEMA))
-    versions = {
-        "orders": delta,
-        "customer": eng._read_state("customer"),
-        "lineitem": eng._read_state("lineitem"),
-    }
-    plan = plan_string(eng._join_chain(versions, delta_name="orders"))
-    # state side exploded across salt values, join keyed on (_salt_a = _salt_s)
-    assert "_salt_s" in plan and "_salt_a" in plan and "explode" in plan.lower()
-
-
 def test_emitted_changelog_survives_crash_replay(spark, tmp_path):
     """Chain recovery: inner engine commits batch 1 (emit_delta), then the
     driver 'crashes' before the outer engine commits. On resume the stream
@@ -371,7 +336,7 @@ def test_empty_batch_advances_last_batch(spark, tmp_path):
         emit_delta=True,
     )
     assert ch is not None and ch.count() == 0
-    assert resumed._last_batch == 2 and resumed._committed_batches == 2
+    assert resumed._last_batch == 2
     assert {rel: resumed._segments[rel] for rel in paths} == {
         rel: [p] for rel, p in paths.items()
     }
@@ -412,22 +377,6 @@ def test_bucketed_state_survives_resume(spark, tmp_path):
     again = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
     assert again._segments == resumed._segments
     assert sorted(tuple(r) for r in again.result().collect()) == plain
-
-
-def test_salt_composes_with_buckets(spark, tmp_path):
-    """salt and buckets on the SAME relation: pruning filters first, then the
-    salt replication — still the exact unadorned result."""
-    plain = _feed(spark, _engine(spark, tmp_path, _spec()), BATCHES)
-    both = _feed(
-        spark,
-        _engine(
-            spark,
-            tmp_path,
-            _spec(li_extra={"buckets": 8, "bucket_key": ("l_key",), "salt": 3}),
-        ),
-        BATCHES,
-    )
-    assert both == plain and plain
 
 
 def test_delta_first_order_starts_at_the_delta():
@@ -474,14 +423,6 @@ def test_spec_guards():
     with pytest.raises(ValueError, match="bucket_key"):
         AcyclicQuerySpec(
             relations=(RelSpec("f", buckets=4),), group_by=("g",)
-        )
-    with pytest.raises(ValueError, match="never shuffle"):
-        AcyclicQuerySpec(
-            relations=(
-                RelSpec("f"),
-                RelSpec("d", join_on=("k", "fk"), salt=2, broadcast_state=True),
-            ),
-            group_by=("g",),
         )
     with pytest.raises(ValueError, match="bucket by its join keys"):
         AcyclicQuerySpec(
@@ -784,6 +725,52 @@ def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
         assert got == want and got, case
 
 
+def test_merge_mode_read_nets_raw_log_structured_segments(spark, tmp_path):
+    """Merge-mode READS net state that is not a single netted version: a
+    compact_every=3 engine inserts group c0 and retracts it in the next
+    batch (a +1 and a -1 in two raw segments) and retracts c1's max value;
+    resumed with compact_every=1, ``result()`` before any batch and the
+    first batch's emit_delta changelog — whose pre-batch view reads the raw
+    segments before the commit wave nets them — equal a merge-mode twin's,
+    for the aggregate and the value histogram alike."""
+    spec = AcyclicQuerySpec(
+        relations=_spec().relations,
+        group_by=("c_name",),
+        measures={"qty": lambda: F.col("l_qty")},
+        hist_measures={"top": ("max", lambda: F.col("l_qty"))},
+    )
+    b0 = ([(0, 0, 1), (1, 1, 1)], [(0, 4, 1), (1, 5, 1), (1, 9, 1)])
+    b1 = ([], [(0, 4, -1), (1, 9, -1)])
+    state_dir = str(tmp_path / "log_then_merge")
+    log = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
+    twin = _engine(spark, tmp_path, spec)
+    assert _feed(spark, log, [b0, b1]) == _feed(spark, twin, [b0, b1]) == [("c1", 5, 5)]
+    assert len(log._segments["agg"]) == 2 and len(log._segments["hist::top"]) == 2
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    eng = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=1, resume=True)
+    assert rows(eng.result()) == rows(twin.result())
+    # the next batch touches both groups: the changelog's -1 side is the
+    # pre-batch view of c0 (absent) and c1
+    changelogs = [
+        rows(
+            e.process_batch(
+                {
+                    "orders": spark.createDataFrame([], ORD_SCHEMA),
+                    "lineitem": spark.createDataFrame([(0, 6, 1), (1, 7, 1)], LI_SCHEMA),
+                },
+                batch_id=2,
+                emit_delta=True,
+            )
+        )
+        for e in (eng, twin)
+    ]
+    assert changelogs[0] == changelogs[1]
+    assert rows(eng.result()) == rows(twin.result())
+
+
 def test_state_rows_unknown_base_stays_unknown_across_appends(spark, tmp_path):
     """A resume from a pre-r11 manifest (live segments but no state_rows
     entry) must NOT seed the count from 0 on the next append — that would be
@@ -931,10 +918,9 @@ def test_q10_trickle_batch_job_budget(spark, tmp_path):
     assert _q10_topk(eng) == _q10_topk(once) and _q10_topk(once)
 
     # all-empty batch: the full path as before — a (empty) changelog is
-    # returned, the top-k emits nothing, the committed-batch count advances
-    committed = eng._committed_batches
+    # returned, the top-k emits nothing, the last committed batch advances
     ch = eng.process_batch(_q10_batch(spark, tmp_path), batch_id=2, emit_delta=True)
     assert ch is not None and ch.count() == 0
     assert eng.topk_delta().count() == 0
-    assert eng._committed_batches == committed + 1
+    assert eng._last_batch == 2
     assert _q10_topk(eng) == _q10_topk(once)

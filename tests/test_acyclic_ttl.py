@@ -557,35 +557,35 @@ def test_ttl_zone_spec_validation():
 
 
 @full_tier_only
-def test_ttl_with_auto_regime_matches_merge_and_recompute(spark, tmp_path):
-    """compact_every="auto" (round 11) composed with TTL eviction: the
-    merge -> log-structured switch at AUTO_SWITCH_BATCHES lands mid-stream
-    while the window is actively sliding, so post-switch eviction bands
-    must read APPENDED segments (manifest seg-ts ranges) and pre-switch
-    state must stay exact through the regime change. The auto engine must
-    equal both a merge-mode twin per-prefix and the from-scratch windowed
-    recompute at the end."""
-    n = IncrementalAcyclicQuery.AUTO_SWITCH_BATCHES + 4
+def test_ttl_merge_resumed_log_structured_matches_recompute(spark, tmp_path):
+    """A merge-mode TTL stream resumed mid-stream with compact_every=3 while
+    the window is sliding: post-resume eviction bands must read the
+    APPENDED segments (manifest seg-ts ranges) as well as the netted
+    merge-mode version. Each batch carries rows just above the horizon, so
+    a row appended in one batch is evicted by the next. Every prefix equals
+    a merge-mode twin, and the end result equals the windowed recompute."""
     batches = [
         [(100 * b + i, 3 * b + i % 3, f"c{i % 3}", b + i, 1) for i in range(8)]
-        + ([(100 * (b - 2), 3 * (b - 2), f"c{(0) % 3}", b - 2, -1)] if b >= 2 else [])
-        for b in range(n)
+        + [(100 * b + 50, 3 * b - 7, "c1", 5, 1)]  # evicted by batch b + 1
+        + ([(100 * (b - 2), 3 * (b - 2), "c0", b - 2, -1)] if b >= 2 else [])
+        for b in range(4)
     ]
-    eng_a = _engine(spark, tmp_path, _events_spec(), compact_every="auto")
-    eng_m = _engine(spark, tmp_path, _events_spec())
-    switched = False
+    sdir = str(tmp_path / "switch")
+    eng = IncrementalAcyclicQuery(spark, sdir, _events_spec())
+    twin = _engine(spark, tmp_path, _events_spec())
     for i, rows in enumerate(batches):
-        eng_a.process_batch(
-            {"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i
+        if i == 1:
+            eng = IncrementalAcyclicQuery(
+                spark, sdir, _events_spec(), compact_every=3, resume=True
+            )
+        eng.process_batch({"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i)
+        twin.process_batch({"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i)
+        if i == 2:  # two appended segments on top of the merge-mode version
+            assert len(eng._segments["events"]) == 3
+        assert sorted(tuple(r) for r in eng.result().collect()) == sorted(
+            tuple(r) for r in twin.result().collect()
         )
-        eng_m.process_batch(
-            {"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i
-        )
-        assert sorted(tuple(r) for r in eng_a.result().collect()) == sorted(
-            tuple(r) for r in eng_m.result().collect()
-        )
-        switched = switched or eng_a.compact_every > 1
-    assert switched  # the regime change actually happened under TTL
-    got = sorted(tuple(r) for r in eng_a.result().collect())
+    assert eng._segments["events"] == [eng._path("events", 2)]  # compacted
+    got = sorted(tuple(r) for r in eng.result().collect())
     want = _recompute([r for b in batches for r in b])
     assert got == want and got  # exact and non-trivial

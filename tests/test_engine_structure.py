@@ -2,8 +2,9 @@
 
 The continuous engine's batch pipeline is a sequence of stage methods
 (``IncrementalAcyclicQuery._process_batch_inner``); this keeps any one
-function of ``streaming/acyclic.py`` from growing back into a monolith, and
-keeps ``streaming/`` free of environment-variable knobs."""
+function of ``streaming/acyclic.py`` from growing back into a monolith,
+keeps ``streaming/`` free of environment-variable knobs, and keeps every
+optional spec field in use by some caller."""
 
 from __future__ import annotations
 
@@ -15,7 +16,9 @@ from pathlib import Path
 STREAMING = (
     Path(__file__).resolve().parent.parent / "flink_and_acyclic_schema_spark" / "streaming"
 )
+REPO = STREAMING.parent.parent
 MAX_FUNCTION_CODE_LINES = 100
+SPEC_CLASSES = ("RelSpec", "TopKSpec", "AcyclicQuerySpec")
 
 
 def _code_lines(src: str) -> tuple[ast.Module, set[int]]:
@@ -99,3 +102,55 @@ def test_streaming_reads_no_environment_variables():
             ):
                 hits.append(f"{path.name}:{node.lineno}")
     assert not hits, f"environment reads in streaming/: {hits}"
+
+
+def _spec_fields(src: str) -> dict[str, list[tuple[str, bool]]]:
+    """Spec class -> [(field, has a default)] in declaration order, read from
+    the dataclass bodies."""
+    return {
+        node.name: [
+            (st.target.id, st.value is not None)
+            for st in node.body
+            if isinstance(st, ast.AnnAssign) and isinstance(st.target, ast.Name)
+        ]
+        for node in ast.parse(src).body
+        if isinstance(node, ast.ClassDef) and node.name in SPEC_CLASSES
+    }
+
+
+def _fields_set(paths, fields: dict[str, list[tuple[str, bool]]]) -> dict[str, set[str]]:
+    """Spec class -> the fields some call in ``paths`` sets, by keyword or
+    by position."""
+    seen: dict[str, set[str]] = {c: set() for c in fields}
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in seen:
+                continue
+            seen[name].update(n for n, _ in fields[name][: len(node.args)])
+            seen[name].update(kw.arg for kw in node.keywords if kw.arg)
+    return seen
+
+
+def test_every_optional_spec_field_has_a_caller():
+    """A spec field with a default is an option; one that no caller sets is
+    a constant wearing an option's cost. Callers are the package,
+    ``bench.py`` and ``ivmbench/`` — tests and tools do not count."""
+    fields = _spec_fields((STREAMING / "acyclic.py").read_text())
+    assert set(fields) == set(SPEC_CLASSES)
+    callers = [
+        *sorted((REPO / "flink_and_acyclic_schema_spark").rglob("*.py")),
+        REPO / "bench.py",
+        *sorted((REPO / "ivmbench").rglob("*.py")),
+    ]
+    seen = _fields_set(callers, fields)
+    unset = [
+        f"{cls}.{name}"
+        for cls, fs in fields.items()
+        for name, has_default in fs
+        if has_default and name not in seen[cls]
+    ]
+    assert not unset, f"optional spec fields no caller sets: {unset}"

@@ -55,7 +55,11 @@ def _pair(spark, tmp_path, k=K, slack=SLACK):
     eng = IncrementalAcyclicQuery(
         spark, str(tmp_path / f"s{uuid.uuid4().hex[:8]}"), SPEC
     )
-    topk = TopKView(k, "total", ("kid",), refill=eng.result, slack=slack, prime=False)
+    topk = TopKView(
+        k, "total", ("kid",), refill=eng.result,
+        state_dir=str(tmp_path / f"tk{uuid.uuid4().hex[:8]}"), spark=spark,
+        slack=slack, prime=False,
+    )
     return eng, topk
 
 
@@ -161,7 +165,10 @@ def test_topk_prime_attaches_to_existing_view(spark, tmp_path):
     eng.process_batch(
         {"items": spark.createDataFrame(ops, ITEM_SCHEMA)}, batch_id=0
     )
-    topk = TopKView(K, "total", ("kid",), refill=eng.result, slack=SLACK)
+    topk = TopKView(
+        K, "total", ("kid",), refill=eng.result,
+        state_dir=str(tmp_path / "tk"), spark=spark, slack=SLACK,
+    )
     assert topk.refills == 1
     assert _got(topk) == _model_topk(ops)
     more = [(0, 80, -1), (9, 65, 1)]
@@ -427,7 +434,8 @@ def test_topk_composite_key_retraction_without_boundary(spark, tmp_path):
     )
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), spec)
     topk = TopKView(
-        3, "total", ("g", "kid"), refill=eng.result, slack=2, prime=False
+        3, "total", ("g", "kid"), refill=eng.result,
+        state_dir=str(tmp_path / "tk"), spark=spark, slack=2, prime=False,
     )
     # 6 live rows < k+2*slack+1 = 8: the buffer stays COMPLETE (boundary
     # None), so batch 1 exercises exactly the semi-join retraction path
@@ -698,6 +706,50 @@ def test_topk_durable_resume_and_replay(spark, tmp_path):
     re.apply(_d2, batch_id=2)
     assert _got(re) == _model_topk(ops0 + ops1 + ops2)
     assert out0 is not None  # first batch emitted its build-up changelog
+
+
+def test_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
+    """A resumed TopKView's ``emitted_df()`` is the last batch's persisted
+    changelog read with its schema pinned: the committed rows, and building
+    the frame launches no Spark job (no parquet schema inference) — the
+    per-batch ``topk_delta()`` read of an ordered sink."""
+    import time
+
+    sdir = str(tmp_path / "tkstate")
+    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
+
+    def mk(resume):
+        return TopKView(
+            K, "total", ("kid",), refill=eng.result, state_dir=sdir, spark=spark,
+            slack=SLACK, prime=False, resume=resume,
+        )
+
+    topk = mk(False)
+    ops = [(i, 10 * (10 - i), 1) for i in range(10)]
+    d0 = eng.process_batch(
+        {"items": spark.createDataFrame(ops, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
+    )
+    want = sorted((r["kid"], r["total"], r[WEIGHT]) for r in topk.apply(d0, batch_id=0))
+    assert want
+
+    re = mk(True)
+    sc = spark.sparkContext
+    gid = f"emitted_df_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "resumed emitted_df")
+    try:
+        got = re.emitted_df()
+        # one-job sentinel: the status listener sees jobs in submission
+        # order, so once it shows up every earlier job of the group has too
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(gid) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup(gid)) == 1
+    assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in got.collect()) == want
 
 
 def test_topk_failed_commit_rolls_back_fold(spark, tmp_path, monkeypatch):
@@ -1675,7 +1727,10 @@ def test_topk_over_sliding_window_view_composes_with_ttl(spark, tmp_path):
     eng = IncrementalAcyclicQuery(
         spark, str(tmp_path / f"w{uuid.uuid4().hex[:8]}"), spec
     )
-    topk = TopKView(2, "val", ("e_cat",), refill=eng.result, slack=1, prime=False)
+    topk = TopKView(
+        2, "val", ("e_cat",), refill=eng.result,
+        state_dir=str(tmp_path / "tk"), spark=spark, slack=1, prime=False,
+    )
     schema = "e_key int, e_day int, e_cat string, e_val int, weight int"
 
     def step(rows, bid):
@@ -2105,6 +2160,8 @@ def test_topk_multi_key_property_prefix_closure(spark, tmp_path_factory, batched
         (("total", "desc"), ("d", "asc")),
         ("kid",),
         refill=eng.result,
+        state_dir=str(tmp / "tk"),
+        spark=spark,
         slack=SLACK,
         prime=False,
     )

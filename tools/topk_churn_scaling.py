@@ -59,7 +59,10 @@ def main() -> None:
     )
     work = tempfile.mkdtemp(prefix="topk_churn_")
     eng = IncrementalAcyclicQuery(spark, work, spec)
-    topk = TopKView(K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False)
+    topk = TopKView(
+        K, "total", ("kid",), refill=eng.result, state_dir=f"{work}/topk",
+        spark=spark, slack=SLACK, prime=False,
+    )
 
     # batch 0: the whole view — group g totals g+1 (top = highest ids)
     seed = spark.range(groups).select(
@@ -150,7 +153,10 @@ def ties() -> None:
     )
     work = tempfile.mkdtemp(prefix="topk_ties_")
     eng = IncrementalAcyclicQuery(spark, work, spec)
-    topk = TopKView(K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False)
+    topk = TopKView(
+        K, "total", ("kid",), refill=eng.result, state_dir=f"{work}/topk",
+        spark=spark, slack=SLACK, prime=False,
+    )
 
     # group g totals (g%10 + 1) * 10 — ten distinct totals; the top value
     # (100) is shared by groups//10 groups, so the boundary sits INSIDE a
@@ -243,6 +249,8 @@ def ties2() -> None:
         (("total", "desc"), ("d", "asc")),
         ("kid",),
         refill=eng.result,
+        state_dir=f"{work}/topk",
+        spark=spark,
         slack=SLACK,
         prime=False,
     )
