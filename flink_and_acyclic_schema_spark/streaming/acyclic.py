@@ -622,17 +622,19 @@ class IncrementalAcyclicQuery:
         self._buckets: dict[str, int] = {
             r.name: r.buckets for r in spec.relations if r.buckets > 0
         }
-        # bucketed rel -> post-commit state row count (exact after every full
-        # rewrite/compaction, an UPPER BOUND while log-structured segments
-        # accumulate — appends add their row count, nets only shrink it).
-        # Rides the state write's observe() for free and feeds the
-        # cost-based probe-pruning gate (_prune_worthwhile against
-        # PRUNE_MIN_STATE_ROWS, optimization r11): pruning a state whose full
-        # scan is cheaper than the probe's two driver round-trips is a net
-        # loss at any scale.
+        # state (relation, "agg", "hist::<name>") -> post-commit row count
+        # (exact after every full rewrite/compaction, an UPPER BOUND while
+        # log-structured segments accumulate — appends add their row count,
+        # nets only shrink it). Rides every state write's observe() for free.
+        # It feeds the cost-based probe-pruning gate (_prune_worthwhile
+        # against PRUNE_MIN_STATE_ROWS, optimization r11: pruning a state
+        # whose full scan is cheaper than the probe's two driver round-trips
+        # is a net loss at any scale), and the next write's row bound, which
+        # nets a small state in one task (_net_write).
         self._state_rows: dict[str, int] = {}
-        # last persisted emitted-changelog {"batch": id, "path": dir} — lets a
-        # crash-replayed batch hand downstream engines the exact view delta
+        # last persisted emitted-changelog {"batch": id, "path": dir,
+        # "schema": StructType JSON} — lets a crash-replayed batch hand
+        # downstream engines the exact view delta, read without inference
         self._emitted: dict | None = None
         # fold observability (round 9): instrument=True scopes every action
         # point of a batch in a phase-tagged job group; after process_batch,
@@ -1586,18 +1588,35 @@ class IncrementalAcyclicQuery:
         out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
         return out, int(obs.get["rows"])
 
+    @staticmethod
+    def _fits_broadcast(df: DataFrame, n_rows: int) -> bool:
+        """The planner's own broadcast rule — rows × (8 + the schema's
+        default row size) within ``spark.sql.autoBroadcastJoinThreshold`` —
+        applied to a row count the planner cannot see."""
+        jdf = df._jdf
+        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+        return 0 <= n_rows * (8 + jdf.schema().defaultSize()) <= limit
+
     def _broadcast_if_small(self, df: DataFrame, n_rows: int) -> DataFrame:
         """Broadcast hint for a checkpointed frame of known row count. The
         planner sees no statistics on a checkpoint (its size estimate is
         ``defaultSizeInBytes``), so a join against it plans a sort-merge join
-        that AQE converts to a broadcast only after shuffling both sides.
-        This applies the planner's own rule — rows × (8 + the schema's
-        default row size) within ``spark.sql.autoBroadcastJoinThreshold`` —
-        to the size it cannot see."""
-        jdf = df._jdf
-        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
-        size = n_rows * (8 + jdf.schema().defaultSize())
-        return F.broadcast(df) if 0 <= size <= limit else df
+        that AQE converts to a broadcast only after shuffling both sides."""
+        return F.broadcast(df) if self._fits_broadcast(df, n_rows) else df
+
+    def _read_emitted(self) -> DataFrame:
+        """The persisted changelog of batch ``_emitted["batch"]``, read with
+        its recorded schema: parquet schema inference would cost a job (and
+        is the fallback for a manifest written before the schema was)."""
+        import json
+
+        from pyspark.sql.types import StructType
+
+        reader = self.spark.read
+        if "schema" in self._emitted:
+            schema = StructType.fromJson(json.loads(self._emitted["schema"]))
+            reader = reader.schema(schema)
+        return reader.parquet(self._emitted["path"])
 
     def process_batch(
         self,
@@ -1652,7 +1671,7 @@ class IncrementalAcyclicQuery:
                 and self._emitted is not None
                 and self._emitted["batch"] == batch_id
             ):
-                ch = self.spark.read.parquet(self._emitted["path"])
+                ch = self._read_emitted()
             # the spec-level top-k may still be BEHIND the engine commit (a
             # crash landed between the two manifests): feeding the persisted
             # changelog catches it up; its own replay skip makes this a no-op
@@ -1686,9 +1705,16 @@ class IncrementalAcyclicQuery:
         phase it records: ingest → ttl → gate presence → term_build →
         join_fold → commit wave → emit. Stages pass plain values; the
         manifest write at the end is the batch's atomic commit point, and
-        superseded files are deleted only after it."""
-        filt, bucket_memo = self._ingest(deltas)
-        seg_range = self._ttl(filt)
+        superseded files are deleted only after it.
+
+        The PRE-batch view of the touched groups is a lazy plan built before
+        the wave, on the main thread: ``result`` resolves segment paths at
+        plan-build time and the wave's commits swap ``_segments`` to the new
+        versions. It executes inside the emit stage's one action, still
+        reading the pre-batch files, which two-phase commit keeps on disk
+        until the post-manifest cleanup."""
+        filt, delta_rows, bucket_memo = self._ingest(deltas)
+        seg_range = self._ttl(filt, delta_rows)
         term_new, term_old, term_delta = self._gate_presence(filt)
         terms = self._term_build(term_new, term_old, term_delta, bucket_memo)
         if not terms:
@@ -1698,20 +1724,17 @@ class IncrementalAcyclicQuery:
                 self._last_batch = batch_id
                 self._commit_manifest()
             return None
-        agg_delta, hist_deltas, touched = self._join_fold(terms, filt, emit_delta)
-        # the PRE-batch view of the touched groups joins the commit wave: it
-        # reads only pre-batch state files, which two-phase commit keeps on
-        # disk until the post-manifest cleanup. Its plan is built HERE, on the
-        # main thread — ``result`` resolves segment paths at plan-build time
-        # and the wave's commits swap ``_segments`` to the new versions.
+        agg_delta, n_agg, hist_deltas, touched = self._join_fold(
+            terms, filt, emit_delta
+        )
+        if n_agg is not None:
+            delta_rows["agg"] = n_agg
         pre_plan = self.result(touched) if emit_delta else None
         cleanup: list[str] = []
-        pre_view = self._commit_wave(
-            filt, seg_range, agg_delta, hist_deltas, pre_plan, cleanup
-        )
+        self._commit_wave(filt, seg_range, agg_delta, hist_deltas, delta_rows, cleanup)
         changelog = None
         if emit_delta:
-            changelog = self._emit_changelog(touched, pre_view, batch_id, cleanup)
+            changelog = self._emit_changelog(touched, pre_plan, batch_id, cleanup)
         if batch_id is not None:
             self._last_batch = batch_id
         self._commit_manifest()  # atomic commit point; cleanup is post-commit
@@ -1721,11 +1744,13 @@ class IncrementalAcyclicQuery:
 
     def _ingest(
         self, deltas: Mapping[str, DataFrame]
-    ) -> tuple[dict[str, DataFrame], dict]:
+    ) -> tuple[dict[str, DataFrame], dict[str, int], dict]:
         """Ingest stage: each delta filtered, projected, conformed to its
         relation's state schema and lazily checkpointed; empty deltas whose
-        state needs no rewrite leave the batch. Returns the batch's deltas
-        and the probe memo, seeded with the ingest row counts."""
+        state needs no rewrite leave the batch. Returns the batch's deltas,
+        the row count of each when the ingest job counted them (the state
+        writes' row bounds; empty when no count was taken), and the probe
+        memo, seeded with the same counts."""
         rels = self.spec.relations
         unknown = set(deltas) - set(self._by_name)
         if unknown:
@@ -1774,13 +1799,17 @@ class IncrementalAcyclicQuery:
             if r.name in counts and r.name in filt
             and not (r.semi or r.anti) and r.ttl is None
         }
-        return filt, memo
+        return filt, counts, memo
 
-    def _ttl(self, filt: dict[str, DataFrame]) -> dict[str, tuple]:
+    def _ttl(
+        self, filt: dict[str, DataFrame], delta_rows: dict[str, int]
+    ) -> dict[str, tuple]:
         """ttl stage (RelSpec.ttl), one pass per ttl relation with a delta:
         advance the watermark, drop late rows, and append the eviction band
-        to the delta as retractions. Updates ``filt`` in place and returns
-        rel -> the driver-side superset ts range of this batch's segment.
+        to the delta as retractions. Updates ``filt`` in place — and drops
+        the ingest count of a delta the band extends, which then bounds
+        nothing — and returns rel -> the driver-side superset ts range of
+        this batch's segment.
 
         The watermark is the running max event time over ingested deltas —
         ONE bounded 1-row driver read per relation, which also constant-folds
@@ -1864,6 +1893,7 @@ class IncrementalAcyclicQuery:
                 evicted = evicted.localCheckpoint()
                 self.last_evicted[r.name] = evicted.count()
             filt[r.name] = filt[r.name].unionByName(evicted)
+            delta_rows.pop(r.name, None)
             # this batch's write holds fresh rows (>= new horizon, <= wm) and
             # the band's negations (>= old horizon) — a cheap driver-side
             # superset range, no extra jobs
@@ -1978,13 +2008,14 @@ class IncrementalAcyclicQuery:
 
     def _join_fold(
         self, terms: list[DataFrame], filt: Mapping[str, DataFrame], emit_delta: bool
-    ) -> tuple[DataFrame, dict[str, DataFrame], DataFrame | None]:
+    ) -> tuple[DataFrame, int | None, dict[str, DataFrame], DataFrame | None]:
         """join_fold stage: fold ΔJ into the grouped aggregate delta and the
         value-histogram deltas (measures were multiplied by ``_w`` per term
         in ``_term_project``; summing here is the same algebra). With
         ``emit_delta`` the aggregate delta is materialized once — it feeds
-        the commit and the touched-group set, returned third (``None``
-        without ``emit_delta`` or group keys)."""
+        the commit and the touched-group set — and its observed row count is
+        returned second. The touched set is returned last (``None`` without
+        ``emit_delta`` or group keys)."""
         dj = reduce(lambda a, b: a.unionByName(b), terms)
         if self.spec.hist_measures:
             # ≥2 consumers of the raw ΔJ (the aggregate fold below plus one
@@ -2014,21 +2045,22 @@ class IncrementalAcyclicQuery:
             for name in self.spec.hist_measures
         }
         if not emit_delta:
-            return agg_delta, hist_deltas, None
+            return agg_delta, None, hist_deltas, None
         with self._phase("join_fold"):
-            agg_delta, n_touched = self._counted_checkpoint(agg_delta)
+            agg_delta, n_agg = self._counted_checkpoint(agg_delta)
         if not gb:
-            return agg_delta, hist_deltas, None
+            return agg_delta, n_agg, hist_deltas, None
         # agg_delta is grouped by group_by, so its keys are already distinct:
         # only the preserve union needs a distinct of its own. Preserve-padded
         # rows can flip on a parent-only delta with no join rows, so the
         # preserved relation's delta keys count as touched too.
-        touched = agg_delta.select(*gb)
+        touched, n_touched = agg_delta.select(*gb), n_agg
         if self.spec.preserve is not None and self.spec.preserve in filt:
             touched = touched.unionByName(filt[self.spec.preserve].select(*gb))
             with self._phase("touched"):
                 touched, n_touched = self._counted_checkpoint(touched.distinct())
-        return agg_delta, hist_deltas, self._broadcast_if_small(touched, n_touched)
+        touched = self._broadcast_if_small(touched, n_touched)
+        return agg_delta, n_agg, hist_deltas, touched
 
     def _commit_wave(
         self,
@@ -2036,22 +2068,26 @@ class IncrementalAcyclicQuery:
         seg_range: Mapping[str, tuple],
         agg_delta: DataFrame,
         hist_deltas: Mapping[str, DataFrame],
-        pre_plan: DataFrame | None,
+        delta_rows: Mapping[str, int],
         cleanup: list[str],
-    ) -> DataFrame | None:
+    ) -> None:
         """Commit wave: every relation, aggregate and histogram state write of
-        the batch, plus the materialization of ``pre_plan`` (the pre-batch
-        emitted view, when given; returned). The tasks are mutually
-        independent — each reads pre-batch segments plus its own delta and
-        writes its own versioned path — so they run from one bounded thread
-        pool and their job latencies overlap (guide §2.6). Two-phase commit:
-        superseded paths only go to ``cleanup``, deleted after the
-        manifest."""
+        the batch. The tasks are mutually independent — each reads pre-batch
+        segments plus its own delta and writes its own versioned path — so
+        they run from one bounded thread pool and their job latencies overlap
+        (guide §2.6). ``delta_rows`` holds the known delta row counts (ingest
+        counts, the aggregate delta's observed count), from which each write
+        bounds its rows. Two-phase commit: superseded paths only go to
+        ``cleanup``, deleted after the manifest."""
         tasks: list[tuple[str, Callable[[], object]]] = [
             (
                 f"state_write:{rel}",
                 lambda rel=rel: self._commit_state(
-                    rel, filt[rel], cleanup, ts_range=seg_range.get(rel)
+                    rel,
+                    filt[rel],
+                    cleanup,
+                    ts_range=seg_range.get(rel),
+                    delta_rows=delta_rows.get(rel),
                 ),
             )
             for rel in filt
@@ -2060,7 +2096,11 @@ class IncrementalAcyclicQuery:
             (
                 "agg_write",
                 lambda: self._commit_state(
-                    "agg", agg_delta, cleanup, net_fn=self._agg_net
+                    "agg",
+                    agg_delta,
+                    cleanup,
+                    net_fn=self._agg_net,
+                    delta_rows=delta_rows.get("agg"),
                 ),
             )
         )
@@ -2075,15 +2115,12 @@ class IncrementalAcyclicQuery:
             )
             for name in hist_deltas
         ]
-        if pre_plan is not None:
-            tasks.append(("emit_pre", pre_plan.localCheckpoint))
-        done = self._parallel(tasks)
-        return done[-1] if pre_plan is not None else None
+        self._parallel(tasks)
 
     def _emit_changelog(
         self,
         touched: DataFrame | None,
-        pre_view: DataFrame,
+        pre_plan: DataFrame,
         batch_id: int | None,
         cleanup: list[str],
     ) -> DataFrame:
@@ -2092,23 +2129,26 @@ class IncrementalAcyclicQuery:
         contributes an identical ± pair that nets to zero in every consumer
         (downstream engines sum weights; the top-k buffer pops and readmits
         the same row). The post-batch view reads the freshly written
-        (pre-manifest) state; the pre side is the wave-materialized
-        checkpoint.
+        (pre-manifest) state; ``pre_plan`` is the lazy pre-batch view built
+        before the commit wave, still reading the pre-batch files. Both
+        execute inside this stage's one action, where Spark reuses the
+        touched broadcast across the two sides.
 
         With a ``batch_id`` the changelog is persisted INSIDE this batch's
         atomic commit, so a crash-replayed batch can still hand the exact
         view delta to downstream engines and sinks (see the replay skip),
         and the return is the written file read back — exactly the replay
-        path's frame. The post-view plan executes inside that write, one
-        action. r12 measured an in-memory handoff (persist() filled by the
-        same write) and REVERTED it: caching materializes the plan without
-        AQE's partition coalescing (grouped stack 36→46 s at sf0.1)."""
+        path's frame. r12 measured an in-memory handoff (persist() filled by
+        the same write) and REVERTED it: caching materializes the plan
+        without AQE's partition coalescing (grouped stack 36→46 s at
+        sf0.1)."""
         changelog = self.result(touched).withColumn(WEIGHT, F.lit(1)).unionByName(
-            pre_view.withColumn(WEIGHT, F.lit(-1))
+            pre_plan.withColumn(WEIGHT, F.lit(-1))
         )
         if batch_id is None:
-            # no durable emission requested: materialize the post view so
-            # the returned changelog does not re-execute it per consumer
+            # no durable emission requested: materialize the changelog so
+            # the returned frame does not re-execute it per consumer (nor
+            # read the pre-batch files after their cleanup)
             with self._phase("emit_post"):
                 return changelog.localCheckpoint()
         epath = os.path.join(self.state_dir, f"emitted_b{batch_id}")
@@ -2116,9 +2156,12 @@ class IncrementalAcyclicQuery:
             changelog.write.mode("overwrite").parquet(epath)
         if self._emitted is not None:
             cleanup.append(self._emitted["path"])
-        self._emitted = {"batch": batch_id, "path": epath}
-        # pinned schema: parquet schema inference is one more job
-        return self.spark.read.schema(changelog.schema).parquet(epath)
+        self._emitted = {
+            "batch": batch_id,
+            "path": epath,
+            "schema": changelog.schema.json(),
+        }
+        return self._read_emitted()
 
     def _commit_state(
         self,
@@ -2127,17 +2170,24 @@ class IncrementalAcyclicQuery:
         cleanup: list[str],
         net_fn=None,
         ts_range: tuple | None = None,
+        delta_rows: int | None = None,
     ) -> None:
         """Persist one relation's post-batch state.
 
         merge-and-rewrite mode nets the UNMERGED union old ∪ Δ INSIDE the
-        write (``_net_write`` — one full-state shuffle, not the round-8
-        merge-exchange + write-exchange pair); log-structured mode appends
-        ``delta`` as a new segment (O(Δ) IO) and, past ``compact_every``
-        live segments, compacts the union back to the net multiset.
-        ``net_fn`` picks the reduction (default ``_net``; ``_agg_net`` for
-        the aggregate). Superseded paths go to ``cleanup``, deleted only
-        after the whole batch's writes executed.
+        write (``_net_write``); log-structured mode appends ``delta`` as a
+        new segment (O(Δ) IO) and, past ``compact_every`` live segments,
+        compacts the union back to the net multiset. ``net_fn`` picks the
+        reduction (default ``_net``; ``_agg_net`` for the aggregate).
+        Superseded paths go to ``cleanup``, deleted only after the whole
+        batch's writes executed.
+
+        ``delta_rows`` is the delta's row count when known. With the
+        committed ``_state_rows`` it bounds the rows a net reads — the old
+        state plus the delta; a compaction reads only live segments, whose
+        count the append already added — and ``_net_write`` nets a small
+        bounded input in one task. ``None`` (or an unknown base) keeps the
+        shuffle.
 
         ``ts_range`` (ttl relations) is this write's driver-side superset of
         its rows' event times; merged/compacted paths take the union of
@@ -2147,9 +2197,10 @@ class IncrementalAcyclicQuery:
             nxt = self._version[rel] + 1
             p = self._path(rel, nxt)
             merged = self._read_state(rel).unionByName(delta)
-            n_rows = self._net_write(rel, merged, p, net_fn)
-            if n_rows is not None:
-                self._state_rows[rel] = n_rows  # exact: full rewrite
+            base = self._state_rows.get(rel)
+            bound = None if base is None or delta_rows is None else base + delta_rows
+            n_rows = self._net_write(rel, merged, p, net_fn, max_rows=bound)
+            self._state_rows[rel] = n_rows  # exact: full rewrite
             self._version[rel] = nxt
             cleanup.extend(self._segments.get(rel, []))
             self._segments[rel] = [p]
@@ -2161,20 +2212,19 @@ class IncrementalAcyclicQuery:
         n = self._appends.get(rel, 0)
         seg = self._seg_path(rel, n)
         n_seg = self._write_state(rel, delta, seg)
-        if n_seg is not None:
-            # upper bound while segments accumulate: appends add rows, the
-            # net reduction at compaction can only shrink the true count.
-            # Accumulate only onto a KNOWN base: a resume from a pre-r11
-            # manifest (no state_rows entry) with live segments would
-            # otherwise seed the count from 0 — a severe undercount that
-            # disengages the probe-pruning gate on arbitrarily large state.
-            # A relation with no prior segments genuinely starts from 0.
-            if rel in self._state_rows:
-                self._state_rows[rel] += n_seg
-            elif not self._segments.get(rel):
-                self._state_rows[rel] = n_seg  # first segment ever: exact base
-            # else: unknown base — leave absent so pruning stays engaged
-            # until the next full rewrite/compaction re-pins the exact count
+        # upper bound while segments accumulate: appends add rows, the net
+        # reduction at compaction can only shrink the true count. Accumulate
+        # only onto a KNOWN base: a resume from a pre-r11 manifest (no
+        # state_rows entry) with live segments would otherwise seed the
+        # count from 0 — a severe undercount that disengages the
+        # probe-pruning gate on arbitrarily large state. A relation with no
+        # prior segments genuinely starts from 0.
+        if rel in self._state_rows:
+            self._state_rows[rel] += n_seg
+        elif not self._segments.get(rel):
+            self._state_rows[rel] = n_seg  # first segment ever: exact base
+        # else: unknown base — leave absent so pruning stays engaged until
+        # the next full rewrite/compaction re-pins the exact count
         self._appends[rel] = n + 1
         self._segments.setdefault(rel, []).append(seg)
         if is_ttl:
@@ -2182,9 +2232,11 @@ class IncrementalAcyclicQuery:
         if len(self._segments[rel]) > self.compact_every:
             nxt = self._version[rel] + 1
             cp = self._path(rel, nxt)
-            n_rows = self._net_write(rel, self._read_state(rel), cp, net_fn)
-            if n_rows is not None:
-                self._state_rows[rel] = n_rows  # exact again post-compaction
+            n_rows = self._net_write(
+                rel, self._read_state(rel), cp, net_fn,
+                max_rows=self._state_rows.get(rel),
+            )
+            self._state_rows[rel] = n_rows  # exact again post-compaction
             self._version[rel] = nxt
             cleanup.extend(self._segments[rel])
             self._segments[rel] = [cp]
@@ -2194,29 +2246,46 @@ class IncrementalAcyclicQuery:
                 }
             self._rebucket_written(rel, cp, cleanup, n_rows=n_rows)
 
-    def _net_write(self, rel: str, df: DataFrame, path: str, net_fn=None) -> int | None:
+    def _net_write(
+        self,
+        rel: str,
+        df: DataFrame,
+        path: str,
+        net_fn=None,
+        max_rows: int | None = None,
+    ) -> int:
         """Net a (possibly unmerged) weighted multiset and write it as one
-        state version — in ONE full-state shuffle (round 9). A bucketed
-        relation is repartitioned by ``_bucket`` FIRST; the net's groupBy
-        keys include ``_bucket``, so Catalyst elides the aggregate's own
-        exchange (HashPartitioning(_bucket) satisfies the aggregate's
-        clustering requirement: every group lives in one partition), and the
-        write's partitionBy sees data already bucket-partitioned. The
-        round-8 form paid two full-state exchanges per merge-mode batch per
-        bucketed relation — the merge groupBy's, then the write
-        repartition's. Non-bucketed state only ever had the net's exchange;
-        that path is unchanged."""
+        state version with at most one exchange; returns the rows written.
+
+        A ``max_rows`` bound within the planner's broadcast rule
+        (``_fits_broadcast``) nets a ``coalesce(1)`` of the input in ONE
+        task: ``SinglePartition`` satisfies the net's clustering, so the
+        write plan has no exchange at all, and a bucketed write still lands
+        one file per bucket directory (the write sorts by ``_bucket``
+        first). A trickle batch's small states pay one job each instead of
+        a shuffle-map job plus a write job.
+
+        Otherwise a bucketed relation is repartitioned by ``_bucket`` FIRST;
+        the net's groupBy keys include ``_bucket``, so Catalyst elides the
+        aggregate's own exchange (HashPartitioning(_bucket) satisfies the
+        aggregate's clustering requirement: every group lives in one
+        partition), and the write's partitionBy sees data already
+        bucket-partitioned (round 9; round 8 paid two full-state exchanges).
+        Non-bucketed state shuffles once, in the net."""
         net = net_fn or self._net
         r = self._by_name.get(rel)
-        if r is not None and r.buckets > 0:
+        bucketed = r is not None and r.buckets > 0
+        if bucketed:
             df = self._conform(rel, df)
+        if max_rows is not None and self._fits_broadcast(df, max_rows):
+            df = df.coalesce(1)
+        elif bucketed:
             df = df.repartition(self._buckets[rel], F.col(BUCKET))
-            # re-conform: the net's SUM may widen/reorder columns; a plain
-            # projection that preserves the child's partitioning
-            return self._write_state(
-                rel, self._conform(rel, net(df)), path, pre_partitioned=True
-            )
-        return self._write_state(rel, self._conform(rel, net(df)), path)
+        # re-conform: the net's SUM may widen/reorder columns; a plain
+        # projection that preserves the child's partitioning
+        return self._write_state(
+            rel, self._conform(rel, net(df)), path, pre_partitioned=True
+        )
 
     def _zone_col(self, r: RelSpec) -> Column:
         """Coarse event-time zone of a row — floor(ts / ttl_zone width), with
@@ -2273,14 +2342,16 @@ class IncrementalAcyclicQuery:
 
     def _write_state(
         self, rel: str, df: DataFrame, path: str, pre_partitioned: bool = False
-    ) -> int | None:
-        """Write one state file set. A bucketed relation is hash-partitioned
-        on ``_bucket`` (parquet partition column, one writer task per bucket
-        so the layout stays one-file-per-bucket locally; at cluster scale the
-        same layout shards each bucket across executors) and SORTED by
-        bucket_key within each file, so parquet page/rowgroup min-max
-        statistics make the pushed probe-key ``In`` filter prune within the
-        bucket — together, the on-disk analogue of a keyed state store's
+    ) -> int:
+        """Write one state file set; returns the rows written. A bucketed
+        relation is partitioned on ``_bucket`` (parquet partition column) and
+        SORTED by ``_bucket`` then bucket_key within each write task, so the
+        layout stays one file per bucket directory whether one task writes
+        each bucket (hash-partitioned on ``_bucket``; at cluster scale the
+        same layout shards each bucket across executors) or one task writes
+        them all (a small state netted in one task, ``_net_write``). The key
+        sort within each file lets parquet page/rowgroup min-max statistics
+        make the pushed probe-key ``In`` filter prune within the bucket — together, the on-disk analogue of a keyed state store's
         key-group + key index.
 
         A ttl relation's state is instead sorted by its event-time column, so
@@ -2297,26 +2368,25 @@ class IncrementalAcyclicQuery:
         filter reads at most one rowgroup run per zone). Without ttl_zone,
         band reads on bucketed state prune at segment granularity only —
         documented trade-off."""
-        r = self._by_name.get(rel)
-        # every bucketed relation gets its written-row count OBSERVED on the
-        # write plan itself (a map-side CollectMetrics — no partitioning
-        # change, no extra job): it feeds adaptive bucket growth (replacing
-        # _rebucket_written's former footer-count job) AND the cost-based
-        # probe-pruning gate's _state_rows tracking (optimization round r11)
-        obs = None
-        if r is not None and r.buckets > 0:
-            from pyspark.sql import Observation
+        from pyspark.sql import Observation
 
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        r = self._by_name.get(rel)
+        # every write gets its row count OBSERVED on the write plan itself (a
+        # map-side CollectMetrics — no partitioning change, no extra job): it
+        # feeds adaptive bucket growth (replacing _rebucket_written's former
+        # footer-count job), the cost-based probe-pruning gate (optimization
+        # round r11) and the next write's row bound, all via _state_rows
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if r is not None and r.buckets > 0:
             sort_cols: list = [F.col(BUCKET)]
             if r.ttl is not None and r.ttl_zone is not None:
                 sort_cols.append(self._zone_col(r))
             sort_cols += [F.col(c) for c in r.bucket_key]
             # ``pre_partitioned`` (from _net_write): the input is already
-            # hash-partitioned on _bucket — repartitioning again would add
-            # back exactly the exchange the fused net+write elides
+            # hash-partitioned on _bucket, or is one partition — repartitioning
+            # again would add back exactly the exchange the fused net+write
+            # elides
             out = (
                 df
                 if pre_partitioned
@@ -2334,7 +2404,7 @@ class IncrementalAcyclicQuery:
             )
         else:
             df.write.mode("overwrite").parquet(path)
-        return int(obs.get["rows"]) if obs is not None else None
+        return int(obs.get["rows"])
 
     # --- result -------------------------------------------------------------
     def topk_result(self) -> DataFrame:

@@ -956,15 +956,21 @@ def test_emit_delta_zero_net_touch_is_harmless(spark, tmp_path):
 
 def test_fused_net_write_single_exchange(spark, tmp_path, monkeypatch):
     """Round-9 fusion guardrail: the merge-mode state write of a BUCKETED
-    relation nets INSIDE the write after the bucket repartition, so the
-    plan handed to the parquet writer must contain exactly ONE Exchange
-    (the repartition's) — the net's groupBy keys include ``_bucket``,
-    whose hash partitioning satisfies the aggregate's clustering
-    requirement. A second Exchange reappearing here means the round-8
-    two-shuffle shape regressed (merge groupBy + write repartition) and
-    every merge-mode batch pays a full extra state shuffle per bucketed
-    relation. Results themselves are covered by every other test; this
+    relation nets INSIDE the write. On the shuffle path (no row bound: a
+    single-relation spec takes no ingest count) the net runs after the
+    bucket repartition, so the plan handed to the parquet writer must
+    contain exactly ONE Exchange (the repartition's) — the net's groupBy
+    keys include ``_bucket``, whose hash partitioning satisfies the
+    aggregate's clustering requirement. A second Exchange reappearing here
+    means the round-8 two-shuffle shape regressed (merge groupBy + write
+    repartition) and every merge-mode batch pays a full extra state shuffle
+    per bucketed relation. With a row bound (a two-relation spec: the
+    ingest job counts both deltas) within the broadcast rule, the net runs
+    in one task: NO Exchange, and still one file per ``_bucket=``
+    directory. Results themselves are covered by every other test; this
     pins the PLAN."""
+    import os
+
     import flink_and_acyclic_schema_spark.streaming.acyclic as am
 
     captured: dict = {}
@@ -973,32 +979,46 @@ def test_fused_net_write_single_exchange(spark, tmp_path, monkeypatch):
     def spy(self, rel, df, path, pre_partitioned=False):
         if rel == "fact":
             plan = df._jdf.queryExecution().executedPlan().toString()
-            captured[rel] = (plan, pre_partitioned)
+            captured[rel] = (plan, pre_partitioned, path)
         return real(self, rel, df, path, pre_partitioned)
 
     monkeypatch.setattr(am.IncrementalAcyclicQuery, "_write_state", spy)
-    spec = AcyclicQuerySpec(
-        relations=(RelSpec("fact", buckets=4, bucket_key=("k1",)),),
-        group_by=("k1",),
-        measures={"total": lambda: F.col("v")},
-    )
-    eng = _engine(spark, tmp_path, spec)
-    eng.process_batch(
-        {"fact": spark.createDataFrame([(i, 0, i, 1) for i in range(8)], FACT_SCHEMA)},
-        batch_id=0,
-    )
-    # batch 1 makes the write a REAL old ∪ Δ union (state + delta) with
-    # net-relevant cancellation (delete of an existing row)
-    eng.process_batch(
-        {"fact": spark.createDataFrame([(0, 0, 0, -1), (9, 0, 9, 1)], FACT_SCHEMA)},
-        batch_id=1,
-    )
-    plan, pre_partitioned = captured["fact"]
+    fact = RelSpec("fact", buckets=4, bucket_key=("k1",))
+    dims = [(i, f"a{i}", 1) for i in range(10)]
+
+    def run(relations):
+        spec = AcyclicQuerySpec(
+            relations=relations,
+            group_by=("k1",),
+            measures={"total": lambda: F.col("v")},
+        )
+        eng = _engine(spark, tmp_path, spec)
+        # batch 1 makes the write a REAL old ∪ Δ union (state + delta) with
+        # net-relevant cancellation (delete of an existing row)
+        fact_rows = ([(i, 0, i, 1) for i in range(8)], [(0, 0, 0, -1), (9, 0, 9, 1)])
+        for bid, rows in enumerate(fact_rows):
+            deltas = {"fact": spark.createDataFrame(rows, FACT_SCHEMA)}
+            if len(relations) > 1:
+                deltas["dim1"] = spark.createDataFrame(dims if bid == 0 else [], DIM1_SCHEMA)
+            eng.process_batch(deltas, batch_id=bid)
+        # and the fused write is still CORRECT: netted state equals the model
+        got = {(r["k1"], r["total"]) for r in eng.result().collect()}
+        assert got == {(i, i) for i in range(1, 8)} | {(9, 9)}
+
+    run((fact,))
+    plan, pre_partitioned, _ = captured["fact"]
     assert pre_partitioned is True
     assert plan.count("Exchange") == 1, plan
-    # and the fused write is still CORRECT: netted state equals the model
-    got = {(r["k1"], r["total"]) for r in eng.result().collect()}
-    assert got == {(i, i) for i in range(1, 8)} | {(9, 9)}
+
+    run((fact, RelSpec("dim1", join_on=("d1", "k1"))))
+    plan, pre_partitioned, path = captured["fact"]
+    assert pre_partitioned is True
+    assert "Exchange" not in plan, plan
+    buckets = [d for d in os.listdir(path) if d.startswith("_bucket=")]
+    assert len(buckets) > 1, buckets
+    for d in buckets:
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
 
 
 def test_three_level_argmax_chain(spark, tmp_path):

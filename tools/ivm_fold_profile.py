@@ -19,13 +19,16 @@ job/stage counts plus wall time land in ``last_profile``. Phases:
 - ``touched``       — the distinct touched-group set; runs only with
                       ``preserve`` (otherwise the fold's group keys are the
                       set, broadcast to the restrictions below);
-- ``emit_pre``/``emit_post`` — the pre/post view snapshots the changelog
-                      diffs, restricted to the touched groups;
 - ``state_write:R`` — relation R's net+write state commit (round 9: ONE
                       fused full-state shuffle; was the merge exchange plus
-                      the write repartition);
+                      the write repartition; a state whose row bound fits
+                      the broadcast rule nets in one task, one job);
 - ``agg_write``     — the grouped-aggregate state commit;
-- ``emitted_write`` — persisting the batch's view changelog;
+- ``emitted_write`` — persisting the batch's view changelog: the pre- and
+                      post-batch views of the touched groups execute
+                      inside this write;
+- ``emit_post``     — the same changelog materialized in memory, for a
+                      batch without a ``batch_id``;
 - ``topk``          — the maintained top-k feed (collect + arrow persist).
 
 Exactness guard (unchanged from tools/topk_sink_sf1.py): the maintained
