@@ -244,7 +244,7 @@ def incremental_q3_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue are resolved by the SECOND declared order column before the
     unique-key tiebreak, and the Spark-side boundary pushdown restricts the
     per-batch collect lexicographically over BOTH order values
-    (streaming/topk.py `_touching`) — transfer stays O(buffer) even when
+    (streaming/topk.py `_collect_touching`) — transfer stays O(buffer) even when
     revenues tie. Tree and filters are `incremental_q3_stream`'s
     (plans/ivm_ext.py); the knob is the only addition."""
     scratch = _scratch("ivm_q3_topk", sf_dir)
@@ -591,7 +591,7 @@ def incremental_grouped_topk_chained_stream(
       DESC`` — the count column is heavily TIED (most customers hold a
       handful of live orders), so the SECOND order key does the real
       discrimination and the Spark-side boundary predicate
-      (streaming/topk.py ``_beats_bound``) must compare lexicographically
+      (streaming/topk.py ``_at_or_before``) must compare lexicographically
       across both values before the c_custkey tiebreak;
     - ``TopKSpec(emit_changelog=True)``: the per-group top-k view's own
       netted ±changelog (entries/exits/value-updates across touched groups,

@@ -112,41 +112,10 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import _run_parallel
+from .topk import _bucket_expr, _dump_value, _load_value, _run_parallel
 
 WEIGHT = "weight"
 BUCKET = "_bucket"  # reserved: hash-bucket partition column of bucketed state
-
-
-def _wm_dump(v) -> list:
-    """JSON-safe (tag, value) encoding of a watermark — date/datetime/Decimal
-    keep their exact type across a manifest round-trip (fromisoformat would
-    silently widen a date string to datetime; a Decimal watermark from a
-    DECIMAL event-time column is not JSON-serializable raw)."""
-    from datetime import date, datetime
-    from decimal import Decimal
-
-    if isinstance(v, datetime):
-        return ["dt", v.isoformat(sep=" ")]
-    if isinstance(v, date):
-        return ["d", v.isoformat()]
-    if isinstance(v, Decimal):
-        return ["dec", str(v)]
-    return ["raw", v]
-
-
-def _wm_load(t: list):
-    from datetime import date, datetime
-    from decimal import Decimal
-
-    tag, v = t
-    if tag == "dt":
-        return datetime.fromisoformat(v)
-    if tag == "d":
-        return date.fromisoformat(v)
-    if tag == "dec":
-        return Decimal(v)
-    return v
 
 
 def _ttl_parts(r: "RelSpec") -> tuple:
@@ -739,9 +708,9 @@ class IncrementalAcyclicQuery:
         from .topk import _publish_manifest
 
         data = self._snapshot()
-        data["watermarks"] = {r: _wm_dump(v) for r, v in data["watermarks"].items()}
+        data["watermarks"] = {r: _dump_value(v) for r, v in data["watermarks"].items()}
         data["seg_ts"] = {
-            rel: {p: [_wm_dump(lo), _wm_dump(hi)] for p, (lo, hi) in m.items()}
+            rel: {p: [_dump_value(lo), _dump_value(hi)] for p, (lo, hi) in m.items()}
             for rel, m in data["seg_ts"].items()
         }
         _publish_manifest(self._manifest_path(), data)
@@ -763,10 +732,10 @@ class IncrementalAcyclicQuery:
             k: int(v) for k, v in data.get("state_rows", {}).items()
         }
         self._watermarks = {
-            r: _wm_load(v) for r, v in data.get("watermarks", {}).items()
+            r: _load_value(v) for r, v in data.get("watermarks", {}).items()
         }
         self._seg_ts = {
-            rel: {p: (_wm_load(v[0]), _wm_load(v[1])) for p, v in m.items()}
+            rel: {p: (_load_value(v[0]), _load_value(v[1])) for p, v in m.items()}
             for rel, m in data.get("seg_ts", {}).items()
         }
         # GC anything the committed manifest doesn't reference — partial
@@ -843,7 +812,7 @@ class IncrementalAcyclicQuery:
         r = self._by_name.get(rel)
         if r is not None and r.buckets > 0 and BUCKET not in df.columns:
             df = df.withColumn(
-                BUCKET, self._bucket_expr(r.bucket_key, self._buckets[rel])
+                BUCKET, _bucket_expr(r.bucket_key, self._buckets[rel])
             )
         if rel not in self._schemas:
             wide = df
@@ -866,20 +835,6 @@ class IncrementalAcyclicQuery:
             df.groupBy(*cols)
             .agg(F.sum(WEIGHT).alias(WEIGHT))
             .filter(F.col(WEIGHT) != 0)
-        )
-
-    @staticmethod
-    def _bucket_expr(cols, n: int) -> Column:
-        """Bucket id of a key tuple (column names or Columns). Cast to string
-        first: Murmur3 hashes differ across numeric widths, and the two sides
-        of an FK edge may pin different integer types — the string form is
-        width-stable within a numeric family, so equal key values land in
-        equal buckets on both sides (_probe_pruning additionally casts the
-        probe side to the state side's declared types, covering cross-family
-        edges like int vs DECIMAL whose string forms differ)."""
-        return F.pmod(
-            F.hash(*[(c if isinstance(c, Column) else F.col(c)).cast("string") for c in cols]),
-            F.lit(n),
         )
 
     @staticmethod
@@ -1087,7 +1042,7 @@ class IncrementalAcyclicQuery:
             for i, (c, k) in enumerate(zip(probe_cols, r.bucket_key))
         ]
         n_buckets = self._buckets[r.name]
-        sel = canon + [self._bucket_expr(canon, n_buckets).alias("_b")]
+        sel = canon + [_bucket_expr(canon, n_buckets).alias("_b")]
         # wide-probe fast path (round 9, from the fold profile): the key-
         # distinct below is a FULL SHUFFLE of the probe side, and a probe
         # far above the cap paid it (plus a second full scan for the bucket
@@ -1143,7 +1098,7 @@ class IncrementalAcyclicQuery:
             ids = [
                 row[0]
                 for row in probe_df.select(
-                    self._bucket_expr(canon, n_buckets).alias("b")
+                    _bucket_expr(canon, n_buckets).alias("b")
                 )
                 .distinct()
                 .collect()
@@ -2331,7 +2286,7 @@ class IncrementalAcyclicQuery:
         nxt = self._version[rel] + 1
         p2 = self._path(rel, nxt)
         grown = self.spark.read.parquet(path).withColumn(
-            BUCKET, self._bucket_expr(r.bucket_key, want)
+            BUCKET, _bucket_expr(r.bucket_key, want)
         )
         self._write_state(rel, self._conform(rel, grown), p2)
         self._version[rel] = nxt

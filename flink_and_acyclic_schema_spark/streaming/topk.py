@@ -37,11 +37,15 @@ plans/streaming_plans.py keeps that form as the documented baseline, the
 At 100 TB: the changelog filters are broadcast-size literals (≤ buffer
 rows), the refill is the only O(groups) touch and is rate-bounded by actual
 top-region churn, and the buffer itself is O(k) driver memory. Restart
-recovery: the buffer/boundary/emitted-changelog persist under ``state_dir``
-behind an atomic manifest, and ``resume=True`` reattaches with no view scan
-and exactly-once replay semantics for downstream sinks (the buffer is also
-a pure function of the live view, so one ``refill()`` against the engine's
-committed state can always rebuild it).
+recovery: the buffer, the boundary and the batch's emitted changelog live
+INSIDE ``<state_dir>/MANIFEST.json`` (typed JSON, one atomic ``os.replace``
+per commit — the O(k) operator-state snapshot at the batch barrier), and
+``resume=True`` reattaches with no view scan and no Spark job, with
+exactly-once replay semantics for downstream sinks (the buffer is also a
+pure function of the live view, so one ``refill()`` against the engine's
+committed state can always rebuild it). ``GroupedTopKView`` keeps its
+O(groups) candidate state Spark-side in 8 fixed hash shards behind the same
+manifest protocol.
 
 Declaring ``AcyclicQuerySpec.top_k`` (TopKSpec, streaming/acyclic.py) wires
 either view into the engine itself — construction, feeding, durability,
@@ -57,8 +61,10 @@ import json
 import os
 import shutil
 from collections.abc import Callable
+from datetime import date, datetime
+from decimal import Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WEIGHT = "weight"
@@ -94,7 +100,8 @@ def _publish_manifest(manifest_path: str, data: dict, adopt=None, gc=None) -> No
     sequence:
 
     1. every data file the manifest references is FULLY WRITTEN before this
-       is called (the caller's responsibility);
+       is called (the caller's responsibility; TopKView's manifest holds
+       its O(k) rows itself and references no file);
     2. the manifest is staged to ``.tmp`` and swapped in with one atomic
        ``os.replace`` — the commit point;
     3. only AFTER the replace does ``adopt()`` swap the staged values into
@@ -114,6 +121,50 @@ def _publish_manifest(manifest_path: str, data: dict, adopt=None, gc=None) -> No
         adopt()
     if gc is not None:
         gc()
+
+
+def _dump_value(v) -> list:
+    """JSON-safe (tag, value) encoding of one manifest value (a watermark, a
+    top-k buffer cell). date/datetime/Decimal keep their exact type across
+    the round-trip: fromisoformat would silently widen a date string to
+    datetime, a naive timestamp stays naive, and a Decimal is not
+    JSON-serializable raw. Any other non-JSON type raises ``TypeError`` —
+    while the manifest is still being built, before its ``os.replace``."""
+    if isinstance(v, datetime):
+        return ["dt", v.isoformat(sep=" ")]
+    if isinstance(v, date):
+        return ["d", v.isoformat()]
+    if isinstance(v, Decimal):
+        return ["dec", str(v)]
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return ["raw", v]
+    raise TypeError(f"no manifest encoding for {type(v).__name__} value {v!r}")
+
+
+def _load_value(t: list):
+    tag, v = t
+    if tag == "dt":
+        return datetime.fromisoformat(v)
+    if tag == "d":
+        return date.fromisoformat(v)
+    if tag == "dec":
+        return Decimal(v)
+    return v
+
+
+def _bucket_expr(cols, n: int) -> Column:
+    """Bucket id of a key tuple (column names or Columns) — the shard id of
+    the engine's bucketed state and of GroupedTopKView's candidates. Cast to
+    string first: Murmur3 hashes differ across numeric widths, and the two
+    sides of an FK edge may pin different integer types — the string form is
+    width-stable within a numeric family, so equal key values land in equal
+    buckets on both sides (the engine's _probe_pruning additionally casts
+    the probe side to the state side's declared types, covering cross-family
+    edges like int vs DECIMAL whose string forms differ)."""
+    return F.pmod(
+        F.hash(*[(c if isinstance(c, Column) else F.col(c)).cast("string") for c in cols]),
+        F.lit(n),
+    )
 
 
 def _norm_order(order_by) -> tuple[tuple[str, bool], ...]:
@@ -140,7 +191,93 @@ def _norm_order(order_by) -> tuple[tuple[str, bool], ...]:
     return tuple(out)
 
 
-class TopKView:
+class _OrderedView:
+    """What both views share: the TOTAL order — the ORDER BY columns, then
+    the ascending unique-key tiebreak — as Spark expressions, and the
+    fresh-or-resume attach to ``state_dir`` behind its ``MANIFEST.json``."""
+
+    def __init__(self, k, order_col, key_cols, refill, state_dir, spark, slack):
+        if k < 1:
+            raise ValueError("k must be >= 1")
+        self.k = k
+        # multi-key ORDER BY (round 8): ((col, desc), ...) — ``order_col``
+        # accepts a single name or a sequence of name/(name, dir) entries
+        self.order_cols = _norm_order(order_col)
+        self.key_cols = tuple(key_cols)
+        self.slack = k if slack is None else slack
+        self._refill_fn = refill
+        self.state_dir = state_dir
+        self._spark = spark
+        self._schema = None  # StructType of view rows, pinned at first use
+        self._version = 0
+        self._last_batch: int | None = None
+
+    def _attach(self, resume: bool) -> bool:
+        """Reattach to the committed manifest (``resume`` and one exists) and
+        return True; otherwise start ``state_dir`` empty and return False."""
+        if resume and os.path.exists(self._manifest_path()):
+            self._load_manifest()
+            return True
+        if os.path.exists(self.state_dir):
+            shutil.rmtree(self.state_dir)
+        os.makedirs(self.state_dir)
+        return False
+
+    def _manifest_path(self) -> str:
+        return os.path.join(self.state_dir, "MANIFEST.json")
+
+    def _replayed(self, batch_id: int | None) -> bool:
+        """A crash-replayed batch: at or before the last committed one."""
+        return (
+            batch_id is not None
+            and self._last_batch is not None
+            and batch_id <= self._last_batch
+        )
+
+    def _emitted_schema(self):
+        """Schema of the emitted top-k changelog: the view's columns plus an
+        int ``weight``."""
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        return StructType([*self._schema.fields, StructField(WEIGHT, IntegerType())])
+
+    def _sort_cols(self) -> list[Column]:
+        return [
+            F.col(c).desc() if d else F.col(c).asc() for c, d in self.order_cols
+        ] + [F.col(c).asc() for c in self.key_cols]
+
+    def _non_null(self, df: DataFrame) -> DataFrame:
+        """NULL order values never rank (SQL NULLS LAST under a LIMIT the
+        non-NULL rows satisfy)."""
+        for c, _ in self.order_cols:
+            df = df.filter(F.col(c).isNotNull())
+        return df
+
+    def _at_or_before(self, bvals: list[Column], bkeys: list[Column]) -> Column:
+        """Row AT-OR-BEFORE the boundary whose order values are ``bvals`` and
+        key values ``bkeys`` (literals or columns), under the TOTAL order:
+        lexicographic over every (order column, direction), then the
+        ascending key tiebreak — exact, because the keys are unique (a
+        value-only threshold splits boundary ties and surfaces a wrong row
+        after deletions). The trailing full-tie term is the boundary row
+        itself: readmitting it after its own −pre/+post pop keeps a
+        touched-but-unchanged boundary row from shrinking the buffer (the
+        strictly-better form forced refills earlier than the
+        ≥slack-deletions amortization); the k+2·slack capacity bound is
+        unaffected because the pop freed the slot in the same batch."""
+        cond = F.lit(False)
+        eq = F.lit(True)
+        for (c, desc), b in zip(self.order_cols, bvals):
+            v = F.col(c)
+            cond = cond | (eq & ((v > b) if desc else (v < b)))
+            eq = eq & v.eqNullSafe(b)
+        for c, b in zip(self.key_cols, bkeys):
+            cond = cond | (eq & (F.col(c) < b))
+            eq = eq & F.col(c).eqNullSafe(b)
+        return cond | eq
+
+
+class TopKView(_OrderedView):
     """Exact top-k of a continuously-maintained view, fed by its emit_delta
     changelog.
 
@@ -154,25 +291,28 @@ class TopKView:
                      ascending tiebreak, mirroring ``ORDER BY v DESC, key``.
     ``refill``     — zero-arg callable returning the full current view as a
                      DataFrame (e.g. ``engine.result``); invoked only when
-                     retraction drains the buffer below k, and once at start.
-    ``state_dir``  — DURABILITY root: after every batch the buffer,
-                     boundary, and the batch's emitted top-k changelog are
-                     persisted as tiny parquet files behind an atomic
-                     manifest (the engine's os.replace discipline), so
-                     ``resume=True`` reattaches with no refill and a
+                     retraction drains the buffer below k, and at start when
+                     ``prime``.
+    ``state_dir``  — DURABILITY root: after every batch the buffer, the
+                     boundary and the batch's emitted top-k changelog are
+                     written INTO ``MANIFEST.json`` (rows as typed-JSON
+                     lists in schema order) and published by one atomic
+                     ``os.replace`` — the whole commit, O(k) rows, no Spark
+                     job. ``resume=True`` reattaches with no refill, and a
                      crash-REPLAYED batch (``batch_id`` ≤ last committed)
                      is skipped, returning the PERSISTED changelog — the
                      exactly-once contract an emission sink composes with.
-                     O(k) rows per write.
-    ``spark``      — the session that reads the persisted changelog back.
+    ``spark``      — the session ``emitted_df`` builds its frame in.
     ``slack``      — extra buffered rows beyond k (default k): each refill
                      then survives at least ``slack`` top-region deletions.
-    ``prime``      — whether to refill from the view at construction.
-                     ``True`` (default) attaches to an EXISTING view (e.g.
-                     restart recovery); ``False`` starts a FRESH stream: the
+    ``prime``      — whether to refill from the view at construction (the
+                     engine primes when a resumed state dir has live state
+                     but no top-k manifest). ``True`` (default) attaches to
+                     an EXISTING view; ``False`` starts a FRESH stream: the
                      empty buffer with no boundary is exactly "complete over
                      the empty view", so the first batches build the buffer
                      from the changelog alone without ever scanning state.
+                     Ignored when ``resume`` finds a committed manifest.
     """
 
     def __init__(
@@ -187,15 +327,7 @@ class TopKView:
         prime: bool = True,
         resume: bool = False,
     ):
-        if k < 1:
-            raise ValueError("k must be >= 1")
-        self.k = k
-        # multi-key ORDER BY (round 8): ((col, desc), ...) — ``order_col``
-        # accepts a single name or a sequence of name/(name, dir) entries
-        self.order_cols = _norm_order(order_col)
-        self.key_cols = tuple(key_cols)
-        self.slack = k if slack is None else slack
-        self._refill_fn = refill
+        super().__init__(k, order_col, key_cols, refill, state_dir, spark, slack)
         # key tuple -> full row dict; bounded by k + 2*slack between trims
         self._buffer: dict[tuple, dict] = {}
         # sort key of the worst row retained at the last refill/trim;
@@ -207,18 +339,10 @@ class TopKView:
         # measures this ≪ touched groups)
         self.applied_rows = 0
         self.applied_rows_total = 0
-        self.state_dir = state_dir
-        self._spark = spark
-        self._schema = None  # StructType of buffer rows, pinned at first use
-        self._version = 0
-        self._last_batch: int | None = None
         self._emitted_batch: int | None = None
-        if resume and os.path.exists(self._manifest_path()):
-            self._load_manifest()
+        self._emitted_rows: list[dict] = []
+        if self._attach(resume):
             return  # committed buffer restored — no refill, no re-prime
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.makedirs(state_dir)
         if prime:
             self.refill()
         # commit an INITIAL manifest even before the first batch: an
@@ -232,11 +356,11 @@ class TopKView:
         self._persist(None, None)
 
     # --- total order ---------------------------------------------------------
+    def _key(self, row: dict) -> tuple:
+        return tuple(row[c] for c in self.key_cols)
+
     def _skey(self, row: dict) -> tuple:
-        return (
-            tuple(row[c] for c, _ in self.order_cols),
-            tuple(row[c] for c in self.key_cols),
-        )
+        return (tuple(row[c] for c, _ in self.order_cols), self._key(row))
 
     def _better(self, a: tuple, b: tuple) -> bool:
         """Strict 'a ranks before b' under (order values..., tiebreak keys)
@@ -248,10 +372,8 @@ class TopKView:
         return a[1] < b[1]
 
     def _admissible(self, s: tuple) -> bool:
-        """AT-OR-BEFORE the boundary: equality readmits the boundary row
-        itself after its own −pre/+post pop (a strictly-better test would
-        shrink the buffer on every touched-but-unchanged boundary row,
-        forcing refills earlier than the ≥slack-deletions amortization)."""
+        """AT-OR-BEFORE the boundary (see ``_at_or_before``, its Spark-side
+        twin)."""
         return (
             self._boundary is None
             or s == self._boundary
@@ -259,119 +381,57 @@ class TopKView:
         )
 
     def _ranked(self) -> list[dict]:
-        rows = sorted(self._buffer.values(), key=lambda r: tuple(r[c] for c in self.key_cols))
+        rows = sorted(self._buffer.values(), key=self._key)
         # stable sorts applied least-significant-first: ties on every order
         # column stay tiebreak-ascending
         for c, desc in reversed(self.order_cols):
             rows.sort(key=lambda r, _c=c: r[_c], reverse=desc)
         return rows
 
-    # --- durability: tiny parquet behind an atomic manifest -----------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.state_dir, "MANIFEST.json")
-
+    # --- durability: the O(k) state inside one atomic manifest ---------------
     def _pin_schema(self, template: DataFrame) -> None:
         if self._schema is None:
             self._schema = template.schema
 
-    def _emitted_schema(self):
-        """Schema of the persisted top-k changelog: buffer columns plus an
-        int ``weight``."""
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        return StructType([*self._schema.fields, StructField(WEIGHT, IntegerType())])
-
-    def _write_rows(self, path: str, schema, rows: list[dict]) -> None:
-        """ONE parquet file via a DRIVER-SIDE arrow write: the buffer is
-        O(k) rows of plain Python values already resident on the driver, so
-        persisting it must not cost Spark jobs (the previous design spent
-        2-3 ``createDataFrame().write`` round-trips per batch on ≤60 rows).
-        The layout mirrors a Spark-written dir (part file inside a
-        directory), so the sink-facing ``emitted_df`` stays a Spark
-        parquet read and old Spark-written state dirs resume
-        unchanged (pyarrow dataset discovery skips ``_SUCCESS``)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        os.makedirs(path, exist_ok=True)
-        target = os.path.join(path, "part-00000.parquet")
-        try:
-            tbl = pa.Table.from_pylist(
-                [{f.name: r[f.name] for f in schema.fields} for r in rows],
-                schema=to_arrow_schema(schema),
-            )
-            pq.write_table(tbl, target)
-        except Exception:
-            # a type the arrow bridge can't map — fall back to one Spark job
-            data = [tuple(r[f.name] for f in schema.fields) for r in rows]
-            self._spark.createDataFrame(data, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(path)
-
     def _persist(self, out: list[dict] | None, batch_id: int | None) -> None:
         """Commit the post-batch buffer/boundary (and the batch's emitted
-        top-k changelog) under a versioned dir + atomic manifest replace.
-        Everything written is O(k) rows — the buffer IS bounded driver
-        state, so its durable twin is bounded too, and the whole commit is
-        driver-side file IO (no Spark jobs)."""
-        from pyspark.sql.types import StructType
-
+        top-k changelog) as ONE manifest replace. Every value is encoded
+        here, before ``_publish_manifest`` writes anything, so an
+        unencodable value fails the commit pre-replace and ``apply`` rolls
+        the fold back. The schema is stored once; rows are lists in its
+        field order."""
+        names = self._schema.fieldNames() if self._schema is not None else []
+        emitted_batch = batch_id if out is not None and batch_id is not None else None
+        emitted = out if emitted_batch is not None else []
         v = self._version + 1
-        vdir = os.path.join(self.state_dir, f"v{v}")
-        if self._schema is not None:
-            self._write_rows(
-                os.path.join(vdir, "buf"), self._schema, list(self._buffer.values())
-            )
-        if self._boundary is not None:
-            by_name = {f.name: f for f in self._schema.fields}
-            bschema = StructType(
-                [by_name[c] for c, _ in self.order_cols]
-                + [by_name[c] for c in self.key_cols]
-            )
-            brow = dict(
-                zip(
-                    [c for c, _ in self.order_cols] + list(self.key_cols),
-                    [*self._boundary[0], *self._boundary[1]],
-                )
-            )
-            self._write_rows(os.path.join(vdir, "bnd"), bschema, [brow])
-        if out is not None and batch_id is not None:
-            self._write_rows(os.path.join(vdir, "emitted"), self._emitted_schema(), out)
-            emitted_batch = batch_id
-        else:
-            # each version dir is self-contained; a commit without an emitted
-            # changelog supersedes any previously persisted one
-            emitted_batch = None
         last_batch = batch_id if batch_id is not None else self._last_batch
         data = {
             "version": v,
             "last_batch": last_batch,
             "emitted_batch": emitted_batch,
-            "has_boundary": self._boundary is not None,
             # None until the first refill/apply pins it (the pre-first-batch
-            # initial commit): empty buffer, no boundary, nothing on disk
+            # initial commit): empty buffer, no boundary
             "schema": json.loads(self._schema.json())
             if self._schema is not None
             else None,
+            "buffer": [[_dump_value(r[c]) for c in names] for r in self._buffer.values()],
+            "boundary": None
+            if self._boundary is None
+            else [[_dump_value(x) for x in part] for part in self._boundary],
+            "emitted": [[_dump_value(r[c]) for c in (*names, WEIGHT)] for r in emitted],
         }
+
         def adopt():
             # staged fields swap in only post-replace (_publish_manifest's
-            # contract): a failed write above leaves self on the last
-            # committed state, so an in-process retry re-applies the batch
-            # instead of replay-skipping to an unadopted version
+            # contract): a failed commit leaves self on the last committed
+            # state, so an in-process retry re-applies the batch instead of
+            # replay-skipping to an unadopted version
             self._version = v
             self._last_batch = last_batch
             self._emitted_batch = emitted_batch
+            self._emitted_rows = emitted
 
-        def gc():
-            for entry in os.listdir(self.state_dir):
-                if entry.startswith("v") and entry != f"v{v}":
-                    shutil.rmtree(
-                        os.path.join(self.state_dir, entry), ignore_errors=True
-                    )
-
-        _publish_manifest(self._manifest_path(), data, adopt, gc)
+        _publish_manifest(self._manifest_path(), data, adopt)
 
     def _load_manifest(self) -> None:
         from pyspark.sql.types import StructType
@@ -381,40 +441,33 @@ class TopKView:
         self._version = data["version"]
         self._last_batch = data["last_batch"]
         self._emitted_batch = data["emitted_batch"]
-        self._buffer = {}
-        self._boundary = None
-        # GC partial writes of a crashed batch FIRST (also covers the
-        # schema-less initial commit, whose version dir never existed)
-        for entry in os.listdir(self.state_dir):
-            if entry.startswith("v") and entry != f"v{self._version}":
-                shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
         if data["schema"] is None:
             # pre-first-batch initial commit: complete over the empty view
             return
         self._schema = StructType.fromJson(data["schema"])
-        vdir = os.path.join(self.state_dir, f"v{self._version}")
-        # driver-side reads to match the driver-side writes — resume costs
-        # zero Spark jobs (pyarrow reads Spark-written dirs too)
-        import pyarrow.parquet as pq
+        names = self._schema.fieldNames()
 
-        rows = pq.read_table(os.path.join(vdir, "buf")).to_pylist()
-        self._buffer = {tuple(r[c] for c in self.key_cols): r for r in rows}
-        if data["has_boundary"]:
-            b = pq.read_table(os.path.join(vdir, "bnd")).to_pylist()[0]
-            self._boundary = (
-                tuple(b[c] for c, _ in self.order_cols),
-                tuple(b[c] for c in self.key_cols),
+        def rows(lists, cols):
+            return [dict(zip(cols, map(_load_value, r))) for r in lists]
+
+        self._buffer = {self._key(r): r for r in rows(data["buffer"], names)}
+        if data["boundary"] is not None:
+            self._boundary = tuple(
+                tuple(map(_load_value, part)) for part in data["boundary"]
             )
+        self._emitted_rows = rows(data["emitted"], [*names, WEIGHT])
 
     def emitted_df(self) -> DataFrame | None:
         """The last committed batch's emitted top-k changelog as a DataFrame
         — the exactly-once feed for a downstream sink: a crash-replayed
-        batch reads back the SAME rows. The schema is pinned, which spares
-        parquet schema inference."""
+        batch gets the SAME rows. Built from the manifest-held rows, so it
+        launches no job."""
         if self._emitted_batch is None:
             return None
-        return self._spark.read.schema(self._emitted_schema()).parquet(
-            os.path.join(self.state_dir, f"v{self._version}", "emitted")
+        schema = self._emitted_schema()
+        return self._spark.createDataFrame(
+            [tuple(r[c] for c in schema.fieldNames()) for r in self._emitted_rows],
+            schema,
         )
 
     # --- maintenance ---------------------------------------------------------
@@ -422,21 +475,16 @@ class TopKView:
         """Rebuild the buffer as the true top-(k+slack) of the full view —
         ONE TakeOrderedAndProject job. Fewer rows than that means the buffer
         is complete (boundary None: every insert is admitted)."""
-        order = [
-            F.col(c).desc() if d else F.col(c).asc() for c, d in self.order_cols
-        ]
         view = self._refill_fn()
         self._pin_schema(view)
-        df = view
-        for c, _ in self.order_cols:
-            df = df.filter(F.col(c).isNotNull())
         rows = [
             r.asDict()
-            for r in df.orderBy(*order, *[F.col(c).asc() for c in self.key_cols])
+            for r in self._non_null(view)
+            .orderBy(*self._sort_cols())
             .limit(self.k + self.slack)
             .collect()
         ]
-        self._buffer = {tuple(r[c] for c in self.key_cols): r for r in rows}
+        self._buffer = {self._key(r): r for r in rows}
         self._boundary = self._skey(rows[-1]) if len(rows) == self.k + self.slack else None
         self.refills += 1
 
@@ -444,47 +492,24 @@ class TopKView:
         if len(self._buffer) <= self.k + 2 * self.slack:
             return
         ranked = self._ranked()[: self.k + self.slack]
-        self._buffer = {tuple(r[c] for c in self.key_cols): r for r in ranked}
+        self._buffer = {self._key(r): r for r in ranked}
         self._boundary = self._skey(ranked[-1])
 
-    def _touching(self, changelog: DataFrame) -> DataFrame:
-        """Spark-side restriction of the changelog to rows that can affect
-        the buffer — what bounds the per-batch driver transfer to top-region
-        churn. Retractions matter only for buffered keys; insertions only
-        when ranked at-or-before the boundary. The FULL lexicographic
-        tiebreak (value, then every key column) is pushed into the filter,
-        so a low-cardinality measure (integer counts, Zipf ties) whose
-        thousands of boundary-VALUE ties would otherwise all reach the
+    def _collect_touching(self, changelog: DataFrame) -> list[dict]:
+        """The changelog rows that can affect the buffer, restricted
+        Spark-side — what bounds the per-batch driver transfer to top-region
+        churn, in BOTH boundary regimes.
+
+        With a boundary: retractions matter only for buffered keys, and
+        insertions only when ranked at-or-before the boundary. The FULL
+        lexicographic tiebreak (value, then every key column) is pushed into
+        the filter, so a low-cardinality measure (integer counts, Zipf ties)
+        whose thousands of boundary-VALUE ties would otherwise all reach the
         driver stays O(buffer): only rows at-or-before B under the TOTAL
         order pass — exact, because every buffered row ranks at-or-before B
         (retractions of buffered keys always pass) and admission itself is
-        at-or-before B."""
-        ch = changelog
-        for c, _ in self.order_cols:
-            ch = ch.filter(F.col(c).isNotNull())
-        if self._boundary is None:
-            return ch
-        bvals, bkeys = self._boundary
-        types = {f.name: f.dataType for f in self._schema.fields}
-        cond = F.lit(False)
-        eq = F.lit(True)
-        # literals cast to the PINNED column type: a collected timestamp_ntz
-        # boundary value must compare as ntz, not as a re-inferred ltz literal
-        for (c, desc), bv in zip(self.order_cols, bvals):
-            col, lit = F.col(c), F.lit(bv).cast(types[c])
-            cond = cond | (eq & ((col > lit) if desc else (col < lit)))
-            eq = eq & col.eqNullSafe(lit)
-        for c, bk in zip(self.key_cols, bkeys):
-            lit = F.lit(bk).cast(types[c])
-            cond = cond | (eq & (F.col(c) < lit))
-            eq = eq & F.col(c).eqNullSafe(lit)
-        # trailing `eq` = the boundary row itself (keys are unique), which
-        # at-or-before admission readmits after a −pre/+post pop
-        return ch.filter(cond | eq)
+        at-or-before B.
 
-    def _collect_touching(self, changelog: DataFrame) -> list[dict]:
-        """Bounded driver transfer in BOTH boundary regimes. With a boundary,
-        collect the lexicographically-restricted changelog (``_touching``).
         WITHOUT one (fresh prime=False stream, or a view small enough that
         the buffer is complete), a naive collect of the whole changelog is
         unbounded on a large first batch — instead:
@@ -501,11 +526,20 @@ class TopKView:
           the completeness claim is withdrawn exactly when it stops holding.
           A non-full return means every insertion was collected and the
           buffer stays complete."""
+        ch = self._non_null(changelog)
         if self._boundary is not None:
-            return [r.asDict() for r in self._touching(changelog).collect()]
-        ch = changelog
-        for c, _ in self.order_cols:
-            ch = ch.filter(F.col(c).isNotNull())
+            # literals cast to the PINNED column type: a collected
+            # timestamp_ntz boundary value must compare as ntz, not as a
+            # re-inferred ltz literal
+            types = {f.name: f.dataType for f in self._schema.fields}
+            bvals, bkeys = self._boundary
+            ch = ch.filter(
+                self._at_or_before(
+                    [F.lit(v).cast(types[c]) for (c, _), v in zip(self.order_cols, bvals)],
+                    [F.lit(v).cast(types[c]) for c, v in zip(self.key_cols, bkeys)],
+                )
+            )
+            return [r.asDict() for r in ch.collect()]
         rows: list[dict] = []
         if self._buffer:
             # buffered-key membership: a per-key OR-chain of literal
@@ -539,13 +573,10 @@ class TopKView:
                     how="left_semi",
                 )
             rows += [r.asDict() for r in neg.collect()]
-        order = [
-            F.col(c).desc() if d else F.col(c).asc() for c, d in self.order_cols
-        ]
         rows += [
             r.asDict()
             for r in ch.filter(F.col(WEIGHT) > 0)
-            .orderBy(*order, *[F.col(c).asc() for c in self.key_cols])
+            .orderBy(*self._sort_cols())
             .limit(self.k + 2 * self.slack + 1)
             .collect()
         ]
@@ -569,16 +600,13 @@ class TopKView:
 
         With ``batch_id``, a replayed batch (≤ last committed) is
         not re-applied — the PERSISTED changelog of that batch is returned
-        instead, so a downstream sink's overwrite lands the same rows."""
+        instead (no Spark job), so a downstream sink's overwrite lands the
+        same rows."""
         if changelog is None:
             return None
-        if (
-            batch_id is not None
-            and self._last_batch is not None
-            and batch_id <= self._last_batch
-        ):
+        if self._replayed(batch_id):
             if self._emitted_batch == batch_id:
-                return [r.asDict() for r in self.emitted_df().collect()]
+                return [dict(r) for r in self._emitted_rows]
             return None
         self._pin_schema(changelog.drop(WEIGHT))
         # committed snapshot for commit-failure rollback: the
@@ -589,10 +617,10 @@ class TopKView:
         # batch's emission for an exactly-once sink. O(k) rows to copy.
         # _version anchors the rollback to the commit point: _persist can
         # also raise AFTER the manifest os.replace adopted the new version
-        # (a KeyboardInterrupt, an OSError in the superseded-dir GC) — in
-        # that window the commit is real and restoring the pre-batch buffer
-        # would leave memory one batch BEHIND the manifest, folding the next
-        # batch against stale candidates. The per-batch transfer counters
+        # (a KeyboardInterrupt in the adopt tail) — in that window the
+        # commit is real and restoring the pre-batch buffer would leave
+        # memory one batch BEHIND the manifest, folding the next batch
+        # against stale candidates. The per-batch transfer counters
         # (applied_rows*) snapshot too, so a retried batch doesn't
         # double-count the driver-transfer evidence the tools report.
         snap = (
@@ -609,13 +637,13 @@ class TopKView:
         self.applied_rows_total += len(rows)
         for r in rows:
             if r[WEIGHT] < 0:
-                self._buffer.pop(tuple(r[c] for c in self.key_cols), None)
+                self._buffer.pop(self._key(r), None)
         for r in rows:
             if r[WEIGHT] <= 0:
                 continue
             r = {c: v for c, v in r.items() if c != WEIGHT}
             if self._admissible(self._skey(r)):
-                self._buffer[tuple(r[c] for c in self.key_cols)] = r
+                self._buffer[self._key(r)] = r
         self._trim()
         if self._boundary is not None and len(self._buffer) < self.k:
             self.refill()
@@ -630,8 +658,8 @@ class TopKView:
             # the true delta instead of an idempotent empty one. BUT
             # only while the commit was NOT adopted — _version moved ⇒
             # the manifest replace succeeded and the exception came from
-            # the post-adoption tail (GC/interrupt); the fold must stand
-            # or memory falls one batch behind the durable state.
+            # the post-adoption tail; the fold must stand or memory falls
+            # one batch behind the durable state.
             if self._version == snap[5]:
                 (
                     self._buffer,
@@ -650,7 +678,7 @@ class TopKView:
         return self._ranked()[: self.k]
 
 
-class GroupedTopKView:
+class GroupedTopKView(_OrderedView):
     """Exact top-k WITHIN EVERY GROUP of a continuously-maintained view —
     the continuous twin of `row_number() OVER (PARTITION BY g ORDER BY v
     DESC) <= k` — fed by the view's emit_delta changelog.
@@ -664,7 +692,7 @@ class GroupedTopKView:
     live row set). Per batch, entirely as keyed equi-joins/windows:
 
     - retractions anti-join candidates on (group, key);
-    - insertions admit iff ranked strictly before the group's boundary
+    - insertions admit iff ranked at-or-before the group's boundary
       (exact: keys make the order total — a value-only threshold splits
       boundary ties and surfaces a wrong row after deletions);
     - groups whose candidates drained below k while trimmed REFILL from the
@@ -675,17 +703,16 @@ class GroupedTopKView:
     - groups past k+2·slack re-trim to k+slack and refresh their boundary.
 
     The whole batch is ONE declarative plan (no driver round-trips beyond a
-    ≤``buckets``-int touched-bucket collect). Per batch only the TOUCHED
-    part of the state is read and rewritten: candidate/boundary rows are
-    hash-sharded by group into ``buckets`` partitions (the engine's
-    ``_bucket`` discipline), the changelog's bucket ids restrict every state
-    read to those shards, and untouched shards' files carry forward in the
-    manifest as-is — per-batch cost is O(Δ ⋈ touched-bucket candidates),
-    not O(all candidates), and candidates are themselves a (k+slack)/members
-    reduction of the view. ``bucket_target_rows`` grows the shard count
-    (powers of two, full rewrite) as the view grows, keeping per-shard rows
-    — hence per-batch touched IO — flat under group-count growth.
-    Emission ranks candidates per group — O(candidates), never O(view).
+    ≤``BUCKETS``-int touched-bucket collect and one gate probe). Per batch
+    only the TOUCHED part of the state is read and rewritten:
+    candidate/boundary rows are hash-sharded by group into a fixed
+    ``BUCKETS`` = 8 partitions (the engine's ``_bucket`` discipline, same
+    ``_bucket_expr``; the count never grows), the changelog's bucket ids
+    restrict every state read to those shards, and untouched shards' files
+    carry forward in the manifest as-is — per-batch cost is O(Δ ⋈
+    touched-bucket candidates), not O(all candidates), and candidates are
+    themselves a (k+slack)/members reduction of the view. Emission ranks
+    candidates per group — O(candidates), never O(view).
 
     DURABILITY (``state_dir``): candidate/boundary shards are versioned
     parquet directories published by an atomic manifest (os.replace), the
@@ -701,6 +728,8 @@ class GroupedTopKView:
     live view, so it can always be rebuilt from it with ``prime()``.
     """
 
+    BUCKETS = 8  # hash shards of the candidate and boundary state
+
     def __init__(
         self,
         k: int,
@@ -711,40 +740,21 @@ class GroupedTopKView:
         state_dir: str,
         spark,
         slack: int | None = None,
-        buckets: int = 8,
-        bucket_target_rows: int = 0,
         resume: bool = False,
         emit: bool = False,
     ):
-        if k < 1:
-            raise ValueError("k must be >= 1")
+        # refill: Callable[[DataFrame | None], DataFrame] — the full view,
+        # optionally restricted to the given group-key rows
+        # (IncrementalAcyclicQuery.result's touched semantics)
+        super().__init__(k, order_col, key_cols, refill, state_dir, spark, slack)
         if not group_cols or not key_cols:
             raise ValueError("group_cols and key_cols must be non-empty")
         if set(group_cols) & set(key_cols):
             raise ValueError("group_cols and key_cols must be disjoint")
-        if buckets < 1:
-            raise ValueError("buckets must be >= 1")
-        self.k = k
-        # multi-key ORDER BY (round 8), same forms as TopKView
-        self.order_cols = _norm_order(order_col)
         self.group_cols = tuple(group_cols)
-        self.key_cols = tuple(key_cols)
-        self.slack = k if slack is None else slack
-        # refill: Callable[[DataFrame | None], DataFrame] — the full view,
-        # optionally restricted to the given group-key rows
-        # (IncrementalAcyclicQuery.result's touched semantics)
-        self._refill_fn = refill
-        self.state_dir = state_dir
-        self.buckets = buckets
-        self.bucket_target_rows = bucket_target_rows
-        self._spark = spark
-        self._schema = None  # StructType of candidate rows, pinned at first use
         self._bschema = None  # StructType of boundary rows
-        self._version = 0
-        self._last_batch: int | None = None
         self._cand_map: dict[str, str] = {}  # bucket id -> live leaf dir
         self._bound_map: dict[str, str] = {}
-        self._bucket_rows: dict[str, int] = {}  # maintained iff adaptive
         # emit=True: apply() additionally returns the PER-GROUP TOP-K view's
         # own netted ±changelog (entries/exits across touched groups) — the
         # same composition hook TopKView provides, Spark-side: two ranks
@@ -752,20 +762,14 @@ class GroupedTopKView:
         # replay redelivers the same rows (sink contract).
         self.emit = emit
         # {"batch": id, "path": parquet dir} of the last emitted top-k
-        # delta — an explicit manifest-held path (survives growth rewrites,
-        # which bump versions without emitting)
+        # delta — an explicit manifest-held path
         self._emitted: dict | None = None
         # observability: tools assert the touched-restriction cost model
         self.instrument = False
         self.last_touched_buckets = 0
         self.last_read_rows = 0
         self.last_plan = ""  # physical plan of the last batch's candidate rebuild
-        if resume and os.path.exists(self._manifest_path()):
-            self._load_manifest()
-        else:
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.makedirs(state_dir)
+        if not self._attach(resume):
             # initial empty commit (see TopKView.__init__): a restart
             # during batch 0 must resume to "complete over the empty
             # view" and rebuild from the replayed changelog — not
@@ -774,20 +778,10 @@ class GroupedTopKView:
             self._write_manifest()
 
     # --- internals -----------------------------------------------------------
-    def _order(self):
-        return [
-            F.col(c).desc() if d else F.col(c).asc() for c, d in self.order_cols
-        ] + [F.col(c).asc() for c in self.key_cols]
-
-    def _non_null_order(self, df: DataFrame) -> DataFrame:
-        for c, _ in self.order_cols:
-            df = df.filter(F.col(c).isNotNull())
-        return df
-
     def _rank(self, df: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window
 
-        w = Window.partitionBy(*self.group_cols).orderBy(*self._order())
+        w = Window.partitionBy(*self.group_cols).orderBy(*self._sort_cols())
         return df.withColumn("_rn", F.row_number().over(w))
 
     def _bound_of(self, ranked: DataFrame) -> DataFrame:
@@ -801,37 +795,7 @@ class GroupedTopKView:
             *[F.col(c).alias(f"_bk{i}") for i, c in enumerate(self.key_cols)],
         )
 
-    def _beats_bound(self):
-        """Row AT-OR-BEFORE the boundary under the TOTAL order (boundary
-        absent — _bv0 NULL after the left join — admits unconditionally).
-        Lexicographic over every (order column, direction), then the
-        ascending key tiebreak. The trailing full-tie term is the boundary
-        row itself: admitting it back after its own −pre/+post pop keeps
-        the candidate set from shrinking on touched-but-unchanged boundary
-        rows (the strictly-better form forced refills earlier than the
-        ≥slack-deletions amortization); the k+2·slack capacity bound is
-        unaffected because the pop freed the slot in the same batch."""
-        cond = F.lit(False)
-        eq = F.lit(True)
-        for i, (c, desc) in enumerate(self.order_cols):
-            v, b = F.col(c), F.col(f"_bv{i}")
-            cond = cond | (eq & ((v > b) if desc else (v < b)))
-            eq = eq & v.eqNullSafe(b)
-        for i, c in enumerate(self.key_cols):
-            cond = cond | (eq & (F.col(c) < F.col(f"_bk{i}")))
-            eq = eq & F.col(c).eqNullSafe(F.col(f"_bk{i}"))
-        return F.col("_bv0").isNull() | cond | eq
-
     # --- sharded state I/O ---------------------------------------------------
-    def _bexpr(self):
-        """Shard id of a group — the engine's width-stable string-cast hash
-        (streaming/acyclic.py `_bucket_expr`), so equal group values land in
-        equal shards whatever numeric type the changelog pins."""
-        return F.pmod(
-            F.hash(*[F.col(c).cast("string") for c in self.group_cols]),
-            F.lit(self.buckets),
-        )
-
     def _pin_schemas(self, template: DataFrame) -> None:
         if self._schema is not None:
             return
@@ -868,9 +832,6 @@ class GroupedTopKView:
         return self._read(self._bound_map, self._bschema, buckets)
 
     # --- manifest (atomic commit point) --------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.state_dir, "MANIFEST.json")
-
     def _write_manifest(self, adopt=None, gc=None, **staged) -> None:
         """``staged`` overrides let ``_commit`` publish values it has NOT yet
         swapped into ``self`` — in-memory fields must only move to the new
@@ -880,10 +841,8 @@ class GroupedTopKView:
         data = {
             "version": self._version,
             "last_batch": self._last_batch,
-            "buckets": self.buckets,
             "cand": self._cand_map,
             "bound": self._bound_map,
-            "rows": self._bucket_rows,
             "emitted": self._emitted,
             "schema": json.loads(self._schema.json()) if self._schema else None,
             "bschema": json.loads(self._bschema.json()) if self._bschema else None,
@@ -898,10 +857,8 @@ class GroupedTopKView:
             data = json.load(fh)
         self._version = data["version"]
         self._last_batch = data["last_batch"]
-        self.buckets = data["buckets"]
         self._cand_map = data["cand"]
         self._bound_map = data["bound"]
-        self._bucket_rows = data.get("rows", {})
         self._emitted = data.get("emitted")
         if data["schema"] is not None:
             self._schema = StructType.fromJson(data["schema"])
@@ -960,15 +917,14 @@ class GroupedTopKView:
         cand = cand.select(*fields)
         # version bumps BEFORE any write: if this commit fails mid-way, a
         # same-instance retry writes v+1 and can never overwrite a dir the
-        # (still-committed) live maps reference. All map/row-count/emitted/
-        # last_batch updates are STAGED into local copies and swapped into
-        # self only after the manifest os.replace succeeds — until then every
-        # read plan keeps resolving against the last committed state.
+        # (still-committed) live maps reference. All map/emitted/last_batch
+        # updates are STAGED into local copies and swapped into self only
+        # after the manifest os.replace succeeds — until then every read
+        # plan keeps resolving against the last committed state.
         v = self._version = self._version + 1
         n = max(len(touched), 1)
         cand_map = dict(self._cand_map)
         bound_map = dict(self._bound_map)
-        bucket_rows = dict(self._bucket_rows)
         # the candidate write, the boundary write, AND the emitted-changelog
         # write are mutually independent actions into distinct paths — the
         # emit delta ranks the in-memory candidate frame (see below) against
@@ -981,7 +937,7 @@ class GroupedTopKView:
         def _write_shards(df: DataFrame, name: str) -> str:
             path = os.path.join(self.state_dir, name)
             (
-                df.withColumn(BUCKET, self._bexpr())
+                df.withColumn(BUCKET, _bucket_expr(self.group_cols, self.BUCKETS))
                 .repartition(n, F.col(BUCKET))
                 .sortWithinPartitions(*self.group_cols)
                 .write.mode("overwrite")
@@ -1018,7 +974,6 @@ class GroupedTopKView:
         if pre_topk is not None:
             thunks.append(_write_emit)
         paths = _run_parallel(thunks)[:2]
-        written = []
         for path, (_, _, mp) in zip(paths, targets):
             present = {
                 d.split("=", 1)[1]
@@ -1031,28 +986,6 @@ class GroupedTopKView:
                     mp[sb] = os.path.join(path, f"{BUCKET}={sb}")
                 else:
                     mp.pop(sb, None)
-            written.append((path, present))
-        if self.bucket_target_rows > 0:
-            # per-shard row tracking feeds adaptive growth: ONE read of the
-            # freshly written touched shards (partition column rides along)
-            cpath, present = written[0]
-            got = (
-                {
-                    str(r[BUCKET]): r["_n"]
-                    for r in self._spark.read.parquet(cpath)
-                    .groupBy(BUCKET)
-                    .agg(F.count("*").alias("_n"))
-                    .collect()
-                }
-                if present
-                else {}
-            )
-            for b in touched:
-                sb = str(b)
-                if sb in got:
-                    bucket_rows[sb] = got[sb]
-                else:
-                    bucket_rows.pop(sb, None)
         last_batch = batch_id if batch_id is not None else self._last_batch
         emitted = self._emitted
         if pre_topk is not None:
@@ -1061,7 +994,6 @@ class GroupedTopKView:
             # committed: NOW swap the staged state in (_publish_manifest
             # runs this only after the os.replace succeeded)
             self._cand_map, self._bound_map = cand_map, bound_map
-            self._bucket_rows = bucket_rows
             self._last_batch, self._emitted = last_batch, emitted
 
         self._write_manifest(
@@ -1070,7 +1002,6 @@ class GroupedTopKView:
             last_batch=last_batch,
             cand=cand_map,
             bound=bound_map,
-            rows=bucket_rows,
             emitted=emitted,
         )
         if pre_topk is None:
@@ -1081,47 +1012,62 @@ class GroupedTopKView:
         # handoff.
         return self.emitted_df()
 
-    def _maybe_grow(self) -> None:
-        """Adaptive shard growth (``bucket_target_rows`` only):
-        when mean rows/shard exceeds the target, double the shard count and
-        rewrite ALL shards — rare and amortized, exactly the engine's
-        ``bucket_target_rows`` compaction discipline. Keeps the touched-
-        shard read O(target) as groups grow 1000×."""
-        if self.bucket_target_rows <= 0:
-            return
-        total = sum(self._bucket_rows.values())
-        want = self.buckets
-        while total / want > self.bucket_target_rows:
-            want *= 2
-        if want == self.buckets:
-            return
-        cand, bound = self._read_cand(), self._read_bound()  # old layout paths
-        old = self.buckets
-        self.buckets = want
-        try:
-            self._commit(cand, bound, list(range(want)), None)
-        except BaseException:
-            # a failed growth commit must not leave _bexpr computing
-            # new-layout shard ids against the still-committed old maps
-            self.buckets = old
-            raise
-
     def prime(self) -> None:
         """(Re)build candidates from the full view — initial attach to an
         existing view. A restart resumes via ``resume=True`` instead (no
         view scan)."""
         view = self._refill_fn(None)
         self._pin_schemas(view)
-        view = self._non_null_order(view)
-        ranked = self._rank(view)
+        ranked = self._rank(self._non_null(view))
         self._commit(
             ranked.filter(F.col("_rn") <= self.k + self.slack).drop("_rn"),
             self._bound_of(ranked),
-            list(range(self.buckets)),
+            list(range(self.BUCKETS)),
             None,
         )
 
     # --- maintenance ---------------------------------------------------------
+    def _gates(self, bound0: DataFrame, counts: DataFrame) -> set[str]:
+        """Which maintenance branches this batch needs: ``"d"`` when some
+        trimmed group drained below k candidates, ``"o"`` when some group
+        holds more than k+2·slack.
+
+        ONE bounded probe job per batch (optimization round r11): at steady
+        state most batches drain and overflow NOTHING, yet the refill
+        branch used to read the whole ENGINE aggregate state every batch
+        (the drained-restricted semi-join restricts rows, not the scan) and
+        the trim branch bloated every write plan with a second rank. An
+        existence flag per gate set (both derive from the already-
+        checkpointed candidate set of the TOUCHED shards — a small bounded
+        read) lets an empty gate skip its branch outright: the anti-join
+        against an empty set and the union with an empty refill are exact
+        identities, so the skipped plan computes the same state. Both flags
+        come from ONE aggregate job over the per-group counts (a
+        union-of-limit(1) probe ran executeTake's incremental job cascade —
+        ~7 scheduled jobs where this needs one): per group there is at most
+        one boundary row and one counts row, so after a full outer join
+        "drained" is a bounded group missing a count >= k and "over" is any
+        count past k+2*slack — the same sets the gate branches consume."""
+        gate = (
+            bound0.select(*self.group_cols)
+            .withColumn("_hb", F.lit(1))
+            .join(counts, on=list(self.group_cols), how="full_outer")
+            .agg(
+                F.max(
+                    F.when(
+                        F.col("_hb").isNotNull()
+                        & (F.col("_n").isNull() | (F.col("_n") < self.k)),
+                        1,
+                    )
+                ).alias("_d"),
+                F.max(
+                    F.when(F.col("_n") > self.k + 2 * self.slack, 1)
+                ).alias("_o"),
+            )
+            .first()
+        )
+        return {flag for flag, v in (("d", gate["_d"]), ("o", gate["_o"])) if v}
+
     def apply(self, changelog: DataFrame | None, batch_id: int | None = None) -> None:
         """Fold one batch's emit_delta changelog into the sharded candidate
         state. Only the shards the changelog's groups hash into are read and
@@ -1134,11 +1080,7 @@ class GroupedTopKView:
         returns the SAME rows (the exactly-once sink contract)."""
         if changelog is None:
             return None
-        if (
-            batch_id is not None
-            and self._last_batch is not None
-            and batch_id <= self._last_batch
-        ):
+        if self._replayed(batch_id):
             if (
                 self.emit
                 and self._emitted is not None
@@ -1148,11 +1090,9 @@ class GroupedTopKView:
             return None
         self._pin_schemas(changelog.drop(WEIGHT))
         gk = [*self.group_cols, *self.key_cols]
-        # the batch's shard footprint: ≤ ``buckets`` ints to the driver
-        tb = sorted(
-            r["_b"]
-            for r in changelog.select(self._bexpr().alias("_b")).distinct().collect()
-        )
+        # the batch's shard footprint: ≤ ``BUCKETS`` ints to the driver
+        shard = _bucket_expr(self.group_cols, self.BUCKETS).alias("_b")
+        tb = sorted(r["_b"] for r in changelog.select(shard).distinct().collect())
         self.last_touched_buckets = len(tb)
         # reset BEFORE the no-touched-buckets early return: a no-touch batch
         # must report 0 candidate rows read, not the previous batch's count
@@ -1173,13 +1113,19 @@ class GroupedTopKView:
             # metadata-only counts of the shards this batch will read
             self.last_read_rows = cand0.count()
         neg = changelog.filter(F.col(WEIGHT) < 0).select(*gk)
-        pos = self._non_null_order(
-            changelog.filter(F.col(WEIGHT) > 0)
-        ).drop(WEIGHT)
+        pos = self._non_null(changelog.filter(F.col(WEIGHT) > 0)).drop(WEIGHT)
         cand = cand0.join(neg, on=gk, how="left_anti")
+        # boundary absent (_bv0 NULL after the left join) admits
+        # unconditionally: the group's candidates are complete
         admitted = (
             pos.join(bound0, on=list(self.group_cols), how="left")
-            .filter(self._beats_bound())
+            .filter(
+                F.col("_bv0").isNull()
+                | self._at_or_before(
+                    [F.col(f"_bv{i}") for i in range(len(self.order_cols))],
+                    [F.col(f"_bk{i}") for i in range(len(self.key_cols))],
+                )
+            )
             .select(*cand0.columns)
         )
         # UPSERT, not multiset union: under the engine's crash-replay
@@ -1212,43 +1158,9 @@ class GroupedTopKView:
         over = counts.filter(F.col("_n") > self.k + 2 * self.slack).select(
             *self.group_cols
         )
-        # ONE bounded probe job per batch (optimization round r11): at steady
-        # state most batches drain and overflow NOTHING, yet the refill
-        # branch used to read the whole ENGINE aggregate state every batch
-        # (the drained-restricted semi-join restricts rows, not the scan) and
-        # the trim branch bloated every write plan with a second rank. An
-        # existence flag per gate set (both derive from the already-
-        # checkpointed candidate set of the TOUCHED shards — a small bounded
-        # read) lets an empty gate skip its branch outright: the anti-join
-        # against an empty set and the union with an empty refill are exact
-        # identities, so the skipped plan computes the same state. Both flags
-        # come from ONE aggregate job over the per-group counts (a
-        # union-of-limit(1) probe ran executeTake's incremental job cascade —
-        # ~7 scheduled jobs where this needs one): per group there is at most
-        # one boundary row and one counts row, so after a full outer join
-        # "drained" is a bounded group missing a count >= k and "over" is any
-        # count past k+2*slack — the same sets the gate branches consume.
-        gate = (
-            bound0.select(*self.group_cols)
-            .withColumn("_hb", F.lit(1))
-            .join(counts, on=list(self.group_cols), how="full_outer")
-            .agg(
-                F.max(
-                    F.when(
-                        F.col("_hb").isNotNull()
-                        & (F.col("_n").isNull() | (F.col("_n") < self.k)),
-                        1,
-                    )
-                ).alias("_d"),
-                F.max(
-                    F.when(F.col("_n") > self.k + 2 * self.slack, 1)
-                ).alias("_o"),
-            )
-            .first()
-        )
-        hit = {flag for flag, v in (("d", gate["_d"]), ("o", gate["_o"])) if v}
+        hit = self._gates(bound0, counts)
         if "d" in hit:
-            fresh = self._non_null_order(self._refill_fn(drained))
+            fresh = self._non_null(self._refill_fn(drained))
             # the refill reads ENGINE state (drained-restricted semi-joins)
             # and feeds both the candidate and the boundary writes —
             # checkpoint it lazily so the state read runs once per batch,
@@ -1298,9 +1210,7 @@ class GroupedTopKView:
             # runs the branch once; steady-state no-hit batches keep the
             # already-checkpointed candidate frame and pay nothing (r12).
             cand = cand.localCheckpoint()
-        delta = self._commit(cand, bound, tb, batch_id, pre_topk=pre_topk)
-        self._maybe_grow()
-        return delta
+        return self._commit(cand, bound, tb, batch_id, pre_topk=pre_topk)
 
     # --- emission ------------------------------------------------------------
     def emitted_df(self) -> DataFrame | None:
@@ -1311,10 +1221,9 @@ class GroupedTopKView:
         ``_net_delta`` writes), which spares parquet schema inference."""
         if not self.emit or self._emitted is None:
             return None
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        schema = StructType([*self._schema.fields, StructField(WEIGHT, IntegerType())])
-        return self._spark.read.schema(schema).parquet(self._emitted["path"])
+        return self._spark.read.schema(self._emitted_schema()).parquet(
+            self._emitted["path"]
+        )
 
     def result(self) -> DataFrame:
         """Exact per-group top-k: rank candidates only — never the view."""

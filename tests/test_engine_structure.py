@@ -2,9 +2,10 @@
 
 The continuous engine's batch pipeline is a sequence of stage methods
 (``IncrementalAcyclicQuery._process_batch_inner``); this keeps any one
-function of ``streaming/acyclic.py`` from growing back into a monolith,
-keeps ``streaming/`` free of environment-variable knobs, and keeps every
-optional spec field in use by some caller."""
+function of ``streaming/acyclic.py`` or ``streaming/topk.py`` from growing
+back into a monolith, keeps ``streaming/`` free of environment-variable
+knobs, and keeps every optional spec field and defaulted constructor
+parameter of the engine and the top-k views in use by some caller."""
 
 from __future__ import annotations
 
@@ -19,6 +20,12 @@ STREAMING = (
 REPO = STREAMING.parent.parent
 MAX_FUNCTION_CODE_LINES = 100
 SPEC_CLASSES = ("RelSpec", "TopKSpec", "AcyclicQuerySpec")
+# class -> module of the engine classes whose constructor options are guarded
+ENGINE_CLASSES = {
+    "IncrementalAcyclicQuery": "acyclic.py",
+    "TopKView": "topk.py",
+    "GroupedTopKView": "topk.py",
+}
 
 
 def _code_lines(src: str) -> tuple[ast.Module, set[int]]:
@@ -79,11 +86,19 @@ def f(x):
     assert _function_sizes(src) == {"f:4": 4}
 
 
-def test_no_acyclic_function_exceeds_code_line_limit():
-    sizes = _function_sizes((STREAMING / "acyclic.py").read_text())
-    assert "_process_batch_inner" in {k.split(":")[0] for k in sizes}
+def _assert_no_function_over_limit(module: str, anchor: str) -> None:
+    sizes = _function_sizes((STREAMING / module).read_text())
+    assert anchor in {k.split(":")[0] for k in sizes}
     over = {k: n for k, n in sizes.items() if n > MAX_FUNCTION_CODE_LINES}
-    assert not over, f"functions over {MAX_FUNCTION_CODE_LINES} code lines: {over}"
+    assert not over, f"{module} functions over {MAX_FUNCTION_CODE_LINES} code lines: {over}"
+
+
+def test_no_acyclic_function_exceeds_code_line_limit():
+    _assert_no_function_over_limit("acyclic.py", "_process_batch_inner")
+
+
+def test_no_topk_function_exceeds_code_line_limit():
+    _assert_no_function_over_limit("topk.py", "_commit")
 
 
 def test_streaming_reads_no_environment_variables():
@@ -135,18 +150,22 @@ def _fields_set(paths, fields: dict[str, list[tuple[str, bool]]]) -> dict[str, s
     return seen
 
 
-def test_every_optional_spec_field_has_a_caller():
-    """A spec field with a default is an option; one that no caller sets is
-    a constant wearing an option's cost. Callers are the package,
-    ``bench.py`` and ``ivmbench/`` — tests and tools do not count."""
-    fields = _spec_fields((STREAMING / "acyclic.py").read_text())
-    assert set(fields) == set(SPEC_CLASSES)
-    callers = [
+def _callers() -> list[Path]:
+    """The code whose calls make an option real: the package, ``bench.py``
+    and ``ivmbench/`` — tests and tools do not count."""
+    return [
         *sorted((REPO / "flink_and_acyclic_schema_spark").rglob("*.py")),
         REPO / "bench.py",
         *sorted((REPO / "ivmbench").rglob("*.py")),
     ]
-    seen = _fields_set(callers, fields)
+
+
+def test_every_optional_spec_field_has_a_caller():
+    """A spec field with a default is an option; one that no caller sets is
+    a constant wearing an option's cost."""
+    fields = _spec_fields((STREAMING / "acyclic.py").read_text())
+    assert set(fields) == set(SPEC_CLASSES)
+    seen = _fields_set(_callers(), fields)
     unset = [
         f"{cls}.{name}"
         for cls, fs in fields.items()
@@ -154,3 +173,39 @@ def test_every_optional_spec_field_has_a_caller():
         if has_default and name not in seen[cls]
     ]
     assert not unset, f"optional spec fields no caller sets: {unset}"
+
+
+def _init_params(src: str, classes) -> dict[str, list[tuple[str, bool]]]:
+    """Class -> [(``__init__`` parameter, has a default)] in declaration
+    order, ``self`` excluded."""
+    out = {}
+    for node in ast.parse(src).body:
+        if not (isinstance(node, ast.ClassDef) and node.name in classes):
+            continue
+        for st in node.body:
+            if isinstance(st, ast.FunctionDef) and st.name == "__init__":
+                args = [a.arg for a in st.args.args[1:]]
+                n_defaults = len(st.args.defaults)
+                out[node.name] = [
+                    (a, i >= len(args) - n_defaults) for i, a in enumerate(args)
+                ]
+    return out
+
+
+def test_every_defaulted_constructor_parameter_has_a_caller():
+    """The same rule for the engine's and the top-k views' constructors: a
+    defaulted parameter no caller sets is an option nobody chose. ``resume``
+    is exempt: it is the crash-recovery entry point — a restarted stream
+    passes it, so in this repo only the crash/resume tests drive it."""
+    params: dict[str, list[tuple[str, bool]]] = {}
+    for module in sorted(set(ENGINE_CLASSES.values())):
+        params.update(_init_params((STREAMING / module).read_text(), ENGINE_CLASSES))
+    assert set(params) == set(ENGINE_CLASSES)
+    seen = _fields_set(_callers(), params)
+    unset = [
+        f"{cls}.{name}"
+        for cls, ps in params.items()
+        for name, has_default in ps
+        if has_default and name != "resume" and name not in seen[cls]
+    ]
+    assert not unset, f"defaulted constructor parameters no caller sets: {unset}"

@@ -16,7 +16,7 @@ degenerate value ties and on the boundary-less first batch, at-or-equal
 boundary readmission, manifest-committed state for BOTH views (resume
 without re-prime, replay no-ops, the torn-manifest crash window,
 resume-after-every-batch hypothesis properties), touched-shard-restricted
-grouped rebuilds with adaptive shard growth, the spec-level
+grouped rebuilds over fixed hash shards, the spec-level
 ``AcyclicQuerySpec.top_k`` knob (including the crash window between the
 engine's and the top-k's commits), the exactly-once ordered-emission sink
 through a REAL Structured Streaming kill/restart, and the grouped view's
@@ -25,6 +25,7 @@ own emitted changelog.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from hypothesis import HealthCheck, given, settings
@@ -811,10 +812,32 @@ def test_topk_failed_commit_rolls_back_fold(spark, tmp_path, monkeypatch):
     assert re._buffer == topk._buffer and re._last_batch == 1
 
 
+def test_topk_unencodable_value_fails_commit_before_replace(spark, tmp_path):
+    """The manifest codec rejects a type it cannot encode (here a BINARY
+    column's bytes) with ``TypeError`` while the manifest is being
+    built — before the ``os.replace`` — so the fold rolls back and the
+    committed manifest is the previous one."""
+    topk = TopKView(
+        1, "v", ("kid",), refill=lambda: None, state_dir=str(tmp_path / "tk"),
+        spark=spark, prime=False,
+    )
+    ch = spark.createDataFrame(
+        [(1, 10, bytearray(b"x"), 1)], "kid int, v int, blob binary, weight int"
+    )
+    with pytest.raises(TypeError, match="no manifest encoding for bytes"):
+        topk.apply(ch, batch_id=0)
+    assert topk._buffer == {} and topk._last_batch is None
+    re = TopKView(
+        1, "v", ("kid",), refill=lambda: None, state_dir=str(tmp_path / "tk"),
+        spark=spark, prime=False, resume=True,
+    )
+    assert re._buffer == {} and re._last_batch is None and re.emitted_df() is None
+
+
 def test_topk_post_adoption_failure_keeps_fold(spark, tmp_path, monkeypatch):
     """The rollback's other edge: _persist can raise AFTER the manifest
-    os.replace adopted the commit (an OSError in the superseded-dir GC, a
-    KeyboardInterrupt). Restoring the pre-batch buffer there would leave
+    os.replace adopted the commit (e.g. a KeyboardInterrupt right after
+    the replace). Restoring the pre-batch buffer there would leave
     in-memory candidate state one batch BEHIND the manifest, and the next
     batch would fold against the stale buffer and emit wrong deltas — the
     rollback must fire only while _version is still the snapshotted one."""
@@ -835,16 +858,17 @@ def test_topk_post_adoption_failure_keeps_fold(spark, tmp_path, monkeypatch):
     d1 = eng.process_batch(
         {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
     ).localCheckpoint()
-    real_rmtree = topk_mod.shutil.rmtree
+    real_publish = topk_mod._publish_manifest
 
     def boom(*a, **kw):
-        raise OSError("gc failed post-adoption")
+        real_publish(*a, **kw)
+        raise OSError("failed post-adoption")
 
-    # rmtree runs only in _persist's GC closure — strictly after os.replace
-    monkeypatch.setattr(topk_mod.shutil, "rmtree", boom)
+    # the fault lands strictly after os.replace and adopt() both ran
+    monkeypatch.setattr(topk_mod, "_publish_manifest", boom)
     with pytest.raises(OSError, match="post-adoption"):
         topk.apply(d1, batch_id=1)
-    monkeypatch.setattr(topk_mod.shutil, "rmtree", real_rmtree)
+    monkeypatch.setattr(topk_mod, "_publish_manifest", real_publish)
     # the commit WAS adopted: the fold must stand, not roll back
     assert topk._last_batch == 1 and topk._emitted_batch == 1
     assert _got(topk) == _model_topk(ops0 + ops1)
@@ -867,96 +891,6 @@ def test_topk_post_adoption_failure_keeps_fold(spark, tmp_path, monkeypatch):
     )
     topk.apply(d2, batch_id=2)
     assert _got(topk) == _model_topk(ops0 + ops1 + ops2)
-
-
-def test_topk_write_rows_arrow_fallback_is_resumable(spark, tmp_path, monkeypatch):
-    """_write_rows' arrow-unmappable fallback (one Spark job via
-    createDataFrame().write) must produce the SAME resumable layout as the
-    driver-side arrow write: buffer, boundary, and emitted changelog all
-    round-trip through resume=True, and the exactly-once replay contract
-    holds. Driven by forcing to_arrow_schema to reject the schema."""
-    import pyspark.sql.pandas.types as pandas_types
-
-    def reject(schema):
-        raise ValueError("unmappable for arrow (forced)")
-
-    monkeypatch.setattr(pandas_types, "to_arrow_schema", reject)
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-    sdir = str(tmp_path / "tkstate")
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK,
-        prime=False, state_dir=sdir, spark=spark,
-    )
-    ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)
-    ops1 = [(0, 100, -1), (9, 95, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    out1 = topk.apply(d1, batch_id=1)
-    assert topk._boundary is not None  # the bnd leg of the layout exercised
-    assert _got(topk) == _model_topk(ops0 + ops1)
-    # resume reads the Spark-written layout back (pyarrow dataset discovery
-    # skips _SUCCESS), and replay returns the persisted changelog
-    re = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False,
-        state_dir=sdir, spark=spark, resume=True,
-    )
-    assert re._buffer == topk._buffer and re._boundary == topk._boundary
-    replay = re.apply(d1, batch_id=1)
-    assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in replay) == sorted(
-        (r["kid"], r["total"], r[WEIGHT]) for r in out1
-    )
-
-
-def test_topk_write_rows_fallback_failure_still_rolls_back(
-    spark, tmp_path, monkeypatch
-):
-    """If the arrow write is unmappable AND the Spark-job fallback itself
-    fails, the commit never reached the manifest replace — the standard
-    pre-adoption rollback must hold, and an in-process retry (with the
-    writer healthy again) emits the true delta."""
-    import pyspark.sql.pandas.types as pandas_types
-
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK,
-        prime=False, state_dir=str(tmp_path / "tkstate"), spark=spark,
-    )
-    ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)
-    buf0, bnd0 = dict(topk._buffer), topk._boundary
-
-    ops1 = [(0, 100, -1), (9, 95, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-
-    def reject(schema):
-        raise ValueError("unmappable for arrow (forced)")
-
-    def boom(*a, **kw):
-        raise RuntimeError("fallback write failed")
-
-    monkeypatch.setattr(pandas_types, "to_arrow_schema", reject)
-    monkeypatch.setattr(topk._spark, "createDataFrame", boom)
-    with pytest.raises(RuntimeError, match="fallback write failed"):
-        topk.apply(d1, batch_id=1)
-    monkeypatch.undo()
-    assert topk._buffer == buf0 and topk._boundary == bnd0
-    assert topk._last_batch == 0 and topk._emitted_batch == 0
-    out1 = topk.apply(d1, batch_id=1)  # retry with the writer healthy
-    assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in out1) == [
-        (0, 100, -1),
-        (9, 105, 1),
-    ]
-    assert _got(topk) == _model_topk(ops0 + ops1)
 
 
 def _gdurable(spark, tmp_path, eng, resume, **kw):
@@ -1019,8 +953,6 @@ def test_grouped_topk_crash_before_manifest_replace_recovers(spark, tmp_path):
     are fully written but the process dies BEFORE the os.replace of the
     manifest. Recovery must load the PRIOR committed state, garbage-collect
     the orphaned version dirs, and replay the batch to the exact result."""
-    import os
-
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
     topk = _gdurable(spark, tmp_path, eng, resume=False)
     ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
@@ -1110,7 +1042,7 @@ def test_grouped_topk_reads_only_touched_shards(spark, tmp_path):
     candidate rows, not the full candidate table — the O(Δ ⋈ touched)
     cost model at 100 TB."""
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, resume=False, buckets=8)
+    topk = _gdurable(spark, tmp_path, eng, resume=False)
     topk.instrument = True
     # 64 groups x 4 members spread over 8 shards
     ops0 = [(g, i, 10 * (4 - i) + g, 1) for g in range(64) for i in range(4)]
@@ -1160,33 +1092,6 @@ def test_grouped_topk_batch_plan_has_no_cartesian_or_bnlj(spark, tmp_path):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_grouped_topk_adaptive_shard_growth(spark, tmp_path):
-    """bucket_target_rows grows the shard count (powers of two, full
-    rewrite) when mean rows/shard exceeds the target — per-shard reads stay
-    flat as groups multiply — and the result stays exact through a growth
-    event and a subsequent resume."""
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(
-        spark, tmp_path, eng, resume=False, buckets=2, bucket_target_rows=20
-    )
-    ops0 = [(g, i, 10 * (4 - i) + g, 1) for g in range(40) for i in range(4)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)  # ~120 candidates / 2 shards >> 20/shard
-    assert topk.buckets > 2  # grew
-    assert _ggot(topk) == _gmodel(ops0)
-    # resumed instance sees the grown layout from the manifest
-    re = _gdurable(spark, tmp_path, eng, resume=True, bucket_target_rows=20)
-    assert re.buckets == topk.buckets
-    ops1 = [(3, 0, 43, -1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
-    )
-    re.apply(d1, batch_id=1)
-    assert _ggot(re) == _gmodel(ops0 + ops1)
-
-
 # --- spec-level top_k knob (AcyclicQuerySpec.top_k -> engine-wired views) ----
 import pytest
 
@@ -1222,6 +1127,8 @@ def test_spec_level_topk_knob_global_with_resume(spark, tmp_path):
     d1 = spark.createDataFrame(ops1, ITEM_SCHEMA).localCheckpoint()
     eng.process_batch({"items": d1}, batch_id=1)
     assert _knob_got(eng) == _model_topk(ops0 + ops1)
+    # the O(k) buffer, boundary and emitted changelog live in the manifest
+    assert os.listdir(os.path.join(sdir, "topk")) == ["MANIFEST.json"]
 
     # process restart: resume reattaches engine AND top-k from manifests
     re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
@@ -1234,6 +1141,53 @@ def test_spec_level_topk_knob_global_with_resume(spark, tmp_path):
         {"items": spark.createDataFrame(ops2, ITEM_SCHEMA)}, batch_id=2
     )
     assert _knob_got(re) == _model_topk(ops0 + ops1 + ops2)
+
+
+def test_spec_level_topk_timestamp_order_survives_resume(spark, tmp_path):
+    """A global top_k ordered by a TIMESTAMP measure keeps its values naive
+    across a resume: the manifest round-trips every buffered datetime with
+    its exact type, so the resumed buffer ranks against the next batch's
+    collected (naive) rows. A buffer that came back offset-aware failed that
+    batch with ``TypeError: can't compare offset-naive and offset-aware
+    datetimes``."""
+    from datetime import datetime
+
+    spec = AcyclicQuerySpec(
+        relations=(RelSpec("items"),),
+        group_by=("kid",),
+        hist_measures={"last_ts": ("max", lambda: F.col("ts"))},
+        top_k=TopKSpec(k=2, order_by="last_ts"),
+    )
+    schema = "kid int, ts timestamp, weight int"
+
+    def at(hour):
+        return datetime(2024, 1, 1, hour)
+
+    def model(ops):
+        net: dict[tuple, int] = {}
+        for kid, ts, w in ops:
+            net[(kid, ts)] = net.get((kid, ts), 0) + w
+        last: dict[int, datetime] = {}
+        for (kid, ts), m in net.items():
+            if m > 0:
+                last[kid] = max(last.get(kid, ts), ts)
+        return sorted(sorted(last.items()), key=lambda kv: kv[1], reverse=True)[:2]
+
+    def got(eng):
+        rows = [(r["kid"], r["last_ts"]) for r in eng.topk_result().collect()]
+        assert all(ts.tzinfo is None for _, ts in rows)
+        return sorted(sorted(rows), key=lambda kv: kv[1], reverse=True)
+
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, spec)
+    ops0 = [(i, at(i), 1) for i in range(6)]
+    eng.process_batch({"items": spark.createDataFrame(ops0, schema)}, batch_id=0)
+    assert got(eng) == model(ops0)
+
+    re = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
+    ops1 = [(5, at(5), -1), (2, at(20), 1), (0, at(4), 1)]
+    re.process_batch({"items": spark.createDataFrame(ops1, schema)}, batch_id=1)
+    assert got(re) == model(ops0 + ops1)
 
 
 def test_spec_level_topk_knob_grouped_with_resume(spark, tmp_path):
@@ -1448,8 +1402,6 @@ def test_topk_sink_crash_replay_no_double_emission(spark, tmp_path):
     re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
     re.process_batch({"items": d1}, batch_id=1)
     write_changelog(re.topk_delta(), sink, 1)  # same path, same rows
-    import os
-
     assert sorted(os.listdir(sink)) == ["batch_0", "batch_1"]
     got = {
         (r["kid"], r["total"]) for r in compact_sink(spark, sink).collect()
@@ -1574,8 +1526,6 @@ def test_topk_knob_full_stack_stream_kill_and_recover(spark, tmp_path):
     write lands exactly once, and BOTH the maintained top-k and the sink's
     telescoped net equal the from-scratch model."""
     import glob
-    import os
-
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -2044,53 +1994,6 @@ def test_grouped_topk_chained_engine_crash_replay(spark, tmp_path):
     assert got(down2) == model(ops0 + ops1 + ops2)
 
 
-def test_grouped_topk_failed_growth_commit_restores_layout(spark, tmp_path):
-    """Adaptive shard growth is its own commit after the batch's: if THAT
-    commit fails, the in-memory bucket count must roll back to the
-    committed layout (otherwise _bexpr computes new-layout shard ids
-    against old-layout maps and reads resolve to nothing), and the next
-    batch retries the growth cleanly."""
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = GroupedTopKView(
-        GK, "total", ("g",), ("kid",), refill=lambda t: eng.result(t),
-        slack=GSLACK, state_dir=str(tmp_path / "gtk"), spark=spark,
-        buckets=1, bucket_target_rows=4,
-    )
-    ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(8) for i in range(4)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    orig = topk._write_manifest
-    calls = {"n": 0}
-
-    def flaky(**kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # the batch commits (#1); the GROWTH commit (#2) dies
-            raise RuntimeError("injected: growth commit failed")
-        return orig(**kw)
-
-    topk._write_manifest = flaky
-    with pytest.raises(RuntimeError, match="injected"):
-        topk.apply(d0, batch_id=0)
-    assert topk.buckets == 1  # rolled back to the committed layout
-    assert _ggot(topk) == _gmodel(ops0)  # reads resolve the committed shards
-    topk._write_manifest = orig
-    # the next batch re-attempts the growth and the stream stays exact
-    ops1 = [(0, 9, 99, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
-    )
-    topk.apply(d1, batch_id=1)
-    assert topk.buckets == 8  # 32 candidates / target 4
-    assert _ggot(topk) == _gmodel(ops0 + ops1)
-    re = GroupedTopKView(
-        GK, "total", ("g",), ("kid",), refill=lambda t: eng.result(t),
-        slack=GSLACK, state_dir=str(tmp_path / "gtk"), spark=spark,
-        buckets=1, bucket_target_rows=4, resume=True,
-    )
-    assert re.buckets == 8 and _ggot(re) == _gmodel(ops0 + ops1)
-
-
 @settings(max_examples=prop_examples(4), deadline=None, suppress_health_check=list(HealthCheck))
 @given(batched=_GSPLITS)
 def test_grouped_topk_multi_key_property_prefix_closure(
@@ -2100,7 +2003,7 @@ def test_grouped_topk_multi_key_property_prefix_closure(
     an arbitrary interleaving, the spec-level per-group ``ORDER BY total
     DESC, d ASC`` top-k equals the from-scratch model — heavy within-group
     total collisions make the second order key decide constantly, through
-    the lexicographic boundary join (_beats_bound), drains/refills, and
+    the lexicographic boundary join (_at_or_before), drains/refills, and
     trims."""
     spec = AcyclicQuerySpec(
         relations=(RelSpec("items"),),

@@ -327,12 +327,11 @@ def ties2() -> None:
 def grouped() -> None:
     """GroupedTopKView cost model, measured: candidates are a (k+slack)/members
     reduction of the view, a drained group's refill reads ONLY that group's
-    rows through the engine's restricted emission, and (round 7) the
-    per-batch rebuild READS only the manifest-committed shards the
-    changelog's groups hash into — with ``bucket_target_rows`` growing the
-    shard count as the view grows, per-batch read rows track the TOUCHED
-    groups, not the candidate table (run at n_groups and 10×n_groups with
-    the same Δ to see it flat). All row counts, host-load independent.
+    rows through the engine's restricted emission, and the per-batch
+    rebuild READS only the manifest-committed shards (``BUCKETS`` = 8,
+    fixed) the changelog's groups hash into — so per-batch read rows are
+    the touched shards' candidates, not the whole candidate table. All row
+    counts, host-load independent.
 
     Usage:  python tools/topk_churn_scaling.py grouped [n_groups] [members] [batches]
     """
@@ -367,8 +366,6 @@ def grouped() -> None:
         slack=slack,
         state_dir=f"{work}/topk",
         spark=spark,
-        buckets=8,
-        bucket_target_rows=500,  # shard count tracks candidate growth
     )
     topk.instrument = True
 
@@ -382,12 +379,12 @@ def grouped() -> None:
     topk.apply(eng.process_batch({"items": seed}, 0, emit_delta=True), batch_id=0)
     view_rows = n_groups * members
     cand_rows = int(topk._read_cand().count())
-    shards = topk.buckets
+    shards = topk.BUCKETS
 
     # per batch: fully drain k+slack+1 victim groups' TOP members (forces a
     # refill for exactly those groups) + bulk churn on 50 OTHER groups — a
-    # FIXED Δ footprint, so touched-shard reads should track it, not the
-    # candidate table (candidate growth is absorbed by shard growth)
+    # FIXED Δ footprint, so touched-shard reads track it, not the
+    # candidate table
     drain_per_batch = 5
     bulk_groups = 50
     bulk_rows_per_group = 40
@@ -440,7 +437,6 @@ def grouped() -> None:
         "candidate_rows": cand_rows,
         "candidate_fraction": round(cand_rows / view_rows, 4),
         "shards": shards,
-        "shard_target_rows": 500,
         "batches": batches,
         "drained_groups_per_batch": drain_per_batch,
         "bulk_churn_groups_per_batch": bulk_groups,
@@ -462,17 +458,13 @@ def grouped() -> None:
 
 
 def durable() -> None:
-    """Durable TopKView persist cost (round 8): the buffer is a ≤ k+2·slack
-    row driver-side dict, so its per-batch durable commit is ONE atomic
-    driver-side arrow file write per artifact — not the 2-3
-    ``createDataFrame().coalesce(1).write`` Spark jobs of the round-7
-    design. Two measurements:
-
-    - end-to-end: the main() churn workload with ``state_dir`` on, per-batch
-      wall split into engine fold vs top-k apply+persist;
-    - isolated: the SAME committed buffer persisted N times through the
-      driver-side arrow path vs the Spark-job path (the fallback code),
-      mean ms each — the apples-to-apples cost of what the rewrite removed.
+    """Durable TopKView persist cost: the buffer is a ≤ k+2·slack row
+    driver-side dict, so its per-batch durable commit is ONE atomic
+    manifest replace holding the buffer, boundary and emitted changelog —
+    no Spark job. Measured end to end: the main() churn workload with
+    ``state_dir`` on, per-batch wall split into engine fold vs top-k
+    apply+persist, then a resumed instance checked against a from-scratch
+    rank.
 
     Usage:  python tools/topk_churn_scaling.py durable [groups] [batches] [bulk]
     """
@@ -519,26 +511,6 @@ def durable() -> None:
             }
         )
 
-    # isolated persist micro-benchmark on the live committed buffer
-    import os as _os
-    import shutil as _shutil
-
-    n_iter = 20
-    scratch = tempfile.mkdtemp(prefix="topk_persist_bench_")
-    rows = list(topk._buffer.values())
-    t0 = time.perf_counter()
-    for i in range(n_iter):
-        topk._write_rows(_os.path.join(scratch, f"a{i}"), topk._schema, rows)
-    arrow_ms = (time.perf_counter() - t0) * 1000 / n_iter
-    data = [tuple(r[f.name] for f in topk._schema.fields) for r in rows]
-    t0 = time.perf_counter()
-    for i in range(n_iter):
-        spark.createDataFrame(data, topk._schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(_os.path.join(scratch, f"s{i}"))
-    spark_ms = (time.perf_counter() - t0) * 1000 / n_iter
-    _shutil.rmtree(scratch, ignore_errors=True)
-
     # exactness + durability: a resumed instance agrees with from-scratch
     want = [
         (r["kid"], r["total"])
@@ -562,14 +534,11 @@ def durable() -> None:
         "bulk_churn_per_batch": bulk,
         "k": K,
         "slack": SLACK,
-        "buffer_rows_persisted": len(rows),
+        "buffer_rows_persisted": len(topk._buffer),
         "mean_engine_sec_per_batch": mean("engine_sec"),
         "mean_topk_apply_and_persist_sec_per_batch": mean(
             "topk_apply_and_persist_sec"
         ),
-        "persist_micro_arrow_ms": round(arrow_ms, 2),
-        "persist_micro_spark_job_ms": round(spark_ms, 2),
-        "persist_speedup": round(spark_ms / max(arrow_ms, 1e-9), 1),
         "resume_exact": got == want,
         "per_batch": per_batch,
     }
