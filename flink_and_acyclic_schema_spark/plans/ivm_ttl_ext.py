@@ -124,10 +124,8 @@ def incremental_retention_join_stream(spark: SparkSession, sf_dir: str) -> DataF
                 bucket_key=("l_orderkey",),
                 # round 6: zone-cluster the bucketed+ttl state by 90-day
                 # shipdate zones ahead of the key sort, so post-compaction
-                # eviction band reads prune by rowgroup (SCALE.md round 6);
-                # grow past 16 buckets if state ever exceeds 64k rows/bucket
+                # eviction band reads prune by rowgroup (SCALE.md round 6)
                 ttl_zone="90 DAYS",
-                bucket_target_rows=64_000,
             ),
         ),
         group_by=("o_orderpriority",),

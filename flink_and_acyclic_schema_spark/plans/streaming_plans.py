@@ -656,28 +656,28 @@ register(
 )
 
 
-def incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generic grouped-aggregate IVM (IncrementalGroupAgg) over the lineitem
-    changelog: per l_returnflag, net row count and SUM(l_quantity) maintained
-    under inserts AND deletes across micro-batches — the reference's aggregate
-    operator generalized past Q10, with retraction done right."""
-    from ..functions.numeric import dec
+def _lineitem_changelog_ivm(
+    spark: SparkSession, sf_dir: str, tag: str, project: tuple, **spec_kw
+) -> DataFrame:
+    """A one-relation ``AcyclicQuerySpec`` (``spec_kw``) maintained over the
+    lineitem changelog: the text changelog streams in 3 micro-batches (file
+    source, foreachBatch, availableNow), each batch's lineitem rows feed the
+    engine under the stream's batch_id, and the maintained view is
+    returned. ``project`` names the group and measure input columns — the
+    only ones the relation state keeps, so it nets to one row per distinct
+    value combination."""
     from ..sources.changelog_source import generate_changelog_files, parse_changelog
-    from ..streaming.incremental import IncrementalGroupAgg
+    from ..streaming.acyclic import AcyclicQuerySpec, IncrementalAcyclicQuery, RelSpec
 
-    scratch = _scratch("ivm_agg", sf_dir)
+    scratch = _scratch(tag, sf_dir)
     changelog_dir = generate_changelog_files(
         spark, sf_dir, os.path.join(scratch, "changelog"), n_chunks=3
     )
-    ivm = IncrementalGroupAgg(
-        spark,
-        os.path.join(scratch, "state"),
-        group_cols=["l_returnflag"],
-        measures={"sum_qty": dec("l_quantity")},
-    )
+    spec = AcyclicQuerySpec(relations=(RelSpec("lineitem", project=project),), **spec_kw)
+    ivm = IncrementalAcyclicQuery(spark, os.path.join(scratch, "state"), spec)
 
     def on_batch(lines: DataFrame, batch_id: int) -> None:
-        ivm.process_batch(parse_changelog(lines)["lineitem"])
+        ivm.process_batch({"lineitem": parse_changelog(lines)["lineitem"]}, batch_id)
 
     q = (
         spark.readStream.option("maxFilesPerTrigger", 1)
@@ -688,10 +688,26 @@ def incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return ivm.result().select(
-        "l_returnflag",
-        F.col("sum_qty").cast("double").alias("sum_qty"),
-        F.col("support").alias("n_rows"),
+    return ivm.result()
+
+
+def incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-aggregate IVM over the lineitem changelog: per l_returnflag,
+    net row count and SUM(l_quantity) maintained under inserts AND deletes
+    across micro-batches — the reference's aggregate operator generalized
+    past Q10, with retraction done right. A one-relation spec on the generic
+    acyclic engine (``n_rows`` is the measure ``1``, so it sums the net
+    weights), with the engine's manifest, resume and replay skip."""
+    from ..functions.numeric import dec
+
+    return _lineitem_changelog_ivm(
+        spark,
+        sf_dir,
+        "ivm_agg",
+        ("l_returnflag", "l_quantity"),
+        group_by=("l_returnflag",),
+        measures={"sum_qty": lambda: dec("l_quantity"), "n_rows": lambda: F.lit(1)},
+        finalize=lambda df: df.withColumn("sum_qty", F.col("sum_qty").cast("double")),
     )
 
 
@@ -1263,39 +1279,20 @@ def incremental_count_distinct_stream(spark: SparkSession, sf_dir: str) -> DataF
     """Streaming COUNT(DISTINCT) with retraction across micro-batches: the
     two-level weight algebra of delta_count_distinct_incremental run as a
     REAL stream — the maintained state is the per-(group, value) net
-    multiplicity (IncrementalGroupAgg keyed by group + value, support-only),
-    updated O(batch) per micro-batch; the distinct count folds over alive
-    values at read time. Values whose net multiplicity hits zero (the
-    changelog's %7 deletes) retire from state and from the count — the
-    duplicate-insert/delete interplay the reference's set state broke on."""
-    from ..sources.changelog_source import generate_changelog_files, parse_changelog
-    from ..streaming.incremental import IncrementalGroupAgg
-
-    scratch = _scratch("ivm_cd", sf_dir)
-    changelog_dir = generate_changelog_files(
-        spark, sf_dir, os.path.join(scratch, "changelog"), n_chunks=3
-    )
-    ivm = IncrementalGroupAgg(
-        spark,
-        os.path.join(scratch, "state"),
-        group_cols=["l_returnflag", "l_orderkey"],
-        measures={},
-    )
-
-    def on_batch(lines: DataFrame, batch_id: int) -> None:
-        ivm.process_batch(parse_changelog(lines)["lineitem"])
-
-    q = (
-        spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(changelog_dir)
-        .writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    multiplicity (a one-relation spec on the acyclic engine grouped by
+    group + value, support-only), updated O(batch) per micro-batch; the
+    distinct count folds over alive values at read time. Values whose net
+    multiplicity hits zero (the changelog's %7 deletes) retire from state
+    and from the count — the duplicate-insert/delete interplay the
+    reference's set state broke on."""
     return (
-        ivm.result()
+        _lineitem_changelog_ivm(
+            spark,
+            sf_dir,
+            "ivm_cd",
+            ("l_returnflag", "l_orderkey"),
+            group_by=("l_returnflag", "l_orderkey"),
+        )
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).cast("long").alias("n_distinct_orders"))
     )

@@ -229,6 +229,9 @@ class RelSpec:
     state size. Declare ``bucket_key`` as the columns the relation is PROBED
     on by the high-churn neighbour (e.g. lineitem state bucketed by
     ``l_orderkey`` for orders deltas). ``_bucket`` is a reserved column name.
+    The bucket count is fixed for the life of a state dir, like a keyed
+    state store's key-group count: every segment shares one layout, and a
+    different count needs a fresh state dir (a re-bootstrap), not a resume.
 
     ``ttl=(ts_col, horizon)`` (watermark-driven retention): ``horizon`` maps
     the relation's watermark — a typed literal Column holding the running
@@ -273,14 +276,6 @@ class RelSpec:
     # bucketed+ttl relation keeps the pure key sort and band reads prune at
     # segment granularity only.
     ttl_zone: str | None = None
-    # adaptive re-bucketing: when > 0, compaction re-derives the bucket
-    # count so mean rows/bucket stays ≈ this target (growing only, powers
-    # of two over the spec's floor) and rewrites ``_bucket`` — state growing
-    # 1000× past a frozen bucket count would otherwise degrade probe-pruning
-    # selectivity linearly. The live count is manifest-persisted; ingest,
-    # probe pruning, and writes all use it, and re-bucketing only ever
-    # happens at a full compaction, so every live segment shares one layout.
-    bucket_target_rows: int = 0
 
     def __post_init__(self):
         if self.ttl is not None and len(self.ttl) not in (2, 3):
@@ -295,15 +290,6 @@ class RelSpec:
                     "sort refinement of event-time state)"
                 )
             _zone_width(self.ttl_zone)  # validate parseability at spec time
-        if self.bucket_target_rows < 0:
-            raise ValueError(
-                f"relation {self.name!r}: bucket_target_rows must be >= 0"
-            )
-        if self.bucket_target_rows > 0 and self.buckets == 0:
-            raise ValueError(
-                f"relation {self.name!r}: bucket_target_rows needs buckets > 0 "
-                "(it adapts an existing bucketed layout)"
-            )
         if self.ttl is not None and self.project is not None:
             if self.ttl[0] not in self.project:
                 raise ValueError(
@@ -555,7 +541,10 @@ class IncrementalAcyclicQuery:
         replayed micro-batches (batch_id ≤ last committed) are skipped — the
         idempotence a foreachBatch sink needs for exactly-once semantics
         after Structured Streaming checkpoint recovery, where the engine's
-        state commit is not transactional with Spark's offset commit.
+        state commit is not transactional with Spark's offset commit. The
+        spec must be the one the state was written with (relations,
+        filters, projections, bucket layout): the manifest records the
+        state, not the spec, so a changed spec is not detected.
         """
         self.spark = spark
         self.state_dir = state_dir
@@ -585,12 +574,6 @@ class IncrementalAcyclicQuery:
         # at segment granularity.
         self._seg_ts: dict[str, dict[str, tuple]] = {}
         self._by_name = {r.name: r for r in spec.relations}
-        # live bucket count per bucketed relation — starts at the spec value,
-        # grows at compaction under bucket_target_rows; manifest-persisted so
-        # ingest/probe/write always agree with the on-disk layout
-        self._buckets: dict[str, int] = {
-            r.name: r.buckets for r in spec.relations if r.buckets > 0
-        }
         # state (relation, "agg", "hist::<name>") -> post-commit row count
         # (exact after every full rewrite/compaction, an UPPER BOUND while
         # log-structured segments accumulate — appends add their row count,
@@ -716,27 +699,28 @@ class IncrementalAcyclicQuery:
         _publish_manifest(self._manifest_path(), data)
 
     def _load_manifest(self) -> None:
+        """Load the committed manifest: exactly the ``_snapshot`` fields, each
+        required. A manifest of another format — a field missing, or one this
+        engine does not write — raises ``KeyError``: the state it describes
+        need not match the spec (e.g. a bucket layout other than
+        ``RelSpec.buckets``), so delete the state dir and re-run."""
         import json
 
         with open(self._manifest_path()) as fh:
             data = json.load(fh)
+        extra = set(data) - set(self._snapshot())
+        if extra:
+            raise KeyError(f"manifest fields this engine does not read: {sorted(extra)}")
         self._version = data["version"]
         self._segments = data["segments"]
         self._appends = data["appends"]
         self._last_batch = data["last_batch"]
-        self._emitted = data.get("emitted")
-        self._buckets.update(data.get("buckets", {}))
-        # absent in pre-r11 manifests: pruning stays engaged until the next
-        # full rewrite re-establishes the count (the safe direction)
-        self._state_rows = {
-            k: int(v) for k, v in data.get("state_rows", {}).items()
-        }
-        self._watermarks = {
-            r: _load_value(v) for r, v in data.get("watermarks", {}).items()
-        }
+        self._emitted = data["emitted"]
+        self._state_rows = data["state_rows"]
+        self._watermarks = {r: _load_value(v) for r, v in data["watermarks"].items()}
         self._seg_ts = {
             rel: {p: (_load_value(v[0]), _load_value(v[1])) for p, v in m.items()}
-            for rel, m in data.get("seg_ts", {}).items()
+            for rel, m in data["seg_ts"].items()
         }
         # GC anything the committed manifest doesn't reference — partial
         # writes of a crashed batch, or superseded dirs whose cleanup the
@@ -811,9 +795,7 @@ class IncrementalAcyclicQuery:
         (hash of ``bucket_key``), so every state write can partition on it."""
         r = self._by_name.get(rel)
         if r is not None and r.buckets > 0 and BUCKET not in df.columns:
-            df = df.withColumn(
-                BUCKET, _bucket_expr(r.bucket_key, self._buckets[rel])
-            )
+            df = df.withColumn(BUCKET, _bucket_expr(r.bucket_key, r.buckets))
         if rel not in self._schemas:
             wide = df
             for c in (WEIGHT, "support"):
@@ -992,15 +974,13 @@ class IncrementalAcyclicQuery:
         enough that the full bucket scan is cheaper than the round-trips
         (dimension-sized relations: nation at any scale). The gate uses the
         observe()-tracked post-commit row count (``_state_rows``, an upper
-        bound under log-structured appends); an unknown count keeps pruning
-        ENGAGED — at 100 TB every state worth pruning is far past the
-        threshold, so the skip can only fire where it wins. Skipping is
-        exact: pruning is a superset restriction and the unpruned scan is
-        the trivial superset. The threshold is ``PRUNE_MIN_STATE_ROWS``."""
+        bound under log-structured appends), which every relation with live
+        segments has. Skipping is exact: pruning is a superset restriction
+        and the unpruned scan is the trivial superset. The threshold is
+        ``PRUNE_MIN_STATE_ROWS``."""
         if not self._segments.get(rel):
             return False  # no committed state: nothing a probe could prune
-        n = self._state_rows.get(rel)
-        return n is None or n > self.PRUNE_MIN_STATE_ROWS
+        return self._state_rows[rel] > self.PRUNE_MIN_STATE_ROWS
 
     def _probe_pruning(
         self,
@@ -1041,8 +1021,7 @@ class IncrementalAcyclicQuery:
             (F.col(c).cast(types[k]) if k in types else F.col(c)).alias(f"_k{i}")
             for i, (c, k) in enumerate(zip(probe_cols, r.bucket_key))
         ]
-        n_buckets = self._buckets[r.name]
-        sel = canon + [_bucket_expr(canon, n_buckets).alias("_b")]
+        sel = canon + [_bucket_expr(canon, r.buckets).alias("_b")]
         # wide-probe fast path (round 9, from the fold profile): the key-
         # distinct below is a FULL SHUFFLE of the probe side, and a probe
         # far above the cap paid it (plus a second full scan for the bucket
@@ -1083,14 +1062,14 @@ class IncrementalAcyclicQuery:
                 for i in range(len(probe_cols))
             )
             out = (ids, vals)
-        elif not wide and len({row["_b"] for row in rows}) >= n_buckets:
+        elif not wide and len({row["_b"] for row in rows}) >= r.buckets:
             # over-cap probe whose capped SAMPLE already covers every bucket
             # (optimization r11, guide §1.2): the full bucket-distinct scan
             # below could only return a subset of what the sample proved —
             # all of them — so skip that scan-job outright. Exact: the
             # sampled buckets are definitely probed, and "all buckets" is
             # the trivial superset of the true footprint.
-            out = (list(range(n_buckets)), None)
+            out = (list(range(r.buckets)), None)
         else:
             # wide probe set: still bucket-prune (distinct ids are bounded by
             # the bucket count however large the probe side is), skip key
@@ -1098,7 +1077,7 @@ class IncrementalAcyclicQuery:
             ids = [
                 row[0]
                 for row in probe_df.select(
-                    _bucket_expr(canon, n_buckets).alias("b")
+                    _bucket_expr(canon, r.buckets).alias("b")
                 )
                 .distinct()
                 .collect()
@@ -1183,16 +1162,16 @@ class IncrementalAcyclicQuery:
     def _join_chain(
         self,
         versions: Mapping[str, DataFrame],
-        rels: tuple[RelSpec, ...] | None = None,
-        delta_name: str | None = None,
+        rels: tuple[RelSpec, ...],
+        delta_name: str,
         bucket_memo: dict | None = None,
         apply_residual: bool = True,
         steps: list | None = None,
     ) -> DataFrame:
         """k-way join over one version assignment; output weight ``_w`` is the
         product of per-relation weights (joins multiply multiplicities).
-        ``rels`` narrows the chain to a virtual sub-tree (anti-gate
-        inclusion–exclusion); defaults to the full spec.
+        ``rels`` is the virtual tree joined — the full spec, or a sub-tree
+        under anti-gate inclusion–exclusion.
 
         The version ASSIGNMENT (new/Δ/old by spec position) fixes the term's
         semantics; the join EXECUTION order is free, and ``delta_name``
@@ -1205,8 +1184,7 @@ class IncrementalAcyclicQuery:
         be WRONG (the factored path's reordered suffixes, where ``rels`` is
         not in spec order) pass their precomputed ``steps`` instead, which
         this method then uses verbatim."""
-        rels = self.spec.relations if rels is None else rels
-        if steps is None and delta_name is not None and len(rels) > 1:
+        if steps is None and len(rels) > 1:
             columns = {r.name: versions[r.name].columns for r in rels}
             steps = self._delta_first_order(rels, delta_name, columns)
         if steps is None:
@@ -1348,7 +1326,7 @@ class IncrementalAcyclicQuery:
             t = self._join_chain(
                 versions,
                 suffix,
-                delta_name=ri.name,
+                ri.name,
                 bucket_memo=bucket_memo,
                 apply_residual=False,
                 steps=steps,
@@ -1408,7 +1386,6 @@ class IncrementalAcyclicQuery:
             "watermarks": dict(self._watermarks),
             "emitted": self._emitted,
             "last_batch": self._last_batch,
-            "buckets": dict(self._buckets),
             "state_rows": dict(self._state_rows),
         }
 
@@ -1420,7 +1397,6 @@ class IncrementalAcyclicQuery:
         self._watermarks = snap["watermarks"]
         self._emitted = snap["emitted"]
         self._last_batch = snap["last_batch"]
-        self._buckets = snap["buckets"]
         self._state_rows = snap["state_rows"]
 
     @contextmanager
@@ -1498,8 +1474,8 @@ class IncrementalAcyclicQuery:
 
     def _netted(self, rel: str) -> bool:
         """Is ``rel``'s live state already its net multiset — none, or the
-        single version ``_path(rel, version)`` that every merge-mode write,
-        compaction and rebucket produces? Anything else (appended ``_seg``
+        single version ``_path(rel, version)`` that every merge-mode write
+        and compaction produces? Anything else (appended ``_seg``
         segments, also those a log-structured → merge resume leaves behind)
         must be netted by whoever reads it per group."""
         return self._segments.get(rel, []) in ([], [self._path(rel, self._version[rel])])
@@ -1561,17 +1537,13 @@ class IncrementalAcyclicQuery:
 
     def _read_emitted(self) -> DataFrame:
         """The persisted changelog of batch ``_emitted["batch"]``, read with
-        its recorded schema: parquet schema inference would cost a job (and
-        is the fallback for a manifest written before the schema was)."""
+        its recorded schema: parquet schema inference would cost a job."""
         import json
 
         from pyspark.sql.types import StructType
 
-        reader = self.spark.read
-        if "schema" in self._emitted:
-            schema = StructType.fromJson(json.loads(self._emitted["schema"]))
-            reader = reader.schema(schema)
-        return reader.parquet(self._emitted["path"])
+        schema = StructType.fromJson(json.loads(self._emitted["schema"]))
+        return self.spark.read.schema(schema).parquet(self._emitted["path"])
 
     def process_batch(
         self,
@@ -2141,8 +2113,8 @@ class IncrementalAcyclicQuery:
         committed ``_state_rows`` it bounds the rows a net reads — the old
         state plus the delta; a compaction reads only live segments, whose
         count the append already added — and ``_net_write`` nets a small
-        bounded input in one task. ``None`` (or an unknown base) keeps the
-        shuffle.
+        bounded input in one task. ``None`` (or a relation with no committed
+        state yet) keeps the shuffle.
 
         ``ts_range`` (ttl relations) is this write's driver-side superset of
         its rows' event times; merged/compacted paths take the union of
@@ -2154,32 +2126,21 @@ class IncrementalAcyclicQuery:
             merged = self._read_state(rel).unionByName(delta)
             base = self._state_rows.get(rel)
             bound = None if base is None or delta_rows is None else base + delta_rows
-            n_rows = self._net_write(rel, merged, p, net_fn, max_rows=bound)
-            self._state_rows[rel] = n_rows  # exact: full rewrite
+            # exact: full rewrite
+            self._state_rows[rel] = self._net_write(rel, merged, p, net_fn, max_rows=bound)
             self._version[rel] = nxt
             cleanup.extend(self._segments.get(rel, []))
             self._segments[rel] = [p]
             if is_ttl:
                 prior = self._seg_ts.get(rel, {}).values()
                 self._seg_ts[rel] = {p: _range_union([*prior, ts_range])}
-            self._rebucket_written(rel, p, cleanup, n_rows=n_rows)
             return
         n = self._appends.get(rel, 0)
         seg = self._seg_path(rel, n)
-        n_seg = self._write_state(rel, delta, seg)
         # upper bound while segments accumulate: appends add rows, the net
-        # reduction at compaction can only shrink the true count. Accumulate
-        # only onto a KNOWN base: a resume from a pre-r11 manifest (no
-        # state_rows entry) with live segments would otherwise seed the
-        # count from 0 — a severe undercount that disengages the
-        # probe-pruning gate on arbitrarily large state. A relation with no
-        # prior segments genuinely starts from 0.
-        if rel in self._state_rows:
-            self._state_rows[rel] += n_seg
-        elif not self._segments.get(rel):
-            self._state_rows[rel] = n_seg  # first segment ever: exact base
-        # else: unknown base — leave absent so pruning stays engaged until
-        # the next full rewrite/compaction re-pins the exact count
+        # reduction at compaction can only shrink the true count
+        n_seg = self._write_state(rel, delta, seg)
+        self._state_rows[rel] = self._state_rows.get(rel, 0) + n_seg
         self._appends[rel] = n + 1
         self._segments.setdefault(rel, []).append(seg)
         if is_ttl:
@@ -2187,11 +2148,10 @@ class IncrementalAcyclicQuery:
         if len(self._segments[rel]) > self.compact_every:
             nxt = self._version[rel] + 1
             cp = self._path(rel, nxt)
-            n_rows = self._net_write(
-                rel, self._read_state(rel), cp, net_fn,
-                max_rows=self._state_rows.get(rel),
+            # exact again post-compaction
+            self._state_rows[rel] = self._net_write(
+                rel, self._read_state(rel), cp, net_fn, max_rows=self._state_rows[rel]
             )
-            self._state_rows[rel] = n_rows  # exact again post-compaction
             self._version[rel] = nxt
             cleanup.extend(self._segments[rel])
             self._segments[rel] = [cp]
@@ -2199,7 +2159,6 @@ class IncrementalAcyclicQuery:
                 self._seg_ts[rel] = {
                     cp: _range_union(self._seg_ts.get(rel, {}).values())
                 }
-            self._rebucket_written(rel, cp, cleanup, n_rows=n_rows)
 
     def _net_write(
         self,
@@ -2235,7 +2194,7 @@ class IncrementalAcyclicQuery:
         if max_rows is not None and self._fits_broadcast(df, max_rows):
             df = df.coalesce(1)
         elif bucketed:
-            df = df.repartition(self._buckets[rel], F.col(BUCKET))
+            df = df.repartition(r.buckets, F.col(BUCKET))
         # re-conform: the net's SUM may widen/reorder columns; a plain
         # projection that preserves the child's partitioning
         return self._write_state(
@@ -2253,47 +2212,6 @@ class IncrementalAcyclicQuery:
         if isinstance(dt, (DateType, TimestampType, TimestampNTZType)):
             ts = ts.cast("timestamp").cast("long")
         return F.floor(ts / F.lit(w))
-
-    def _rebucket_written(
-        self, rel: str, path: str, cleanup: list[str], n_rows: int
-    ) -> None:
-        """Adaptive bucket-count growth, applied ONLY where state was just
-        fully rewritten (merge-mode write / log-structured compaction), so
-        every live segment always shares one layout. Grows in powers of two
-        over the spec floor until mean rows/bucket is at most
-        ``bucket_target_rows``; never shrinks (shrinking buys nothing —
-        pruning selectivity only degrades when buckets are too COARSE).
-
-        The row count rides the state write itself (optimization round r11):
-        ``_write_state`` attaches a ``df.observe`` count to the write plan,
-        so the number of rows written costs ZERO extra jobs — the round-6
-        form re-executed the whole merge plan in a ``df.count()``, the
-        round-9 form replaced that with a footer-metadata read that was
-        cheap but still one scheduled job per bucketed relation per
-        merge-mode batch. Growth itself then rewrites the materialized files
-        once — rare, amortized, and reading parquet beats re-running the
-        merge."""
-        r = self._by_name.get(rel)
-        if r is None or r.bucket_target_rows <= 0 or r.buckets == 0:
-            return
-        want = r.buckets
-        while n_rows / want > r.bucket_target_rows:
-            want *= 2
-        want = max(want, self._buckets[rel])  # monotone under compaction churn
-        if want == self._buckets[rel]:
-            return
-        self._buckets[rel] = want
-        nxt = self._version[rel] + 1
-        p2 = self._path(rel, nxt)
-        grown = self.spark.read.parquet(path).withColumn(
-            BUCKET, _bucket_expr(r.bucket_key, want)
-        )
-        self._write_state(rel, self._conform(rel, grown), p2)
-        self._version[rel] = nxt
-        cleanup.append(path)
-        self._segments[rel] = [p2]
-        if r.ttl is not None and rel in self._seg_ts:
-            self._seg_ts[rel] = {p2: _range_union(self._seg_ts[rel].values())}
 
     def _write_state(
         self, rel: str, df: DataFrame, path: str, pre_partitioned: bool = False
@@ -2328,9 +2246,8 @@ class IncrementalAcyclicQuery:
         r = self._by_name.get(rel)
         # every write gets its row count OBSERVED on the write plan itself (a
         # map-side CollectMetrics — no partitioning change, no extra job): it
-        # feeds adaptive bucket growth (replacing _rebucket_written's former
-        # footer-count job), the cost-based probe-pruning gate (optimization
-        # round r11) and the next write's row bound, all via _state_rows
+        # feeds the cost-based probe-pruning gate (optimization round r11)
+        # and the next write's row bound, both via _state_rows
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if r is not None and r.buckets > 0:
@@ -2345,7 +2262,7 @@ class IncrementalAcyclicQuery:
             out = (
                 df
                 if pre_partitioned
-                else df.repartition(self._buckets[rel], F.col(BUCKET))
+                else df.repartition(r.buckets, F.col(BUCKET))
             )
             (
                 out.sortWithinPartitions(*sort_cols)

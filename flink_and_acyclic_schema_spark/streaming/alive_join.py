@@ -32,9 +32,9 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Tagged-union input schema for the operator (parent rows: child_id NULL;
-# child rows: attr NULL).
-UNION_SCHEMA = "key BIGINT, side STRING, child_id BIGINT, attr BIGINT, weight INT"
+# The operator's input is a tagged union (key, side, child_id, attr, weight)
+# built by tag_parent/tag_child: parent rows have child_id NULL, child rows
+# attr NULL.
 OUTPUT_SCHEMA = "key BIGINT, child_id BIGINT, attr BIGINT, delta INT"
 STATE_SCHEMA = "parent_w INT, parent_attr BIGINT, child_json STRING"
 
@@ -115,93 +115,4 @@ def alive_gated_join(tagged: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class AliveJoinProcessor:
-    """``transformWithStateInPandas`` form of the same operator — the 100 TB
-    path. Children live in per-key RocksDB-backed **MapState** (child_id →
-    weight), so a hot key's multiset is point-updated instead of re-serialized
-    wholesale per batch (the JSON-state cost of the applyInPandasWithState
-    form), and the parent counter is a 2-field ValueState. Semantics are
-    identical: emit new(parent_w·child_w) − old(parent_w·child_w) per child.
-
-    Not registered as a live query: Spark 4's TWS state-server client needs
-    the ``protobuf`` package, absent from this container (the TWS driver
-    worker crashes on import). The processor's state logic is unit-tested
-    against the same interleavings via a fake handle
-    (tests/test_streaming.py::test_alive_join_tws_processor); wire it with
-    ``alive_gated_join_tws`` on a cluster with protobuf installed.
-    """
-
-    def init(self, handle) -> None:
-        self.parent = handle.getValueState("parent", "parent_w INT, parent_attr BIGINT")
-        self.children = handle.getMapState("children", "child_id BIGINT", "w INT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        parent_w, parent_attr = self.parent.get() if self.parent.exists() else (0, None)
-        old_parent_w = parent_w
-        touched: dict[int, int] = {}
-
-        for pdf in rows:
-            for side, child_id, attr, w in zip(
-                pdf["side"], pdf["child_id"], pdf["attr"], pdf["weight"]
-            ):
-                if side == "P":
-                    parent_w += int(w)
-                    if attr is not None and not pd.isna(attr):
-                        parent_attr = int(attr)
-                else:
-                    cid = int(child_id)
-                    if cid not in touched:
-                        touched[cid] = (
-                            self.children.getValue((cid,))[0]
-                            if self.children.containsKey((cid,))
-                            else 0
-                        )
-                    self.children.updateValue(
-                        (cid,),
-                        (self.children.getValue((cid,))[0] + int(w),)
-                        if self.children.containsKey((cid,))
-                        else (int(w),),
-                    )
-
-        self.parent.update((parent_w, parent_attr))
-
-        out = []
-        if parent_w != old_parent_w:
-            # parent delta: re-emit every buffered child (Alive/Dead cascade)
-            for (cid,), (w,) in self.children.iterator():
-                old_w = touched.get(cid, w)
-                delta = parent_w * w - old_parent_w * old_w
-                if delta != 0:
-                    out.append((key[0], cid, parent_attr, delta))
-        else:
-            # child-only delta: touch just the changed children
-            for cid, old_w in touched.items():
-                new_w = (
-                    self.children.getValue((cid,))[0]
-                    if self.children.containsKey((cid,))
-                    else 0
-                )
-                delta = parent_w * (new_w - old_w)
-                if delta != 0:
-                    out.append((key[0], cid, parent_attr, delta))
-        if out:
-            import pandas as pd
-
-            yield pd.DataFrame(out, columns=["key", "child_id", "attr", "delta"])
-
-    def close(self) -> None:
-        pass
-
-
-def alive_gated_join_tws(tagged: DataFrame) -> DataFrame:
-    return tagged.groupBy("key").transformWithStateInPandas(
-        AliveJoinProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -43,7 +43,6 @@ from ..functions.numeric import dec
 from ..sources.changelog_source import parse_changelog
 from .acyclic import AcyclicQuerySpec, IncrementalAcyclicQuery, RelSpec
 
-STATE_RELS = ("lineitem", "orders", "customer", "nation")
 GROUP_COLS = ("c_custkey", "c_name", "c_acctbal", "n_name")
 
 Q10_LO = "1995-10-01"
@@ -104,57 +103,6 @@ class IncrementalQ10:
 
     def result(self) -> DataFrame:
         return self._engine.result()
-
-
-class IncrementalGroupAgg:
-    """Generic IVM for distributive grouped aggregates over a weighted
-    changelog — the reference's aggregate operator
-    (Q10AggregateProcessFunction.java:43-56) generalized beyond Q10: any
-    GROUP BY with SUM/COUNT measures is maintained as
-    ``state += groupBy(keys).sum(w * expr)`` per micro-batch, with groups
-    retiring when their support (net multiplicity) reaches zero. Purely
-    linear, so per-batch work is O(batch), never O(history)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        group_cols: list[str],
-        measures: dict[str, "F.Column"],
-    ):
-        self.spark = spark
-        self.state_dir = state_dir
-        self.group_cols = list(group_cols)
-        self.measures = dict(measures)  # name -> per-row expr (multiplied by w)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.makedirs(state_dir)
-        self._version = 0
-
-    def process_batch(self, delta: DataFrame, batch_id: int | None = None) -> None:
-        """``delta`` must carry the group columns, measure inputs and a
-        ``weight`` column."""
-        aggs = [
-            F.sum(F.col("weight") * expr).alias(name) for name, expr in self.measures.items()
-        ] + [F.sum("weight").alias("support")]
-        d = delta.groupBy(*self.group_cols).agg(*aggs)
-        p_old = os.path.join(self.state_dir, f"agg_v{self._version}")
-        old = self.spark.read.parquet(p_old) if os.path.exists(p_old) else d.limit(0)
-        new = (
-            old.unionByName(d)
-            .groupBy(*self.group_cols)
-            .agg(*[F.sum(n).alias(n) for n in self.measures], F.sum("support").alias("support"))
-            .filter(F.col("support") != 0)
-        )
-        nxt = self._version + 1
-        new.write.mode("overwrite").parquet(os.path.join(self.state_dir, f"agg_v{nxt}"))
-        self._version = nxt
-        if os.path.exists(p_old):
-            shutil.rmtree(p_old)
-
-    def result(self) -> DataFrame:
-        agg = self.spark.read.parquet(os.path.join(self.state_dir, f"agg_v{self._version}"))
-        return agg.filter(F.col("support") > 0)
 
 
 def run_incremental_q10_stream(

@@ -17,6 +17,7 @@
 
 from __future__ import annotations
 
+import json
 import uuid
 
 import pytest
@@ -145,7 +146,7 @@ def test_bucket_pruning_reaches_the_state_scan(spark, tmp_path):
         "customer": eng._read_state("customer"),
         "lineitem": eng._read_state("lineitem"),
     }
-    term = eng._join_chain(versions, delta_name="orders", bucket_memo={})
+    term = eng._join_chain(versions, spec.relations, "orders", bucket_memo={})
     plan = plan_string(term)
     assert "PartitionFilters" in plan and "_bucket" in plan
     # the delta's probe KEYS are pushed into the parquet scan too (In filter
@@ -207,7 +208,7 @@ def test_transitive_pruning_reaches_two_hop_state(spark, tmp_path):
         "orders": eng._read_state("orders"),
         "lineitem": eng._read_state("lineitem"),
     }
-    plan = plan_string(eng._join_chain(versions, delta_name="customer"))
+    plan = plan_string(eng._join_chain(versions, spec.relations, "customer"))
     assert "PartitionFilters" in plan and "_bucket" in plan
     assert "In(l_key" in plan or "EqualTo(l_key" in plan
     # and the full stream stays oracle-equal to the unbucketed run
@@ -358,15 +359,13 @@ def test_lazy_pre_view_reads_swapped_out_files(spark, tmp_path):
     """The pre-batch view of an ``emit_delta`` batch is a lazy plan that
     executes inside the emit stage, after the commit wave has swapped the
     live state to new files. Log-structured state with ``compact_every=2``
-    and a small ``bucket_target_rows`` makes batch 2 compact lineitem and
-    batch 4 compact AND rebucket it; on every batch the changelog, summed
-    per row, equals ``result()`` after the batch minus ``result()`` before
-    it. The last batch has no ``batch_id`` (the in-memory changelog)."""
+    makes batches 2 and 4 compact bucketed lineitem; on every batch the
+    changelog, summed per row, equals ``result()`` after the batch minus
+    ``result()`` before it. The last batch has no ``batch_id`` (the
+    in-memory changelog)."""
     from collections import Counter
 
-    spec = _spec(
-        li_extra={"buckets": 2, "bucket_key": ("l_key",), "bucket_target_rows": 12}
-    )
+    spec = _spec(li_extra={"buckets": 2, "bucket_key": ("l_key",)})
     eng = _engine(spark, tmp_path, spec, compact_every=2)
     batches = [
         ([(o, o % 4, 1) for o in range(20)], [(o, o + 1, 1) for o in range(20)]),
@@ -395,9 +394,9 @@ def test_lazy_pre_view_reads_swapped_out_files(spark, tmp_path):
         assert {k: w for k, w in net.items() if w} == {
             k: w for k, w in want.items() if w
         }, i
-        layout.append((len(eng._segments["lineitem"]), eng._buckets["lineitem"]))
-    # batch 2 compacts without growth; batch 4 compacts and doubles buckets
-    assert layout == [(1, 2), (2, 2), (1, 2), (2, 2), (1, 4)], layout
+        layout.append(len(eng._segments["lineitem"]))
+    # batches 2 and 4 compact lineitem back to one segment
+    assert layout == [1, 2, 1, 2, 1], layout
 
 
 def test_empty_batch_advances_last_batch(spark, tmp_path):
@@ -572,7 +571,7 @@ def test_multicolumn_probe_key_pushdown(spark, tmp_path):
         "orders", spark.createDataFrame([(7, 3, 1)], ORD_SCHEMA)
     ).localCheckpoint()
     versions = {"orders": delta, "lineitem": eng._read_state("lineitem")}
-    plan = plan_string(eng._join_chain(versions, delta_name="orders"))
+    plan = plan_string(eng._join_chain(versions, eng.spec.relations, "orders"))
     assert "PartitionFilters" in plan and "_bucket" in plan
     assert "In(l_key" in plan or "EqualTo(l_key,7)" in plan
     assert "In(l_cust" in plan or "EqualTo(l_cust,3)" in plan
@@ -600,103 +599,6 @@ def test_multicolumn_probe_key_pushdown(spark, tmp_path):
     assert feed(_engine(spark, tmp_path, spec(bucketed))) == feed(
         _engine(spark, tmp_path, spec())
     )
-
-
-# --- round 6: adaptive bucket count ------------------------------------------
-def test_adaptive_rebucket_grows_on_compaction(spark, tmp_path):
-    """bucket_target_rows re-derives the bucket count where state is being
-    fully rewritten anyway: 40 lineitem state rows over a spec floor of 2
-    buckets with target 10 rows/bucket must grow to 4, the _bucket column is
-    recomputed so probe pruning still reaches the scan, the count survives
-    resume, and results stay oracle-equal with the static twin."""
-    spec = _spec(
-        li_extra={"buckets": 2, "bucket_key": ("l_key",), "bucket_target_rows": 12}
-    )
-    state_dir = str(tmp_path / "rebucket")
-    eng = IncrementalAcyclicQuery(spark, state_dir, spec)
-    got = _feed(spark, eng, BATCHES)
-    want = _feed(spark, _engine(spark, tmp_path, _spec()), BATCHES)
-    assert got == want and got
-    assert eng._buckets["lineitem"] == 4  # 40 rows / target 12 -> doubled once
-    # on-disk layout matches the grown count: ids dense in [0, 4)
-    state = eng._read_state("lineitem")
-    ids = {r[0] for r in state.select("_bucket").distinct().collect()}
-    assert ids <= set(range(4)) and len(ids) > 2  # actually spread past floor
-    # probe pruning agrees with the new layout: a 1-order delta still prunes
-    delta = eng._conform(
-        "orders", spark.createDataFrame([(7, 3, 1)], ORD_SCHEMA)
-    ).localCheckpoint()
-    bids, key_vals = eng._probe_pruning(delta, spec.relations[2], ("o_key",))
-    assert len(bids) == 1 and key_vals == ([7],)
-    full = _files_read(state)
-    pruned = _files_read(state.filter(F.col("_bucket").isin(bids)))
-    assert 0 < pruned < full
-    # the grown count is part of the atomic manifest: resume keeps it and
-    # keeps answering correctly
-    resumed = IncrementalAcyclicQuery(spark, state_dir, spec, resume=True)
-    assert resumed._buckets["lineitem"] == 4
-    resumed.process_batch(
-        {
-            "orders": spark.createDataFrame([(41, 0, 1)], ORD_SCHEMA),
-            "lineitem": spark.createDataFrame([(41, 5, 1)], LI_SCHEMA),
-        },
-        batch_id=2,
-    )
-    after = sorted(tuple(r) for r in resumed.result().collect())
-    twin = _engine(spark, tmp_path, _spec())
-    _feed(spark, twin, BATCHES)
-    twin.process_batch(
-        {
-            "orders": spark.createDataFrame([(41, 0, 1)], ORD_SCHEMA),
-            "lineitem": spark.createDataFrame([(41, 5, 1)], LI_SCHEMA),
-        },
-        batch_id=2,
-    )
-    assert after == sorted(tuple(r) for r in twin.result().collect())
-
-
-def test_adaptive_rebucket_log_structured_only_at_compaction(spark, tmp_path):
-    """In the log-structured regime the count may only change at a FULL
-    compaction (all live segments collapse to one), so every live segment
-    always shares a single layout — between compactions appended segments
-    keep the committed count."""
-    spec = _spec(
-        li_extra={"buckets": 2, "bucket_key": ("l_key",), "bucket_target_rows": 12}
-    )
-    eng = _engine(spark, tmp_path, spec, compact_every=3)
-    b0 = BATCHES[0]
-    eng.process_batch(
-        {
-            "orders": spark.createDataFrame(b0[0], ORD_SCHEMA),
-            "lineitem": spark.createDataFrame(b0[1], LI_SCHEMA),
-            "customer": spark.createDataFrame(CUST, CUST_SCHEMA),
-        },
-        batch_id=0,
-    )
-    assert eng._buckets["lineitem"] == 2  # appended segment, no compaction yet
-    for i in range(1, 4):  # drive past compact_every to trigger compaction
-        eng.process_batch(
-            {"lineitem": spark.createDataFrame([(i, 1, 1)], LI_SCHEMA)},
-            batch_id=i,
-        )
-    assert eng._buckets["lineitem"] == 4  # compaction rebucketed 43 rows (43/4 <= 12)
-    assert len(eng._segments["lineitem"]) == 1  # single post-compaction layout
-    got = sorted(tuple(r) for r in eng.result().collect())
-    twin = _engine(spark, tmp_path, _spec())
-    twin.process_batch(
-        {
-            "orders": spark.createDataFrame(b0[0], ORD_SCHEMA),
-            "lineitem": spark.createDataFrame(b0[1], LI_SCHEMA),
-            "customer": spark.createDataFrame(CUST, CUST_SCHEMA),
-        },
-        batch_id=0,
-    )
-    for i in range(1, 4):
-        twin.process_batch(
-            {"lineitem": spark.createDataFrame([(i, 1, 1)], LI_SCHEMA)},
-            batch_id=i,
-        )
-    assert got == sorted(tuple(r) for r in twin.result().collect())
 
 
 # --- round 11: cost-based probe-pruning gate ---------------------------------
@@ -732,9 +634,6 @@ def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
     # into its existing row, adds (40,7) -> 40 net rows
     assert gated._state_rows["lineitem"] == 40
     assert not gated._prune_worthwhile("lineitem")  # 40 <= threshold
-    # an unknown count with live segments keeps pruning ENGAGED (100 TB-safe)
-    del gated._state_rows["lineitem"]
-    assert gated._prune_worthwhile("lineitem")
 
     calls["n"] = 0
     pruning = _engine(spark, tmp_path, spec)
@@ -768,6 +667,67 @@ def test_state_rows_tracking_and_resume(spark, tmp_path):
         spark, state_dir, spec, compact_every=3, resume=True
     )
     assert resumed._state_rows["lineitem"] == true_rows
+
+
+# every field ``IncrementalAcyclicQuery._snapshot`` writes to the manifest
+MANIFEST_KEYS = (
+    "version",
+    "segments",
+    "appends",
+    "seg_ts",
+    "watermarks",
+    "emitted",
+    "last_batch",
+    "state_rows",
+)
+
+
+@pytest.fixture(scope="module")
+def committed_manifest(spark, tmp_path_factory):
+    """The manifest a two-batch ``emit_delta`` run over bucketed state
+    commits."""
+    sdir = tmp_path_factory.mktemp("manifest") / "state"
+    spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
+    eng = IncrementalAcyclicQuery(spark, str(sdir), spec)
+    for i, (orders, lineitem) in enumerate(BATCHES):
+        deltas = {
+            "orders": spark.createDataFrame(orders, ORD_SCHEMA),
+            "lineitem": spark.createDataFrame(lineitem, LI_SCHEMA),
+        }
+        if i == 0:
+            deltas["customer"] = spark.createDataFrame(CUST, CUST_SCHEMA)
+        eng.process_batch(deltas, batch_id=i, emit_delta=True)
+    return json.loads((sdir / "MANIFEST.json").read_text())
+
+
+def _resume_from(spark, tmp_path, data):
+    sdir = tmp_path / "state"
+    sdir.mkdir()
+    (sdir / "MANIFEST.json").write_text(json.dumps(data))
+    spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
+    return IncrementalAcyclicQuery(spark, str(sdir), spec, resume=True)
+
+
+def test_manifest_holds_exactly_the_snapshot_fields(committed_manifest):
+    assert set(committed_manifest) == set(MANIFEST_KEYS)
+    assert committed_manifest["emitted"]["schema"]
+
+
+@pytest.mark.parametrize("key", MANIFEST_KEYS)
+def test_resume_rejects_a_manifest_missing_a_field(spark, tmp_path, committed_manifest, key):
+    """One manifest format: every field the engine writes is required on
+    resume, none falls back to a default."""
+    data = {k: v for k, v in committed_manifest.items() if k != key}
+    with pytest.raises(KeyError):
+        _resume_from(spark, tmp_path, data)
+
+
+def test_resume_rejects_a_manifest_with_an_unknown_field(spark, tmp_path, committed_manifest):
+    """A field the engine does not write — e.g. the live bucket count older
+    engines persisted after growing it — is not silently ignored: the state
+    it describes may not match the spec's fixed layout."""
+    with pytest.raises(KeyError, match="buckets"):
+        _resume_from(spark, tmp_path, {**committed_manifest, "buckets": {"lineitem": 8}})
 
 
 def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
@@ -861,29 +821,6 @@ def test_merge_mode_read_nets_raw_log_structured_segments(spark, tmp_path):
     ]
     assert changelogs[0] == changelogs[1]
     assert rows(eng.result()) == rows(twin.result())
-
-
-def test_state_rows_unknown_base_stays_unknown_across_appends(spark, tmp_path):
-    """A resume from a pre-r11 manifest (live segments but no state_rows
-    entry) must NOT seed the count from 0 on the next append — that would be
-    a severe undercount that disengages the probe-pruning gate on
-    arbitrarily large state (r11 ADVICE). The entry stays absent (pruning
-    stays ENGAGED) until the next compaction re-pins the exact count."""
-    spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
-    state_dir = str(tmp_path / "rows_unknown")
-    eng = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
-    _feed(spark, eng, BATCHES)  # 2 appended segments
-    # simulate the pre-r11 manifest: live segments, count unknown
-    eng._state_rows.pop("lineitem")
-    eng.process_batch(
-        {"lineitem": spark.createDataFrame([(9, 9, 1)], LI_SCHEMA)}, batch_id=2
-    )
-    assert "lineitem" not in eng._state_rows  # unknown base stays unknown
-    assert eng._prune_worthwhile("lineitem")  # gate stays engaged
-    eng.process_batch(  # 4th segment > compact_every=3 -> compaction, exact
-        {"lineitem": spark.createDataFrame([(10, 2, 1)], LI_SCHEMA)}, batch_id=3
-    )
-    assert eng._state_rows["lineitem"] == eng._read_state("lineitem").count()
 
 
 def test_wide_probe_sample_covering_all_buckets_skips_fallback_scan(

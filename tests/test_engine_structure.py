@@ -4,8 +4,9 @@ The continuous engine's batch pipeline is a sequence of stage methods
 (``IncrementalAcyclicQuery._process_batch_inner``); this keeps any one
 function of ``streaming/acyclic.py`` or ``streaming/topk.py`` from growing
 back into a monolith, keeps ``streaming/`` free of environment-variable
-knobs, and keeps every optional spec field and defaulted constructor
-parameter of the engine and the top-k views in use by some caller."""
+knobs, keeps every optional spec field and defaulted constructor
+parameter of the engine and the top-k views in use by some caller, and
+keeps every top-level name of ``streaming/`` referenced by one."""
 
 from __future__ import annotations
 
@@ -209,3 +210,50 @@ def test_every_defaulted_constructor_parameter_has_a_caller():
         if has_default and name != "resume" and name not in seen[cls]
     ]
     assert not unset, f"defaulted constructor parameters no caller sets: {unset}"
+
+
+def _top_level_names(tree: ast.Module) -> dict[str, tuple[int, int]]:
+    """Module-level defined name -> line span of its definition: functions,
+    classes and plain or annotated assignments."""
+    out = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out[node.name] = (node.lineno, node.end_lineno)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    out[t.id] = (node.lineno, node.end_lineno)
+    return out
+
+
+def test_every_streaming_top_level_name_is_referenced():
+    """A top-level name of ``streaming/`` that no package, ``bench.py`` or
+    ``ivmbench/`` code references (as a ``Name`` or an ``Attribute``)
+    outside its own definition is dead code; tests and tools do not keep it
+    alive."""
+    defined = {
+        path: _top_level_names(ast.parse(path.read_text()))
+        for path in sorted(STREAMING.glob("*.py"))
+    }
+    used: set[str] = set()
+    for path in _callers():
+        spans = defined.get(path, {})
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else None
+            )
+            if name is None:
+                continue
+            span = spans.get(name)
+            if span is None or not span[0] <= node.lineno <= span[1]:
+                used.add(name)
+    dead = [
+        f"{path.name}:{name}"
+        for path, names in defined.items()
+        for name in names
+        if name not in used
+    ]
+    assert not dead, f"streaming/ top-level names nothing references: {dead}"

@@ -229,86 +229,6 @@ def test_alive_join_interleavings():
     ) == {(7, 1): 2, (7, 2): 1}
 
 
-def test_alive_join_tws_processor():
-    """The transformWithStateInPandas processor (the 100 TB state layout)
-    must agree with the applyInPandasWithState form on the same
-    interleavings — exercised via a fake handle since this container lacks
-    protobuf for the live TWS state server."""
-    import pandas as pd
-
-    from flink_and_acyclic_schema_spark.streaming.alive_join import AliveJoinProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeMapState:
-        def __init__(self):
-            self._m = {}
-
-        def containsKey(self, k):
-            return k in self._m
-
-        def getValue(self, k):
-            return self._m[k]
-
-        def updateValue(self, k, v):
-            self._m[k] = v
-
-        def iterator(self):
-            return iter(list(self._m.items()))
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeValueState()
-
-        def getMapState(self, name, kschema, vschema):
-            return FakeMapState()
-
-    def run_batches(batches):
-        p = AliveJoinProcessor()
-        p.init(FakeHandle())
-        totals: dict = {}
-        for rows in batches:
-            pdf = pd.DataFrame(rows, columns=["side", "child_id", "attr", "weight"])
-            for out in p.handleInputRows((7,), iter([pdf]), None):
-                for _, r in out.iterrows():
-                    k = (int(r["key"]), int(r["child_id"]))
-                    totals[k] = totals.get(k, 0) + int(r["delta"])
-        return {k: v for k, v in totals.items() if v != 0}
-
-    assert run_batches(
-        [[("C", 1, None, 1)], [("P", None, 42, -1)], [("P", None, 42, 1)]]
-    ) == {}
-    assert run_batches(
-        [[("P", None, 42, 1), ("C", 1, None, 1), ("C", 1, None, 1)], [("P", None, 42, -1)]]
-    ) == {}
-    assert run_batches(
-        [
-            [("C", 1, None, 1), ("C", 1, None, 1), ("C", 2, None, 1)],
-            [("C", 2, None, -1)],
-            [("P", None, 42, 1)],
-        ]
-    ) == {(7, 1): 2}
-    # mixed parent+child deltas in ONE batch: formula must not double-count
-    assert run_batches(
-        [
-            [("P", None, 42, 1), ("C", 1, None, 1)],
-            [("P", None, 42, -1), ("C", 1, None, 1), ("C", 2, None, 1)],
-            [("P", None, 42, 1)],
-        ]
-    ) == {(7, 1): 2, (7, 2): 1}
-
-
 def test_stream_join_window_agg_watermark_boundary(spark, tmp_path):
     """Pin the append-mode cutoff rule the stream_join_window_agg oracle
     encodes (HAVING win_end < min(max p_ts, max c_ts) - 1h - 30min) with

@@ -80,7 +80,7 @@ def _run_term(eng, delta, n_iter: int = 3) -> dict:
     best = float("inf")
     files = rows = 0
     for _ in range(n_iter):
-        term = eng._join_chain(versions, delta_name="orders", bucket_memo={})
+        term = eng._join_chain(versions, eng.spec.relations, "orders", bucket_memo={})
         t0 = _t.monotonic()
         term.collect()
         best = min(best, _t.monotonic() - t0)

@@ -90,7 +90,7 @@ def _run_term(eng, delta, n_iter: int = 3) -> dict:
         group = f"term_{id(eng)}_{it}"
         sc.setLocalProperty("spark.jobGroup.id", group)
         t_build = _t.monotonic()
-        term = eng._join_chain(versions, delta_name="customer", bucket_memo={})
+        term = eng._join_chain(versions, eng.spec.relations, "customer", bucket_memo={})
         t0 = _t.monotonic()
         term.collect()
         t1 = _t.monotonic()
