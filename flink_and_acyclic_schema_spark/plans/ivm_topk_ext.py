@@ -126,8 +126,8 @@ def _q10_topk_spec() -> AcyclicQuerySpec:
             "n_name",
         ),
         # the spec-level knob (round 7): the engine wires the maintained
-        # candidate buffer itself — durable under <state>/topk, fed from its
-        # own changelog, replay-skipped on redelivery
+        # candidate buffer itself — committed inside its own manifest, fed
+        # from its own changelog, replay-skipped on redelivery
         top_k=TopKSpec(k=20, order_by="revenue", key=("c_custkey",), slack=10),
     )
 
@@ -181,9 +181,9 @@ def incremental_topk_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFlow.java:58 emits unordered per-update rows; the intended query
     ends ``ORDER BY revenue DESC LIMIT 20``): the continuously-maintained
     top-20's OWN ±changelog, appended per batch to a parquet sink under the
-    exactly-once discipline — the top-k structure persists each batch's
-    emitted delta inside its atomic manifest commit (streaming/topk.py
-    ``_persist``), so a crash-replayed batch hands the sink the SAME rows
+    exactly-once discipline — the engine commits each batch's emitted top-k
+    delta inside its atomic manifest commit (streaming/topk.py
+    ``TopKView.state``), so a crash-replayed batch hands the sink the SAME rows
     and the fixed-path overwrite never double-emits
     (tests/test_topk_view.py::test_topk_sink_crash_replay_no_double_emission).
 
@@ -358,9 +358,10 @@ def incremental_topk_chained_stream(spark: SparkSession, sf_dir: str) -> DataFra
     its spec-level top-k; `topk_delta()` hands back the batch's persisted
     ±20-row changelog; the downstream engine folds it through the same
     weight algebra (members = Σw, revenue = Σw·revenue, HAVING Σw>0).
-    Exactly-once composes across ALL THREE manifests: a crash between any
-    two commits replays the batch, the upstream pair replay-skip and
-    re-hand the PERSISTED changelog, and the downstream engine either
+    Exactly-once composes across BOTH engines' manifests (each engine
+    commits its top-k inside its own): a crash between the two commits
+    replays the batch, the upstream engine replay-skips and re-hands the
+    COMMITTED changelog, and the downstream engine either
     applies it (it was behind) or replay-skips too
     (tests/test_topk_view.py::test_topk_chained_engine_crash_replay)."""
     scratch = _scratch("ivm_topk_chain", sf_dir)
@@ -434,7 +435,8 @@ def incremental_topk_per_group_stream(spark: SparkSession, sf_dir: str) -> DataF
     engine's RESTRICTED emission (``result(touched)`` pushes the group set
     into every state read as a semi-join), and emission ranks candidates —
     a (k+slack)-fold reduction of the view — never the view itself. Round 7:
-    candidate/boundary state is manifest-committed sharded parquet (only the
+    candidate/boundary state is sharded parquet committed by the engine's
+    manifest (only the
     shards a batch's changelog touches are read/rewritten), declared through
     the spec-level ``top_k`` knob."""
     from ..functions.numeric import dec
@@ -600,10 +602,10 @@ def incremental_grouped_topk_chained_stream(
       per-nation membership count and leaderboard revenue concentration —
       a continuous aggregate OF a continuous per-group top-k.
 
-    Exactly-once composes across all three manifests exactly as in the
+    Exactly-once composes across both engines' manifests exactly as in the
     global chain (tests/test_topk_view.py::
     test_grouped_topk_chained_engine_crash_replay): a replayed batch makes
-    the upstream pair re-hand the PERSISTED changelog and the downstream
+    the upstream engine re-hand the COMMITTED changelog and the downstream
     engine apply-or-skip it."""
     scratch = _scratch("ivm_gtopk_chain", sf_dir)
     gens = _nation_leaderboard_gens()
@@ -685,8 +687,8 @@ def incremental_topk_chain_depth4_stream(
 
     Nothing new is wired for depth 4: every stage's output is a valid
     weighted changelog for the next (the closure property), and exactly-once
-    composes across all FOUR manifests — upstream state, grouped-top-k,
-    downstream state, global-top-k — by the same replay-skip/persisted-
+    composes across the chain's TWO manifests — each engine commits its
+    state and its top-k in one — by the same replay-skip/committed-
     changelog discipline as the depth-2 chains
     (tests/test_topk_view.py::test_topk_chain_depth4_crash_replay and the
     4-stage prefix-closure property)."""

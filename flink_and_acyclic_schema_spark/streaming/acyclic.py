@@ -99,6 +99,7 @@ recompute over ``ts >= horizon(max ts)`` regardless of arrival interleaving
 from __future__ import annotations
 
 import itertools
+import json
 import os
 import shutil
 import threading
@@ -106,13 +107,13 @@ import time
 import uuid
 from collections.abc import Callable, Mapping
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import _bucket_expr, _dump_value, _load_value, _run_parallel
+from .topk import _bucket_expr, _dump_value, _load_value, _norm_order, _run_parallel
 
 WEIGHT = "weight"
 BUCKET = "_bucket"  # reserved: hash-bucket partition column of bucketed state
@@ -318,9 +319,11 @@ class TopKSpec:
     candidate buffer for the GLOBAL form (streaming/topk.py TopKView), or
     group-sharded Spark-side candidate state when ``partition_by`` names
     grouping columns (GroupedTopKView — the continuous
-    ``row_number() OVER (PARTITION BY …) <= k``). Both persist under
-    ``<state_dir>/topk`` with the engine's manifest discipline, resume with
-    the engine, and skip crash-replayed batches.
+    ``row_number() OVER (PARTITION BY …) <= k``). The engine folds each
+    batch into the structure before its own manifest commit and records the
+    structure's state inside that manifest (the grouped form's parquet
+    shards live under ``<state_dir>/topk``), so the engine and its top-k
+    commit, roll back, resume and skip crash-replayed batches as one.
 
     ``key`` is the unique key of EMITTED rows used as the deterministic
     ascending tiebreak (``ORDER BY v DESC, key``); default: the spec's
@@ -352,8 +355,6 @@ class TopKSpec:
     def __post_init__(self):
         if self.k < 1:
             raise ValueError("top_k: k must be >= 1")
-        from .topk import _norm_order
-
         _norm_order(self.order_by)  # fail bad shapes at spec time
 
 
@@ -542,9 +543,14 @@ class IncrementalAcyclicQuery:
         idempotence a foreachBatch sink needs for exactly-once semantics
         after Structured Streaming checkpoint recovery, where the engine's
         state commit is not transactional with Spark's offset commit. The
-        spec must be the one the state was written with (relations,
-        filters, projections, bucket layout): the manifest records the
-        state, not the spec, so a changed spec is not detected.
+        spec must be the one the state was written with. The manifest
+        records the spec's structural shape (``_spec_shape``: per relation
+        its name, join pairs, projection, bucket layout, semi/anti gate, ttl
+        column and zone; the group-by, measure names, histogram kinds,
+        ``preserve`` and the ``top_k`` fields), and resume raises
+        ``ValueError`` when it differs. Callables — filters, measure
+        expressions, ttl horizons, ``having``, ``finalize``, ``residual`` —
+        cannot be compared and are not checked.
         """
         self.spark = spark
         self.state_dir = state_dir
@@ -618,34 +624,14 @@ class IncrementalAcyclicQuery:
         self.last_checkpoints = 0
         # instrument-only: rel -> eviction-band rows read by the last batch
         self.last_evicted: dict[str, int] = {}
-        if resume and os.path.exists(self._manifest_path()):
-            self._load_manifest()
-        else:
-            if os.path.exists(state_dir):
-                shutil.rmtree(state_dir)
-            os.makedirs(state_dir)
         # spec-level continuous ORDER BY/LIMIT (TopKSpec): the maintained
-        # top-k structure lives under <state_dir>/topk with its own atomic
-        # manifest, created AFTER the state-dir reset/resume above so fresh
-        # engines start it fresh and resumed engines reattach to it
+        # top-k structure, whose state this engine's manifest carries
         self._topk = None
-        if spec.top_k is not None:
+        t = spec.top_k
+        if t is not None:
             from .topk import GroupedTopKView, TopKView
 
-            t = spec.top_k
-            key = t.key or tuple(
-                c for c in spec.group_by if c not in t.partition_by
-            )
-            tdir = os.path.join(state_dir, "topk")
-            # resumed engine without a committed top-k manifest (e.g. the
-            # knob was added to an existing state dir): the structure must
-            # PRIME from the live view instead of claiming completeness
-            # over an empty one
-            need_prime = (
-                resume
-                and not os.path.exists(os.path.join(tdir, "MANIFEST.json"))
-                and bool(self._segments.get("agg"))
-            )
+            key = t.key or tuple(c for c in spec.group_by if c not in t.partition_by)
             if t.partition_by:
                 self._topk = GroupedTopKView(
                     t.k,
@@ -653,64 +639,100 @@ class IncrementalAcyclicQuery:
                     t.partition_by,
                     key,
                     refill=self.result,
-                    state_dir=tdir,
+                    state_dir=os.path.join(state_dir, "topk"),
                     spark=spark,
                     slack=t.slack,
-                    resume=resume,
                     emit=t.emit_changelog,
                 )
-                if need_prime:
-                    self._topk.prime()
             else:
                 self._topk = TopKView(
-                    t.k,
-                    t.order_by,
-                    key,
-                    refill=self.result,
-                    state_dir=tdir,
-                    spark=spark,
-                    slack=t.slack,
-                    prime=need_prime,
-                    resume=resume,
+                    t.k, t.order_by, key, refill=self.result, spark=spark, slack=t.slack
                 )
+        if resume and os.path.exists(self._manifest_path()):
+            self._load_manifest()
+        else:
+            if os.path.exists(state_dir):
+                shutil.rmtree(state_dir)
+            os.makedirs(state_dir)
 
     # --- manifest (atomic commit point) -------------------------------------
     def _manifest_path(self) -> str:
         return os.path.join(self.state_dir, "MANIFEST.json")
 
     def _commit_manifest(self) -> None:
-        """Atomically publish the post-batch state: every referenced path is
-        fully written by now; the shared ``_publish_manifest`` protocol
-        (streaming/topk.py — the same helper both top-k views commit through)
-        makes the switch a single atomic os.replace, so a crash at ANY point
-        leaves either the old or the new state fully consistent (orphan dirs
-        are GC'd on resume). The engine's in-memory fields are the staging
-        area itself (``_snapshot``/``_restore`` roll them back on failure),
-        so no adopt/gc closures are needed here. The manifest holds exactly
-        the ``_snapshot`` fields, with watermark values JSON-encoded."""
-        from .topk import _publish_manifest
-
+        """Atomically publish the post-batch state of the engine AND its
+        top-k: every referenced path is fully written by now, and the
+        manifest is staged to ``.tmp`` and swapped in with one atomic
+        ``os.replace`` — the batch's one commit point — so a crash at ANY
+        point leaves either the old or the new state fully consistent (orphan
+        dirs are GC'd on resume). The engine's in-memory fields are the
+        staging area itself (``_snapshot``/``_restore`` roll them back on
+        failure). The manifest holds the ``_snapshot`` fields, with
+        watermark values JSON-encoded, and the spec's shape."""
         data = self._snapshot()
         data["watermarks"] = {r: _dump_value(v) for r, v in data["watermarks"].items()}
         data["seg_ts"] = {
             rel: {p: [_dump_value(lo), _dump_value(hi)] for p, (lo, hi) in m.items()}
             for rel, m in data["seg_ts"].items()
         }
-        _publish_manifest(self._manifest_path(), data)
+        data["spec"] = self._spec_shape()
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(data, fh)
+        os.replace(tmp, self._manifest_path())
+
+    def _spec_shape(self) -> dict:
+        """The spec's structural shape as JSON: what the committed state's
+        layout depends on and a resume can compare. Callables are left out —
+        they cannot be compared."""
+        s, t = self.spec, self.spec.top_k
+        return json.loads(
+            json.dumps(
+                {
+                    "relations": [
+                        {
+                            "name": r.name,
+                            "join": r.join_pairs(),
+                            "project": r.project,
+                            "buckets": r.buckets,
+                            "bucket_key": r.bucket_key,
+                            "semi": r.semi,
+                            "anti": r.anti,
+                            "ttl": r.ttl and r.ttl[0],
+                            "ttl_zone": r.ttl_zone,
+                        }
+                        for r in s.relations
+                    ],
+                    "group_by": s.group_by,
+                    "measures": list(s.measures),
+                    "hist": {n: kind for n, (kind, _) in s.hist_measures.items()},
+                    "preserve": s.preserve,
+                    "top_k": t and {**asdict(t), "order_by": _norm_order(t.order_by)},
+                }
+            )
+        )
 
     def _load_manifest(self) -> None:
-        """Load the committed manifest: exactly the ``_snapshot`` fields, each
-        required. A manifest of another format — a field missing, or one this
-        engine does not write — raises ``KeyError``: the state it describes
-        need not match the spec (e.g. a bucket layout other than
-        ``RelSpec.buckets``), so delete the state dir and re-run."""
-        import json
-
+        """Load the committed manifest: exactly the ``_snapshot`` fields and
+        the spec's shape, each required. A manifest of another format — a
+        field missing, or one this engine does not write — raises
+        ``KeyError``, and a spec whose shape differs from the recorded one
+        raises ``ValueError``: the state need not match the spec (e.g. a
+        bucket layout other than ``RelSpec.buckets``), so resume with the
+        spec the state was written with, or delete the state dir and
+        re-run."""
         with open(self._manifest_path()) as fh:
             data = json.load(fh)
-        extra = set(data) - set(self._snapshot())
+        extra = set(data) - {*self._snapshot(), "spec"}
         if extra:
             raise KeyError(f"manifest fields this engine does not read: {sorted(extra)}")
+        shape = self._spec_shape()
+        if data["spec"] != shape:
+            diff = [k for k, v in shape.items() if data["spec"].get(k) != v]
+            raise ValueError(
+                f"resume: the spec differs in {diff} from the one {self.state_dir} "
+                "was written with; resume with that spec or delete the state dir"
+            )
         self._version = data["version"]
         self._segments = data["segments"]
         self._appends = data["appends"]
@@ -722,6 +744,7 @@ class IncrementalAcyclicQuery:
             rel: {p: (_load_value(v[0]), _load_value(v[1])) for p, v in m.items()}
             for rel, m in data["seg_ts"].items()
         }
+        topk = data["topk"]  # required without a top_k too: one manifest format
         # GC anything the committed manifest doesn't reference — partial
         # writes of a crashed batch, or superseded dirs whose cleanup the
         # crash interrupted
@@ -729,12 +752,14 @@ class IncrementalAcyclicQuery:
         if self._emitted is not None:
             live.add(os.path.basename(self._emitted["path"]))
         for entry in os.listdir(self.state_dir):
-            # "topk" is the spec-level top-k structure's own manifest-managed
-            # subtree (TopKSpec) — not this manifest's to garbage-collect
+            # "topk" holds the grouped top-k's shards, which it GCs itself
             if entry.startswith("MANIFEST") or entry == "topk":
                 continue
             if entry not in live:
                 shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
+        if self._topk is not None:
+            self._topk.load(topk)
+            self._topk._gc()
 
     # --- state I/O ----------------------------------------------------------
     def _path(self, rel: str, version: int) -> str:
@@ -1376,8 +1401,9 @@ class IncrementalAcyclicQuery:
         return B
 
     def _snapshot(self) -> dict:
-        """Deep copy of every in-memory field the manifest persists — taken at
-        batch start, when memory and the committed manifest agree."""
+        """Deep copy of every in-memory field the manifest persists, the
+        top-k's ``state()`` included — taken at batch start, when memory and
+        the committed manifest agree."""
         return {
             "version": dict(self._version),
             "segments": {k: list(v) for k, v in self._segments.items()},
@@ -1387,6 +1413,7 @@ class IncrementalAcyclicQuery:
             "emitted": self._emitted,
             "last_batch": self._last_batch,
             "state_rows": dict(self._state_rows),
+            "topk": None if self._topk is None else self._topk.state(),
         }
 
     def _restore(self, snap: dict) -> None:
@@ -1398,6 +1425,8 @@ class IncrementalAcyclicQuery:
         self._emitted = snap["emitted"]
         self._last_batch = snap["last_batch"]
         self._state_rows = snap["state_rows"]
+        if self._topk is not None:
+            self._topk.load(snap["topk"])
 
     @contextmanager
     def _phase(self, name: str):
@@ -1538,8 +1567,6 @@ class IncrementalAcyclicQuery:
     def _read_emitted(self) -> DataFrame:
         """The persisted changelog of batch ``_emitted["batch"]``, read with
         its recorded schema: parquet schema inference would cost a job."""
-        import json
-
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(self._emitted["schema"]))
@@ -1566,7 +1593,8 @@ class IncrementalAcyclicQuery:
 
         The manifest is the single atomicity point for IN-PROCESS retry as
         well as crash-restart: every manifest-persisted field (watermarks,
-        segment maps, versions, last_batch, emitted pointer) is rolled back
+        segment maps, versions, last_batch, emitted pointer, the top-k's
+        state) is rolled back
         to its batch-start snapshot if the batch fails at ANY point, so a
         retry on the same engine instance re-runs against exactly the
         committed state — a failed attempt's watermark advance cannot skip
@@ -1585,41 +1613,31 @@ class IncrementalAcyclicQuery:
         # committed it, applying it again would double-count. A replayed
         # emit_delta batch returns the PERSISTED changelog of that batch
         # (written inside the batch's atomic commit), so downstream engines
-        # and sinks can catch up — exactly-once extends across chains
-        want_delta = emit_delta or self._topk is not None
+        # and sinks can catch up — exactly-once extends across chains. The
+        # top-k committed in the same manifest, so it needs no catch-up.
         if (
             batch_id is not None
             and self._last_batch is not None
             and batch_id <= self._last_batch
         ):
-            ch = None
-            if (
-                want_delta
-                and self._emitted is not None
-                and self._emitted["batch"] == batch_id
-            ):
-                ch = self._read_emitted()
-            # the spec-level top-k may still be BEHIND the engine commit (a
-            # crash landed between the two manifests): feeding the persisted
-            # changelog catches it up; its own replay skip makes this a no-op
-            # when it already committed the batch
-            if self._topk is not None and ch is not None:
-                with self._phase("topk"):
-                    self._topk.apply(ch, batch_id)
-            return ch if emit_delta else None
+            if emit_delta and self._emitted is not None and self._emitted["batch"] == batch_id:
+                return self._read_emitted()
+            return None
         snap = self._snapshot()
         try:
-            changelog = self._process_batch_inner(deltas, batch_id, want_delta)
+            changelog, cleanup = self._process_batch_inner(
+                deltas, batch_id, emit_delta or self._topk is not None
+            )
         except BaseException:
             self._restore(snap)
             raise
-        # OUTSIDE the rollback scope: the engine manifest is committed by
-        # now, so a top-k failure must NOT restore in-memory fields to the
-        # pre-batch snapshot (disk would then be ahead of memory) — a retry
-        # re-enters through the replay-skip branch above instead
-        if self._topk is not None and changelog is not None:
-            with self._phase("topk"):
-                self._topk.apply(changelog, batch_id)
+        # post-commit, outside the rollback scope: the manifest no longer
+        # references these, and a failure here must not rewind memory
+        # behind it
+        for p in cleanup:
+            shutil.rmtree(p, ignore_errors=True)
+        if self._topk is not None:
+            self._topk._gc()
         return changelog if emit_delta else None
 
     def _process_batch_inner(
@@ -1627,12 +1645,13 @@ class IncrementalAcyclicQuery:
         deltas: Mapping[str, DataFrame],
         batch_id: int | None,
         emit_delta: bool,
-    ) -> DataFrame | None:
+    ) -> tuple[DataFrame | None, list[str]]:
         """One batch as a pipeline of stages, each named after the profile
         phase it records: ingest → ttl → gate presence → term_build →
-        join_fold → commit wave → emit. Stages pass plain values; the
-        manifest write at the end is the batch's atomic commit point, and
-        superseded files are deleted only after it.
+        join_fold → commit wave → emit → topk. Stages pass plain values; the
+        manifest write at the end is the batch's atomic commit point for the
+        engine and its top-k alike. Returns the changelog and the superseded
+        paths, which the caller deletes only after that commit.
 
         The PRE-batch view of the touched groups is a lazy plan built before
         the wave, on the main thread: ``result`` resolves segment paths at
@@ -1650,7 +1669,7 @@ class IncrementalAcyclicQuery:
             if batch_id is not None:
                 self._last_batch = batch_id
                 self._commit_manifest()
-            return None
+            return None, []
         agg_delta, n_agg, hist_deltas, touched = self._join_fold(
             terms, filt, emit_delta
         )
@@ -1662,12 +1681,13 @@ class IncrementalAcyclicQuery:
         changelog = None
         if emit_delta:
             changelog = self._emit_changelog(touched, pre_plan, batch_id, cleanup)
+        if self._topk is not None:
+            with self._phase("topk"):
+                self._topk.apply(changelog)
         if batch_id is not None:
             self._last_batch = batch_id
         self._commit_manifest()  # atomic commit point; cleanup is post-commit
-        for p in cleanup:
-            shutil.rmtree(p, ignore_errors=True)
-        return changelog
+        return changelog, cleanup
 
     def _ingest(
         self, deltas: Mapping[str, DataFrame]
@@ -2286,27 +2306,17 @@ class IncrementalAcyclicQuery:
         candidate state ranked per group."""
         if self._topk is None:
             raise ValueError("spec has no top_k")
-        from .topk import GroupedTopKView
-
-        if isinstance(self._topk, GroupedTopKView):
-            return self._topk.result()
-        schema = self._topk._schema
-        if schema is None:
-            schema = self.result().schema
-        rows = [
-            tuple(r[f.name] for f in schema.fields)
-            for r in self._topk.result_rows()
-        ]
-        return self.spark.createDataFrame(rows, schema)
+        return self._topk.result()
 
     def topk_delta(self) -> DataFrame | None:
-        """The last committed batch's changelog OF THE TOP-K VIEW itself
-        (global top_k): ±1 weighted entries/exits, read back from the top-k
-        structure's own manifest — the exactly-once feed for an ordered
-        continuous sink (a crash-replayed batch reads the SAME rows)."""
-        if self._topk is None:
+        """The last committed batch's changelog OF THE TOP-K VIEW itself:
+        ±1 weighted entries/exits, committed inside this engine's manifest —
+        the exactly-once feed for an ordered continuous sink (a
+        crash-replayed batch reads the SAME rows)."""
+        t = self.spec.top_k
+        if t is None:
             raise ValueError("spec has no top_k")
-        if getattr(self._topk, "emit", True) is False:
+        if t.partition_by and not t.emit_changelog:
             raise ValueError(
                 "grouped top_k emits its changelog only when "
                 "TopKSpec(emit_changelog=True) — it costs two extra ranks "

@@ -36,20 +36,21 @@ plans/streaming_plans.py keeps that form as the documented baseline, the
 
 At 100 TB: the changelog filters are broadcast-size literals (≤ buffer
 rows), the refill is the only O(groups) touch and is rate-bounded by actual
-top-region churn, and the buffer itself is O(k) driver memory. Restart
-recovery: the buffer, the boundary and the batch's emitted changelog live
-INSIDE ``<state_dir>/MANIFEST.json`` (typed JSON, one atomic ``os.replace``
-per commit — the O(k) operator-state snapshot at the batch barrier), and
-``resume=True`` reattaches with no view scan and no Spark job, with
-exactly-once replay semantics for downstream sinks (the buffer is also a
-pure function of the live view, so one ``refill()`` against the engine's
-committed state can always rebuild it). ``GroupedTopKView`` keeps its
-O(groups) candidate state Spark-side in 8 fixed hash shards behind the same
-manifest protocol.
+top-region churn, and the buffer itself is O(k) driver memory.
+``GroupedTopKView`` keeps its O(groups) candidate state Spark-side in 8
+fixed hash shards of versioned parquet dirs.
 
-Declaring ``AcyclicQuerySpec.top_k`` (TopKSpec, streaming/acyclic.py) wires
-either view into the engine itself — construction, feeding, durability,
-and crash-replay catch-up all handled at the spec level.
+Neither view commits anything itself. Each exposes its whole state as
+JSON-safe values through ``state()``/``load()``: ``TopKView``'s typed-JSON
+buffer, boundary and emitted rows, ``GroupedTopKView``'s shard maps and
+emitted dir. Declaring ``AcyclicQuerySpec.top_k`` (TopKSpec,
+streaming/acyclic.py) hands that state to the engine, which folds each
+batch into the view before its own atomic manifest commit and records the
+view's state inside it: one commit point per engine, the operator-state
+snapshot at the batch barrier. A failed batch restores the engine and the
+view together, a resumed engine reloads both with no view scan, and a
+crash-replayed batch is skipped by the engine, whose ``topk_delta()`` hands
+a downstream sink the committed changelog again.
 
 NULL order values never enter the buffer (SQL ORDER BY with the DuckDB/ANSI
 default NULLS LAST semantics for a LIMIT that the non-NULL rows satisfy).
@@ -93,43 +94,13 @@ def _run_parallel(thunks: list) -> list:
     return [f.result() for f in futures]
 
 
-def _publish_manifest(manifest_path: str, data: dict, adopt=None, gc=None) -> None:
-    """The ONE staged-commit protocol both views (and the engine) rely on,
-    extracted so the replay-safety invariants live in a single place — the
-    round-8 retry bugs each lived in a hand-maintained copy of this exact
-    sequence:
-
-    1. every data file the manifest references is FULLY WRITTEN before this
-       is called (the caller's responsibility; TopKView's manifest holds
-       its O(k) rows itself and references no file);
-    2. the manifest is staged to ``.tmp`` and swapped in with one atomic
-       ``os.replace`` — the commit point;
-    3. only AFTER the replace does ``adopt()`` swap the staged values into
-       the in-memory fields — a failure before step 2 therefore leaves the
-       instance still resolving against the last committed state, so an
-       in-process retry re-applies the batch instead of replay-skipping to
-       a version the manifest never adopted;
-    4. ``gc()`` removes superseded files LAST — a failure here (or in
-       adopt) is post-adoption, i.e. crash-equivalent: resume re-reads the
-       committed manifest and re-runs the GC.
-    """
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(data, fh)
-    os.replace(tmp, manifest_path)
-    if adopt is not None:
-        adopt()
-    if gc is not None:
-        gc()
-
-
 def _dump_value(v) -> list:
     """JSON-safe (tag, value) encoding of one manifest value (a watermark, a
     top-k buffer cell). date/datetime/Decimal keep their exact type across
     the round-trip: fromisoformat would silently widen a date string to
     datetime, a naive timestamp stays naive, and a Decimal is not
     JSON-serializable raw. Any other non-JSON type raises ``TypeError`` —
-    while the manifest is still being built, before its ``os.replace``."""
+    while the manifest is still being built, before its replace."""
     if isinstance(v, datetime):
         return ["dt", v.isoformat(sep=" ")]
     if isinstance(v, date):
@@ -193,10 +164,9 @@ def _norm_order(order_by) -> tuple[tuple[str, bool], ...]:
 
 class _OrderedView:
     """What both views share: the TOTAL order — the ORDER BY columns, then
-    the ascending unique-key tiebreak — as Spark expressions, and the
-    fresh-or-resume attach to ``state_dir`` behind its ``MANIFEST.json``."""
+    the ascending unique-key tiebreak — as Spark expressions."""
 
-    def __init__(self, k, order_col, key_cols, refill, state_dir, spark, slack):
+    def __init__(self, k, order_col, key_cols, refill, spark, slack):
         if k < 1:
             raise ValueError("k must be >= 1")
         self.k = k
@@ -206,33 +176,12 @@ class _OrderedView:
         self.key_cols = tuple(key_cols)
         self.slack = k if slack is None else slack
         self._refill_fn = refill
-        self.state_dir = state_dir
         self._spark = spark
         self._schema = None  # StructType of view rows, pinned at first use
-        self._version = 0
-        self._last_batch: int | None = None
 
-    def _attach(self, resume: bool) -> bool:
-        """Reattach to the committed manifest (``resume`` and one exists) and
-        return True; otherwise start ``state_dir`` empty and return False."""
-        if resume and os.path.exists(self._manifest_path()):
-            self._load_manifest()
-            return True
-        if os.path.exists(self.state_dir):
-            shutil.rmtree(self.state_dir)
-        os.makedirs(self.state_dir)
-        return False
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.state_dir, "MANIFEST.json")
-
-    def _replayed(self, batch_id: int | None) -> bool:
-        """A crash-replayed batch: at or before the last committed one."""
-        return (
-            batch_id is not None
-            and self._last_batch is not None
-            and batch_id <= self._last_batch
-        )
+    def _gc(self) -> None:
+        """Delete files no recorded ``state()`` references — a view whose
+        state is all in ``state()`` keeps none."""
 
     def _emitted_schema(self):
         """Schema of the emitted top-k changelog: the view's columns plus an
@@ -291,28 +240,23 @@ class TopKView(_OrderedView):
                      ascending tiebreak, mirroring ``ORDER BY v DESC, key``.
     ``refill``     — zero-arg callable returning the full current view as a
                      DataFrame (e.g. ``engine.result``); invoked only when
-                     retraction drains the buffer below k, and at start when
-                     ``prime``.
-    ``state_dir``  — DURABILITY root: after every batch the buffer, the
-                     boundary and the batch's emitted top-k changelog are
-                     written INTO ``MANIFEST.json`` (rows as typed-JSON
-                     lists in schema order) and published by one atomic
-                     ``os.replace`` — the whole commit, O(k) rows, no Spark
-                     job. ``resume=True`` reattaches with no refill, and a
-                     crash-REPLAYED batch (``batch_id`` ≤ last committed)
-                     is skipped, returning the PERSISTED changelog — the
-                     exactly-once contract an emission sink composes with.
-    ``spark``      — the session ``emitted_df`` builds its frame in.
+                     retraction drains the buffer below k, or by an explicit
+                     ``refill()``.
+    ``spark``      — the session ``emitted_df``/``result`` build frames in.
     ``slack``      — extra buffered rows beyond k (default k): each refill
                      then survives at least ``slack`` top-region deletions.
-    ``prime``      — whether to refill from the view at construction (the
-                     engine primes when a resumed state dir has live state
-                     but no top-k manifest). ``True`` (default) attaches to
-                     an EXISTING view; ``False`` starts a FRESH stream: the
-                     empty buffer with no boundary is exactly "complete over
-                     the empty view", so the first batches build the buffer
-                     from the changelog alone without ever scanning state.
-                     Ignored when ``resume`` finds a committed manifest.
+
+    A new view starts FRESH: the empty buffer with no boundary is exactly
+    "complete over the empty view", so the first batches build the buffer
+    from the changelog alone without ever scanning state. To attach to an
+    EXISTING view, call ``refill()`` once before the first batch.
+
+    The whole state is O(k) driver memory; ``state()`` encodes it as typed
+    JSON — the buffer, the boundary, and the last batch's emitted top-k
+    changelog, rows as lists in schema order — and ``load()`` restores it.
+    The engine records it inside its own manifest (``TopKSpec``), so the
+    top-k commits in the engine's one manifest replace, with no Spark job,
+    and a resumed engine reloads it with no refill.
     """
 
     def __init__(
@@ -321,13 +265,10 @@ class TopKView(_OrderedView):
         order_col: str,
         key_cols: tuple[str, ...],
         refill: Callable[[], DataFrame],
-        state_dir: str,
         spark,
         slack: int | None = None,
-        prime: bool = True,
-        resume: bool = False,
     ):
-        super().__init__(k, order_col, key_cols, refill, state_dir, spark, slack)
+        super().__init__(k, order_col, key_cols, refill, spark, slack)
         # key tuple -> full row dict; bounded by k + 2*slack between trims
         self._buffer: dict[tuple, dict] = {}
         # sort key of the worst row retained at the last refill/trim;
@@ -339,21 +280,8 @@ class TopKView(_OrderedView):
         # measures this ≪ touched groups)
         self.applied_rows = 0
         self.applied_rows_total = 0
-        self._emitted_batch: int | None = None
-        self._emitted_rows: list[dict] = []
-        if self._attach(resume):
-            return  # committed buffer restored — no refill, no re-prime
-        if prime:
-            self.refill()
-        # commit an INITIAL manifest even before the first batch: an
-        # unprimed fresh stream persists "empty buffer, no boundary" =
-        # complete-over-empty, so a restart DURING batch 0 (engine
-        # committed, top-k not yet) resumes here and the replayed
-        # batch-0 changelog rebuilds the buffer AND emits the true
-        # delta — where a manifest-less dir would re-prime from the
-        # already-updated view and persist an EMPTY batch-0 delta, a
-        # permanently lost first emission for an exactly-once sink.
-        self._persist(None, None)
+        # the last apply()'s top-k changelog; None before the first
+        self._emitted: list[dict] | None = None
 
     # --- total order ---------------------------------------------------------
     def _key(self, row: dict) -> tuple:
@@ -388,85 +316,58 @@ class TopKView(_OrderedView):
             rows.sort(key=lambda r, _c=c: r[_c], reverse=desc)
         return rows
 
-    # --- durability: the O(k) state inside one atomic manifest ---------------
+    # --- state: the O(k) buffer as typed JSON -------------------------------
     def _pin_schema(self, template: DataFrame) -> None:
         if self._schema is None:
             self._schema = template.schema
 
-    def _persist(self, out: list[dict] | None, batch_id: int | None) -> None:
-        """Commit the post-batch buffer/boundary (and the batch's emitted
-        top-k changelog) as ONE manifest replace. Every value is encoded
-        here, before ``_publish_manifest`` writes anything, so an
-        unencodable value fails the commit pre-replace and ``apply`` rolls
-        the fold back. The schema is stored once; rows are lists in its
-        field order."""
+    def state(self) -> dict:
+        """The view's whole state as JSON-safe values: the schema (None
+        before the first batch), the buffer, the boundary and the last
+        batch's emitted changelog, rows as typed-JSON lists in schema
+        order. A value the codec cannot encode raises ``TypeError``."""
         names = self._schema.fieldNames() if self._schema is not None else []
-        emitted_batch = batch_id if out is not None and batch_id is not None else None
-        emitted = out if emitted_batch is not None else []
-        v = self._version + 1
-        last_batch = batch_id if batch_id is not None else self._last_batch
-        data = {
-            "version": v,
-            "last_batch": last_batch,
-            "emitted_batch": emitted_batch,
-            # None until the first refill/apply pins it (the pre-first-batch
-            # initial commit): empty buffer, no boundary
-            "schema": json.loads(self._schema.json())
-            if self._schema is not None
-            else None,
-            "buffer": [[_dump_value(r[c]) for c in names] for r in self._buffer.values()],
+
+        def rows(rs, cols):
+            return [[_dump_value(r[c]) for c in cols] for r in rs]
+
+        return {
+            "schema": None if self._schema is None else json.loads(self._schema.json()),
+            "buffer": rows(self._buffer.values(), names),
             "boundary": None
             if self._boundary is None
             else [[_dump_value(x) for x in part] for part in self._boundary],
-            "emitted": [[_dump_value(r[c]) for c in (*names, WEIGHT)] for r in emitted],
+            "emitted": None if self._emitted is None else rows(self._emitted, [*names, WEIGHT]),
         }
 
-        def adopt():
-            # staged fields swap in only post-replace (_publish_manifest's
-            # contract): a failed commit leaves self on the last committed
-            # state, so an in-process retry re-applies the batch instead of
-            # replay-skipping to an unadopted version
-            self._version = v
-            self._last_batch = last_batch
-            self._emitted_batch = emitted_batch
-            self._emitted_rows = emitted
-
-        _publish_manifest(self._manifest_path(), data, adopt)
-
-    def _load_manifest(self) -> None:
+    def load(self, data: dict) -> None:
+        """Restore a ``state()``."""
         from pyspark.sql.types import StructType
 
-        with open(self._manifest_path()) as fh:
-            data = json.load(fh)
-        self._version = data["version"]
-        self._last_batch = data["last_batch"]
-        self._emitted_batch = data["emitted_batch"]
-        if data["schema"] is None:
-            # pre-first-batch initial commit: complete over the empty view
-            return
-        self._schema = StructType.fromJson(data["schema"])
-        names = self._schema.fieldNames()
+        self._schema = None if data["schema"] is None else StructType.fromJson(data["schema"])
+        names = self._schema.fieldNames() if self._schema is not None else []
 
         def rows(lists, cols):
             return [dict(zip(cols, map(_load_value, r))) for r in lists]
 
         self._buffer = {self._key(r): r for r in rows(data["buffer"], names)}
-        if data["boundary"] is not None:
-            self._boundary = tuple(
-                tuple(map(_load_value, part)) for part in data["boundary"]
-            )
-        self._emitted_rows = rows(data["emitted"], [*names, WEIGHT])
+        self._boundary = (
+            None
+            if data["boundary"] is None
+            else tuple(tuple(map(_load_value, part)) for part in data["boundary"])
+        )
+        self._emitted = None if data["emitted"] is None else rows(data["emitted"], [*names, WEIGHT])
 
     def emitted_df(self) -> DataFrame | None:
-        """The last committed batch's emitted top-k changelog as a DataFrame
-        — the exactly-once feed for a downstream sink: a crash-replayed
-        batch gets the SAME rows. Built from the manifest-held rows, so it
+        """The last batch's emitted top-k changelog as a DataFrame — after a
+        resume, the committed batch's rows, so a crash-replayed batch hands
+        a downstream sink the SAME rows. Built from driver-held rows, so it
         launches no job."""
-        if self._emitted_batch is None:
+        if self._emitted is None:
             return None
         schema = self._emitted_schema()
         return self._spark.createDataFrame(
-            [tuple(r[c] for c in schema.fieldNames()) for r in self._emitted_rows],
+            [tuple(r[c] for c in schema.fieldNames()) for r in self._emitted],
             schema,
         )
 
@@ -510,7 +411,7 @@ class TopKView(_OrderedView):
         (retractions of buffered keys always pass) and admission itself is
         at-or-before B.
 
-        WITHOUT one (fresh prime=False stream, or a view small enough that
+        WITHOUT one (a fresh stream, or a view small enough that
         the buffer is complete), a naive collect of the whole changelog is
         unbounded on a large first batch — instead:
 
@@ -582,9 +483,7 @@ class TopKView(_OrderedView):
         ]
         return rows
 
-    def apply(
-        self, changelog: DataFrame | None, batch_id: int | None = None
-    ) -> list[dict] | None:
+    def apply(self, changelog: DataFrame | None) -> list[dict] | None:
         """Fold one batch's emit_delta changelog into the buffer: retractions
         first (a group's update arrives as −pre/+post on the same key), then
         admissions at-or-before the boundary; refill only if the buffer
@@ -598,39 +497,13 @@ class TopKView(_OrderedView):
         the same composition hook the engine's emit_delta provides, so a
         maintained top-k TABLE can sit at the end of a chain.
 
-        With ``batch_id``, a replayed batch (≤ last committed) is
-        not re-applied — the PERSISTED changelog of that batch is returned
-        instead (no Spark job), so a downstream sink's overwrite lands the
-        same rows."""
+        The fold mutates the buffer in place; an owner that commits it with
+        other state (the engine) restores its pre-batch ``state()`` when the
+        batch fails, so a retry folds against the committed buffer and
+        emits the true delta, not an idempotent empty one."""
         if changelog is None:
             return None
-        if self._replayed(batch_id):
-            if self._emitted_batch == batch_id:
-                return [dict(r) for r in self._emitted_rows]
-            return None
         self._pin_schema(changelog.drop(WEIGHT))
-        # committed snapshot for commit-failure rollback: the
-        # fold below mutates the buffer BEFORE _persist, so if the manifest
-        # replace fails the in-memory state must return to the committed
-        # batch — otherwise an in-process retry re-folds idempotently
-        # (pre == post) and persists an EMPTY emitted delta, losing the
-        # batch's emission for an exactly-once sink. O(k) rows to copy.
-        # _version anchors the rollback to the commit point: _persist can
-        # also raise AFTER the manifest os.replace adopted the new version
-        # (a KeyboardInterrupt in the adopt tail) — in that window the
-        # commit is real and restoring the pre-batch buffer would leave
-        # memory one batch BEHIND the manifest, folding the next batch
-        # against stale candidates. The per-batch transfer counters
-        # (applied_rows*) snapshot too, so a retried batch doesn't
-        # double-count the driver-transfer evidence the tools report.
-        snap = (
-            dict(self._buffer),
-            self._boundary,
-            self.refills,
-            self.applied_rows,
-            self.applied_rows_total,
-            self._version,
-        )
         pre = {self._skey(r): r for r in self.result_rows()}
         rows = self._collect_touching(changelog)
         self.applied_rows = len(rows)
@@ -650,32 +523,22 @@ class TopKView(_OrderedView):
         post = {self._skey(r): r for r in self.result_rows()}
         out = [{**pre[s], WEIGHT: -1} for s in pre if s not in post]
         out += [{**post[s], WEIGHT: 1} for s in post if s not in pre]
-        try:
-            self._persist(out, batch_id)
-        except BaseException:
-            # roll the fold back to the committed batch (see `snap`): a
-            # retry then re-applies against committed state and emits
-            # the true delta instead of an idempotent empty one. BUT
-            # only while the commit was NOT adopted — _version moved ⇒
-            # the manifest replace succeeded and the exception came from
-            # the post-adoption tail; the fold must stand or memory falls
-            # one batch behind the durable state.
-            if self._version == snap[5]:
-                (
-                    self._buffer,
-                    self._boundary,
-                    self.refills,
-                    self.applied_rows,
-                    self.applied_rows_total,
-                    _,
-                ) = snap
-            raise
+        self._emitted = out
         return out
 
     # --- emission ------------------------------------------------------------
     def result_rows(self) -> list[dict]:
         """The exact top-k under (order value, ascending key tiebreak)."""
         return self._ranked()[: self.k]
+
+    def result(self) -> DataFrame:
+        """The exact top-k as a DataFrame of the view's schema — O(k) rows
+        from the buffer. Before the first batch the schema is the refill
+        view's."""
+        schema = self._schema if self._schema is not None else self._refill_fn().schema
+        return self._spark.createDataFrame(
+            [tuple(r[c] for c in schema.fieldNames()) for r in self.result_rows()], schema
+        )
 
 
 class GroupedTopKView(_OrderedView):
@@ -709,19 +572,20 @@ class GroupedTopKView(_OrderedView):
     ``BUCKETS`` = 8 partitions (the engine's ``_bucket`` discipline, same
     ``_bucket_expr``; the count never grows), the changelog's bucket ids
     restrict every state read to those shards, and untouched shards' files
-    carry forward in the manifest as-is — per-batch cost is O(Δ ⋈
-    touched-bucket candidates), not O(all candidates), and candidates are
-    themselves a (k+slack)/members reduction of the view. Emission ranks
-    candidates per group — O(candidates), never O(view).
+    carry forward as-is — per-batch cost is O(Δ ⋈ touched-bucket
+    candidates), not O(all candidates), and candidates are themselves a
+    (k+slack)/members reduction of the view. Emission ranks candidates per
+    group — O(candidates), never O(view).
 
-    DURABILITY (``state_dir``): candidate/boundary shards are versioned
-    parquet directories published by an atomic manifest (os.replace), the
-    same discipline as the engine's state — a crash or executor loss at ANY
-    point leaves the last committed state readable, and ``resume=True``
-    reattaches WITHOUT the O(view) ``prime()`` re-rank that the previous
-    localCheckpoint (non-replicated storage) design forced. Replayed
-    batches (``batch_id`` ≤ last committed) are skipped — idempotent under
-    foreachBatch crash-replay redelivery.
+    STATE (``state_dir``): each batch writes the touched shards as new
+    versioned parquet directories under ``state_dir`` and points the
+    shard maps at them; ``state()`` is those maps, the emitted dir, the
+    schemas and the dir version — small JSON, no rows. The engine records
+    it inside its own manifest (``TopKSpec``), so a crash or executor loss
+    at ANY point leaves the last committed shards readable, and a resumed
+    engine reattaches with no re-rank of the view. ``_gc`` deletes the
+    dirs no recorded state references; the engine runs it after its
+    manifest commit and on resume.
 
     NULL order values never enter candidates (SQL NULLS LAST for a LIMIT
     the non-NULL rows satisfy). The structure is a pure function of the
@@ -740,42 +604,34 @@ class GroupedTopKView(_OrderedView):
         state_dir: str,
         spark,
         slack: int | None = None,
-        resume: bool = False,
         emit: bool = False,
     ):
         # refill: Callable[[DataFrame | None], DataFrame] — the full view,
         # optionally restricted to the given group-key rows
         # (IncrementalAcyclicQuery.result's touched semantics)
-        super().__init__(k, order_col, key_cols, refill, state_dir, spark, slack)
+        super().__init__(k, order_col, key_cols, refill, spark, slack)
         if not group_cols or not key_cols:
             raise ValueError("group_cols and key_cols must be non-empty")
         if set(group_cols) & set(key_cols):
             raise ValueError("group_cols and key_cols must be disjoint")
         self.group_cols = tuple(group_cols)
+        self.state_dir = state_dir
+        self._version = 0  # last written shard-dir version
         self._bschema = None  # StructType of boundary rows
         self._cand_map: dict[str, str] = {}  # bucket id -> live leaf dir
         self._bound_map: dict[str, str] = {}
         # emit=True: apply() additionally returns the PER-GROUP TOP-K view's
         # own netted ±changelog (entries/exits across touched groups) — the
         # same composition hook TopKView provides, Spark-side: two ranks
-        # over the touched shards and an O(touched top-k) net. Persisted, so
-        # replay redelivers the same rows (sink contract).
+        # over the touched shards and an O(touched top-k) net. Written to a
+        # dir ``state()`` names, so replay redelivers the same rows.
         self.emit = emit
-        # {"batch": id, "path": parquet dir} of the last emitted top-k
-        # delta — an explicit manifest-held path
-        self._emitted: dict | None = None
+        self._emitted: str | None = None  # parquet dir of the last emitted delta
         # observability: tools assert the touched-restriction cost model
         self.instrument = False
         self.last_touched_buckets = 0
         self.last_read_rows = 0
         self.last_plan = ""  # physical plan of the last batch's candidate rebuild
-        if not self._attach(resume):
-            # initial empty commit (see TopKView.__init__): a restart
-            # during batch 0 must resume to "complete over the empty
-            # view" and rebuild from the replayed changelog — not
-            # re-prime from the already-updated view and emit an empty
-            # first delta into an exactly-once sink
-            self._write_manifest()
 
     # --- internals -----------------------------------------------------------
     def _rank(self, df: DataFrame) -> DataFrame:
@@ -831,50 +687,43 @@ class GroupedTopKView(_OrderedView):
     def _read_bound(self, buckets=None) -> DataFrame:
         return self._read(self._bound_map, self._bschema, buckets)
 
-    # --- manifest (atomic commit point) --------------------------------------
-    def _write_manifest(self, adopt=None, gc=None, **staged) -> None:
-        """``staged`` overrides let ``_commit`` publish values it has NOT yet
-        swapped into ``self`` — in-memory fields must only move to the new
-        state after the os.replace succeeds, which is exactly
-        ``_publish_manifest``'s adopt-after-replace contract (shared with
-        TopKView._persist)."""
-        data = {
+    # --- state: shard maps, schemas, dir version -----------------------------
+    def state(self) -> dict:
+        """The view's state as JSON-safe values: the live shard dir per
+        bucket of the candidate and boundary maps, the emitted dir, both
+        schemas (None before the first batch) and the dir version."""
+        return {
             "version": self._version,
-            "last_batch": self._last_batch,
-            "cand": self._cand_map,
-            "bound": self._bound_map,
+            "cand": dict(self._cand_map),
+            "bound": dict(self._bound_map),
             "emitted": self._emitted,
-            "schema": json.loads(self._schema.json()) if self._schema else None,
-            "bschema": json.loads(self._bschema.json()) if self._bschema else None,
+            "schema": None if self._schema is None else json.loads(self._schema.json()),
+            "bschema": None if self._bschema is None else json.loads(self._bschema.json()),
         }
-        data.update(staged)
-        _publish_manifest(self._manifest_path(), data, adopt, gc)
 
-    def _load_manifest(self) -> None:
+    def load(self, data: dict) -> None:
+        """Restore a ``state()``."""
         from pyspark.sql.types import StructType
 
-        with open(self._manifest_path()) as fh:
-            data = json.load(fh)
         self._version = data["version"]
-        self._last_batch = data["last_batch"]
-        self._cand_map = data["cand"]
-        self._bound_map = data["bound"]
-        self._emitted = data.get("emitted")
-        if data["schema"] is not None:
-            self._schema = StructType.fromJson(data["schema"])
-            self._bschema = StructType.fromJson(data["bschema"])
-        self._gc()  # partial writes of a crashed batch
+        self._cand_map = dict(data["cand"])
+        self._bound_map = dict(data["bound"])
+        self._emitted = data["emitted"]
+        self._schema = None if data["schema"] is None else StructType.fromJson(data["schema"])
+        self._bschema = None if data["bschema"] is None else StructType.fromJson(data["bschema"])
 
     def _gc(self) -> None:
+        """Delete the version dirs under ``state_dir`` that the current
+        maps do not reference: superseded shards, and partial writes of a
+        failed batch. Safe once the state naming these maps is recorded."""
+        if not os.path.isdir(self.state_dir):
+            return
         live = {
             os.path.dirname(p)
             for p in (*self._cand_map.values(), *self._bound_map.values())
         }
-        if self._emitted is not None:
-            live.add(self._emitted["path"])
+        live.add(self._emitted)
         for entry in os.listdir(self.state_dir):
-            if not entry.startswith(("cand_v", "bound_v", "emit_v")):
-                continue
             full = os.path.join(self.state_dir, entry)
             if full not in live:
                 shutil.rmtree(full, ignore_errors=True)
@@ -902,29 +751,22 @@ class GroupedTopKView(_OrderedView):
         cand: DataFrame,
         bound: DataFrame,
         touched: list[int],
-        batch_id,
         pre_topk: DataFrame | None = None,
     ) -> DataFrame | None:
-        """Publish the post-batch state of the TOUCHED shards; untouched
-        shards' files carry forward untouched. Commit = versioned parquet
-        writes, then ONE atomic manifest replace — every referenced path is
-        fully written first, superseded dirs are GC'd after (two-phase, the
-        engine's discipline). With ``emit`` (pre_topk given), the top-k
-        view's netted ±changelog is computed from the post-batch candidate
-        frame (no recompute of the candidate plan), persisted inside the
-        same commit, and returned."""
+        """Write the post-batch state of the TOUCHED shards as the next
+        version's parquet dirs and point the shard maps at them; untouched
+        shards' files carry forward. Nothing is deleted here: the owner
+        records ``state()`` and then runs ``_gc``. If the batch fails, the
+        owner restores its pre-batch ``state()`` — the version included —
+        so the retry overwrites the same dirs, which no recorded state
+        references. With ``emit`` (pre_topk given), the top-k view's netted
+        ±changelog is computed from the post-batch candidate frame (no
+        recompute of the candidate plan), written in the same wave, and
+        returned."""
         fields = [f.name for f in self._schema.fields]
         cand = cand.select(*fields)
-        # version bumps BEFORE any write: if this commit fails mid-way, a
-        # same-instance retry writes v+1 and can never overwrite a dir the
-        # (still-committed) live maps reference. All map/emitted/last_batch
-        # updates are STAGED into local copies and swapped into self only
-        # after the manifest os.replace succeeds — until then every read
-        # plan keeps resolving against the last committed state.
         v = self._version = self._version + 1
         n = max(len(touched), 1)
-        cand_map = dict(self._cand_map)
-        bound_map = dict(self._bound_map)
         # the candidate write, the boundary write, AND the emitted-changelog
         # write are mutually independent actions into distinct paths — the
         # emit delta ranks the in-memory candidate frame (see below) against
@@ -954,7 +796,7 @@ class GroupedTopKView(_OrderedView):
             # same rows with no plan recompute — the former read-back of the
             # written files paid a listing job plus a disk scan AND had to
             # wait for the shard writes to finish. Pre reads the superseded
-            # files, still on disk until the post-manifest GC.
+            # files, still on disk until the post-commit GC.
             # r12: no coalesce(1) — it merged the whole rank/net plan into
             # ONE task; AQE already coalesces the delta's post-aggregate
             # partitions without serializing the upstream computation at
@@ -969,7 +811,7 @@ class GroupedTopKView(_OrderedView):
             delta.write.mode("overwrite").parquet(epath)
             return epath
 
-        targets = ((cand, f"cand_v{v}", cand_map), (bound, f"bound_v{v}", bound_map))
+        targets = ((cand, f"cand_v{v}", self._cand_map), (bound, f"bound_v{v}", self._bound_map))
         thunks = [lambda df=df, name=name: _write_shards(df, name) for df, name, _ in targets]
         if pre_topk is not None:
             thunks.append(_write_emit)
@@ -986,36 +828,17 @@ class GroupedTopKView(_OrderedView):
                     mp[sb] = os.path.join(path, f"{BUCKET}={sb}")
                 else:
                     mp.pop(sb, None)
-        last_batch = batch_id if batch_id is not None else self._last_batch
-        emitted = self._emitted
-        if pre_topk is not None:
-            emitted = {"batch": batch_id, "path": epath}
-        def adopt():
-            # committed: NOW swap the staged state in (_publish_manifest
-            # runs this only after the os.replace succeeded)
-            self._cand_map, self._bound_map = cand_map, bound_map
-            self._last_batch, self._emitted = last_batch, emitted
-
-        self._write_manifest(
-            adopt=adopt,
-            gc=self._gc,
-            last_batch=last_batch,
-            cand=cand_map,
-            bound=bound_map,
-            emitted=emitted,
-        )
         if pre_topk is None:
             return None
-        # the emitted dir is manifest-held (self._emitted after adopt), so
-        # the GC above preserved it. The live return is the replay frame
-        # itself — the read-back of the emit dir just written, no in-memory
-        # handoff.
+        # the live return is the replay frame itself — the read-back of the
+        # emit dir just written, no in-memory handoff
+        self._emitted = epath
         return self.emitted_df()
 
     def prime(self) -> None:
-        """(Re)build candidates from the full view — initial attach to an
-        existing view. A restart resumes via ``resume=True`` instead (no
-        view scan)."""
+        """(Re)build candidates from the full view — the attach of a new
+        view to an existing one. A resumed engine reloads its committed
+        ``state()`` instead (no view scan)."""
         view = self._refill_fn(None)
         self._pin_schemas(view)
         ranked = self._rank(self._non_null(view))
@@ -1023,7 +846,6 @@ class GroupedTopKView(_OrderedView):
             ranked.filter(F.col("_rn") <= self.k + self.slack).drop("_rn"),
             self._bound_of(ranked),
             list(range(self.BUCKETS)),
-            None,
         )
 
     # --- maintenance ---------------------------------------------------------
@@ -1068,25 +890,17 @@ class GroupedTopKView(_OrderedView):
         )
         return {flag for flag, v in (("d", gate["_d"]), ("o", gate["_o"])) if v}
 
-    def apply(self, changelog: DataFrame | None, batch_id: int | None = None) -> None:
+    def apply(self, changelog: DataFrame | None) -> DataFrame | None:
         """Fold one batch's emit_delta changelog into the sharded candidate
         state. Only the shards the changelog's groups hash into are read and
-        rewritten. ``batch_id`` (optional) makes crash-replay redelivery a
-        no-op once the manifest committed that batch.
+        rewritten.
 
         With ``emit=True`` returns the PER-GROUP TOP-K view's own netted
         ±changelog for this batch (entries/exits/value-updates across the
-        touched groups) — persisted, so a replayed batch
-        returns the SAME rows (the exactly-once sink contract)."""
+        touched groups), read back from a dir ``state()`` names — so after
+        a resume ``emitted_df()`` hands a replayed batch the SAME rows (the
+        exactly-once sink contract)."""
         if changelog is None:
-            return None
-        if self._replayed(batch_id):
-            if (
-                self.emit
-                and self._emitted is not None
-                and self._emitted["batch"] == batch_id
-            ):
-                return self.emitted_df()
             return None
         self._pin_schemas(changelog.drop(WEIGHT))
         gk = [*self.group_cols, *self.key_cols]
@@ -1103,7 +917,6 @@ class GroupedTopKView(_OrderedView):
                 self._empty(self._schema),
                 self._empty(self._bschema),
                 [],
-                batch_id,
                 pre_topk=self._empty(self._schema) if self.emit else None,
             )
         cand0 = self._read_cand(tb)
@@ -1210,20 +1023,18 @@ class GroupedTopKView(_OrderedView):
             # runs the branch once; steady-state no-hit batches keep the
             # already-checkpointed candidate frame and pay nothing (r12).
             cand = cand.localCheckpoint()
-        return self._commit(cand, bound, tb, batch_id, pre_topk=pre_topk)
+        return self._commit(cand, bound, tb, pre_topk=pre_topk)
 
     # --- emission ------------------------------------------------------------
     def emitted_df(self) -> DataFrame | None:
-        """The last committed batch's emitted per-group top-k changelog
-        (``emit=True``), read from the manifest-held path — so a
+        """The last batch's emitted per-group top-k changelog (``emit=True``),
+        read from the dir ``state()`` names — so after a resume a
         crash-replayed batch hands a downstream sink the SAME rows. The
         schema is pinned (candidate columns plus the int ``weight``
         ``_net_delta`` writes), which spares parquet schema inference."""
         if not self.emit or self._emitted is None:
             return None
-        return self._spark.read.schema(self._emitted_schema()).parquet(
-            self._emitted["path"]
-        )
+        return self._spark.read.schema(self._emitted_schema()).parquet(self._emitted)
 
     def result(self) -> DataFrame:
         """Exact per-group top-k: rank candidates only — never the view."""

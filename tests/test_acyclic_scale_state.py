@@ -669,7 +669,8 @@ def test_state_rows_tracking_and_resume(spark, tmp_path):
     assert resumed._state_rows["lineitem"] == true_rows
 
 
-# every field ``IncrementalAcyclicQuery._snapshot`` writes to the manifest
+# every field of the engine's manifest: what ``IncrementalAcyclicQuery.
+# _snapshot`` writes (the top-k's state included), and the spec's shape
 MANIFEST_KEYS = (
     "version",
     "segments",
@@ -679,6 +680,8 @@ MANIFEST_KEYS = (
     "emitted",
     "last_batch",
     "state_rows",
+    "topk",
+    "spec",
 )
 
 
@@ -700,11 +703,11 @@ def committed_manifest(spark, tmp_path_factory):
     return json.loads((sdir / "MANIFEST.json").read_text())
 
 
-def _resume_from(spark, tmp_path, data):
+def _resume_from(spark, tmp_path, data, spec=None):
     sdir = tmp_path / "state"
     sdir.mkdir()
     (sdir / "MANIFEST.json").write_text(json.dumps(data))
-    spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
+    spec = spec or _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
     return IncrementalAcyclicQuery(spark, str(sdir), spec, resume=True)
 
 
@@ -728,6 +731,39 @@ def test_resume_rejects_a_manifest_with_an_unknown_field(spark, tmp_path, commit
     it describes may not match the spec's fixed layout."""
     with pytest.raises(KeyError, match="buckets"):
         _resume_from(spark, tmp_path, {**committed_manifest, "buckets": {"lineitem": 8}})
+
+
+@pytest.mark.parametrize(
+    "li_extra",
+    [
+        {"buckets": 8, "bucket_key": ("l_key",)},
+        {"buckets": 4, "bucket_key": ("l_key",), "project": ("l_key", "l_qty")},
+    ],
+    ids=["buckets_4_to_8", "project_added"],
+)
+def test_resume_rejects_a_changed_relation_shape(spark, tmp_path, committed_manifest, li_extra):
+    """The manifest records the spec's structural shape, and resume compares
+    it. A state written with 4 lineitem buckets, resumed under 8, would hash
+    probe keys into 8 buckets against 4-bucket partitions and silently drop
+    join matches; it raises instead."""
+    with pytest.raises(ValueError, match="relations"):
+        _resume_from(spark, tmp_path, committed_manifest, _spec(li_extra=li_extra))
+
+
+def test_resume_rejects_a_top_k_the_state_was_written_without(spark, tmp_path, committed_manifest):
+    """A ``top_k`` added to an existing state dir has no committed top-k
+    state to resume (claiming a complete top-k over an empty buffer would
+    be wrong): the shape check refuses it instead of priming."""
+    import dataclasses
+
+    from flink_and_acyclic_schema_spark.streaming.acyclic import TopKSpec
+
+    spec = dataclasses.replace(
+        _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)}),
+        top_k=TopKSpec(k=2, order_by="qty"),
+    )
+    with pytest.raises(ValueError, match="top_k"):
+        _resume_from(spark, tmp_path, committed_manifest, spec)
 
 
 def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):

@@ -5,8 +5,9 @@ The continuous engine's batch pipeline is a sequence of stage methods
 function of ``streaming/acyclic.py`` or ``streaming/topk.py`` from growing
 back into a monolith, keeps ``streaming/`` free of environment-variable
 knobs, keeps every optional spec field and defaulted constructor
-parameter of the engine and the top-k views in use by some caller, and
-keeps every top-level name of ``streaming/`` referenced by one."""
+parameter of the engine and the top-k views in use by some caller, keeps
+every top-level name of ``streaming/`` referenced by one, and keeps the
+engine's manifest the only commit point in ``streaming/``."""
 
 from __future__ import annotations
 
@@ -118,6 +119,33 @@ def test_streaming_reads_no_environment_variables():
             ):
                 hits.append(f"{path.name}:{node.lineno}")
     assert not hits, f"environment reads in streaming/: {hits}"
+
+
+def test_only_the_engine_commits_a_manifest():
+    """One commit point per engine: no ``streaming/`` module but
+    ``acyclic.py`` names ``MANIFEST`` or calls ``os.replace``. A top-k
+    view's state commits inside the engine's manifest, never beside it,
+    so there is no window between two commits to bridge."""
+    hits = []
+    for path in sorted(STREAMING.glob("*.py")):
+        if path.name == "acyclic.py":
+            continue
+        src = path.read_text()
+        if "MANIFEST" in src:
+            hits.append(f"{path.name}: names MANIFEST")
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "replace"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name == "replace" for a in node.names)
+            ):
+                hits.append(f"{path.name}:{node.lineno}: os.replace")
+    assert not hits, f"commit points outside the engine manifest: {hits}"
 
 
 def _spec_fields(src: str) -> dict[str, list[tuple[str, bool]]]:

@@ -13,14 +13,14 @@ of arbitrary interleavings.
 
 Round 7 adds the durability/cost wall: bounded driver transfer under
 degenerate value ties and on the boundary-less first batch, at-or-equal
-boundary readmission, manifest-committed state for BOTH views (resume
-without re-prime, replay no-ops, the torn-manifest crash window,
-resume-after-every-batch hypothesis properties), touched-shard-restricted
-grouped rebuilds over fixed hash shards, the spec-level
-``AcyclicQuerySpec.top_k`` knob (including the crash window between the
-engine's and the top-k's commits), the exactly-once ordered-emission sink
-through a REAL Structured Streaming kill/restart, and the grouped view's
-own emitted changelog.
+boundary readmission, touched-shard-restricted grouped rebuilds over fixed
+hash shards, the spec-level ``AcyclicQuerySpec.top_k`` knob, the
+exactly-once ordered-emission sink through a REAL Structured Streaming
+kill/restart, and the grouped view's own emitted changelog. Both views'
+state commits inside the engine's one manifest: resume without re-prime,
+replay no-ops, a failure anywhere in the batch (the top-k fold included)
+rolling the engine and its top-k back together, the crash before the
+manifest replace, and resume-after-every-batch hypothesis properties.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -38,8 +39,9 @@ from flink_and_acyclic_schema_spark.streaming.acyclic import (
     AcyclicQuerySpec,
     IncrementalAcyclicQuery,
     RelSpec,
+    TopKSpec,
 )
-from flink_and_acyclic_schema_spark.streaming.topk import WEIGHT, TopKView
+from flink_and_acyclic_schema_spark.streaming.topk import WEIGHT, GroupedTopKView, TopKView
 
 ITEM_SCHEMA = "kid int, val int, weight int"
 
@@ -56,11 +58,7 @@ def _pair(spark, tmp_path, k=K, slack=SLACK):
     eng = IncrementalAcyclicQuery(
         spark, str(tmp_path / f"s{uuid.uuid4().hex[:8]}"), SPEC
     )
-    topk = TopKView(
-        k, "total", ("kid",), refill=eng.result,
-        state_dir=str(tmp_path / f"tk{uuid.uuid4().hex[:8]}"), spark=spark,
-        slack=slack, prime=False,
-    )
+    topk = TopKView(k, "total", ("kid",), refill=eng.result, spark=spark, slack=slack)
     return eng, topk
 
 
@@ -156,8 +154,8 @@ def test_topk_boundary_ties_stay_exact(spark, tmp_path):
 
 
 def test_topk_prime_attaches_to_existing_view(spark, tmp_path):
-    """prime=True bootstraps the buffer from a pre-existing maintained view
-    (restart recovery: the buffer is a pure function of the live view), and
+    """One ``refill()`` bootstraps a new view's buffer from a pre-existing
+    maintained view (the buffer is a pure function of the live view), and
     subsequent changelog batches keep it exact."""
     eng = IncrementalAcyclicQuery(
         spark, str(tmp_path / f"s{uuid.uuid4().hex[:8]}"), SPEC
@@ -166,10 +164,8 @@ def test_topk_prime_attaches_to_existing_view(spark, tmp_path):
     eng.process_batch(
         {"items": spark.createDataFrame(ops, ITEM_SCHEMA)}, batch_id=0
     )
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result,
-        state_dir=str(tmp_path / "tk"), spark=spark, slack=SLACK,
-    )
+    topk = TopKView(K, "total", ("kid",), refill=eng.result, spark=spark, slack=SLACK)
+    topk.refill()
     assert topk.refills == 1
     assert _got(topk) == _model_topk(ops)
     more = [(0, 80, -1), (9, 65, 1)]
@@ -203,8 +199,6 @@ def test_topk_property_prefix_closure(spark, tmp_path_factory, batched):
 
 
 # --- GroupedTopKView: per-group top-k under retraction -----------------------
-from flink_and_acyclic_schema_spark.streaming.topk import GroupedTopKView
-
 G_SCHEMA = "g int, kid int, val int, weight int"
 
 G_SPEC = AcyclicQuerySpec(
@@ -407,7 +401,7 @@ def test_topk_boundary_row_touched_but_unchanged_is_readmitted(spark, tmp_path):
 
 
 def test_topk_first_batch_collect_is_capped(spark, tmp_path):
-    """prime=False + a LARGE first batch: with no boundary yet the old code
+    """A fresh view + a LARGE first batch: with no boundary yet the old code
     collected the entire changelog; now insertions are seeded via a Spark-side
     orderBy/limit so the driver transfer is capped at k+2·slack+1 rows, and
     the trimmed buffer + boundary make the result exact anyway."""
@@ -434,10 +428,7 @@ def test_topk_composite_key_retraction_without_boundary(spark, tmp_path):
         measures={"total": lambda: F.col("val")},
     )
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), spec)
-    topk = TopKView(
-        3, "total", ("g", "kid"), refill=eng.result,
-        state_dir=str(tmp_path / "tk"), spark=spark, slack=2, prime=False,
-    )
+    topk = TopKView(3, "total", ("g", "kid"), refill=eng.result, spark=spark, slack=2)
     # 6 live rows < k+2*slack+1 = 8: the buffer stays COMPLETE (boundary
     # None), so batch 1 exercises exactly the semi-join retraction path
     ops = [(g, i, 10 * (3 - i) + g, 1) for g in range(2) for i in range(3)]
@@ -487,19 +478,18 @@ def test_topk_multi_key_order_by_exact_under_churn(spark, tmp_path):
     """Round 8: ORDER BY over MULTIPLE columns with per-column direction —
     ``total DESC, d ASC`` — ties on the first key resolved by the second
     BEFORE the unique-key tiebreak, through trim, boundary pushdown,
-    admission, retraction-promotion, and the durable manifest round-trip."""
+    admission, retraction-promotion, and the typed-JSON state round-trip."""
+    import json
+
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), MK_SPEC)
-    sdir = str(tmp_path / "tk")
-    topk = TopKView(
-        3,
-        (("total", "desc"), ("d", "asc")),
-        ("kid",),
-        refill=eng.result,
-        slack=1,
-        prime=False,
-        state_dir=sdir,
-        spark=spark,
-    )
+
+    def mk():
+        return TopKView(
+            3, (("total", "desc"), ("d", "asc")), ("kid",), refill=eng.result,
+            spark=spark, slack=1,
+        )
+
+    topk = mk()
     # three-way tie on total=50 ordered by d; 8 rows > k+2*slack=5 -> trim
     # fires, so the persisted boundary carries BOTH order values
     ops0 = [
@@ -510,7 +500,7 @@ def test_topk_multi_key_order_by_exact_under_churn(spark, tmp_path):
         {"items": spark.createDataFrame(ops0, MK_SCHEMA)}, batch_id=0,
         emit_delta=True,
     )
-    topk.apply(d0, batch_id=0)
+    topk.apply(d0)
     got = [(r["kid"], r["d"], r["total"]) for r in topk.result_rows()]
     assert got == _mk_model(ops0) == [(2, 0, 50), (1, 1, 50), (0, 2, 50)]
     assert topk._boundary is not None
@@ -522,7 +512,7 @@ def test_topk_multi_key_order_by_exact_under_churn(spark, tmp_path):
         {"items": spark.createDataFrame(ops1, MK_SCHEMA)}, batch_id=1,
         emit_delta=True,
     )
-    topk.apply(d1, batch_id=1)
+    topk.apply(d1)
     got = [(r["kid"], r["d"], r["total"]) for r in topk.result_rows()]
     assert got == _mk_model(ops0 + ops1) == [
         (2, 0, 50), (8, 0, 50), (1, 1, 50)
@@ -533,29 +523,27 @@ def test_topk_multi_key_order_by_exact_under_churn(spark, tmp_path):
     d2 = eng.process_batch(
         {"items": spark.createDataFrame(ops2, MK_SCHEMA)}, batch_id=2,
         emit_delta=True,
-    ).localCheckpoint()
-    topk.apply(d2, batch_id=2)
+    )
+    topk.apply(d2)
     got = [(r["kid"], r["d"], r["total"]) for r in topk.result_rows()]
     assert got == _mk_model(ops0 + ops1 + ops2) == [
         (1, 1, 50), (0, 2, 50), (4, 0, 40)
     ]
 
-    # durable round-trip of the multi-column boundary: resume, replay, go on
-    re = TopKView(
-        3,
-        (("total", "desc"), ("d", "asc")),
-        ("kid",),
-        refill=eng.result,
-        slack=1,
-        prime=False,
-        state_dir=sdir,
-        spark=spark,
-        resume=True,
-    )
+    # typed-JSON round-trip of the multi-column boundary, then go on
+    re = mk()
+    re.load(json.loads(json.dumps(topk.state())))
     assert re.refills == 0 and re._boundary == topk._boundary
-    re.apply(d2, batch_id=2)  # replay no-op
+    assert re.result_rows() == topk.result_rows()
+    ops3 = [(9, 0, 45, 1)]
+    re.apply(
+        eng.process_batch(
+            {"items": spark.createDataFrame(ops3, MK_SCHEMA)}, batch_id=3,
+            emit_delta=True,
+        )
+    )
     got = [(r["kid"], r["d"], r["total"]) for r in re.result_rows()]
-    assert got == _mk_model(ops0 + ops1 + ops2)
+    assert got == _mk_model(ops0 + ops1 + ops2 + ops3)
 
 
 def test_grouped_topk_multi_key_order_by(spark, tmp_path):
@@ -662,83 +650,26 @@ def test_grouped_topk_replayed_changelog_is_idempotent(spark, tmp_path):
     assert cand.count() == cand.select("g", "kid").distinct().count()
 
 
-def test_topk_durable_resume_and_replay(spark, tmp_path):
-    """Durable TopKView: buffer/boundary persist behind an atomic manifest,
-    so a new instance with resume=True reattaches WITHOUT a refill (no view
-    scan) and keeps exact; a crash-REPLAYED batch is skipped and returns the
-    PERSISTED emitted changelog — the exactly-once sink contract."""
-    sdir = str(tmp_path / "tkstate")
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-
-    def mk(resume):
-        return TopKView(
-            K, "total", ("kid",), refill=eng.result, slack=SLACK,
-            prime=False, state_dir=sdir, spark=spark, resume=resume,
-        )
-
-    topk = mk(False)
-    ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    out0 = topk.apply(d0, batch_id=0)
-    ops1 = [(0, 100, -1), (9, 95, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    out1 = topk.apply(d1, batch_id=1)
-    assert _got(topk) == _model_topk(ops0 + ops1)
-
-    # "crash": a fresh instance resumes from the manifest — no refill
-    re = mk(True)
-    assert re.refills == 0
-    assert re._buffer == topk._buffer and re._boundary == topk._boundary
-    # foreachBatch redelivers batch 1: skipped, persisted changelog returned
-    replay = re.apply(d1, batch_id=1)
-    assert sorted(
-        ((r["kid"], r["total"], r[WEIGHT]) for r in replay)
-    ) == sorted((r["kid"], r["total"], r[WEIGHT]) for r in out1)
-    assert re._buffer == topk._buffer  # untouched by the replay
-    # stream continues exactly
-    ops2 = [(1, 90, -1), (2, 80, -1)]
-    _d2 = eng.process_batch(
-        {"items": spark.createDataFrame(ops2, ITEM_SCHEMA)}, batch_id=2, emit_delta=True
-    )
-    re.apply(_d2, batch_id=2)
-    assert _got(re) == _model_topk(ops0 + ops1 + ops2)
-    assert out0 is not None  # first batch emitted its build-up changelog
-
-
 def test_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
-    """A resumed TopKView's ``emitted_df()`` is the last batch's persisted
-    changelog read with its schema pinned: the committed rows, and building
-    the frame launches no Spark job (no parquet schema inference) — the
+    """A resumed engine's ``topk_delta()`` is the last batch's committed
+    top-k changelog, rebuilt from the manifest's typed-JSON rows: the
+    committed rows, and building the frame launches no Spark job — the
     per-batch ``topk_delta()`` read of an ordered sink."""
     import time
 
-    sdir = str(tmp_path / "tkstate")
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-
-    def mk(resume):
-        return TopKView(
-            K, "total", ("kid",), refill=eng.result, state_dir=sdir, spark=spark,
-            slack=SLACK, prime=False, resume=resume,
-        )
-
-    topk = mk(False)
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
     ops = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    want = sorted((r["kid"], r["total"], r[WEIGHT]) for r in topk.apply(d0, batch_id=0))
+    eng.process_batch({"items": spark.createDataFrame(ops, ITEM_SCHEMA)}, batch_id=0)
+    want = sorted((r["kid"], r["total"], r[WEIGHT]) for r in eng.topk_delta().collect())
     assert want
 
-    re = mk(True)
+    re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
     sc = spark.sparkContext
     gid = f"emitted_df_{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(gid, "resumed emitted_df")
     try:
-        got = re.emitted_df()
+        got = re.topk_delta()
         # one-job sentinel: the status listener sees jobs in submission
         # order, so once it shows up every earlier job of the group has too
         spark.range(1).collect()
@@ -753,287 +684,208 @@ def test_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
     assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in got.collect()) == want
 
 
-def test_topk_failed_commit_rolls_back_fold(spark, tmp_path, monkeypatch):
-    """A commit failure AFTER the fold mutated the buffer must roll the
-    in-memory state back to the committed batch: the manifest never adopted
-    the new version, so an in-process retry has to re-apply the changelog
-    against COMMITTED state and emit the true delta. Without the rollback
-    the retry folds idempotently into the already-updated buffer
-    (pre == post) and persists an EMPTY emitted changelog — the batch's
-    emission is permanently lost for an exactly-once sink (the same bug
-    class as the first-batch crash window, in-process form)."""
-    import flink_and_acyclic_schema_spark.streaming.topk as topk_mod
+def _fail_once(fn, exc):
+    """``fn`` wrapped to raise ``exc`` on its first call only."""
+    state = {"fail": True}
 
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK,
-        prime=False, state_dir=str(tmp_path / "tkstate"), spark=spark,
-    )
+    def flaky(*a, **kw):
+        if state["fail"]:
+            state["fail"] = False
+            raise exc
+        return fn(*a, **kw)
+
+    return flaky
+
+
+def test_topk_failed_commit_rolls_back_fold(spark, tmp_path):
+    """A manifest-commit failure AFTER the top-k fold mutated the buffer
+    must roll the buffer back with the engine's state: the manifest never
+    recorded the batch, so an in-process retry has to re-fold the changelog
+    against the COMMITTED buffer and emit the true delta. Without the
+    rollback the retry folds idempotently into the already-updated buffer
+    (pre == post) and commits an EMPTY emitted changelog — the batch's
+    emission is permanently lost for an exactly-once sink."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
     ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)
-    buf0, bnd0 = dict(topk._buffer), topk._boundary
+    eng.process_batch({"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0)
+    committed = eng._topk.state()
 
     ops1 = [(0, 100, -1), (9, 95, 1)]  # top exit + runner-up value update
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    real_replace = topk_mod.os.replace
-    applied_total0 = topk.applied_rows_total
-
-    def boom(src, dst):
-        raise OSError("commit torn: replace failed")
-
-    monkeypatch.setattr(topk_mod.os, "replace", boom)
-    with pytest.raises(OSError, match="replace failed"):
-        topk.apply(d1, batch_id=1)
-    # rolled back: in-memory state IS the committed batch-0 state —
-    # including the driver-transfer counters the scaling tools report as
-    # evidence (an unreverted applied_rows_total would double-count the
-    # retried batch)
-    assert topk._buffer == buf0 and topk._boundary == bnd0
-    assert topk._last_batch == 0 and topk._emitted_batch == 0
-    assert topk.applied_rows_total == applied_total0
-    monkeypatch.setattr(topk_mod.os, "replace", real_replace)
-    # in-process retry (foreachBatch redelivery): the TRUE delta, not []
-    out1 = topk.apply(d1, batch_id=1)
-    assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in out1) == [
-        (0, 100, -1),
-        (9, 105, 1),
-    ]
-    assert _got(topk) == _model_topk(ops0 + ops1)
-    # and the retried commit is the durable one: a resumed twin agrees
-    re = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False,
-        state_dir=str(tmp_path / "tkstate"), spark=spark, resume=True,
+    d1 = spark.createDataFrame(ops1, ITEM_SCHEMA).localCheckpoint()
+    eng._commit_manifest = _fail_once(
+        eng._commit_manifest, OSError("commit torn: replace failed")
     )
-    assert re._buffer == topk._buffer and re._last_batch == 1
+    with pytest.raises(OSError, match="replace failed"):
+        eng.process_batch({"items": d1}, batch_id=1)
+    # rolled back: the top-k IS the committed batch-0 state
+    assert eng._topk.state() == committed and eng._last_batch == 0
+    # in-process retry (foreachBatch redelivery): the TRUE delta, not []
+    eng.process_batch({"items": d1}, batch_id=1)
+    assert sorted(
+        (r["kid"], r["total"], r[WEIGHT]) for r in eng.topk_delta().collect()
+    ) == [(0, 100, -1), (9, 105, 1)]
+    assert _knob_got(eng) == _model_topk(ops0 + ops1)
+    # and the retried commit is the durable one: a resumed twin agrees
+    re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
+    assert re._topk.state() == eng._topk.state() and re._last_batch == 1
 
 
 def test_topk_unencodable_value_fails_commit_before_replace(spark, tmp_path):
     """The manifest codec rejects a type it cannot encode (here a BINARY
-    column's bytes) with ``TypeError`` while the manifest is being
-    built — before the ``os.replace`` — so the fold rolls back and the
-    committed manifest is the previous one."""
-    topk = TopKView(
-        1, "v", ("kid",), refill=lambda: None, state_dir=str(tmp_path / "tk"),
-        spark=spark, prime=False,
+    column's bytes, entering the top-k in batch 1) with ``TypeError`` while
+    the engine's manifest is being built — before its ``os.replace`` — so
+    the batch rolls back: the committed manifest is byte-for-byte the
+    batch-0 one, and the engine and its top-k are still at batch 0."""
+    spec = AcyclicQuerySpec(
+        relations=(RelSpec("items"),),
+        group_by=("kid",),
+        measures={"v": lambda: F.col("val")},
+        # a binary column, NULL until a group's total passes 15
+        finalize=lambda df: df.withColumn(
+            "blob", F.when(F.col("v") > 15, F.unhex(F.lit("78")))
+        ),
+        top_k=TopKSpec(k=1, order_by="v"),
     )
-    ch = spark.createDataFrame(
-        [(1, 10, bytearray(b"x"), 1)], "kid int, v int, blob binary, weight int"
-    )
-    with pytest.raises(TypeError, match="no manifest encoding for bytes"):
-        topk.apply(ch, batch_id=0)
-    assert topk._buffer == {} and topk._last_batch is None
-    re = TopKView(
-        1, "v", ("kid",), refill=lambda: None, state_dir=str(tmp_path / "tk"),
-        spark=spark, prime=False, resume=True,
-    )
-    assert re._buffer == {} and re._last_batch is None and re.emitted_df() is None
+    schema = "kid int, val int, weight int"
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, spec)
+    eng.process_batch({"items": spark.createDataFrame([(1, 10, 1)], schema)}, batch_id=0)
+    manifest = os.path.join(sdir, "MANIFEST.json")
+    committed_text = open(manifest).read()
+    committed = eng._topk.state()
+    ch = spark.createDataFrame([(2, 20, 1)], schema)
+    with pytest.raises(TypeError, match="no manifest encoding for"):
+        eng.process_batch({"items": ch}, batch_id=1)
+    assert open(manifest).read() == committed_text
+    assert eng._last_batch == 0 and eng._topk.state() == committed
+    assert [(r["kid"], r["v"]) for r in eng.topk_result().collect()] == [(1, 10)]
 
 
-def test_topk_post_adoption_failure_keeps_fold(spark, tmp_path, monkeypatch):
-    """The rollback's other edge: _persist can raise AFTER the manifest
-    os.replace adopted the commit (e.g. a KeyboardInterrupt right after
-    the replace). Restoring the pre-batch buffer there would leave
-    in-memory candidate state one batch BEHIND the manifest, and the next
-    batch would fold against the stale buffer and emit wrong deltas — the
-    rollback must fire only while _version is still the snapshotted one."""
-    import flink_and_acyclic_schema_spark.streaming.topk as topk_mod
-
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), SPEC)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK,
-        prime=False, state_dir=str(tmp_path / "tkstate"), spark=spark,
-    )
+def test_topk_post_adoption_failure_keeps_fold(spark, tmp_path):
+    """The rollback's other edge: a failure AFTER the manifest replace (here
+    in the post-commit cleanup) is outside the rollback scope. Restoring the
+    pre-batch buffer there would leave the in-memory top-k one batch BEHIND
+    the manifest, and the next batch would fold against the stale buffer
+    and emit wrong deltas — the fold must stand."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
     ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)
+    eng.process_batch({"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0)
 
     ops1 = [(0, 100, -1), (9, 95, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, ITEM_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    real_publish = topk_mod._publish_manifest
-
-    def boom(*a, **kw):
-        real_publish(*a, **kw)
-        raise OSError("failed post-adoption")
-
-    # the fault lands strictly after os.replace and adopt() both ran
-    monkeypatch.setattr(topk_mod, "_publish_manifest", boom)
-    with pytest.raises(OSError, match="post-adoption"):
-        topk.apply(d1, batch_id=1)
-    monkeypatch.setattr(topk_mod, "_publish_manifest", real_publish)
-    # the commit WAS adopted: the fold must stand, not roll back
-    assert topk._last_batch == 1 and topk._emitted_batch == 1
-    assert _got(topk) == _model_topk(ops0 + ops1)
-    # memory agrees with the manifest (crash-equivalent failure): a resumed
-    # twin matches, and the replayed batch is skip-returned, not re-folded
-    re = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False,
-        state_dir=str(tmp_path / "tkstate"), spark=spark, resume=True,
-    )
-    assert re._buffer == topk._buffer and re._last_batch == 1
-    replay = topk.apply(d1, batch_id=1)
-    assert sorted((r["kid"], r["total"], r[WEIGHT]) for r in replay) == [
-        (0, 100, -1),
-        (9, 105, 1),
-    ]
+    d1 = spark.createDataFrame(ops1, ITEM_SCHEMA).localCheckpoint()
+    eng._topk._gc = _fail_once(eng._topk._gc, OSError("failed after the commit"))
+    with pytest.raises(OSError, match="after the commit"):
+        eng.process_batch({"items": d1}, batch_id=1)
+    # the commit stands: memory agrees with the manifest, as a resumed twin
+    assert eng._last_batch == 1
+    assert _knob_got(eng) == _model_topk(ops0 + ops1)
+    re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
+    assert re._topk.state() == eng._topk.state()
+    # the redelivered batch is skipped, not re-folded
+    eng.process_batch({"items": d1}, batch_id=1)
+    assert sorted(
+        (r["kid"], r["total"], r[WEIGHT]) for r in eng.topk_delta().collect()
+    ) == [(0, 100, -1), (9, 105, 1)]
     # and the stream continues exactly on the SAME instance
     ops2 = [(1, 90, -1)]
-    d2 = eng.process_batch(
-        {"items": spark.createDataFrame(ops2, ITEM_SCHEMA)}, batch_id=2, emit_delta=True
-    )
-    topk.apply(d2, batch_id=2)
-    assert _got(topk) == _model_topk(ops0 + ops1 + ops2)
+    eng.process_batch({"items": spark.createDataFrame(ops2, ITEM_SCHEMA)}, batch_id=2)
+    assert _knob_got(eng) == _model_topk(ops0 + ops1 + ops2)
 
 
-def _gdurable(spark, tmp_path, eng, resume, **kw):
-    return GroupedTopKView(
-        GK, "total", ("g",), ("kid",),
-        refill=lambda t: eng.result(t), slack=GSLACK,
-        state_dir=str(tmp_path / "gtk"), spark=spark, resume=resume, **kw,
-    )
+def _gtk_batch(spark, eng, ops, batch_id):
+    eng.process_batch({"items": spark.createDataFrame(ops, G_SCHEMA)}, batch_id=batch_id)
 
 
 def test_grouped_topk_kill_and_recover_without_reprime(spark, tmp_path):
-    """The round-6 gap, closed: candidate/boundary shards are manifest-
-    committed parquet, so after a process kill a resume=True instance
-    continues from committed state WITHOUT prime() (no O(view) re-rank —
-    refill calls stay zero on the resume path), replayed batches are
-    no-ops, and the stream stays exact."""
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    refill_calls = {"n": 0}
-
-    def refill(t):
-        refill_calls["n"] += 1
-        return eng.result(t)
-
-    topk = GroupedTopKView(
-        GK, "total", ("g",), ("kid",), refill=refill, slack=GSLACK,
-        state_dir=str(tmp_path / "gtk"), spark=spark,
-    )
+    """Candidate/boundary shards are parquet dirs the engine's manifest
+    names, so after a process kill a resume=True engine continues from the
+    committed shard maps WITHOUT prime() (no O(view) re-rank), a replayed
+    batch is a no-op, and the stream stays exact."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
     ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    topk.apply(d0, batch_id=0)
+    _gtk_batch(spark, eng, ops0, 0)
     ops1 = [(0, 0, 50, -1), (1, 9, 99, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    topk.apply(d1, batch_id=1)
-    assert _ggot(topk) == _gmodel(ops0 + ops1)
+    _gtk_batch(spark, eng, ops1, 1)
+    assert _ggot(eng._topk) == _gmodel(ops0 + ops1)
 
-    # "kill" the process: a brand-new instance resumes from the manifest
-    refill_calls["n"] = 0
-    re = _gdurable(spark, tmp_path, eng, resume=True)
-    re._refill_fn = refill
-    assert _ggot(re) == _gmodel(ops0 + ops1)
-    assert refill_calls["n"] == 0  # recovery scanned NO view state
-    # replayed batch 1 (foreachBatch redelivery): a committed no-op
-    re.apply(d1, batch_id=1)
-    assert _ggot(re) == _gmodel(ops0 + ops1)
+    # "kill" the process: a brand-new engine resumes from the manifest
+    re = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)
+    assert re._topk.state() == eng._topk.state()  # loaded, not re-ranked
+    assert _ggot(re._topk) == _gmodel(ops0 + ops1)
+    _gtk_batch(spark, re, ops1, 1)  # replayed batch 1: a committed no-op
+    assert _ggot(re._topk) == _gmodel(ops0 + ops1)
     # stream continues exactly (deletes drain group 0 into refill territory)
-    ops2 = [(0, 1, 41, -1), (0, 2, 32, -1), (0, 3, 23, -1)]
-    d2 = eng.process_batch(
-        {"items": spark.createDataFrame(ops2, G_SCHEMA)}, batch_id=2, emit_delta=True
-    )
-    re.apply(d2, batch_id=2)
-    assert _ggot(re) == _gmodel(ops0 + ops1 + ops2)
+    ops2 = [(0, 1, 40, -1), (0, 2, 30, -1), (0, 3, 20, -1)]
+    _gtk_batch(spark, re, ops2, 2)
+    assert _ggot(re._topk) == _gmodel(ops0 + ops1 + ops2)
 
 
 def test_grouped_topk_crash_before_manifest_replace_recovers(spark, tmp_path):
     """The atomic-commit claim at its sharpest window: a batch's shard files
-    are fully written but the process dies BEFORE the os.replace of the
-    manifest. Recovery must load the PRIOR committed state, garbage-collect
-    the orphaned version dirs, and replay the batch to the exact result."""
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, resume=False)
+    are fully written but the process dies BEFORE the engine's manifest
+    replace. Recovery must load the PRIOR committed shard maps,
+    garbage-collect the orphaned version dirs, and replay the batch to the
+    exact result."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
     ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
+    _gtk_batch(spark, eng, ops0, 0)
+    committed = eng._topk.state()
+    eng._commit_manifest = _fail_once(
+        eng._commit_manifest, RuntimeError("injected: died before the manifest replace")
     )
-    topk.apply(d0, batch_id=0)
-    manifest = topk._manifest_path()
-    committed = open(manifest).read()  # the batch-0 commit point
     ops1 = [(0, 0, 50, -1), (1, 9, 99, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
-    topk.apply(d1, batch_id=1)
-    # crash simulation: batch 1's version dirs exist, manifest says batch 0
-    with open(manifest, "w") as fh:
-        fh.write(committed)
-    orphans = {e for e in os.listdir(topk.state_dir) if e.startswith(("cand_v", "bound_v"))}
-    re = _gdurable(spark, tmp_path, eng, resume=True)
-    assert re._last_batch == 0  # the committed point, not the torn batch
-    left = {e for e in os.listdir(re.state_dir) if e.startswith(("cand_v", "bound_v"))}
-    assert left < orphans  # the torn batch's dirs were GC'd
-    assert _ggot(re) == _gmodel(ops0)  # pre-crash committed state, exactly
-    re.apply(d1, batch_id=1)  # foreachBatch redelivery
-    assert _ggot(re) == _gmodel(ops0 + ops1)
+    with pytest.raises(RuntimeError, match="injected"):
+        _gtk_batch(spark, eng, ops1, 1)
+    # crash: batch 1's version dirs exist, the manifest says batch 0
+    tdir = os.path.join(sdir, "topk")
+    torn = {e for e in os.listdir(tdir) if e.endswith(f"_v{committed['version'] + 1}")}
+    assert {"cand_v2", "bound_v2", "emit_v2"} <= torn
+    re = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)
+    assert re._last_batch == 0 and re._topk.state() == committed
+    assert not torn & set(os.listdir(tdir))  # the torn batch's dirs were GC'd
+    assert _ggot(re._topk) == _gmodel(ops0)  # pre-crash committed state, exactly
+    _gtk_batch(spark, re, ops1, 1)  # foreachBatch redelivery
+    assert _ggot(re._topk) == _gmodel(ops0 + ops1)
 
 
 def test_grouped_topk_failed_commit_in_process_retry_is_safe(spark, tmp_path):
-    """In-process retry after a MID-COMMIT failure (same instance, no
-    restart): the commit must leave every in-memory pointer at the last
-    COMMITTED state — maps staged and swapped only after the manifest
-    replace, the version bumped BEFORE any write so the retry never reuses
-    (and self-overwrites) a partially-written version dir."""
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, resume=False)
+    """In-process retry after a failure at the engine's commit (same
+    instance, no restart): every shard-map pointer of the grouped top-k
+    returns to the last COMMITTED state with the engine's, reads never see
+    the failed batch, and the retry rewrites the same (never committed)
+    version dirs instead of reading them."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
     ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
+    _gtk_batch(spark, eng, ops0, 0)
+    committed = eng._topk.state()
+    eng._commit_manifest = _fail_once(
+        eng._commit_manifest, RuntimeError("injected: commit died before os.replace")
     )
-    topk.apply(d0, batch_id=0)
-    committed = (
-        dict(topk._cand_map),
-        dict(topk._bound_map),
-        topk._last_batch,
-        topk._emitted,
-    )
-    v0 = topk._version
-
-    orig = topk._write_manifest
-    state = {"fail": True}
-
-    def flaky(**kw):
-        if state["fail"]:
-            state["fail"] = False
-            raise RuntimeError("injected: commit died before os.replace")
-        return orig(**kw)
-
-    topk._write_manifest = flaky
     ops1 = [(0, 0, 50, -1), (1, 9, 99, 1)]
-    d1 = eng.process_batch(
-        {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
-    ).localCheckpoint()
     with pytest.raises(RuntimeError, match="injected"):
-        topk.apply(d1, batch_id=1)
+        _gtk_batch(spark, eng, ops1, 1)
     # every live pointer still resolves the COMMITTED state ...
-    assert (
-        dict(topk._cand_map),
-        dict(topk._bound_map),
-        topk._last_batch,
-        topk._emitted,
-    ) == committed
-    assert _ggot(topk) == _gmodel(ops0)  # reads don't see the torn batch
-    # ... and the failed version is burned, never reused by the retry
-    assert topk._version > v0
-    failed_v = topk._version
-    topk.apply(d1, batch_id=1)  # same-instance retry
-    assert topk._version > failed_v
-    assert _ggot(topk) == _gmodel(ops0 + ops1)
+    assert eng._topk.state() == committed and eng._last_batch == 0
+    assert _ggot(eng._topk) == _gmodel(ops0)  # reads don't see the torn batch
+    _gtk_batch(spark, eng, ops1, 1)  # ... and the same-instance retry
+    assert eng._topk._version == committed["version"] + 1
+    assert _ggot(eng._topk) == _gmodel(ops0 + ops1)
     # a restart from the retried commit agrees
-    re = _gdurable(spark, tmp_path, eng, resume=True)
-    assert _ggot(re) == _gmodel(ops0 + ops1)
+    re = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)
+    assert _ggot(re._topk) == _gmodel(ops0 + ops1)
+
+
+def _gdurable(spark, tmp_path, eng):
+    return GroupedTopKView(
+        GK, "total", ("g",), ("kid",),
+        refill=lambda t: eng.result(t), slack=GSLACK,
+        state_dir=str(tmp_path / "gtk"), spark=spark,
+    )
 
 
 def test_grouped_topk_reads_only_touched_shards(spark, tmp_path):
@@ -1042,14 +894,14 @@ def test_grouped_topk_reads_only_touched_shards(spark, tmp_path):
     candidate rows, not the full candidate table — the O(Δ ⋈ touched)
     cost model at 100 TB."""
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, resume=False)
+    topk = _gdurable(spark, tmp_path, eng)
     topk.instrument = True
     # 64 groups x 4 members spread over 8 shards
     ops0 = [(g, i, 10 * (4 - i) + g, 1) for g in range(64) for i in range(4)]
     d0 = eng.process_batch(
         {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
     )
-    topk.apply(d0, batch_id=0)
+    topk.apply(d0)
     total_cand = topk._read_cand().count()
     assert total_cand >= 64 * (GK + GSLACK) - 64  # ~3 candidates per group
     # one-group churn: only its shard is read
@@ -1057,7 +909,7 @@ def test_grouped_topk_reads_only_touched_shards(spark, tmp_path):
     d1 = eng.process_batch(
         {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
     )
-    topk.apply(d1, batch_id=1)
+    topk.apply(d1)
     assert topk.last_touched_buckets == 1
     assert topk.last_read_rows <= total_cand // 4  # one shard, not the table
     assert _ggot(topk) == _gmodel(ops0 + ops1)
@@ -1068,18 +920,18 @@ def test_grouped_topk_batch_plan_has_no_cartesian_or_bnlj(spark, tmp_path):
     equi-join or window — a cartesian product or nested-loop join anywhere
     would silently turn O(Δ ⋈ touched) into O(Δ × candidates) at scale."""
     eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, resume=False)
+    topk = _gdurable(spark, tmp_path, eng)
     topk.instrument = True
     ops0 = [(g, i, 10 * (4 - i), 1) for g in range(8) for i in range(4)]
     d0 = eng.process_batch(
         {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0, emit_delta=True
     )
-    topk.apply(d0, batch_id=0)
+    topk.apply(d0)
     ops1 = [(3, 0, 40, -1), (5, 9, 99, 1)]
     d1 = eng.process_batch(
         {"items": spark.createDataFrame(ops1, G_SCHEMA)}, batch_id=1, emit_delta=True
     )
-    topk.apply(d1, batch_id=1)
+    topk.apply(d1)
     # the per-batch candidate-rebuild plan (anti-joins, boundary left join,
     # drained refill, trim — all keyed)
     assert topk.last_plan  # instrumented
@@ -1093,15 +945,21 @@ def test_grouped_topk_batch_plan_has_no_cartesian_or_bnlj(spark, tmp_path):
 
 
 # --- spec-level top_k knob (AcyclicQuerySpec.top_k -> engine-wired views) ----
-import pytest
-
-from flink_and_acyclic_schema_spark.streaming.acyclic import TopKSpec
-
 TK_SPEC = AcyclicQuerySpec(
     relations=(RelSpec("items"),),
     group_by=("kid",),
     measures={"total": lambda: F.col("val")},
     top_k=TopKSpec(k=K, order_by="total", slack=SLACK),
+)
+
+GTK_SPEC = AcyclicQuerySpec(
+    relations=(RelSpec("items"),),
+    group_by=("g", "kid"),
+    measures={"total": lambda: F.col("val")},
+    top_k=TopKSpec(
+        k=GK, order_by="total", partition_by=("g",), key=("kid",), slack=GSLACK,
+        emit_changelog=True,
+    ),
 )
 
 
@@ -1113,9 +971,9 @@ def _knob_got(eng):
 def test_spec_level_topk_knob_global_with_resume(spark, tmp_path):
     """AcyclicQuerySpec.top_k wires the maintained ORDER BY/LIMIT inside the
     engine: process_batch feeds it automatically (no emit_delta plumbing at
-    the call site), topk_result() reads it, the structure persists under
-    <state>/topk, a resumed engine reattaches to it, and a replayed batch is
-    a no-op through BOTH manifests."""
+    the call site), topk_result() reads it, its O(k) state lives inside the
+    engine's manifest (no ``<state>/topk``), a resumed engine reattaches to
+    it, and a replayed batch is a no-op."""
     sdir = str(tmp_path / "es")
     eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
     ops0 = [(i, 10 * (10 - i), 1) for i in range(10)]
@@ -1127,10 +985,11 @@ def test_spec_level_topk_knob_global_with_resume(spark, tmp_path):
     d1 = spark.createDataFrame(ops1, ITEM_SCHEMA).localCheckpoint()
     eng.process_batch({"items": d1}, batch_id=1)
     assert _knob_got(eng) == _model_topk(ops0 + ops1)
-    # the O(k) buffer, boundary and emitted changelog live in the manifest
-    assert os.listdir(os.path.join(sdir, "topk")) == ["MANIFEST.json"]
+    # the O(k) buffer, boundary and emitted changelog live in the engine's
+    # manifest: the global form writes no files of its own
+    assert not os.path.exists(os.path.join(sdir, "topk"))
 
-    # process restart: resume reattaches engine AND top-k from manifests
+    # process restart: resume reattaches engine AND top-k from the manifest
     re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
     assert re._topk.refills == 0  # loaded, not re-primed
     assert _knob_got(re) == _model_topk(ops0 + ops1)
@@ -1216,113 +1075,125 @@ def test_spec_level_topk_knob_grouped_with_resume(spark, tmp_path):
     assert got == _gmodel(ops0 + ops1)
 
 
-def test_spec_level_topk_catches_up_after_crash_between_commits(spark, tmp_path):
-    """Crash BETWEEN the engine's manifest commit and the top-k commit: the
-    engine replay-skip branch re-feeds the PERSISTED changelog into the
-    top-k on retry, so the two manifests re-converge — no double-apply, no
-    lost batch."""
-    sdir = str(tmp_path / "es")
-    eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
-    ops0 = [(i, 10 * (8 - i), 1) for i in range(8)]
-    eng.process_batch(
-        {"items": spark.createDataFrame(ops0, ITEM_SCHEMA)}, batch_id=0
+def _topk_outputs(eng):
+    """(topk_result(), topk_delta()) as sorted row tuples."""
+    return (
+        sorted(tuple(r) for r in eng.topk_result().collect()),
+        sorted(tuple(r) for r in eng.topk_delta().collect()),
     )
-    orig = eng._topk.apply
-    state = {"fail": True}
 
-    def flaky(ch, batch_id=None):
-        if state["fail"]:
-            state["fail"] = False
-            raise RuntimeError("injected: top-k died after engine commit")
-        return orig(ch, batch_id)
 
-    eng._topk.apply = flaky
-    ops1 = [(0, 80, -1), (9, 65, 1)]
-    d1 = spark.createDataFrame(ops1, ITEM_SCHEMA).localCheckpoint()
-    with pytest.raises(RuntimeError, match="injected"):
-        eng.process_batch({"items": d1}, batch_id=1)
-    # the engine committed batch 1; the retry replays it into the top-k
-    eng.process_batch({"items": d1}, batch_id=1)
-    assert _knob_got(eng) == _model_topk(ops0 + ops1)
-    # and the engine state was NOT double-applied
-    eng2 = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
-    assert _knob_got(eng2) == _model_topk(ops0 + ops1)
+def _fold_fails_mid_batch(spark, tmp_path, spec, schema, batches, crash_at, break_fold):
+    """Run ``batches`` through an engine whose top-k fold fails once, mid-
+    fold, on batch ``crash_at`` (``break_fold(view)`` installs the fault),
+    and through an uncrashed twin. The failed batch is retried in process;
+    after it, and after every later batch, both the retrying engine and a
+    ``resume=True`` engine on its state dir (fed the same redelivery) must
+    match the twin's ``topk_result()``, ``topk_delta()`` and view."""
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, spec)
+    twin = IncrementalAcyclicQuery(spark, str(tmp_path / "twin"), spec)
+    for i, ops in enumerate(batches):
+        d = spark.createDataFrame(ops, schema).localCheckpoint()
+        twin.process_batch({"items": d}, batch_id=i)
+        if i == crash_at:
+            break_fold(eng._topk)
+            with pytest.raises(RuntimeError, match="injected"):
+                eng.process_batch({"items": d}, batch_id=i)
+            assert eng._last_batch == (i - 1 if i else None)
+        eng.process_batch({"items": d}, batch_id=i)
+        want = _topk_outputs(twin)
+        assert _topk_outputs(eng) == want
+        re = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
+        re.process_batch({"items": d}, batch_id=i)  # redelivery: a no-op
+        assert _topk_outputs(re) == want
+        # the engine state was not double-applied either
+        view = sorted(tuple(r) for r in twin.result().collect())
+        assert sorted(tuple(r) for r in re.result().collect()) == view
+
+
+def _raise_after(view, name):
+    """Make ``view.<name>`` run once and then raise: the fold has mutated
+    the view's state when the fault lands."""
+    real = getattr(view, name)
+
+    def broken(*a, **kw):
+        real(*a, **kw)
+        setattr(view, name, real)
+        raise RuntimeError(f"injected: top-k fold died after {name}")
+
+    setattr(view, name, broken)
+
+
+def test_spec_level_topk_catches_up_after_crash_between_commits(spark, tmp_path):
+    """There is no window between the engine's commit and the top-k's: the
+    fold runs before the engine's one manifest commit, so a top-k failure
+    mid-fold (buffer already mutated) rolls the WHOLE batch back — the
+    engine's state and the buffer together. The in-process retry and a
+    resumed engine then equal an uncrashed twin: same top-k, same emitted
+    top-k changelog, no double-applied engine state."""
+    _fold_fails_mid_batch(
+        spark,
+        tmp_path,
+        TK_SPEC,
+        ITEM_SCHEMA,
+        [
+            [(i, 10 * (8 - i), 1) for i in range(8)],
+            [(0, 80, -1), (9, 65, 1)],
+            [(1, 70, -1), (2, 60, -1), (3, 50, -1)],
+        ],
+        crash_at=1,
+        break_fold=lambda v: _raise_after(v, "_trim"),
+    )
 
 
 def test_spec_level_grouped_topk_catches_up_after_crash_between_commits(
     spark, tmp_path
 ):
-    """Grouped twin of the mid-stream crash BETWEEN the engine's manifest
-    commit and the top-k's: the engine replay-skip branch re-feeds the
-    PERSISTED changelog, the grouped view (still on its previous commit,
-    maps untouched by the failed attempt) applies it once, and the two
-    manifests re-converge — including across a PROCESS RESTART instead of
-    an in-process retry."""
-    spec = AcyclicQuerySpec(
-        relations=(RelSpec("items"),),
-        group_by=("g", "kid"),
-        measures={"total": lambda: F.col("val")},
-        top_k=TopKSpec(
-            k=GK, order_by="total", partition_by=("g",), key=("kid",), slack=GSLACK
-        ),
+    """Grouped twin: the fault lands after the grouped view wrote the
+    batch's shard dirs and pointed its maps at them. The batch rolls back
+    with the engine — maps and dir version included — so the in-process
+    retry rewrites the same dirs, and it and a resumed engine equal an
+    uncrashed twin, emitted per-group changelog included."""
+    _fold_fails_mid_batch(
+        spark,
+        tmp_path,
+        GTK_SPEC,
+        G_SCHEMA,
+        [
+            [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)],
+            [(0, 0, 50, -1), (2, 9, 99, 1)],  # group-0 exit, group-2 entry
+            [(1, 0, 51, -1), (1, 1, 41, -1), (1, 2, 31, -1)],  # drain -> refill
+        ],
+        crash_at=1,
+        break_fold=lambda v: _raise_after(v, "_commit"),
     )
-    sdir = str(tmp_path / "es")
-    eng = IncrementalAcyclicQuery(spark, sdir, spec)
-    ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
-    eng.process_batch(
-        {"items": spark.createDataFrame(ops0, G_SCHEMA)}, batch_id=0
-    )
-    orig = eng._topk.apply
-    state = {"fail": True}
-
-    def flaky(ch, batch_id=None):
-        if state["fail"]:
-            state["fail"] = False
-            raise RuntimeError("injected: grouped top-k died after engine commit")
-        return orig(ch, batch_id)
-
-    eng._topk.apply = flaky
-    ops1 = [(0, 0, 50, -1), (2, 9, 99, 1)]  # group-0 exit, group-2 entry
-    d1 = spark.createDataFrame(ops1, G_SCHEMA).localCheckpoint()
-    with pytest.raises(RuntimeError, match="injected"):
-        eng.process_batch({"items": d1}, batch_id=1)
-    # in-process retry: engine replay-skips, grouped top-k catches up
-    eng.process_batch({"items": d1}, batch_id=1)
-    got = {(r["g"], r["kid"], r["total"]) for r in eng.topk_result().collect()}
-    assert got == _gmodel(ops0 + ops1)
-    # restart instead: both manifests agree, redelivery is a full no-op
-    re = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
-    re.process_batch({"items": d1}, batch_id=1)
-    got = {(r["g"], r["kid"], r["total"]) for r in re.topk_result().collect()}
-    assert got == _gmodel(ops0 + ops1)
 
 
 def test_spec_level_topk_restart_during_first_batch_emits_initial_delta(
     spark, tmp_path
 ):
-    """The sharpest exactly-once window: a PROCESS RESTART (not in-process
-    retry) between the engine's batch-0 manifest commit and the top-k's
-    FIRST commit. The fresh durable view commits an initial empty manifest
-    at construction, so the resumed engine reattaches to 'complete over the
-    empty view' instead of re-priming from the already-updated view — the
-    replayed batch-0 changelog then rebuilds the buffer AND emits the TRUE
-    first delta (a re-primed buffer would fold it idempotently and persist
-    an EMPTY batch-0 emission, permanently lost to a downstream sink)."""
+    """A PROCESS RESTART after the top-k failed in the FIRST batch: the
+    batch committed nothing — the engine's manifest does not exist — so the
+    restarted engine starts fresh, and the redelivered batch 0 builds the
+    buffer AND emits the TRUE first delta (a view re-primed from
+    already-updated state would fold it idempotently and emit an EMPTY
+    batch-0 delta, permanently lost to a downstream sink)."""
     sdir = str(tmp_path / "es")
     eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
 
-    def boom(ch, batch_id=None):
-        raise RuntimeError("injected: died before the top-k's first commit")
+    def boom(ch):
+        raise RuntimeError("injected: died in the top-k's first fold")
 
     eng._topk.apply = boom
     ops0 = [(i, 10 * (8 - i), 1) for i in range(8)]
     d0 = spark.createDataFrame(ops0, ITEM_SCHEMA).localCheckpoint()
     with pytest.raises(RuntimeError, match="injected"):
         eng.process_batch({"items": d0}, batch_id=0)
+    assert not os.path.exists(os.path.join(sdir, "MANIFEST.json"))
 
-    # restart: resume must find the INITIAL top-k manifest, not prime
     re = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)
-    assert re._topk.refills == 0  # no view scan — the window's tell
+    assert re._topk.refills == 0  # no view scan
     re.process_batch({"items": d0}, batch_id=0)  # foreachBatch redelivery
     assert _knob_got(re) == _model_topk(ops0)
     emitted = {
@@ -1334,34 +1205,19 @@ def test_spec_level_topk_restart_during_first_batch_emits_initial_delta(
 def test_spec_level_grouped_topk_restart_during_first_batch_emits_initial_delta(
     spark, tmp_path
 ):
-    """Grouped twin of the first-batch crash window: restart between the
-    engine's batch-0 commit and the grouped view's first commit must replay
-    into an initial empty manifest (no prime) and emit the true entries."""
-    spec = AcyclicQuerySpec(
-        relations=(RelSpec("items"),),
-        group_by=("g", "kid"),
-        measures={"total": lambda: F.col("val")},
-        top_k=TopKSpec(
-            k=GK, order_by="total", partition_by=("g",), key=("kid",),
-            slack=GSLACK, emit_changelog=True,
-        ),
-    )
+    """Grouped twin of the first-batch failure: a restart must start fresh
+    (no manifest was committed) and the redelivered batch 0 must emit the
+    true entries."""
     sdir = str(tmp_path / "es")
-    eng = IncrementalAcyclicQuery(spark, sdir, spec)
-
-    def boom(ch, batch_id=None):
-        raise RuntimeError("injected: died before the grouped first commit")
-
-    eng._topk.apply = boom
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
+    _raise_after(eng._topk, "_commit")  # shard dirs written, then the fault
     ops0 = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
     d0 = spark.createDataFrame(ops0, G_SCHEMA).localCheckpoint()
     with pytest.raises(RuntimeError, match="injected"):
         eng.process_batch({"items": d0}, batch_id=0)
+    assert not os.path.exists(os.path.join(sdir, "MANIFEST.json"))
 
-    # resume must reattach to the INITIAL empty manifest (not prime from
-    # the already-updated view) — the emitted-delta check below is the
-    # tell: a primed view folds the replay idempotently and emits NOTHING
-    re = IncrementalAcyclicQuery(spark, sdir, spec, resume=True)
+    re = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)
     re.process_batch({"items": d0}, batch_id=0)  # foreachBatch redelivery
     got = {(r["g"], r["kid"], r["total"]) for r in re.topk_result().collect()}
     assert got == _gmodel(ops0)
@@ -1481,27 +1337,25 @@ def test_grouped_topk_emits_changelog_and_replay_returns_same_rows(spark, tmp_pa
 
 
 def test_grouped_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
-    """A resumed grouped view's ``emitted_df()`` is the last batch's
-    persisted changelog read with its schema pinned: the same rows as the
-    live ``apply()`` return, and building the frame launches no Spark job
-    (no parquet schema inference) — the chain handoff's read-back."""
+    """A resumed engine's grouped ``topk_delta()`` is the last batch's
+    committed changelog read with its schema pinned: the same rows as the
+    live one, and building the frame launches no Spark job (no parquet
+    schema inference) — the chain handoff's read-back."""
     import time
 
-    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "eng"), G_SPEC)
-    topk = _gdurable(spark, tmp_path, eng, False, emit=True)
+    sdir = str(tmp_path / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
     ops = [(g, i, 10 * (5 - i) + g, 1) for g in range(3) for i in range(5)]
-    d0 = eng.process_batch(
-        {"items": spark.createDataFrame(ops, G_SCHEMA)}, batch_id=0, emit_delta=True
-    )
-    want = sorted(tuple(r) for r in topk.apply(d0, batch_id=0).collect())
+    _gtk_batch(spark, eng, ops, 0)
+    want = sorted(tuple(r) for r in eng.topk_delta().collect())
     assert want
 
-    re = _gdurable(spark, tmp_path, eng, True, emit=True)
+    re = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)
     sc = spark.sparkContext
     gid = f"emitted_df_{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(gid, "resumed emitted_df")
     try:
-        got = re.emitted_df()
+        got = re.topk_delta()
         # one-job sentinel: the status listener sees jobs in submission
         # order, so once it shows up every earlier job of the group has too
         spark.range(1).collect()
@@ -1519,10 +1373,10 @@ def test_grouped_topk_resumed_emitted_df_needs_no_job(spark, tmp_path):
 def test_topk_knob_full_stack_stream_kill_and_recover(spark, tmp_path):
     """Full-stack kill-and-recover for the spec-level top-k + ordered sink:
     a REAL Structured Streaming query (readStream → foreachBatch, real
-    checkpointLocation) dies AFTER the engine's and the top-k's manifest
-    commits for a batch but BEFORE the sink write and Spark's offset
-    commit. On restart Spark redelivers the batch: both manifests replay-
-    skip, topk_delta() hands back the PERSISTED top-k changelog, the sink
+    checkpointLocation) dies AFTER the engine's manifest commit (top-k
+    included) for a batch but BEFORE the sink write and Spark's offset
+    commit. On restart Spark redelivers the batch: the engine replay-
+    skips, topk_delta() hands back the COMMITTED top-k changelog, the sink
     write lands exactly once, and BOTH the maintained top-k and the sink's
     telescoped net equal the from-scratch model."""
     import glob
@@ -1557,7 +1411,7 @@ def test_topk_knob_full_stack_stream_kill_and_recover(spark, tmp_path):
         eng = IncrementalAcyclicQuery(spark, state, TK_SPEC, resume=resume)
 
         def handle(batch, batch_id):
-            eng.process_batch({"items": batch}, batch_id)  # both manifests commit
+            eng.process_batch({"items": batch}, batch_id)  # engine + top-k commit
             if batch_id == kill_at:
                 raise RuntimeError("injected kill before sink write")
             write_changelog(eng.topk_delta(), sink, batch_id)
@@ -1591,35 +1445,24 @@ def test_topk_knob_full_stack_stream_kill_and_recover(spark, tmp_path):
 @given(batched=_SPLITS)
 def test_topk_durable_property_resume_every_batch(spark, tmp_path_factory, batched):
     """Prefix closure THROUGH restarts: after EVERY batch of an arbitrary
-    interleaving the durable TopKView is torn down and a fresh instance
-    resumes from its manifest — the maintained top-k must equal the
-    from-scratch model at every prefix. Pins that persistence is a complete
-    snapshot (buffer AND boundary AND last_batch), not just the happy
-    path."""
+    interleaving the engine is torn down and a fresh ``resume=True`` engine
+    reloads it and its top-k from the manifest — the maintained top-k must
+    equal the from-scratch model at every prefix. Pins that the committed
+    top-k state is a complete snapshot (buffer AND boundary), not just the
+    happy path."""
     tmp = tmp_path_factory.mktemp("dtopk")
-    eng = IncrementalAcyclicQuery(spark, str(tmp / "eng"), SPEC)
-    sdir = str(tmp / "tk")
-
-    def mk(resume):
-        return TopKView(
-            K, "total", ("kid",), refill=eng.result, slack=SLACK,
-            prime=False, state_dir=sdir, spark=spark, resume=resume,
-        )
-
-    topk = mk(False)
+    sdir = str(tmp / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC)
     seen: list[tuple] = []
     for i, ops in enumerate(batched):
         rows = [(kid, val, w) for kid, val, w in ops]
-        delta = eng.process_batch(
-            {"items": spark.createDataFrame(rows or [], ITEM_SCHEMA)},
-            batch_id=i,
-            emit_delta=True,
+        eng.process_batch(
+            {"items": spark.createDataFrame(rows or [], ITEM_SCHEMA)}, batch_id=i
         )
-        topk.apply(delta, batch_id=i)
         seen.extend(rows)
-        assert _got(topk) == _model_topk(seen)
-        topk = mk(True)  # "crash" + resume from the manifest
-        assert _got(topk) == _model_topk(seen)
+        assert _knob_got(eng) == _model_topk(seen)
+        eng = IncrementalAcyclicQuery(spark, sdir, TK_SPEC, resume=True)  # "crash"
+        assert _knob_got(eng) == _model_topk(seen)
 
 
 @full_tier_only
@@ -1628,35 +1471,22 @@ def test_topk_durable_property_resume_every_batch(spark, tmp_path_factory, batch
 def test_grouped_topk_durable_property_resume_every_batch(
     spark, tmp_path_factory, batched
 ):
-    """The grouped twin: durable sharded state torn down and resumed after
-    EVERY batch of arbitrary interleavings (duplicates, deletes-before-
-    inserts, within-group ties, vanished groups) — per-group top-k equals
-    the from-scratch rank at every prefix, with zero re-priming."""
+    """The grouped twin: the engine and its sharded top-k torn down and
+    resumed after EVERY batch of arbitrary interleavings (duplicates,
+    deletes-before-inserts, within-group ties, vanished groups) — per-group
+    top-k equals the from-scratch rank at every prefix, with zero
+    re-priming."""
     tmp = tmp_path_factory.mktemp("dgtopk")
-    eng = IncrementalAcyclicQuery(spark, str(tmp / "eng"), G_SPEC)
-
-    def mk(resume):
-        return GroupedTopKView(
-            GK, "total", ("g",), ("kid",),
-            refill=lambda t: eng.result(t), slack=GSLACK,
-            state_dir=str(tmp / "tk"), spark=spark, resume=resume,
-        )
-
-    topk = mk(False)
+    sdir = str(tmp / "es")
+    eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)
     seen: list[tuple] = []
     for i, ops in enumerate(batched):
         rows = [tuple(op) for op in ops]
-        delta = eng.process_batch(
-            {"items": spark.createDataFrame(rows or [], G_SCHEMA)},
-            batch_id=i,
-            emit_delta=True,
-        )
-        topk.apply(delta, batch_id=i)
+        _gtk_batch(spark, eng, rows, i)
         seen.extend(rows)
-        assert _ggot(topk) == _gmodel(seen)
-        topk = mk(True)  # "crash" + resume from the manifest
-        if topk._schema is not None:
-            assert _ggot(topk) == _gmodel(seen)
+        assert _ggot(eng._topk) == _gmodel(seen)
+        eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC, resume=True)  # "crash"
+        assert _ggot(eng._topk) == _gmodel(seen)
 
 
 def test_topk_over_sliding_window_view_composes_with_ttl(spark, tmp_path):
@@ -1677,10 +1507,7 @@ def test_topk_over_sliding_window_view_composes_with_ttl(spark, tmp_path):
     eng = IncrementalAcyclicQuery(
         spark, str(tmp_path / f"w{uuid.uuid4().hex[:8]}"), spec
     )
-    topk = TopKView(
-        2, "val", ("e_cat",), refill=eng.result,
-        state_dir=str(tmp_path / "tk"), spark=spark, slack=1, prime=False,
-    )
+    topk = TopKView(2, "val", ("e_cat",), refill=eng.result, spark=spark, slack=1)
     schema = "e_key int, e_day int, e_cat string, e_val int, weight int"
 
     def step(rows, bid):
@@ -1800,10 +1627,11 @@ def _chain_step(spark, up, down, rows, i):
 def test_topk_chained_engine_crash_replay(spark, tmp_path):
     """topk changelog -> downstream ENGINE (round 8): the maintained top-k's
     ±changelog feeds a SECOND IncrementalAcyclicQuery as a base relation,
-    and exactly-once composes across all THREE manifests — a crash between
-    the upstream pair's commits and the downstream commit replays the batch,
-    the upstream engine+top-k replay-skip and re-hand the PERSISTED top-k
-    delta, and the downstream engine applies it exactly once."""
+    and exactly-once composes across both engines' manifests — a crash
+    between the upstream commit (engine and top-k) and the downstream commit
+    replays the batch, the upstream engine replay-skips and re-hands the
+    COMMITTED top-k delta, and the downstream engine applies it exactly
+    once."""
     up_dir, down_dir = str(tmp_path / "up"), str(tmp_path / "down")
     up = IncrementalAcyclicQuery(spark, up_dir, CH_UP_SPEC)
     down = IncrementalAcyclicQuery(spark, down_dir, CH_DOWN_SPEC)
@@ -1816,13 +1644,13 @@ def test_topk_chained_engine_crash_replay(spark, tmp_path):
     _chain_step(spark, up, down, ops1, 1)
     assert _chain_got(down) == _chain_model(ops0 + ops1)
 
-    # crash window: upstream engine AND top-k commit batch 2, the process
-    # dies before the downstream feed
+    # crash window: the upstream engine commits batch 2 (its top-k
+    # included), the process dies before the downstream feed
     ops2 = [(1, 1, 70, -1), (2, 0, 60, -1)]
     up.process_batch(
         {"items": spark.createDataFrame(ops2, CH_SCHEMA)}, batch_id=2
     )
-    # restart: all three structures resume from their manifests
+    # restart: both engines resume from their manifests
     up2 = IncrementalAcyclicQuery(spark, up_dir, CH_UP_SPEC, resume=True)
     down2 = IncrementalAcyclicQuery(spark, down_dir, CH_DOWN_SPEC, resume=True)
     assert _chain_got(down2) == _chain_model(ops0 + ops1)  # still behind
@@ -1911,10 +1739,10 @@ def test_grouped_topk_changelog_chains_into_engine(spark, tmp_path):
 def test_grouped_topk_chained_engine_crash_replay(spark, tmp_path):
     """Grouped twin of the chain's crash window, in the registered query's
     exact shape (MULTI-KEY per-group order + emit_changelog + downstream
-    engine): upstream engine AND grouped top-k commit a batch, the process
-    dies before the downstream feed. Exactly-once composes across all three
-    manifests — on restart the upstream pair replay-skip the redelivered
-    batch and re-hand the PERSISTED per-group ±changelog, the downstream
+    engine): the upstream engine commits a batch (grouped top-k included),
+    the process dies before the downstream feed. Exactly-once composes
+    across both manifests — on restart the upstream engine replay-skips the
+    redelivered batch and re-hands the COMMITTED per-group ±changelog, the downstream
     engine (which never saw it) applies it once, and a second redelivery is
     a full-chain no-op."""
     schema = "g int, kid int, d int, val int, weight int"
@@ -1970,7 +1798,7 @@ def test_grouped_topk_chained_engine_crash_replay(spark, tmp_path):
     down.process_batch({"top": eng.topk_delta()}, batch_id=0)
     assert got(down) == model(ops0)
 
-    # crash window: batch 1 commits upstream (engine + grouped top-k), the
+    # crash window: batch 1 commits upstream (engine with its top-k), the
     # process dies before the downstream feed — a tie-cohort exit and a
     # two-key-tie entry whose admission the (total, d) boundary decides
     ops1 = [(0, 0, 0, 50, -1), (1, 9, 0, 51, 1)]
@@ -1979,7 +1807,7 @@ def test_grouped_topk_chained_engine_crash_replay(spark, tmp_path):
     eng2 = IncrementalAcyclicQuery(spark, up_dir, spec, resume=True)
     down2 = IncrementalAcyclicQuery(spark, down_dir, down_spec, resume=True)
     assert got(down2) == model(ops0)  # still behind
-    # foreachBatch redelivery: upstream pair replay-skip, downstream applies
+    # foreachBatch redelivery: upstream replay-skips, downstream applies
     eng2.process_batch({"items": spark.createDataFrame(ops1, schema)}, batch_id=1)
     down2.process_batch({"top": eng2.topk_delta()}, batch_id=1)
     assert got(down2) == model(ops0 + ops1)
@@ -2059,14 +1887,8 @@ def test_topk_multi_key_property_prefix_closure(spark, tmp_path_factory, batched
     tmp = tmp_path_factory.mktemp("mktopk")
     eng = IncrementalAcyclicQuery(spark, str(tmp / "eng"), MK_SPEC)
     topk = TopKView(
-        K,
-        (("total", "desc"), ("d", "asc")),
-        ("kid",),
-        refill=eng.result,
-        state_dir=str(tmp / "tk"),
-        spark=spark,
-        slack=SLACK,
-        prime=False,
+        K, (("total", "desc"), ("d", "asc")), ("kid",), refill=eng.result,
+        spark=spark, slack=SLACK,
     )
     seen: list[tuple] = []
     for i, ops in enumerate(batched):
@@ -2133,12 +1955,12 @@ def test_topk_chain_depth4_crash_replay(spark, tmp_path):
     """Composition closure at DEPTH 4 (round 9, the registered
     ``incremental_topk_chain_depth4_stream`` shape): engine → per-group
     top-k (emit_changelog) → engine → GLOBAL top-k. A crash between the
-    upstream pair's commits and the downstream feed replays the batch;
-    exactly-once composes across all FOUR manifests — the upstream engine
-    and grouped top-k replay-skip and re-hand the PERSISTED leaderboard
-    changelog, the downstream engine applies it once and feeds ITS global
-    top-k inside the same commit discipline, and a second redelivery is a
-    full-chain no-op."""
+    upstream commit and the downstream feed replays the batch; exactly-once
+    composes across the chain's TWO manifests (each engine commits its
+    top-k inside its own) — the upstream engine replay-skips and re-hands
+    the COMMITTED leaderboard changelog, the downstream engine applies it
+    once and folds ITS global top-k inside the same commit, and a second
+    redelivery is a full-chain no-op."""
     up_dir, down_dir = str(tmp_path / "up"), str(tmp_path / "down")
     up = IncrementalAcyclicQuery(spark, up_dir, D4_UP_SPEC)
     down = IncrementalAcyclicQuery(spark, down_dir, D4_DOWN_SPEC)
@@ -2151,8 +1973,8 @@ def test_topk_chain_depth4_crash_replay(spark, tmp_path):
     _d4_step(spark, up, down, ops1, 1)
     assert _d4_got(down) == _d4_model(ops0 + ops1)
 
-    # crash window: upstream engine AND grouped top-k commit batch 2, the
-    # process dies before the downstream feed
+    # crash window: the upstream engine commits batch 2 (grouped top-k
+    # included), the process dies before the downstream feed
     ops2 = [(1, 9, 99, -1), (2, 0, 52, 1)]
     up.process_batch(
         {"items": spark.createDataFrame(ops2, G_SCHEMA)}, batch_id=2
@@ -2162,7 +1984,7 @@ def test_topk_chain_depth4_crash_replay(spark, tmp_path):
     assert _d4_got(down2) == _d4_model(ops0 + ops1)  # still behind
     _d4_step(spark, up2, down2, ops2, 2)  # foreachBatch redelivery
     assert _d4_got(down2) == _d4_model(ops0 + ops1 + ops2)
-    # a second redelivery is a no-op across all four structures
+    # a second redelivery is a no-op across both engines and their top-ks
     _d4_step(spark, up2, down2, ops2, 2)
     assert _d4_got(down2) == _d4_model(ops0 + ops1 + ops2)
     # stream continues exactly across the healed 4-stage chain

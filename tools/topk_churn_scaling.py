@@ -59,10 +59,7 @@ def main() -> None:
     )
     work = tempfile.mkdtemp(prefix="topk_churn_")
     eng = IncrementalAcyclicQuery(spark, work, spec)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, state_dir=f"{work}/topk",
-        spark=spark, slack=SLACK, prime=False,
-    )
+    topk = TopKView(K, "total", ("kid",), refill=eng.result, spark=spark, slack=SLACK)
 
     # batch 0: the whole view — group g totals g+1 (top = highest ids)
     seed = spark.range(groups).select(
@@ -153,10 +150,7 @@ def ties() -> None:
     )
     work = tempfile.mkdtemp(prefix="topk_ties_")
     eng = IncrementalAcyclicQuery(spark, work, spec)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, state_dir=f"{work}/topk",
-        spark=spark, slack=SLACK, prime=False,
-    )
+    topk = TopKView(K, "total", ("kid",), refill=eng.result, spark=spark, slack=SLACK)
 
     # group g totals (g%10 + 1) * 10 — ten distinct totals; the top value
     # (100) is shared by groups//10 groups, so the boundary sits INSIDE a
@@ -249,10 +243,8 @@ def ties2() -> None:
         (("total", "desc"), ("d", "asc")),
         ("kid",),
         refill=eng.result,
-        state_dir=f"{work}/topk",
         spark=spark,
         slack=SLACK,
-        prime=False,
     )
 
     # group g: total (g%10 + 1)*10, d = g%2 — the top cohort (total=100,
@@ -402,10 +394,7 @@ def grouped() -> None:
             for i in range(bulk_groups * bulk_rows_per_group)
         ]
         delta = spark.createDataFrame(ops, "g long, kid long, v long, weight int")
-        topk.apply(
-            eng.process_batch({"items": delta.localCheckpoint()}, b, emit_delta=True),
-            batch_id=b,
-        )
+        topk.apply(eng.process_batch({"items": delta.localCheckpoint()}, b, emit_delta=True))
         per_batch.append(
             {
                 "batch": b,
@@ -458,16 +447,18 @@ def grouped() -> None:
 
 
 def durable() -> None:
-    """Durable TopKView persist cost: the buffer is a ≤ k+2·slack row
-    driver-side dict, so its per-batch durable commit is ONE atomic
-    manifest replace holding the buffer, boundary and emitted changelog —
-    no Spark job. Measured end to end: the main() churn workload with
-    ``state_dir`` on, per-batch wall split into engine fold vs top-k
-    apply+persist, then a resumed instance checked against a from-scratch
-    rank.
+    """Durable top-k persist cost: the buffer is a ≤ k+2·slack row
+    driver-side dict, and an engine with ``top_k`` commits it as typed JSON
+    inside its own manifest — the same ``os.replace`` that commits the
+    engine's state, no Spark job. Measured end to end: the main() churn
+    workload on an engine with ``TopKSpec``, per-batch wall split into the
+    whole batch vs its ``topk`` phase (the fold), then a ``resume=True``
+    engine checked against a from-scratch rank.
 
     Usage:  python tools/topk_churn_scaling.py durable [groups] [batches] [bulk]
     """
+    from flink_and_acyclic_schema_spark.streaming.acyclic import TopKSpec
+
     groups = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
     batches = int(sys.argv[3]) if len(sys.argv) > 3 else 30
     bulk = int(sys.argv[4]) if len(sys.argv) > 4 else 2_000
@@ -476,21 +467,19 @@ def durable() -> None:
         relations=(RelSpec("items"),),
         group_by=("kid",),
         measures={"total": lambda: F.col("v")},
+        top_k=TopKSpec(k=K, order_by="total", slack=SLACK),
     )
     work = tempfile.mkdtemp(prefix="topk_durable_")
     eng = IncrementalAcyclicQuery(spark, work, spec)
-    topk = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False,
-        state_dir=f"{work}/topk", spark=spark,
-    )
+    eng.instrument = True
     seed = spark.range(groups).select(
         F.col("id").alias("kid"), (F.col("id") + 1).alias("v"), F.lit(1).alias("weight")
     )
-    topk.apply(eng.process_batch({"items": seed}, 0, emit_delta=True), batch_id=0)
+    eng.process_batch({"items": seed}, 0)
 
     per_batch = []
     for b in range(1, batches + 1):
-        victim = topk.result_rows()[0]
+        victim = eng._topk.result_rows()[0]
         ops = [(int(victim["kid"]), int(victim["total"]), -1)]
         base = (b * 7919) % (groups // 2)
         ops += [
@@ -499,19 +488,16 @@ def durable() -> None:
         ]
         delta = spark.createDataFrame(ops, SCHEMA).localCheckpoint()
         t0 = time.perf_counter()
-        ch = eng.process_batch({"items": delta}, b, emit_delta=True)
-        t1 = time.perf_counter()
-        topk.apply(ch, batch_id=b)
-        t2 = time.perf_counter()
+        eng.process_batch({"items": delta}, b)
         per_batch.append(
             {
                 "batch": b,
-                "engine_sec": round(t1 - t0, 3),
-                "topk_apply_and_persist_sec": round(t2 - t1, 3),
+                "batch_sec": round(time.perf_counter() - t0, 3),
+                "topk_fold_sec": round(eng.last_profile["topk"]["sec"], 3),
             }
         )
 
-    # exactness + durability: a resumed instance agrees with from-scratch
+    # exactness + durability: a resumed engine agrees with from-scratch
     want = [
         (r["kid"], r["total"])
         for r in eng.result()
@@ -519,11 +505,8 @@ def durable() -> None:
         .limit(K)
         .collect()
     ]
-    re = TopKView(
-        K, "total", ("kid",), refill=eng.result, slack=SLACK, prime=False,
-        state_dir=f"{work}/topk", spark=spark, resume=True,
-    )
-    got = [(r["kid"], r["total"]) for r in re.result_rows()]
+    re = IncrementalAcyclicQuery(spark, work, spec, resume=True)
+    got = [(r["kid"], r["total"]) for r in re._topk.result_rows()]
     mean = lambda k_: round(  # noqa: E731
         sum(p[k_] for p in per_batch) / len(per_batch), 4
     )
@@ -534,11 +517,10 @@ def durable() -> None:
         "bulk_churn_per_batch": bulk,
         "k": K,
         "slack": SLACK,
-        "buffer_rows_persisted": len(topk._buffer),
-        "mean_engine_sec_per_batch": mean("engine_sec"),
-        "mean_topk_apply_and_persist_sec_per_batch": mean(
-            "topk_apply_and_persist_sec"
-        ),
+        "buffer_rows_persisted": len(eng._topk._buffer),
+        "manifest_bytes": os.path.getsize(os.path.join(work, "MANIFEST.json")),
+        "mean_batch_sec": mean("batch_sec"),
+        "mean_topk_fold_sec_per_batch": mean("topk_fold_sec"),
         "resume_exact": got == want,
         "per_batch": per_batch,
     }

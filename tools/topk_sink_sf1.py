@@ -1,7 +1,7 @@
 """The full continuous ORDER BY/LIMIT + exactly-once sink stack on REAL
 TPC-H data at sf1 — the registered ``incremental_topk_sink_stream`` shape
 (plans/ivm_topk_ext.py): the Q10 tree with bucketed state, the spec-level
-``TopKSpec`` knob (durable TopKView under <state>/topk), and the per-batch
+``TopKSpec`` knob (a TopKView committed inside the engine's manifest), and the per-batch
 ±changelog appended to a parquet sink, instrumented per micro-batch.
 
 What it ties down that the synthetic tools can't: the cost model on real
