@@ -52,6 +52,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # no cap on a single-partition input: without statistics on a join's
+        # output the planner sizes it as the product of its inputs' sizes,
+        # so the second join of a chain of KB-sized single-partition inputs
+        # already passes the default 128 MB and gets both sides re-shuffled.
+        # The streaming engine folds a small batch's delta join in one task
+        # only under this setting (IncrementalAcyclicQuery._fits_one_task);
+        # it never sets it on the caller's session itself
+        .config("spark.sql.maxSinglePartitionBytes", str(2**63 - 1))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

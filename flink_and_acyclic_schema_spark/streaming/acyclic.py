@@ -112,6 +112,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .topk import _bucket_expr, _dump_value, _load_value, _norm_order, _run_parallel
 
@@ -181,6 +182,16 @@ def _range_union(ranges) -> tuple:
     return (lo, hi)
 
 
+def _join_on_keys(df: DataFrame, other: DataFrame, on: list[str], how: str) -> DataFrame:
+    """``df`` joined to ``other`` on equal ``on`` columns, NULL matching
+    NULL: a group key holding a NULL is still one group of the view. The
+    result keeps ``df``'s copy of each key column."""
+    keys = {c: f"_k_{c}" for c in on}
+    other = other.select(*[F.col(c).alias(keys.get(c, c)) for c in other.columns])
+    cond = reduce(Column.__and__, [F.col(c).eqNullSafe(F.col(k)) for c, k in keys.items()])
+    return df.join(other, cond, how).drop(*keys.values())
+
+
 @dataclass(frozen=True)
 class RelSpec:
     """One relation (tree node) of an acyclic query.
@@ -198,7 +209,10 @@ class RelSpec:
     so state never holds columns the query doesn't touch — the π twin of the
     σ gating, and the state-size lever at 100 TB where base rows are wide.
     ``broadcast_state`` marks dimension-sized relations whose state and
-    deltas should broadcast in every delta-join term (e.g. nation).
+    deltas should broadcast in every delta-join term (e.g. nation). A batch
+    whose whole input is small enough to fold in one task (see
+    ``IncrementalAcyclicQuery._fits_one_task``) broadcasts nothing, this
+    relation included.
 
     ``semi=True`` makes this relation an EXISTS gate (SQL semi-join): it
     contributes ONLY the 0/1 presence of its join key(s), never tuple
@@ -622,6 +636,10 @@ class IncrementalAcyclicQuery:
         self.factor_terms = True
         self.last_factored = 0
         self.last_checkpoints = 0
+        # did the last batch fold its delta join in one task
+        # (_fits_one_task)? Read by the join steps and the emit stage while
+        # the batch runs; plan-shape-only, so not persisted
+        self.last_one_task = False
         # instrument-only: rel -> eviction-band rows read by the last batch
         self.last_evicted: dict[str, int] = {}
         # spec-level continuous ORDER BY/LIMIT (TopKSpec): the maintained
@@ -1136,8 +1154,15 @@ class IncrementalAcyclicQuery:
         the same delta probes across every virtual tree. Otherwise pruning is
         TRANSITIVE: the probe collect is an eager action over ``acc``'s
         lineage and the join re-executes it, so ``acc`` is localCheckpointed
-        once for both. The side's weight is renamed to ``w_col``; broadcast
-        follows the relation spec."""
+        once for both. The side's weight is renamed to ``w_col``.
+
+        A batch that folds in one task (``last_one_task``) joins both sides
+        as single partitions: each is coalesced to one, and a shuffled-hash
+        hint builds the hash on ``acc``, the delta-bounded side. Two
+        ``SinglePartition`` children need no Exchange, so the whole ΔJ and
+        its group-by plan as one task. Otherwise broadcast follows the
+        relation spec (``RelSpec.broadcast_state``) and the planner's own
+        size estimates."""
         pruning = None
         if (
             r.buckets > 0
@@ -1176,12 +1201,14 @@ class IncrementalAcyclicQuery:
                 for c, vs in zip(r.bucket_key, key_vals):
                     side = side.filter(F.col(c).isin(vs))
         side = side.drop(BUCKET)
-        if r.broadcast_state:
-            side = F.broadcast(side)
         cond = reduce(
             Column.__and__,
             [F.col(own) == F.col(earlier) for own, earlier in pairs],
         )
+        if self.last_one_task:
+            return acc.coalesce(1).hint("shuffle_hash").join(side.coalesce(1), cond)
+        if r.broadcast_state:
+            side = F.broadcast(side)
         return acc.join(side, cond)
 
     def _join_chain(
@@ -1548,27 +1575,63 @@ class IncrementalAcyclicQuery:
         out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
         return out, int(obs.get["rows"])
 
-    @staticmethod
-    def _fits_broadcast(df: DataFrame, n_rows: int) -> bool:
+    def _fits_broadcast(self, sized: list[tuple[StructType, int]]) -> bool:
         """The planner's own broadcast rule — rows × (8 + the schema's
-        default row size) within ``spark.sql.autoBroadcastJoinThreshold`` —
-        applied to a row count the planner cannot see."""
-        jdf = df._jdf
-        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
-        return 0 <= n_rows * (8 + jdf.schema().defaultSize()) <= limit
+        default row size), summed over the (schema, rows) pairs of
+        ``sized``, within ``spark.sql.autoBroadcastJoinThreshold`` — applied
+        to row counts the planner cannot see."""
+        jvm = self.spark._jvm
+        limit = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        size = sum(
+            n * (8 + jvm.org.apache.spark.sql.types.DataType.fromJson(s.json()).defaultSize())
+            for s, n in sized
+        )
+        return 0 <= size <= limit
+
+    def _fits_one_task(self, filt: Mapping[str, DataFrame], memo: dict) -> bool:
+        """May this batch fold its delta join in ONE task? The planner's
+        broadcast rule (``_fits_broadcast``) applied to the batch's whole
+        input: every committed state — each spec relation must have one, so
+        a bootstrap never qualifies — plus every delta, each bounded by its
+        ingest count. A delta without a count in ``memo`` (a semi/anti
+        presence delta, a ttl delta, an uncounted batch) fails the rule.
+
+        The session must also have lifted ``spark.sql.maxSinglePartitionBytes``
+        (``session.get_spark`` does): with no statistics on a join's output
+        the planner estimates it as the product of its inputs' sizes, so
+        already the second join of a chain of KB-sized inputs passes the
+        default 128 MB cap, and EnsureRequirements re-shuffles both of its
+        single-partition sides. The engine never changes the caller's
+        session; under the cap it keeps the broadcast plan."""
+        sql_conf = self.spark._jvm.org.apache.spark.sql.internal.SQLConf
+        conf = self.spark._jsparkSession.sessionState().conf()
+        if conf.getConf(sql_conf.MAX_SINGLE_PARTITION_BYTES()) < 2**63 - 1:
+            return False
+        if any(r.name not in self._state_rows for r in self.spec.relations):
+            return False
+        if any(("rowcount", n) not in memo for n in filt):
+            return False
+        if any(s not in self._schemas for s in self._state_rows):
+            return False  # a resumed engine pins schemas as deltas arrive
+        sized = [(self._schemas[s], n) for s, n in self._state_rows.items()]
+        sized += [(self._schemas[n], memo[("rowcount", n)]) for n in filt]
+        return self._fits_broadcast(sized)
 
     def _broadcast_if_small(self, df: DataFrame, n_rows: int) -> DataFrame:
-        """Broadcast hint for a checkpointed frame of known row count. The
-        planner sees no statistics on a checkpoint (its size estimate is
-        ``defaultSizeInBytes``), so a join against it plans a sort-merge join
-        that AQE converts to a broadcast only after shuffling both sides."""
-        return F.broadcast(df) if self._fits_broadcast(df, n_rows) else df
+        """Broadcast hint for a checkpointed frame of known row count, unless
+        the batch folds in one task: the emit stage then joins the frame as
+        one partition (``_view``), where a broadcast would cost its own
+        job. The planner sees no statistics on a checkpoint (its size
+        estimate is ``defaultSizeInBytes``), so a join against it plans a
+        sort-merge join that AQE converts to a broadcast only after
+        shuffling both sides."""
+        if self.last_one_task or not self._fits_broadcast([(df.schema, n_rows)]):
+            return df
+        return F.broadcast(df)
 
     def _read_emitted(self) -> DataFrame:
         """The persisted changelog of batch ``_emitted["batch"]``, read with
         its recorded schema: parquet schema inference would cost a job."""
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(self._emitted["schema"]))
         return self.spark.read.schema(schema).parquet(self._emitted["path"])
 
@@ -1608,6 +1671,7 @@ class IncrementalAcyclicQuery:
         self.last_evicted = {}
         self.last_factored = 0
         self.last_checkpoints = 0
+        self.last_one_task = False
         # idempotent replay skip: after checkpoint recovery, foreachBatch
         # redelivers the last uncommitted batch — if our manifest already
         # committed it, applying it again would double-count. A replayed
@@ -1653,14 +1717,21 @@ class IncrementalAcyclicQuery:
         engine and its top-k alike. Returns the changelog and the superseded
         paths, which the caller deletes only after that commit.
 
+        After the ttl stage the batch decides its plan (``_fits_one_task``):
+        a batch whose committed states and counted deltas fit the
+        planner's broadcast rule folds its delta join, group-by and emit
+        restrictions as single-partition plans, with no Exchange and no
+        broadcast; any other batch keeps the broadcast/shuffle plan.
+
         The PRE-batch view of the touched groups is a lazy plan built before
-        the wave, on the main thread: ``result`` resolves segment paths at
+        the wave, on the main thread: ``_view`` resolves segment paths at
         plan-build time and the wave's commits swap ``_segments`` to the new
         versions. It executes inside the emit stage's one action, still
         reading the pre-batch files, which two-phase commit keeps on disk
         until the post-manifest cleanup."""
         filt, delta_rows, bucket_memo = self._ingest(deltas)
         seg_range = self._ttl(filt, delta_rows)
+        self.last_one_task = self._fits_one_task(filt, bucket_memo)
         term_new, term_old, term_delta = self._gate_presence(filt)
         terms = self._term_build(term_new, term_old, term_delta, bucket_memo)
         if not terms:
@@ -1675,7 +1746,7 @@ class IncrementalAcyclicQuery:
         )
         if n_agg is not None:
             delta_rows["agg"] = n_agg
-        pre_plan = self.result(touched) if emit_delta else None
+        pre_plan = self._view(touched, touched_unique=True) if emit_delta else None
         cleanup: list[str] = []
         self._commit_wave(filt, seg_range, agg_delta, hist_deltas, delta_rows, cleanup)
         changelog = None
@@ -1962,8 +2033,16 @@ class IncrementalAcyclicQuery:
         ``emit_delta`` the aggregate delta is materialized once — it feeds
         the commit and the touched-group set — and its observed row count is
         returned second. The touched set is returned last (``None`` without
-        ``emit_delta`` or group keys)."""
+        ``emit_delta`` or group keys).
+
+        In a batch that folds in one task (``last_one_task``) the union of
+        terms is coalesced to one partition: the group-by sees
+        ``SinglePartition`` and plans no Exchange, so the checkpoint is the
+        fold's one job, and the touched set stays one partition instead of
+        a broadcast."""
         dj = reduce(lambda a, b: a.unionByName(b), terms)
+        if self.last_one_task:
+            dj = dj.coalesce(1)
         if self.spec.hist_measures:
             # ≥2 consumers of the raw ΔJ (the aggregate fold below plus one
             # groupBy PER hist measure): without materialization every hist
@@ -2004,6 +2083,8 @@ class IncrementalAcyclicQuery:
         touched, n_touched = agg_delta.select(*gb), n_agg
         if self.spec.preserve is not None and self.spec.preserve in filt:
             touched = touched.unionByName(filt[self.spec.preserve].select(*gb))
+            if self.last_one_task:
+                touched = touched.coalesce(1)
             with self._phase("touched"):
                 touched, n_touched = self._counted_checkpoint(touched.distinct())
         touched = self._broadcast_if_small(touched, n_touched)
@@ -2078,8 +2159,12 @@ class IncrementalAcyclicQuery:
         the same row). The post-batch view reads the freshly written
         (pre-manifest) state; ``pre_plan`` is the lazy pre-batch view built
         before the commit wave, still reading the pre-batch files. Both
-        execute inside this stage's one action, where Spark reuses the
-        touched broadcast across the two sides.
+        execute inside this stage's one action. Each side restricts its
+        state reads to ``touched`` with an inner join (``_view``): the
+        touched set is broadcast, and Spark reuses the broadcast across the
+        two sides, or, in a batch that folds in one task, it is one
+        partition joined to single-partition state reads, so the action
+        plans no Exchange and no broadcast job.
 
         With a ``batch_id`` the changelog is persisted INSIDE this batch's
         atomic commit, so a crash-replayed batch can still hand the exact
@@ -2089,7 +2174,8 @@ class IncrementalAcyclicQuery:
         the same write) and REVERTED it: caching materializes the plan
         without AQE's partition coalescing (grouped stack 36→46 s at
         sf0.1)."""
-        changelog = self.result(touched).withColumn(WEIGHT, F.lit(1)).unionByName(
+        post = self._view(touched, touched_unique=True)
+        changelog = post.withColumn(WEIGHT, F.lit(1)).unionByName(
             pre_plan.withColumn(WEIGHT, F.lit(-1))
         )
         if batch_id is None:
@@ -2211,7 +2297,7 @@ class IncrementalAcyclicQuery:
         bucketed = r is not None and r.buckets > 0
         if bucketed:
             df = self._conform(rel, df)
-        if max_rows is not None and self._fits_broadcast(df, max_rows):
+        if max_rows is not None and self._fits_broadcast([(df.schema, max_rows)]):
             df = df.coalesce(1)
         elif bucketed:
             df = df.repartition(r.buckets, F.col(BUCKET))
@@ -2334,23 +2420,38 @@ class IncrementalAcyclicQuery:
         exactly what the hook is for).
 
         The touched restriction is PUSHED DOWN onto every state read as a
-        semi-join (it commutes with the per-group reductions, which never mix
-        groups), so reading a subset of groups costs O(subset ⋈ state), not
-        O(all groups). At 100 TB with bucketed/keyed state the same
-        semi-join is a co-located point lookup per touched group."""
+        null-safe semi-join (it commutes with the per-group reductions,
+        which never mix groups), so reading a subset of groups costs
+        O(subset ⋈ state), not O(all groups). At 100 TB with bucketed/keyed
+        state the same semi-join is a co-located point lookup per touched
+        group. ``touched`` may name any SUBSET of the group columns (e.g.
+        GroupedTopKView refills by partition columns only): a subset
+        restricts to a superset of the named groups, which commutes with the
+        per-group reductions exactly like the full key does."""
+        return self._view(touched, touched_unique=False)
+
+    def _view(self, touched: DataFrame | None, touched_unique: bool) -> DataFrame:
+        """``result(touched)``. With ``touched_unique`` — the emit stage's
+        touched set, one row per full group key — the restriction is an
+        inner join, which equals the semi-join on unique keys; in a batch
+        that folds in one task the state read is coalesced to one
+        partition and the hash built on ``touched``, so the restricted view
+        plans no Exchange. (A semi-join would not do: the optimizer pushes
+        a left-semi join below a coalesce, which leaves the join's state
+        side partitioned as read.) Group keys match null-safely: a group
+        whose key holds a NULL is still one group."""
         gb = list(self.spec.group_by)
+        on = [c for c in gb if touched is not None and c in touched.columns]
 
         def restrict(df: DataFrame) -> DataFrame:
-            # the restriction may name any SUBSET of the group columns (e.g.
-            # GroupedTopKView refills by partition columns only) — a subset
-            # semi-join restricts to a superset of the named groups, which
-            # commutes with the per-group reductions exactly like the full
-            # key does; emit_delta always passes the full key
-            if touched is not None and gb:
-                on = [c for c in gb if c in touched.columns]
-                if on:
-                    return df.join(touched.select(*on), on=on, how="left_semi")
-            return df
+            if not on:
+                return df
+            t = touched.select(*on)
+            if not touched_unique:
+                return _join_on_keys(df, t, on, "left_semi")
+            if self.last_one_task:
+                df, t = df.coalesce(1), t.coalesce(1).hint("shuffle_hash")
+            return _join_on_keys(df, t, on, "inner")
 
         agg = restrict(self._read_state("agg"))
         if not self._netted("agg"):
@@ -2369,7 +2470,7 @@ class IncrementalAcyclicQuery:
                 h.filter(F.col(WEIGHT) > 0).groupBy(*gb).agg(fns[kind]("_v").alias(name))
             )
             if gb:
-                out = out.join(per_group, on=gb, how="inner")
+                out = _join_on_keys(out, per_group, gb, "inner")
             else:  # global aggregate: both sides are single-row
                 out = out.crossJoin(F.broadcast(per_group))
         if self.spec.preserve is not None:
@@ -2379,7 +2480,7 @@ class IncrementalAcyclicQuery:
             if not self._netted(self.spec.preserve):
                 pstate = self._net(pstate)
             pgroups = pstate.filter(F.col(WEIGHT) > 0).select(*gb).distinct()
-            padded = pgroups.join(out.select(*gb), on=gb, how="left_anti")
+            padded = _join_on_keys(pgroups, out.select(*gb), gb, "left_anti")
             out = out.unionByName(padded, allowMissingColumns=True)
         if self.spec.having is not None:
             out = out.filter(self.spec.having())

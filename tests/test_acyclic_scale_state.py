@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -955,15 +956,17 @@ def _q10_topk(eng):
 
 def test_q10_trickle_batch_job_budget(spark, tmp_path):
     """A trickle batch of the continuous Q10 top-20 whose nation delta is
-    empty schedules no nation commit and no touched-set action. Its small
-    states net in one task, so each state write and the aggregate write is
-    one job. The pre-batch view is read inside the emitted write, so there
-    is no pre-view action, and the write's two touched-group restrictions
-    plan as broadcasts (≤2 jobs instead of AQE's shuffle-then-convert 4).
-    The whole batch — phases plus unphased jobs such as a read-back's
-    schema inference — stays within 16 jobs. The top-20 equals a fresh
-    engine fed the same rows in one batch, and an all-empty batch after it
-    changes nothing and emits nothing."""
+    empty schedules no nation commit and no touched-set action. Its states
+    and deltas together fit the planner's broadcast rule, so it folds its
+    delta join in one task: the join and its group-by plan no Exchange and
+    no broadcast, and the fold is one job. Its small states net in one
+    task, so each state write and the aggregate write is one job. The
+    pre-batch view is read inside the emitted write, and both of the
+    write's touched-group restrictions join single partitions, so the
+    write is one job too. The whole batch — phases plus unphased jobs such
+    as a read-back's schema inference — stays within 9 jobs. The top-20
+    equals a fresh engine fed the same rows in one batch, and an all-empty
+    batch after it changes nothing and emits nothing."""
     from flink_and_acyclic_schema_spark.plans.ivm_topk_ext import _q10_topk_spec
 
     eng = _engine(spark, tmp_path, _q10_topk_spec())
@@ -976,10 +979,17 @@ def test_q10_trickle_batch_job_budget(spark, tmp_path):
     unphased = len(set(tracker.getJobIdsForGroup(None)) - before)
     prof = eng.last_profile
     assert "state_write:nation" not in prof and "touched" not in prof
-    assert "emit_pre" not in prof and prof["emitted_write"]["jobs"] <= 2
-    for phase in ("state_write:lineitem", "state_write:orders", "state_write:customer", "agg_write"):
+    assert "emit_pre" not in prof and eng.last_one_task
+    for phase in (
+        "join_fold",
+        "state_write:lineitem",
+        "state_write:orders",
+        "state_write:customer",
+        "agg_write",
+        "emitted_write",
+    ):
         assert prof[phase]["jobs"] == 1, (phase, prof)
-    assert sum(p["jobs"] for p in prof.values()) + unphased <= 16, (prof, unphased)
+    assert sum(p["jobs"] for p in prof.values()) + unphased <= 9, (prof, unphased)
     assert [p.rsplit("/", 1)[-1] for p in eng._segments["nation"]] == ["nation_v1"]
 
     once = _engine(spark, tmp_path, _q10_topk_spec())
@@ -994,3 +1004,193 @@ def test_q10_trickle_batch_job_budget(spark, tmp_path):
     assert eng.topk_delta().count() == 0
     assert eng._last_batch == 2
     assert _q10_topk(eng) == _q10_topk(once)
+
+
+@pytest.fixture
+def fold_plans(monkeypatch):
+    """The physical plan of every ``_counted_checkpoint`` (with emit_delta
+    on and no preserve relation: the fold's aggregate delta), in order."""
+    plans = []
+    inner = IncrementalAcyclicQuery._counted_checkpoint
+
+    def record(df):
+        plans.append(plan_string(df))
+        return inner(df)
+
+    monkeypatch.setattr(IncrementalAcyclicQuery, "_counted_checkpoint", staticmethod(record))
+    return plans
+
+
+@contextmanager
+def _single_partition_cap(spark, value):
+    key = "spark.sql.maxSinglePartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_trickle_fold_plans_one_task_without_exchange(spark, tmp_path, fold_plans):
+    """A Q10 trickle batch whose committed states and counted deltas fit the
+    broadcast rule folds in one task: its fold plan has no Exchange and no
+    BroadcastExchange. The bootstrap batch (no committed state), a batch
+    whose delta has no ingest count (one relation only: nothing to skip,
+    so nothing is counted) and a trickle batch in a session that keeps the
+    default single-partition cap all keep the broadcast plan."""
+    from flink_and_acyclic_schema_spark.plans.ivm_topk_ext import _q10_topk_spec
+
+    eng = _engine(spark, tmp_path, _q10_topk_spec())
+    eng.process_batch(_q10_batch(spark, tmp_path, **Q10_BOOT), batch_id=0)
+    assert not eng.last_one_task and "BroadcastExchange" in fold_plans[-1]
+    eng.process_batch(_q10_batch(spark, tmp_path, **Q10_TRICKLE), batch_id=1)
+    assert eng.last_one_task and "Exchange" not in fold_plans[-1], fold_plans[-1]
+    orders_only = _q10_batch(spark, tmp_path, orders=[(121, 4, 1)])
+    eng.process_batch({"orders": orders_only["orders"]}, batch_id=2)
+    assert not eng.last_one_task and "BroadcastExchange" in fold_plans[-1]
+    with _single_partition_cap(spark, "128m"):
+        eng.process_batch(
+            _q10_batch(spark, tmp_path, orders=[(121, 4, -1)], lineitem=[(5, 105.0, -1)]),
+            batch_id=3,
+        )
+    assert not eng.last_one_task and "BroadcastExchange" in fold_plans[-1]
+    eng.process_batch(_q10_batch(spark, tmp_path, orders=[(122, 5, 1)]), batch_id=4)
+    assert eng.last_one_task and "Exchange" not in fold_plans[-1]
+
+
+@pytest.mark.parametrize("gate", ["semi", "ttl"])
+def test_gate_and_ttl_deltas_keep_the_broadcast_plan(spark, tmp_path, fold_plans, gate):
+    """A semi gate's term delta is its presence delta and a ttl delta is
+    watermark-filtered: neither is bounded by its ingest count, so a batch
+    carrying one keeps today's plan, with its exchanges."""
+    if gate == "semi":
+        spec = AcyclicQuerySpec(
+            relations=(
+                RelSpec("orders"),
+                RelSpec("customer", join_on=("c_key", "o_cust")),
+                RelSpec("lineitem", join_on=("l_key", "o_key"), semi=True),
+            ),
+            group_by=("c_name",),
+            measures={"n": lambda: F.lit(1)},
+        )
+    else:
+        spec = _spec(li_extra={"ttl": ("l_qty", lambda wm: wm - F.lit(1000))})
+    eng = _engine(spark, tmp_path, spec)
+    result = _feed(spark, eng, BATCHES[:1])
+    eng.process_batch(
+        {
+            "orders": spark.createDataFrame([(41, 3, 1)], ORD_SCHEMA),
+            "lineitem": spark.createDataFrame([(41, 7, 1)], LI_SCHEMA),
+        },
+        batch_id=1,
+        emit_delta=True,
+    )
+    assert result and not eng.last_one_task and "Exchange" in fold_plans[-1]
+
+
+Q10_STREAM = [
+    Q10_TRICKLE,
+    dict(lineitem=[(120, 500.0, -1), (121, 50.0, 1)], orders=[(121, 12, 1)]),
+    dict(
+        lineitem=[(10, 110.0, -1), (10, 111.0, 1)],
+        orders=[(10, 10, -1), (10, 11, 1)],
+        nation=[(4, -1)],
+    ),
+    dict(customer=[(61, 1)], orders=[(122, 61, 1)], lineitem=[(122, 900.0, 1)]),
+]
+
+
+def _netted(changelog):
+    cols = [c for c in changelog.columns if c != "weight"]
+    net = changelog.groupBy(*cols).agg(F.sum("weight").alias("weight"))
+    return sorted(tuple(r) for r in net.filter(F.col("weight") != 0).collect())
+
+
+def test_one_task_stream_matches_other_plans(spark, tmp_path):
+    """A Q10 stream whose trickle batches fold in one task gives the same
+    changelogs, ``result()`` and ``topk_result()`` as the per-term
+    decomposition (``factor_terms=False``) and as the broadcast plan (a
+    session under the default single-partition cap), and the same
+    ``result()`` and ``topk_result()`` as a fresh engine fed every row in
+    one batch."""
+    from flink_and_acyclic_schema_spark.plans.ivm_topk_ext import _q10_topk_spec
+
+    batches = [_q10_batch(spark, tmp_path, **Q10_BOOT)]
+    batches += [_q10_batch(spark, tmp_path, **b) for b in Q10_STREAM]
+
+    def run(factor_terms=True):
+        eng = _engine(spark, tmp_path, _q10_topk_spec())
+        eng.factor_terms = factor_terms
+        logs, one_task = [], []
+        for i, b in enumerate(batches):
+            logs.append(_netted(eng.process_batch(b, batch_id=i, emit_delta=True)))
+            one_task.append(eng.last_one_task)
+        return eng, logs, one_task
+
+    eng, logs, one_task = run()
+    assert one_task == [False] + [True] * len(Q10_STREAM)
+    per_term, per_term_logs, _ = run(factor_terms=False)
+    with _single_partition_cap(spark, "128m"):
+        broadcast, broadcast_logs, broadcast_one_task = run()
+    assert not any(broadcast_one_task)
+    assert logs == per_term_logs == broadcast_logs
+    assert all(logs[1:])
+
+    rows = {k: list(v) for k, v in Q10_BOOT.items()}
+    for b in Q10_STREAM:
+        for k, v in b.items():
+            rows[k] += v
+    once = _engine(spark, tmp_path, _q10_topk_spec())
+    once.process_batch(_q10_batch(spark, tmp_path, **rows), batch_id=0)
+
+    def view(e):
+        return sorted(tuple(r) for r in e.result().collect())
+
+    assert view(eng) == view(per_term) == view(broadcast) == view(once)
+    assert _q10_topk(eng) == _q10_topk(per_term) == _q10_topk(broadcast) == _q10_topk(once)
+
+
+NULL_ITEM = "kid int, tag string, v int, weight int"
+NULL_KIND = "k int, label string, weight int"
+
+
+@pytest.mark.parametrize("extra", ["none", "hist", "preserve"])
+def test_emit_delta_keeps_a_group_whose_key_holds_null(spark, tmp_path, extra):
+    """A group whose ``group_by`` key holds a NULL is one group of the view:
+    ``result()`` and the emitted changelog carry it on the broadcast plan
+    (the bootstrap batch) and on the one-task plan (a trickle batch), so
+    chained engines and the spec-level top-k see it too — also with a value
+    histogram joined per group, and with preserve padding, which must not
+    pad a group the aggregate surfaces."""
+    hist = {"mx": ("max", lambda: F.col("v"))} if extra == "hist" else {}
+    spec = AcyclicQuerySpec(
+        relations=(RelSpec("item"), RelSpec("kind", join_on=("k", "kid"))),
+        group_by=("kid", "tag"),
+        measures={"v": lambda: F.col("v")},
+        hist_measures=hist,
+        preserve="item" if extra == "preserve" else None,
+    )
+    eng = _engine(spark, tmp_path, spec)
+
+    def batch(i, items, kinds):
+        deltas = {
+            "item": spark.createDataFrame(items, NULL_ITEM),
+            "kind": spark.createDataFrame(kinds, NULL_KIND),
+        }
+        changelog = eng.process_batch(deltas, batch_id=i, emit_delta=True)
+        return sorted((tuple(r) for r in changelog.collect()), key=str)
+
+    def row(*r, mx=None):
+        return (*r[:3], mx, *r[3:]) if hist else r
+
+    got = batch(0, [(1, None, 10, 1), (2, "a", 5, 1)], [(1, "x", 1), (2, "y", 1)])
+    assert got == [row(1, None, 10, 1, mx=10), row(2, "a", 5, 1, mx=5)]
+    assert not eng.last_one_task
+    got = batch(1, [(1, None, 5, 1)], [])
+    assert got == [row(1, None, 10, -1, mx=10), row(1, None, 15, 1, mx=10)]
+    assert eng.last_one_task
+    assert sorted((tuple(r) for r in eng.result().collect()), key=str) == [
+        row(1, None, 15, mx=10),
+        row(2, "a", 5, mx=5),
+    ]

@@ -6,8 +6,9 @@ function of ``streaming/acyclic.py`` or ``streaming/topk.py`` from growing
 back into a monolith, keeps ``streaming/`` free of environment-variable
 knobs, keeps every optional spec field and defaulted constructor
 parameter of the engine and the top-k views in use by some caller, keeps
-every top-level name of ``streaming/`` referenced by one, and keeps the
-engine's manifest the only commit point in ``streaming/``."""
+every top-level name of ``streaming/`` referenced by one, keeps the
+engine's manifest the only commit point in ``streaming/``, and keeps
+``streaming/`` from changing its caller's session conf."""
 
 from __future__ import annotations
 
@@ -146,6 +147,24 @@ def test_only_the_engine_commits_a_manifest():
             ):
                 hits.append(f"{path.name}:{node.lineno}: os.replace")
     assert not hits, f"commit points outside the engine manifest: {hits}"
+
+
+def test_streaming_never_sets_a_session_conf():
+    """The engine runs on its caller's session and must not change it: no
+    ``streaming/`` module calls ``<x>.conf.set(...)``. A setting the engine
+    relies on belongs in ``session.get_spark``, and the engine checks for
+    it instead (``_fits_one_task`` and the single-partition cap)."""
+    hits = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(STREAMING.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "set"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    ]
+    assert not hits, f"session conf writes in streaming/: {hits}"
 
 
 def _spec_fields(src: str) -> dict[str, list[tuple[str, bool]]]:

@@ -48,6 +48,7 @@ def _patched_pb(self, deltas, batch_id=None, emit_delta=False):
             "batch_sec": round(time.perf_counter() - t0, 3),
             "checkpoints": self.last_checkpoints,
             "factored": self.last_factored,
+            "one_task": self.last_one_task,
             "phases": {
                 k: {"jobs": v["jobs"], "sec": round(v["sec"], 3)}
                 for k, v in self.last_profile.items()
