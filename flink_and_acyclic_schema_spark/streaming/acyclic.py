@@ -33,9 +33,12 @@ DELTA (keys crossing zero) flows through the same decomposition
 emission (``AcyclicQuerySpec.preserve``).
 
 The relation list may be any *tree* linearization, not just a path: each
-non-root relation joins on a column of ANY earlier relation in the list (the
-accumulated join carries all earlier columns), so star/branching schemas —
-e.g. lineitem with orders, part, and supplier children — work unchanged.
+non-root relation's edge columns name its PARENT — the one other relation
+holding them, earlier in the list — so star/branching schemas (e.g.
+lineitem with orders, part, and supplier children) work unchanged. The
+engine resolves that tree once per batch (``_tree``) and every join walk is
+a restriction of it; an edge column held by no relation or by two, a parent
+later in the list, or an anti gate with a child raises ``ValueError``.
 
 CYCLIC join graphs — out of scope for the reference — are handled by the
 standard spanning-tree reduction: pick a spanning tree of the join graph as
@@ -120,19 +123,6 @@ WEIGHT = "weight"
 BUCKET = "_bucket"  # reserved: hash-bucket partition column of bucketed state
 
 
-def _ttl_parts(r: "RelSpec") -> tuple:
-    """(ts_col, effective horizon) of a ttl spec. The optional third element
-    ``delay`` (allowed lateness for out-of-order sources) composes in front of
-    the horizon: the stored watermark stays the raw running max — monotone —
-    and both late-drop and eviction cut at ``horizon(delay(wm))``, so no row
-    within the allowed lateness of the max is ever dropped."""
-    ts_col, horizon, *rest = r.ttl
-    if rest and rest[0] is not None:
-        delay = rest[0]
-        return ts_col, (lambda wm: horizon(delay(wm)))
-    return ts_col, horizon
-
-
 def _zone_width(spec: str) -> float:
     """Zone width in the ts column's native unit: a bare number (numeric ts
     columns), or "N UNIT" with UNIT in seconds/minutes/hours/days/weeks
@@ -198,10 +188,11 @@ class RelSpec:
 
     ``join_on`` = (own_col, earlier_col) — or, for a COMPOSITE foreign key, a
     tuple of such pairs ``((own1, earlier1), (own2, earlier2), …)`` ANDed
-    together: the equi-join predicate linking this relation to columns
-    exposed by SOME earlier relation in the spec order — the FK edge of the
-    tree (ref DataFlow.java:45-57 keyBy wiring). The first relation has
-    ``join_on=None``.
+    together: the equi-join predicate linking this relation to its PARENT,
+    the one other relation holding every ``earlier`` column, which must
+    come earlier in the spec order and must not be an anti gate — the FK
+    edge of the tree (ref DataFlow.java:45-57 keyBy wiring). The first
+    relation has ``join_on=None``.
 
     ``delta_filter`` is applied to this relation's deltas at ingest (ref ops
     #8/#10 — the σ boxes of the dataflow); state never holds filtered-out
@@ -257,16 +248,9 @@ class RelSpec:
     and state stays window-bounded however long the stream runs (module
     docstring, 'bounded state'). Rows with NULL ``ts_col`` are never late
     and never evicted. Advancing the watermark costs one bounded (1-row)
-    driver read per batch.
-
-    An optional THIRD element ``delay`` (allowed lateness, for out-of-order
-    sources — the Flink ``BoundedOutOfOrderness`` twin) maps the raw running
-    max to the effective watermark, e.g.
-    ``ttl=(ts, horizon, lambda wm: wm - F.expr("INTERVAL 3 DAYS"))``: both
-    the late-drop cut and the eviction horizon use ``horizon(delay(wm))``,
-    so a disordered source whose rows lag the max by at most the delay never
-    loses a row; the retained window widens by the delay. Default
-    (2-tuple / None) keeps today's behavior: effective wm = raw max.
+    driver read per batch. Allowed lateness for an out-of-order source is
+    part of the horizon: ``lambda wm: horizon(wm - delay)`` keeps every row
+    that lags the max by at most ``delay``.
     """
 
     name: str
@@ -278,7 +262,7 @@ class RelSpec:
     anti: bool = False
     buckets: int = 0
     bucket_key: tuple[str, ...] | None = None
-    # (ts_col, horizon) or (ts_col, horizon, delay) — see class docstring
+    # (ts_col, horizon) — see class docstring
     ttl: tuple | None = None
     # ttl_zone (bucketed+ttl relations): a coarse event-time zone width —
     # "30 DAYS", "6 HOURS", or a plain number for numeric ts columns — that
@@ -293,11 +277,8 @@ class RelSpec:
     ttl_zone: str | None = None
 
     def __post_init__(self):
-        if self.ttl is not None and len(self.ttl) not in (2, 3):
-            raise ValueError(
-                f"relation {self.name!r}: ttl must be (ts_col, horizon) or "
-                "(ts_col, horizon, delay)"
-            )
+        if self.ttl is not None and len(self.ttl) != 2:
+            raise ValueError(f"relation {self.name!r}: ttl must be (ts_col, horizon)")
         if self.ttl_zone is not None:
             if self.ttl is None:
                 raise ValueError(
@@ -510,12 +491,6 @@ class IncrementalAcyclicQuery:
     present with an EMPTY delta is skipped the same way once it has
     committed state (see ``_skippable``), unless every delta is empty.
     """
-
-    # process-cumulative count of virtual trees folded via the factored
-    # path by ANY engine instance — lets tests pin that a REGISTERED query
-    # (whose engine is local to its plan function) actually engaged the
-    # factorization, without threading counters through every wiring
-    factored_global = 0
 
     def __init__(
         self,
@@ -915,73 +890,63 @@ class IncrementalAcyclicQuery:
         return t.select(*cols)
 
     # --- delta-join decomposition ------------------------------------------
-    def _edge_steps(
-        self, rels: tuple[RelSpec, ...], columns, any_order: bool = False
-    ) -> dict | None:
-        """Resolve the tree edges of ``rels`` into an undirected adjacency:
-        {name: [(other, pairs, other_is_child)]}. Each non-root relation's
-        ``earlier`` columns must resolve to ONE earlier relation (the closest
-        match wins when names repeat — they don't in practice); returns None
-        when unresolvable (an edge spanning two owners), signalling fallback
-        to the sequential spec-order chain.
-
-        ``any_order=True`` (the factored path's reordered suffixes, round
-        10): ``rels`` may be an arbitrary sub-tuple in non-spec order, so an
-        edge's owner is searched among ALL other rels — required UNIQUE
-        (ambiguity returns None) — and an edge whose owner is OUTSIDE
-        ``rels`` is SKIPPED instead of failing (the caller's connectivity
-        check over the remaining edges still guards completeness)."""
-        adj: dict[str, list] = {r.name: [] for r in rels}
+    def _tree(self, columns: Mapping[str, list[str]]) -> dict[str, tuple]:
+        """The spec's join tree as {child: (parent, pairs)}, resolved once per
+        batch from each relation's term columns. A relation's parent is the
+        one other relation holding every ``earlier`` column of its edge, and
+        it must come earlier in the spec. Raises ``ValueError`` when an edge
+        column is held by no relation or by two, when its holder comes later
+        in the spec, or when the holder is an anti gate (the virtual trees
+        that drop the gate would strand its child). So every virtual tree
+        and every leaf-peel suffix is a connected subtree."""
+        rels = self.spec.relations
         pos = {r.name: i for i, r in enumerate(rels)}
+        tree: dict[str, tuple] = {}
+        for r in rels[1:]:
+            pairs = r.join_pairs()
+            holders = {
+                e: [q.name for q in rels if q is not r and e in columns[q.name]]
+                for _, e in pairs
+            }
+            parents = {n for ns in holders.values() for n in ns}
+            if len(parents) != 1 or any(len(ns) != 1 for ns in holders.values()):
+                raise ValueError(
+                    f"relation {r.name!r}: its join columns must be held by exactly "
+                    f"one other relation, its parent; holders: {holders}"
+                )
+            (parent,) = parents
+            if pos[parent] > pos[r.name]:
+                raise ValueError(
+                    f"relation {r.name!r}: its parent {parent!r} comes later in the spec"
+                )
+            if rels[pos[parent]].anti:
+                raise ValueError(f"anti gate {parent!r} cannot have a child ({r.name!r})")
+            tree[r.name] = (parent, pairs)
+        return tree
+
+    @staticmethod
+    def _adjacency(rels: tuple[RelSpec, ...], tree: Mapping[str, tuple]) -> dict:
+        """The join tree restricted to ``rels`` as an undirected adjacency
+        {name: [(other, pairs, other_is_child)]}, edges appended in ``rels``
+        order (which fixes every BFS and leaf-peel order built on it)."""
+        adj: dict[str, list] = {r.name: [] for r in rels}
         for r in rels:
-            if r.join_on is None:
-                continue
-            owner = None
-            external = False
-            for _own, earlier in r.join_pairs():
-                found = None
-                if any_order:
-                    cands = [
-                        cand.name
-                        for cand in rels
-                        if cand.name != r.name and earlier in columns[cand.name]
-                    ]
-                    if len(cands) > 1:
-                        return None  # ambiguous owner: be conservative
-                    found = cands[0] if cands else None
-                    if found is None:
-                        external = True  # owner outside rels: skip this edge
-                        continue
-                else:
-                    for cand in rels:
-                        if pos[cand.name] >= pos[r.name]:
-                            break
-                        if earlier in columns[cand.name]:
-                            found = cand.name
-                if found is None or (owner is not None and found != owner):
-                    return None
-                owner = found
-            if owner is None:
-                if any_order and external:
-                    continue  # whole edge points outside rels
-                return None
-            if any_order and external:
-                return None  # edge half-in half-out: unresolvable
-            adj[owner].append((r.name, r.join_pairs(), True))
-            adj[r.name].append((owner, r.join_pairs(), False))
+            if r.name in tree and tree[r.name][0] in adj:
+                parent, pairs = tree[r.name]
+                adj[parent].append((r.name, pairs, True))
+                adj[r.name].append((parent, pairs, False))
         return adj
 
     def _delta_first_order(
-        self, rels: tuple[RelSpec, ...], start: str, columns, any_order: bool = False
-    ) -> list | None:
-        """BFS join steps outward from the delta relation over the tree:
-        [(rel_to_add, pairs, via_name, add_side_cols)]. Every intermediate
-        join result is then bounded by the delta's fan-out — the naive
-        sequential order instead joins full upstream states together BEFORE
-        the delta restricts them, which is the per-batch scale killer."""
-        adj = self._edge_steps(rels, columns, any_order=any_order)
-        if adj is None or start not in adj:
-            return None
+        self, rels: tuple[RelSpec, ...], start: str, tree: Mapping[str, tuple]
+    ) -> list:
+        """BFS join steps outward from the delta relation over the tree
+        restricted to ``rels``: [(rel_to_add, pairs, via_name, add_side_cols)].
+        Every intermediate join result is then bounded by the delta's
+        fan-out — the naive sequential order instead joins full upstream
+        states together BEFORE the delta restricts them, which is the
+        per-batch scale killer."""
+        adj = self._adjacency(rels, tree)
         byname = {r.name: r for r in rels}
         seen, steps, queue = {start}, [], [start]
         while queue:
@@ -997,8 +962,6 @@ class IncrementalAcyclicQuery:
                 )
                 steps.append((byname[v], pairs, u, add_cols))
                 queue.append(v)
-        if len(seen) != len(rels):
-            return None
         return steps
 
     # distinct probe keys above this are not pushed into the scan (bucket
@@ -1216,38 +1179,25 @@ class IncrementalAcyclicQuery:
         versions: Mapping[str, DataFrame],
         rels: tuple[RelSpec, ...],
         delta_name: str,
+        tree: Mapping[str, tuple],
         bucket_memo: dict | None = None,
         apply_residual: bool = True,
-        steps: list | None = None,
     ) -> DataFrame:
         """k-way join over one version assignment; output weight ``_w`` is the
         product of per-relation weights (joins multiply multiplicities).
-        ``rels`` is the virtual tree joined — the full spec, or a sub-tree
-        under anti-gate inclusion–exclusion.
+        ``rels`` is the connected subtree of ``tree`` joined — the full spec,
+        a virtual tree under anti-gate inclusion–exclusion, or a factored
+        suffix.
 
-        The version ASSIGNMENT (new/Δ/old by spec position) fixes the term's
-        semantics; the join EXECUTION order is free, and ``delta_name``
-        selects the delta-first BFS order plus bucket pruning (see
-        ``_join_state``): a bucketed relation probed directly from the delta
-        reads only the delta's bucket partitions; deeper bucketed relations
-        are pruned TRANSITIVELY from the accumulated (delta-bounded) join.
-        Falls back to sequential spec order when the edge graph doesn't
-        resolve statically — callers for whom the sequential fallback would
-        be WRONG (the factored path's reordered suffixes, where ``rels`` is
-        not in spec order) pass their precomputed ``steps`` instead, which
-        this method then uses verbatim."""
-        if steps is None and len(rels) > 1:
-            columns = {r.name: versions[r.name].columns for r in rels}
-            steps = self._delta_first_order(rels, delta_name, columns)
-        if steps is None:
-            first = rels[0]
-            chain = [(r, r.join_pairs(), None, ()) for r in rels[1:]]
-        else:
-            first = next(r for r in rels if r.name == delta_name)
-            chain = steps
-        acc = versions[first.name].withColumnRenamed(WEIGHT, f"_w_{first.name}").drop(BUCKET)
-        for r, pairs, via, add_cols in chain:
-            hop = (via, versions[via]) if via is not None and via == delta_name else None
+        The version ASSIGNMENT (new/Δ/old) fixes the term's semantics; the
+        join EXECUTION order is free, and ``delta_name`` selects the
+        delta-first BFS order plus bucket pruning (see ``_join_state``): a
+        bucketed relation probed directly from the delta reads only the
+        delta's bucket partitions; deeper bucketed relations are pruned
+        TRANSITIVELY from the accumulated (delta-bounded) join."""
+        acc = versions[delta_name].withColumnRenamed(WEIGHT, f"_w_{delta_name}").drop(BUCKET)
+        for r, pairs, via, add_cols in self._delta_first_order(rels, delta_name, tree):
+            hop = (via, versions[via]) if via == delta_name else None
             acc = self._join_state(
                 acc, r, versions[r.name], pairs, add_cols, f"_w_{r.name}",
                 bucket_memo, hop,
@@ -1262,15 +1212,14 @@ class IncrementalAcyclicQuery:
         return acc.withColumn("_w", w)
 
     @staticmethod
-    def _leaf_peel(vlist: tuple[RelSpec, ...], adj: dict) -> tuple | None:
+    def _leaf_peel(vlist: tuple[RelSpec, ...], adj: dict) -> tuple:
         """Leaf-peeling enumeration of a resolved tree (``_factored_chain``):
         ``(path, edges)`` where ``path[i]`` is e_i and ``edges[i]`` is
         ``(pairs, e_i's join columns)`` of the tree edge from e_i to its
         unique neighbor still in the suffix, recorded at peel time, when that
         neighbor is e_i's only remaining edge. Deterministic: spec-earliest
         leaf first, preferring the leaf adjacent to the last-peeled node.
-        ``None`` unless ``adj`` is one tree: a cycle never exposes a leaf,
-        and a disconnected forest ends in ≥2 isolated nodes."""
+        ``adj`` must be one tree (``_tree`` guarantees it)."""
         posv = {r.name: i for i, r in enumerate(vlist)}
         byname = {r.name: r for r in vlist}
         remaining = {n: {o for o, _, _ in adj[n]} for n in adj}
@@ -1282,8 +1231,6 @@ class IncrementalAcyclicQuery:
                 (n for n in remaining if len(remaining[n]) == 1),
                 key=lambda n: posv[n],
             )
-            if not leaves:
-                return None
             near = [n for n in leaves if order and order[-1] in orig_nbrs[n]]
             pick = (near or leaves)[0]
             nb = next(iter(remaining[pick]))
@@ -1301,11 +1248,12 @@ class IncrementalAcyclicQuery:
     def _factored_chain(
         self,
         vlist: tuple[RelSpec, ...],
+        tree: Mapping[str, tuple],
         term_new: Mapping[str, DataFrame],
         term_old: Mapping[str, DataFrame],
         term_delta: Mapping[str, DataFrame],
         bucket_memo: dict | None,
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Telescoped ΔJ over ANY tree-shaped virtual tree (round 10 for
         chains, round 11 for arbitrary trees): the per-term decomposition
         Σ_i new_{<i} ⋈ Δ_i ⋈ old_{>i} re-joins the shared upward prefix of
@@ -1340,48 +1288,26 @@ class IncrementalAcyclicQuery:
         the reversed removal order's suffixes are exactly those remainders),
         so genuine degree-≥3 stars (the registered
         ``incremental_star_stream``'s lineitem–{orders,part,supplier}, Q2's
-        5-relation tree) factor instead of declining to the per-term
-        fallback. On path-shaped trees the peel reproduces the round-10
-        endpoint walk exactly (their plans are unchanged). Weights multiply
-        into a single running ``_w``; the residual filter is applied once
-        over the full join (σ commutes with ∪ and ⋈)."""
-        if len(vlist) < 2 or sum(1 for r in vlist if r.name in term_delta) < 2:
-            return None  # nothing to share — per-term path is already minimal
+        5-relation tree) factor too. On path-shaped trees the peel
+        reproduces the round-10 endpoint walk exactly. Weights multiply into
+        a single running ``_w``; the residual filter is applied once over
+        the full join (σ commutes with ∪ and ⋈). ``_term_build`` takes this
+        path for every virtual tree with ≥2 deltas."""
         columns = {r.name: term_new[r.name].columns for r in vlist}
-        adj = self._edge_steps(vlist, columns, any_order=True)
-        # a virtual sub-tree can drop an edge whose owner left the subset:
-        # the peel then declines the disconnected remainder
-        peeled = None if adj is None else self._leaf_peel(vlist, adj)
-        if peeled is None:
-            return None
-        path, edges = peeled
+        path, edges = self._leaf_peel(vlist, self._adjacency(vlist, tree))
 
-        def build_branch_a(i: int) -> DataFrame | None:
+        def build_branch_a(i: int) -> DataFrame:
             ri = path[i]
             suffix = path[i:]
             if len(suffix) == 1:
                 return term_delta[ri.name].drop(BUCKET).withColumnRenamed(WEIGHT, "_w")
-            # the suffix must resolve as its own subtree — it always
-            # should (leaf-peeling keeps every suffix connected, and
-            # a connected subset of an unambiguous tree resolves
-            # unambiguously) — and the resolved steps are passed
-            # straight into _join_chain, so a reordered suffix can
-            # NEVER hit the sequential spec-order fallback
-            steps = self._delta_first_order(
-                suffix, ri.name, columns, any_order=True
-            )
-            if steps is None:
-                return None
+            # a leaf-peel suffix is a connected subtree: the tree restricted
+            # to it orders the Δ_i ⋈ old-suffix join delta-first
             versions = {ri.name: term_delta[ri.name]}
             for rj in suffix[1:]:
                 versions[rj.name] = term_old[rj.name]
             t = self._join_chain(
-                versions,
-                suffix,
-                ri.name,
-                bucket_memo=bucket_memo,
-                apply_residual=False,
-                steps=steps,
+                versions, suffix, ri.name, tree, bucket_memo, apply_residual=False
             )
             keep = [
                 c for rj in suffix for c in columns[rj.name] if c not in (WEIGHT, BUCKET)
@@ -1392,14 +1318,9 @@ class IncrementalAcyclicQuery:
         # against OLD-state suffixes; memo keys are per delta relation), so
         # their eager probe collects / partial-join materializations run
         # concurrently from the commit pool — the sequential B spine below
-        # consumes them ready-made. A branch whose suffix fails to resolve
-        # keeps the whole tree on the per-term fallback.
+        # consumes them ready-made
         delta_is = [i for i in range(len(path)) if path[i].name in term_delta]
-        built = _run_parallel(
-            [lambda i=i: build_branch_a(i) for i in delta_is]
-        )
-        if any(b is None for b in built):
-            return None
+        built = _run_parallel([lambda i=i: build_branch_a(i) for i in delta_is])
         branch_as: dict[int, DataFrame] = dict(zip(delta_is, built))
 
         B: DataFrame | None = None
@@ -1423,7 +1344,7 @@ class IncrementalAcyclicQuery:
                 B = branch_a if branch_a is not None else branch_b
             last = i == len(path) - 1
             hop = (ri.name, B) if last and branch_a is not None else None
-        if B is not None and self.spec.residual is not None:
+        if self.spec.residual is not None:
             B = B.filter(self.spec.residual())
         return B
 
@@ -1847,7 +1768,7 @@ class IncrementalAcyclicQuery:
         for r in self.spec.relations:
             if r.ttl is None or r.name not in filt:
                 continue
-            ts_col, horizon = _ttl_parts(r)
+            ts_col, horizon = r.ttl
             if ts_col not in filt[r.name].columns:
                 raise ValueError(
                     f"relation {r.name!r}: ttl column {ts_col!r} missing from "
@@ -1962,9 +1883,12 @@ class IncrementalAcyclicQuery:
         term_delta: Mapping[str, DataFrame],
         bucket_memo: dict,
     ) -> list[DataFrame]:
-        """term_build stage: ΔJ as a list of projected terms. One term per
-        relation-with-delta per virtual tree, or one telescoped term per tree
-        (``_factored_chain``). Anti gates expand by inclusion–exclusion —
+        """term_build stage: ΔJ as a list of projected terms. The join tree is
+        resolved once (``_tree``) and every virtual tree joins a restriction
+        of it: a tree with ≥2 deltas folds as one telescoped term
+        (``_factored_chain``), any other as one term per relation with a
+        delta (also every tree with ``factor_terms=False``, the equivalence
+        tests' reference). Anti gates expand by inclusion–exclusion —
         Q = Σ_S (−1)^|S| J(tree ∪ S) over subsets S of the anti relations
         (each participating as presence) — and each J's own decomposition
         applies; every term is projected to a uniform (group key,
@@ -1979,21 +1903,18 @@ class IncrementalAcyclicQuery:
         anti_rels = tuple(r for r in rels if r.anti)
         terms: list[DataFrame] = []
         with self._phase("term_build"):
+            tree = self._tree({r.name: term_new[r.name].columns for r in rels})
             for k in range(len(anti_rels) + 1):
                 for S in itertools.combinations(anti_rels, k):
                     vlist = tuple(r for r in rels if not r.anti or r in S)
-                    fact = None
-                    if self.factor_terms:
-                        fact = self._factored_chain(
-                            vlist, term_new, term_old, term_delta, bucket_memo
-                        )
-                    if fact is not None:
+                    n_deltas = sum(1 for r in vlist if r.name in term_delta)
+                    if self.factor_terms and n_deltas >= 2:
                         self.last_factored += 1
-                        # process-cumulative engagement counter (test
-                        # observability for registered queries whose
-                        # engines are function-local)
-                        IncrementalAcyclicQuery.factored_global += 1
-                        parts = [fact]
+                        parts = [
+                            self._factored_chain(
+                                vlist, tree, term_new, term_old, term_delta, bucket_memo
+                            )
+                        ]
                     else:
                         # per-term decomposition: the terms are independent
                         # (distinct delta relations, distinct memo keys) —
@@ -2011,8 +1932,9 @@ class IncrementalAcyclicQuery:
                                         for j, rj in enumerate(vlist)
                                     },
                                     vlist,
-                                    delta_name=vlist[i].name,
-                                    bucket_memo=bucket_memo,
+                                    vlist[i].name,
+                                    tree,
+                                    bucket_memo,
                                 )
                                 for i, ri in enumerate(vlist)
                                 if ri.name in term_delta

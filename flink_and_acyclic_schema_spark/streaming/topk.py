@@ -167,8 +167,6 @@ class _OrderedView:
     the ascending unique-key tiebreak — as Spark expressions."""
 
     def __init__(self, k, order_col, key_cols, refill, spark, slack):
-        if k < 1:
-            raise ValueError("k must be >= 1")
         self.k = k
         # multi-key ORDER BY (round 8): ((col, desc), ...) — ``order_col``
         # accepts a single name or a sequence of name/(name, dir) entries
@@ -415,9 +413,9 @@ class TopKView(_OrderedView):
         the buffer is complete), a naive collect of the whole changelog is
         unbounded on a large first batch — instead:
 
-        - retractions can only matter for buffered keys (boundary None ⇒
-          the buffer holds EVERY live row, so any −pre row's key is
-          buffered): filter to those ≤ k+2·slack keys Spark-side;
+        - retractions: boundary None ⇒ the buffer holds EVERY live non-NULL
+          row, so every −pre row is a buffered key — collect them all
+          (≤ |buffer| ≤ k+2·slack rows, no key filter needed);
         - insertions: collect only the top-(k+2·slack+1) under the total
           order. If the cap comes back full, some insertions were left
           behind — but each collected row is a distinct key admitted
@@ -443,37 +441,7 @@ class TopKView(_OrderedView):
             return [r.asDict() for r in ch.collect()]
         rows: list[dict] = []
         if self._buffer:
-            # buffered-key membership: a per-key OR-chain of literal
-            # conjunctions grows the Catalyst tree with k (TopKSpec caps
-            # nothing) — a single-column key compiles to ONE In/InSet, a
-            # composite key broadcast-semi-joins a tiny literal DataFrame
-            neg = ch.filter(F.col(WEIGHT) < 0)
-            if len(self.key_cols) == 1:
-                (c,) = self.key_cols
-                vals = [kt[0] for kt in self._buffer if kt[0] is not None]
-                cond = F.col(c).isin(vals) if vals else F.lit(False)
-                if len(vals) < len(self._buffer):  # a buffered NULL key
-                    cond = cond | F.col(c).isNull()
-                neg = neg.filter(cond)
-            else:
-                from functools import reduce
-
-                from pyspark.sql.types import StructType
-
-                by_name = {f.name: f for f in self._schema.fields}
-                keys = self._spark.createDataFrame(
-                    list(self._buffer.keys()),
-                    StructType([by_name[c] for c in self.key_cols]),
-                )
-                neg = neg.join(
-                    F.broadcast(keys),
-                    on=reduce(
-                        lambda a, b: a & b,
-                        [neg[c].eqNullSafe(keys[c]) for c in self.key_cols],
-                    ),
-                    how="left_semi",
-                )
-            rows += [r.asDict() for r in neg.collect()]
+            rows += [r.asDict() for r in ch.filter(F.col(WEIGHT) < 0).collect()]
         rows += [
             r.asDict()
             for r in ch.filter(F.col(WEIGHT) > 0)
@@ -588,8 +556,8 @@ class GroupedTopKView(_OrderedView):
     manifest commit and on resume.
 
     NULL order values never enter candidates (SQL NULLS LAST for a LIMIT
-    the non-NULL rows satisfy). The structure is a pure function of the
-    live view, so it can always be rebuilt from it with ``prime()``.
+    the non-NULL rows satisfy). A new view starts empty: the engine builds
+    it together with the view it ranks, and a resume reloads ``state()``.
     """
 
     BUCKETS = 8  # hash shards of the candidate and boundary state
@@ -610,10 +578,6 @@ class GroupedTopKView(_OrderedView):
         # optionally restricted to the given group-key rows
         # (IncrementalAcyclicQuery.result's touched semantics)
         super().__init__(k, order_col, key_cols, refill, spark, slack)
-        if not group_cols or not key_cols:
-            raise ValueError("group_cols and key_cols must be non-empty")
-        if set(group_cols) & set(key_cols):
-            raise ValueError("group_cols and key_cols must be disjoint")
         self.group_cols = tuple(group_cols)
         self.state_dir = state_dir
         self._version = 0  # last written shard-dir version
@@ -835,19 +799,6 @@ class GroupedTopKView(_OrderedView):
         self._emitted = epath
         return self.emitted_df()
 
-    def prime(self) -> None:
-        """(Re)build candidates from the full view — the attach of a new
-        view to an existing one. A resumed engine reloads its committed
-        ``state()`` instead (no view scan)."""
-        view = self._refill_fn(None)
-        self._pin_schemas(view)
-        ranked = self._rank(self._non_null(view))
-        self._commit(
-            ranked.filter(F.col("_rn") <= self.k + self.slack).drop("_rn"),
-            self._bound_of(ranked),
-            list(range(self.BUCKETS)),
-        )
-
     # --- maintenance ---------------------------------------------------------
     def _gates(self, bound0: DataFrame, counts: DataFrame) -> set[str]:
         """Which maintenance branches this batch needs: ``"d"`` when some
@@ -1039,5 +990,5 @@ class GroupedTopKView(_OrderedView):
     def result(self) -> DataFrame:
         """Exact per-group top-k: rank candidates only — never the view."""
         if self._schema is None:
-            raise ValueError("no batch applied and not primed — call prime()")
+            raise ValueError("no batch applied yet")
         return self._rank(self._read_cand()).filter(F.col("_rn") <= self.k).drop("_rn")

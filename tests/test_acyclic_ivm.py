@@ -1794,27 +1794,3 @@ def test_merge_engine_resumed_log_structured_continues_exactly(spark, tmp_path):
     assert eng._segments["leaf"] == [eng._path("leaf", 2)]
     assert eng._segments["agg"] == [eng._path("agg", 2)]
     assert _chain_result(eng.result())  # non-trivial
-
-
-@full_tier_only
-def test_registered_degree3_shapes_engage_factored_path(spark):
-    """The two registered shapes the r10 verdict named as declining —
-    ``incremental_star_stream`` (lineitem–{orders,part,supplier}) and the
-    Q2-shaped ``incremental_q2_mincost_stream`` (lineitem at degree 3 with
-    supplier/part/minview) — must now ENGAGE the factored path end-to-end
-    through their real Structured-Streaming wiring (their RESULTS are
-    hash-gated by the oracle sweep; this pins the plan actually taken)."""
-    from tests.conftest import SF_SMOKE
-
-    from flink_and_acyclic_schema_spark import registry
-
-    registry._register_all()  # plan modules import in registry order
-    base = IncrementalAcyclicQuery.factored_global
-    assert registry.QUERIES["incremental_star_stream"](spark, SF_SMOKE).count() >= 0
-    after_star = IncrementalAcyclicQuery.factored_global
-    assert after_star > base  # the degree-3 star folded factored batches
-    assert (
-        registry.QUERIES["incremental_q2_mincost_stream"](spark, SF_SMOKE).count()
-        >= 0
-    )
-    assert IncrementalAcyclicQuery.factored_global > after_star

@@ -147,7 +147,8 @@ def test_bucket_pruning_reaches_the_state_scan(spark, tmp_path):
         "customer": eng._read_state("customer"),
         "lineitem": eng._read_state("lineitem"),
     }
-    term = eng._join_chain(versions, spec.relations, "orders", bucket_memo={})
+    tree = eng._tree({n: df.columns for n, df in versions.items()})
+    term = eng._join_chain(versions, spec.relations, "orders", tree, bucket_memo={})
     plan = plan_string(term)
     assert "PartitionFilters" in plan and "_bucket" in plan
     # the delta's probe KEYS are pushed into the parquet scan too (In filter
@@ -209,7 +210,8 @@ def test_transitive_pruning_reaches_two_hop_state(spark, tmp_path):
         "orders": eng._read_state("orders"),
         "lineitem": eng._read_state("lineitem"),
     }
-    plan = plan_string(eng._join_chain(versions, spec.relations, "customer"))
+    tree = eng._tree({n: df.columns for n, df in versions.items()})
+    plan = plan_string(eng._join_chain(versions, spec.relations, "customer", tree))
     assert "PartitionFilters" in plan and "_bucket" in plan
     assert "In(l_key" in plan or "EqualTo(l_key" in plan
     # and the full stream stays oracle-equal to the unbucketed run
@@ -487,7 +489,8 @@ def test_delta_first_order_starts_at_the_delta():
         "customer": ["c_custkey", "c_name", "c_acctbal", "c_nationkey", "weight"],
         "nation": ["n_nationkey", "n_name", "weight"],
     }
-    steps = eng._delta_first_order(spec.relations, "orders", columns)
+    tree = eng._tree(columns)
+    steps = eng._delta_first_order(spec.relations, "orders", tree)
     assert steps is not None
     names = [r.name for r, _, _, _ in steps]
     vias = {r.name: via for r, _, via, _ in steps}
@@ -497,8 +500,74 @@ def test_delta_first_order_starts_at_the_delta():
     assert vias["nation"] == "customer"
     assert names.index("customer") < names.index("nation")
     # a leaf delta (lineitem) walks the path up
-    steps = eng._delta_first_order(spec.relations, "lineitem", columns)
+    steps = eng._delta_first_order(spec.relations, "lineitem", tree)
     assert [r.name for r, _, _, _ in steps] == ["orders", "customer", "nation"]
+
+
+# spec relations and their delta schemas whose join tree does not resolve
+# (``IncrementalAcyclicQuery._tree``), with the ValueError each raises
+_UNRESOLVED_TREES = {
+    # lineitem's edge column o_none is held by no relation
+    "unheld": (
+        (RelSpec("orders"), RelSpec("lineitem", join_on=("l_key", "o_none"))),
+        {"orders": ORD_SCHEMA, "lineitem": LI_SCHEMA},
+        "exactly one other relation",
+    ),
+    # o_key is held by orders and by dup, so lineitem's parent is ambiguous
+    "held_twice": (
+        (
+            RelSpec("orders"),
+            RelSpec("dup", join_on=("d_cust", "o_cust")),
+            RelSpec("lineitem", join_on=("l_key", "o_key")),
+        ),
+        {
+            "orders": ORD_SCHEMA,
+            "dup": "d_cust int, o_key int, weight int",
+            "lineitem": LI_SCHEMA,
+        },
+        "exactly one other relation",
+    ),
+    # x_key's only holder, x, comes after lineitem in the spec
+    "held_later": (
+        (
+            RelSpec("orders"),
+            RelSpec("lineitem", join_on=("l_key", "x_key")),
+            RelSpec("x", join_on=("x_cust", "o_cust")),
+        ),
+        {"orders": ORD_SCHEMA, "lineitem": LI_SCHEMA, "x": "x_cust int, x_key int, weight int"},
+        "comes later in the spec",
+    ),
+    # item joins the anti gate, which the gate-free virtual tree drops
+    "anti_parent": (
+        (
+            RelSpec("orders"),
+            RelSpec("gate", join_on=("g_key", "o_key"), anti=True),
+            RelSpec("item", join_on=("i_key", "g_key")),
+        ),
+        {
+            "orders": ORD_SCHEMA,
+            "gate": "g_key int, g_val int, weight int",
+            "item": "i_key int, i_val int, weight int",
+        },
+        "cannot have a child",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UNRESOLVED_TREES))
+def test_unresolved_join_tree_raises_on_first_batch(spark, tmp_path, case):
+    """The join tree is resolved once per batch, before any term is built:
+    an edge column held by no relation or by two, a holder later in the
+    spec, or an anti gate with a child raises ``ValueError`` on the first
+    batch instead of a join over a tree that does not exist."""
+    rels, schemas, match = _UNRESOLVED_TREES[case]
+    spec = AcyclicQuerySpec(
+        relations=rels, group_by=("o_cust",), measures={"n": lambda: F.lit(1)}
+    )
+    eng = _engine(spark, tmp_path, spec)
+    deltas = {n: spark.createDataFrame([(1, 1, 1)], sch) for n, sch in schemas.items()}
+    with pytest.raises(ValueError, match=match):
+        eng.process_batch(deltas, batch_id=0)
 
 
 def test_spec_guards():
@@ -572,7 +641,8 @@ def test_multicolumn_probe_key_pushdown(spark, tmp_path):
         "orders", spark.createDataFrame([(7, 3, 1)], ORD_SCHEMA)
     ).localCheckpoint()
     versions = {"orders": delta, "lineitem": eng._read_state("lineitem")}
-    plan = plan_string(eng._join_chain(versions, eng.spec.relations, "orders"))
+    tree = eng._tree({n: df.columns for n, df in versions.items()})
+    plan = plan_string(eng._join_chain(versions, eng.spec.relations, "orders", tree))
     assert "PartitionFilters" in plan and "_bucket" in plan
     assert "In(l_key" in plan or "EqualTo(l_key,7)" in plan
     assert "In(l_cust" in plan or "EqualTo(l_cust,3)" in plan

@@ -454,14 +454,14 @@ def test_ttl_decimal_event_time_round_trips_manifest(spark, tmp_path):
 
 
 def test_ttl_delay_keeps_rows_within_allowed_lateness(spark, tmp_path):
-    """ttl=(ts, horizon, delay): a bounded-out-of-order source wants the
-    effective watermark max_ts - allowed_lateness, so a row lagging the max
-    by at most the delay is admitted where the raw watermark would have
-    dropped it; the retained window widens by the delay."""
-    delay = lambda wm: wm - F.lit(5)  # noqa: E731
+    """Allowed lateness composes into the horizon: a bounded-out-of-order
+    source wants the effective watermark max_ts - allowed_lateness, so
+    ``horizon(wm - delay)`` admits a row lagging the max by at most the
+    delay where the raw watermark would have dropped it; the retained
+    window widens by the delay."""
     spec = AcyclicQuerySpec(
         relations=(
-            RelSpec("events", ttl=("e_day", lambda wm: wm - F.lit(WINDOW), delay)),
+            RelSpec("events", ttl=("e_day", lambda wm: wm - F.lit(5) - F.lit(WINDOW))),
         ),
         group_by=("e_cat",),
         measures={"val": lambda: F.col("e_val")},
@@ -500,7 +500,7 @@ def test_ttl_delay_property_bounded_disorder_matches_widened_recompute(
         relations=(
             RelSpec(
                 "events",
-                ttl=("e_day", lambda wm: wm - F.lit(WINDOW), lambda wm: wm - F.lit(_DELAY)),
+                ttl=("e_day", lambda wm: wm - F.lit(_DELAY) - F.lit(WINDOW)),
             ),
         ),
         group_by=("e_cat",),

@@ -313,25 +313,6 @@ def test_grouped_topk_boundary_ties_stay_exact(spark, tmp_path):
     assert _ggot(topk) == _gmodel(ops + ins + dels) == {(0, 0, 100), (0, 3, 50)}
 
 
-def test_grouped_topk_prime_attaches_to_existing_view(spark, tmp_path):
-    eng = IncrementalAcyclicQuery(
-        spark, str(tmp_path / f"g{uuid.uuid4().hex[:8]}"), G_SPEC
-    )
-    ops = [(g, i, (g + 1) * (10 - i), 1) for g in range(3) for i in range(5)]
-    eng.process_batch(
-        {"items": spark.createDataFrame(ops, G_SCHEMA)}, batch_id=0
-    )
-    topk = GroupedTopKView(
-        GK, "total", ("g",), ("kid",), refill=lambda t: eng.result(t),
-        slack=GSLACK, state_dir=str(tmp_path / "gtk"), spark=spark,
-    )
-    topk.prime()
-    assert _ggot(topk) == _gmodel(ops)
-    more = [(1, 0, 20, -1), (2, 9, 99, 1)]
-    _gapply(spark, eng, topk, more, 1)
-    assert _ggot(topk) == _gmodel(ops + more)
-
-
 _GOPS = st.lists(
     st.tuples(
         st.integers(0, 2),  # group
@@ -418,10 +399,9 @@ def test_topk_first_batch_collect_is_capped(spark, tmp_path):
 
 
 def test_topk_composite_key_retraction_without_boundary(spark, tmp_path):
-    """Boundary-None retraction matching for a COMPOSITE row key goes
-    through a broadcast semi-join on the buffered keys (a per-key literal
-    OR-chain grows the Catalyst tree with k·|key|); a buffered composite
-    key's retraction must still hit and promotion stays exact."""
+    """Boundary-None retraction for a COMPOSITE row key: the complete
+    buffer holds every live row, so the −pre row of a buffered composite
+    key is collected and popped, and promotion stays exact."""
     spec = AcyclicQuerySpec(
         relations=(RelSpec("items"),),
         group_by=("g", "kid"),
@@ -801,7 +781,7 @@ def _gtk_batch(spark, eng, ops, batch_id):
 def test_grouped_topk_kill_and_recover_without_reprime(spark, tmp_path):
     """Candidate/boundary shards are parquet dirs the engine's manifest
     names, so after a process kill a resume=True engine continues from the
-    committed shard maps WITHOUT prime() (no O(view) re-rank), a replayed
+    committed shard maps with no O(view) re-rank, a replayed
     batch is a no-op, and the stream stays exact."""
     sdir = str(tmp_path / "es")
     eng = IncrementalAcyclicQuery(spark, sdir, GTK_SPEC)

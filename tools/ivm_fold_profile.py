@@ -7,7 +7,7 @@ and nobody had measured where inside ``process_batch`` those seconds go.
 Runs the heaviest registered stack — ``incremental_topk_sink_stream``'s
 shape (the full Q10 tree, bucketed lineitem/orders/customer state, spec-level
 durable top-20) — on real TPC-H data at sf1 with
-``IncrementalAcyclicQuery.instrument = True``: every action point of a batch
+``instrument = True`` set on each engine: every action point of a batch
 executes inside a phase-tagged Spark job group, and the status tracker's
 job/stage counts plus wall time land in ``last_profile``. Phases:
 
@@ -29,7 +29,9 @@ job/stage counts plus wall time land in ``last_profile``. Phases:
                       inside this write;
 - ``emit_post``     — the same changelog materialized in memory, for a
                       batch without a ``batch_id``;
-- ``topk``          — the maintained top-k feed (collect + arrow persist).
+- ``topk``          — the maintained top-k feed: the changelog's bounded
+                      collect, folded into the O(k) buffer that rides
+                      the engine manifest.
 
 Exactness guard (unchanged from tools/topk_sink_sf1.py): the maintained
 top-20 must equal a from-scratch ORDER BY over the final maintained view.

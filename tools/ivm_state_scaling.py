@@ -77,10 +77,11 @@ def _run_term(eng, delta, n_iter: int = 3) -> dict:
         "orders": eng._conform("orders", delta),
         "lineitem": eng._read_state("lineitem"),
     }
+    tree = eng._tree({n: df.columns for n, df in versions.items()})
     best = float("inf")
     files = rows = 0
     for _ in range(n_iter):
-        term = eng._join_chain(versions, eng.spec.relations, "orders", bucket_memo={})
+        term = eng._join_chain(versions, eng.spec.relations, "orders", tree, bucket_memo={})
         t0 = _t.monotonic()
         term.collect()
         best = min(best, _t.monotonic() - t0)

@@ -84,13 +84,14 @@ def _run_term(eng, delta, n_iter: int = 3) -> dict:
         "orders": eng._read_state("orders"),
         "lineitem": eng._read_state("lineitem"),
     }
+    tree = eng._tree({n: df.columns for n, df in versions.items()})
     best = best_total = float("inf")
     files = rows = jobs = 0
     for it in range(n_iter):
         group = f"term_{id(eng)}_{it}"
         sc.setLocalProperty("spark.jobGroup.id", group)
         t_build = _t.monotonic()
-        term = eng._join_chain(versions, eng.spec.relations, "customer", bucket_memo={})
+        term = eng._join_chain(versions, eng.spec.relations, "customer", tree, bucket_memo={})
         t0 = _t.monotonic()
         term.collect()
         t1 = _t.monotonic()
