@@ -70,9 +70,9 @@ fixed: tools/ivm_state_scaling.py, SCALE.md). Pruning is TRANSITIVE:
 relations ≥2 tree hops from the delta are pruned from the accumulated
 (delta-bounded) join's probe-key set — one capped, early-terminating collect
 per term — so the whole tree's state reads track the delta neighbourhood;
-probe sets wider than the cap degrade gracefully to bucket-id pruning, then
-to the plain full-scan join. Filters are applied to deltas at ingest so state only ever
-holds filter-surviving tuples — the same state-size reduction the
+probe sets wider than the cap degrade to the plain full-scan join.
+Filters are applied to deltas at ingest so state only ever holds
+filter-surviving tuples — the same state-size reduction the
 reference's alive-gating achieves.
 
 BOUNDED STATE FOR UNBOUNDED STREAMS (``RelSpec.ttl``): the reference's host
@@ -500,18 +500,22 @@ class IncrementalAcyclicQuery:
         compact_every: int = 1,
         resume: bool = False,
     ):
-        """``compact_every`` selects the state-IO regime:
+        """``compact_every`` bounds the live versions of a state. Every
+        state commit follows ONE rule (``_commit_state``): a state holding 1
+        to ``compact_every − 1`` live versions APPENDS the batch's delta as
+        one more version (per-batch IO O(Δ)); any other state — none yet, or
+        its last append slot used — nets old ∪ Δ into one new version
+        (per-batch IO O(state)).
 
-        - ``1`` (default): merge-and-rewrite every batch — state files always
-          hold the net multiset (simplest to inspect; per-batch IO O(state)).
-        - ``k > 1``: LOG-STRUCTURED state — each batch APPENDS its delta as a
-          new segment (per-batch IO O(Δ), the actual IVM promise at 100 TB),
-          and every k-th batch compacts a relation's segments back to the net
-          multiset. Correct by LINEARITY of the weight algebra: an unmerged
-          union of weighted segments behaves identically to the merged state
-          in every join (weights multiply) and aggregate (weights sum) — a
-          (+1, −1) pair contributes exactly zero — so compaction is purely an
-          IO/size optimization, never a semantics change
+        - ``1`` (default): every commit nets — merge-and-rewrite, so state
+          files always hold the net multiset (simplest to inspect).
+        - ``k > 1``: LOG-STRUCTURED state — a netted version followed by up
+          to k − 1 appended deltas (the actual IVM promise at 100 TB), netted
+          again every k-th batch. Correct by LINEARITY of the weight algebra:
+          an unmerged union of weighted versions behaves identically to the
+          merged state in every join (weights multiply) and aggregate
+          (weights sum) — a (+1, −1) pair contributes exactly zero — so
+          netting is purely an IO/size optimization, never a semantics change
           (test_acyclic_ivm.py::test_log_structured_state_equivalent).
           MEASURED (round 10, LOG_STRUCTURED_AMORTIZATION.json): over a
           16-batch sf1 stream, ``compact_every=3`` totals ~18% less engine
@@ -521,9 +525,10 @@ class IncrementalAcyclicQuery:
           streams; the default stays 1 (simplest to inspect, and short
           pipelines never amortize the compaction).
 
-        The regime is a property of the engine instance, not of the state
-        dir: a stream may be resumed under either regime. Live state that is
-        not a single netted version is netted on read in both.
+        ``compact_every`` is a property of the engine instance, not of the
+        state dir: a stream may be resumed under any value. Live state that
+        is not a single netted version is netted on read, and netted by the
+        next commit wherever the rule leaves no append slot.
 
         ``resume=True`` reattaches to an existing state dir: state is loaded
         from the last atomically-committed MANIFEST (see ``process_batch``),
@@ -547,15 +552,16 @@ class IncrementalAcyclicQuery:
         if not isinstance(compact_every, int) or compact_every < 1:
             raise ValueError("compact_every must be an integer >= 1")
         self.compact_every = compact_every
-        # per-relation state versions (monotone; parquet path carries version
-        # so a batch never reads and overwrites the same files)
+        # per-state version counter (monotone; every write is the path
+        # ``{rel}_v{n}``, so a batch never reads and overwrites the same files)
         self._version: dict[str, int] = {r.name: 0 for r in spec.relations}
         self._version["agg"] = 0
         for name in spec.hist_measures:
             self._version[f"hist::{name}"] = 0
         self._segments: dict[str, list[str]] = {}  # rel -> live on-disk paths
-        self._appends: dict[str, int] = {}  # rel -> lifetime segment counter
-        self._schemas: dict = {}  # rel -> StructType, captured at first delta
+        # rel -> StructType, pinned at first delta and committed in the
+        # manifest, so a resumed engine reads and sizes state without inference
+        self._schemas: dict[str, StructType] = {}
         self._last_batch: int | None = None  # last committed batch_id
         # rel -> python max event-time value seen (RelSpec.ttl); part of the
         # atomic manifest commit — losing it would re-admit late rows
@@ -570,14 +576,14 @@ class IncrementalAcyclicQuery:
         self._seg_ts: dict[str, dict[str, tuple]] = {}
         self._by_name = {r.name: r for r in spec.relations}
         # state (relation, "agg", "hist::<name>") -> post-commit row count
-        # (exact after every full rewrite/compaction, an UPPER BOUND while
-        # log-structured segments accumulate — appends add their row count,
-        # nets only shrink it). Rides every state write's observe() for free.
+        # (exact after every net, an UPPER BOUND while appended versions
+        # accumulate — appends add their row count, nets only shrink it).
+        # Rides every state write's observe() for free.
         # It feeds the cost-based probe-pruning gate (_prune_worthwhile
         # against PRUNE_MIN_STATE_ROWS, optimization r11: pruning a state
         # whose full scan is cheaper than the probe's two driver round-trips
-        # is a net loss at any scale), and the next write's row bound, which
-        # nets a small state in one task (_net_write).
+        # is a net loss at any scale), and the next net's row bound, which
+        # nets a small state in one task (_write_state).
         self._state_rows: dict[str, int] = {}
         # last persisted emitted-changelog {"batch": id, "path": dir,
         # "schema": StructType JSON} — lets a crash-replayed batch hand
@@ -661,9 +667,11 @@ class IncrementalAcyclicQuery:
         dirs are GC'd on resume). The engine's in-memory fields are the
         staging area itself (``_snapshot``/``_restore`` roll them back on
         failure). The manifest holds the ``_snapshot`` fields, with
-        watermark values JSON-encoded, and the spec's shape."""
+        watermark values and state schemas JSON-encoded, and the spec's
+        shape."""
         data = self._snapshot()
         data["watermarks"] = {r: _dump_value(v) for r, v in data["watermarks"].items()}
+        data["schemas"] = {rel: s.jsonValue() for rel, s in data["schemas"].items()}
         data["seg_ts"] = {
             rel: {p: [_dump_value(lo), _dump_value(hi)] for p, (lo, hi) in m.items()}
             for rel, m in data["seg_ts"].items()
@@ -728,7 +736,7 @@ class IncrementalAcyclicQuery:
             )
         self._version = data["version"]
         self._segments = data["segments"]
-        self._appends = data["appends"]
+        self._schemas = {rel: StructType.fromJson(s) for rel, s in data["schemas"].items()}
         self._last_batch = data["last_batch"]
         self._emitted = data["emitted"]
         self._state_rows = data["state_rows"]
@@ -758,27 +766,21 @@ class IncrementalAcyclicQuery:
     def _path(self, rel: str, version: int) -> str:
         return os.path.join(self.state_dir, f"{rel}_v{version}")
 
-    def _seg_path(self, rel: str, n: int) -> str:
-        return os.path.join(self.state_dir, f"{rel}_seg{n}")
-
     def _read_paths(self, rel: str, paths: list[str]) -> DataFrame:
+        if rel not in self._schemas:
+            raise ValueError(
+                f"relation {rel!r} has no state and no delta seen yet — "
+                "the first micro-batch must carry at least one row (or an "
+                "empty typed delta) for every relation in the spec"
+            )
         if not paths:
-            if rel not in self._schemas:
-                raise ValueError(
-                    f"relation {rel!r} has no state and no delta seen yet — "
-                    "the first micro-batch must carry at least one row (or an "
-                    "empty typed delta) for every relation in the spec"
-                )
             return self.spark.createDataFrame([], self._schemas[rel])
-        # ONE multi-path read, not a per-segment read + unionByName chain:
-        # per-segment reads cost a driver-side footer/schema inference EACH,
-        # making every batch O(live segments) of driver work — measured as a
-        # +0.1 s/batch creep in log-structured mode (tools/ivm_batch_scaling).
-        # All segments of a relation share one schema; pass it when known
-        # (resume may read before the first delta re-pins it — infer then).
-        reader = self.spark.read
-        if rel in self._schemas:
-            reader = reader.schema(self._schemas[rel])
+        # ONE multi-path read with the pinned schema, not a per-segment read
+        # + unionByName chain: per-segment reads cost a driver-side
+        # footer/schema inference EACH, making every batch O(live segments)
+        # of driver work — measured as a +0.1 s/batch creep in log-structured
+        # mode (tools/ivm_batch_scaling).
+        reader = self.spark.read.schema(self._schemas[rel])
         r = self._by_name.get(rel)
         if r is not None and r.buckets > 0 and len(paths) > 1:
             # multiple ``_bucket``-partitioned segment roots cannot share one
@@ -964,8 +966,8 @@ class IncrementalAcyclicQuery:
                 queue.append(v)
         return steps
 
-    # distinct probe keys above this are not pushed into the scan (bucket
-    # pruning still applies); keeps the per-term driver read bounded
+    # a probe with more distinct keys than this does not prune (the scan is
+    # the unpruned superset); keeps the per-term driver read bounded
     KEY_PUSHDOWN_CAP = 1024
     # bucketed states at or below this many rows skip probe pruning: the
     # full bucket scan is cheaper than the probe's two driver round-trips
@@ -997,21 +999,22 @@ class IncrementalAcyclicQuery:
         memo_key=None,
         rows_key=None,
     ):
-        """(bucket ids, per-column probe key values | None) the probe side
-        can possibly reach in relation ``r`` — bounded driver reads (≤
-        KEY_PUSHDOWN_CAP key rows; falls back to the ≤ r.buckets
-        distinct-bucket-id collect for wider probes). Bucket ids prune the
-        scan to the probed partition directories; key values additionally
-        push as per-bucket_key-column ``In`` filters (for multi-column keys
-        the per-column value sets are a conservative cross-product superset
-        of the probed tuples — non-matching keys can't join, so restriction
-        stays exact) that parquet page/rowgroup statistics of the key-sorted
-        bucket files prune on — rows read track the probe set, not
-        state/buckets. The probe side is the DELTA itself for one-hop
-        relations (memoized per batch — the same delta probes across every
-        virtual tree), or the accumulated delta-bounded join for ≥2-hop
-        relations (one capped, early-terminating collect per term: pruning
-        is TRANSITIVE down the tree)."""
+        """(bucket ids, per-column probe key values) the probe side can
+        possibly reach in relation ``r`` — one bounded driver read of ≤
+        KEY_PUSHDOWN_CAP key rows — or ``None`` for a probe wider than the
+        cap, which scans unpruned: over 1024 distinct keys realistically
+        probe every bucket anyway. An empty probe prunes to no bucket.
+        Bucket ids prune the scan to the probed partition directories; key
+        values additionally push as per-bucket_key-column ``In`` filters
+        (for multi-column keys the per-column value sets are a conservative
+        cross-product superset of the probed tuples — non-matching keys
+        can't join, so restriction stays exact) that parquet page/rowgroup
+        statistics of the key-sorted bucket files prune on — rows read
+        track the probe set, not state/buckets. The probe side is the DELTA
+        itself for one-hop relations (memoized per batch — the same delta
+        probes across every virtual tree), or the accumulated delta-bounded
+        join for ≥2-hop relations (one capped, early-terminating collect per
+        term: pruning is TRANSITIVE down the tree)."""
         if memo is not None and memo_key in memo:
             return memo[memo_key]
         # canonicalize probe keys to the STATE side's declared types before
@@ -1021,24 +1024,21 @@ class IncrementalAcyclicQuery:
         # different families would otherwise bucket equal values apart and
         # silently drop matching state rows. The cast also lands the pushed
         # In-filter values in the state column's exact type.
-        schema = self._schemas.get(r.name)
-        types = {f.name: f.dataType for f in schema.fields} if schema else {}
+        types = {f.name: f.dataType for f in self._schemas[r.name].fields}
         canon = [
-            (F.col(c).cast(types[k]) if k in types else F.col(c)).alias(f"_k{i}")
+            F.col(c).cast(types[k]).alias(f"_k{i}")
             for i, (c, k) in enumerate(zip(probe_cols, r.bucket_key))
         ]
         sel = canon + [_bucket_expr(canon, r.buckets).alias("_b")]
         # wide-probe fast path (round 9, from the fold profile): the key-
         # distinct below is a FULL SHUFFLE of the probe side, and a probe
-        # far above the cap paid it (plus a second full scan for the bucket
-        # ids) just to learn it was too wide — at sf1 that is two passes
-        # over a 2.5M-row delta per (delta, state) pair per batch. A raw
-        # row count is one scan-only job (no shuffle); above 64× the cap
-        # the distinct key set realistically exceeds the cap too, so go
-        # straight to the bucket-id distinct — which map-side-reduces every
-        # partition to ≤ buckets rows and shuffles almost nothing. Between
-        # cap and 64× cap the keys may still dedupe under the cap (heavily
-        # duplicated FK deltas), so the exact attempt is kept there.
+        # far above the cap would pay it just to learn it was too wide — at
+        # sf1 a pass over a 2.5M-row delta per (delta, state) pair per
+        # batch. A raw row count is one scan-only job (no shuffle); above
+        # 64× the cap the distinct key set realistically exceeds the cap
+        # too, so skip pruning outright. Between cap and 64× cap the keys
+        # may still dedupe under the cap (heavily duplicated FK deltas), so
+        # the exact attempt is kept there.
         # Round 10: the count is memoized per PROBE SOURCE (``rows_key``,
         # the delta relation for one-hop probes) — one scan-only job per
         # relation per batch, not one per (delta, state) pair, and none at
@@ -1050,45 +1050,20 @@ class IncrementalAcyclicQuery:
             n_probe_rows = memo[rows_key]
         else:
             n_probe_rows = probe_df.count()
-        wide = n_probe_rows > self.KEY_PUSHDOWN_CAP * 64
-        rows = (
-            []
-            if wide
-            else probe_df.select(*sel)
-            .distinct()
-            .limit(self.KEY_PUSHDOWN_CAP + 1)
-            .collect()
-        )
-        if not wide and len(rows) <= self.KEY_PUSHDOWN_CAP:
-            ids = sorted({row["_b"] for row in rows})
-            # NULL probe keys never equi-join, so dropping them from the In
-            # sets keeps the superset property (isin never matches NULL)
-            vals = tuple(
-                [v for v in {row[i] for row in rows} if v is not None]
-                for i in range(len(probe_cols))
+        out = None
+        if n_probe_rows <= self.KEY_PUSHDOWN_CAP * 64:
+            rows = (
+                probe_df.select(*sel).distinct().limit(self.KEY_PUSHDOWN_CAP + 1).collect()
             )
-            out = (ids, vals)
-        elif not wide and len({row["_b"] for row in rows}) >= r.buckets:
-            # over-cap probe whose capped SAMPLE already covers every bucket
-            # (optimization r11, guide §1.2): the full bucket-distinct scan
-            # below could only return a subset of what the sample proved —
-            # all of them — so skip that scan-job outright. Exact: the
-            # sampled buckets are definitely probed, and "all buckets" is
-            # the trivial superset of the true footprint.
-            out = (list(range(r.buckets)), None)
-        else:
-            # wide probe set: still bucket-prune (distinct ids are bounded by
-            # the bucket count however large the probe side is), skip key
-            # pushdown
-            ids = [
-                row[0]
-                for row in probe_df.select(
-                    _bucket_expr(canon, r.buckets).alias("b")
+            if len(rows) <= self.KEY_PUSHDOWN_CAP:
+                ids = sorted({row["_b"] for row in rows})
+                # NULL probe keys never equi-join, so dropping them from the
+                # In sets keeps the superset property (isin never matches NULL)
+                vals = tuple(
+                    [v for v in {row[i] for row in rows} if v is not None]
+                    for i in range(len(probe_cols))
                 )
-                .distinct()
-                .collect()
-            ]
-            out = (ids, None)
+                out = (ids, vals)
         if memo is not None:
             memo[memo_key] = out
         return out
@@ -1157,12 +1132,11 @@ class IncrementalAcyclicQuery:
         if pruning is not None:
             bucket_ids, key_vals = pruning
             side = side.filter(F.col(BUCKET).isin(bucket_ids))
-            if key_vals is not None:
-                # superset restriction (non-matching keys can't join): pushes
-                # to the parquet scan as one In filter per bucket_key column,
-                # pruned by page/rowgroup stats of the key-sorted bucket files
-                for c, vs in zip(r.bucket_key, key_vals):
-                    side = side.filter(F.col(c).isin(vs))
+            # superset restriction (non-matching keys can't join): pushes to
+            # the parquet scan as one In filter per bucket_key column, pruned
+            # by page/rowgroup stats of the key-sorted bucket files
+            for c, vs in zip(r.bucket_key, key_vals):
+                side = side.filter(F.col(c).isin(vs))
         side = side.drop(BUCKET)
         cond = reduce(
             Column.__and__,
@@ -1355,7 +1329,7 @@ class IncrementalAcyclicQuery:
         return {
             "version": dict(self._version),
             "segments": {k: list(v) for k, v in self._segments.items()},
-            "appends": dict(self._appends),
+            "schemas": dict(self._schemas),
             "seg_ts": {k: dict(v) for k, v in self._seg_ts.items()},
             "watermarks": dict(self._watermarks),
             "emitted": self._emitted,
@@ -1367,7 +1341,7 @@ class IncrementalAcyclicQuery:
     def _restore(self, snap: dict) -> None:
         self._version = snap["version"]
         self._segments = snap["segments"]
-        self._appends = snap["appends"]
+        self._schemas = snap["schemas"]
         self._seg_ts = snap["seg_ts"]
         self._watermarks = snap["watermarks"]
         self._emitted = snap["emitted"]
@@ -1450,19 +1424,20 @@ class IncrementalAcyclicQuery:
         return _run_parallel([scoped(name, fn) for name, fn in tasks])
 
     def _netted(self, rel: str) -> bool:
-        """Is ``rel``'s live state already its net multiset — none, or the
-        single version ``_path(rel, version)`` that every merge-mode write
-        and compaction produces? Anything else (appended ``_seg``
-        segments, also those a log-structured → merge resume leaves behind)
-        must be netted by whoever reads it per group."""
-        return self._segments.get(rel, []) in ([], [self._path(rel, self._version[rel])])
+        """Is ``rel``'s live state already its net multiset — none, or one
+        version? A state's first version is always a net (appends only
+        follow one), so anything else — a net plus appended versions, also
+        those a log-structured → merge resume leaves behind — must be netted
+        by whoever reads it per group."""
+        return len(self._segments.get(rel, [])) <= 1
 
     def _skippable(self, rel: str) -> bool:
         """May an EMPTY delta of ``rel`` leave its state as it is? Only when
         the relation has committed state that needs no rewrite: any live
-        state in log-structured mode, and in merge mode netted state — a raw
-        ``_seg`` left by a log-structured → merge resume must still be
-        netted by this batch's write, since merge mode keeps state netted."""
+        state under ``compact_every > 1``, and under ``compact_every=1``
+        netted state — appended versions left by a log-structured → merge
+        resume must still be netted by this batch's write, since merge mode
+        keeps state netted."""
         if not self._segments.get(rel):
             return False
         return self.compact_every > 1 or self._netted(rel)
@@ -1532,8 +1507,6 @@ class IncrementalAcyclicQuery:
             return False
         if any(("rowcount", n) not in memo for n in filt):
             return False
-        if any(s not in self._schemas for s in self._state_rows):
-            return False  # a resumed engine pins schemas as deltas arrive
         sized = [(self._schemas[s], n) for s, n in self._state_rows.items()]
         sized += [(self._schemas[n], memo[("rowcount", n)]) for n in filt]
         return self._fits_broadcast(sized)
@@ -1842,14 +1815,15 @@ class IncrementalAcyclicQuery:
 
     def _gate_presence(self, filt: Mapping[str, DataFrame]) -> tuple[dict, dict, dict]:
         """Gate presence stage: each relation's (new, old, Δ) versions for the
-        ΔJ terms. The post-batch view is the UNMERGED union old ∪ Δ in BOTH
-        state regimes — identical to the netted multiset in every join
-        (weights multiply) and aggregate (weights sum) by linearity, a
-        (+w, −w) pair contributing exactly zero — so the net runs once per
-        changed relation, inside its state write (``_net_write``). Semi/anti
-        gates swap the relation's multiset for its 0/1 PRESENCE view, and
-        its raw delta for the presence DELTA (keys whose net count crossed
-        zero this batch, computed over touched keys only)."""
+        ΔJ terms. The post-batch view is the UNMERGED union old ∪ Δ under
+        every ``compact_every`` — identical to the netted multiset in every
+        join (weights multiply) and aggregate (weights sum) by linearity, a
+        (+w, −w) pair contributing exactly zero — so the net runs at most
+        once per changed relation, inside its state write
+        (``_commit_state``). Semi/anti gates swap the relation's multiset
+        for its 0/1 PRESENCE view, and its raw delta for the presence DELTA
+        (keys whose net count crossed zero this batch, computed over touched
+        keys only)."""
         term_new: dict[str, DataFrame] = {}
         term_old: dict[str, DataFrame] = {}
         term_delta: dict[str, DataFrame] = {}
@@ -2127,107 +2101,48 @@ class IncrementalAcyclicQuery:
         ts_range: tuple | None = None,
         delta_rows: int | None = None,
     ) -> None:
-        """Persist one relation's post-batch state.
-
-        merge-and-rewrite mode nets the UNMERGED union old ∪ Δ INSIDE the
-        write (``_net_write``); log-structured mode appends ``delta`` as a
-        new segment (O(Δ) IO) and, past ``compact_every`` live segments,
-        compacts the union back to the net multiset. ``net_fn`` picks the
-        reduction (default ``_net``; ``_agg_net`` for the aggregate).
+        """Persist one state's post-batch version ``{rel}_v{n}`` by the one
+        commit rule (``__init__``): a state holding 1 to ``compact_every −
+        1`` live versions APPENDS ``delta`` as one more version; any other
+        state nets the UNMERGED union old ∪ Δ inside the write, with
+        ``net_fn`` (default ``_net``; ``_agg_net`` for the aggregate). Under
+        ``compact_every=1`` every commit is a net: merge-and-rewrite.
         Superseded paths go to ``cleanup``, deleted only after the whole
         batch's writes executed.
 
-        ``delta_rows`` is the delta's row count when known. With the
-        committed ``_state_rows`` it bounds the rows a net reads — the old
-        state plus the delta; a compaction reads only live segments, whose
-        count the append already added — and ``_net_write`` nets a small
-        bounded input in one task. ``None`` (or a relation with no committed
-        state yet) keeps the shuffle.
+        ``delta_rows`` is the delta's row count when known. It bounds the
+        rows an append writes and, with the committed ``_state_rows``, the
+        rows a net reads — the old state plus the delta — and
+        ``_write_state`` writes a small bounded input in one task. ``None``
+        (or a net of a state with no committed rows yet) keeps the shuffle.
 
         ``ts_range`` (ttl relations) is this write's driver-side superset of
-        its rows' event times; merged/compacted paths take the union of
-        their constituents — stale-wide, never stale-narrow."""
+        its rows' event times; a net takes the union of its constituents' —
+        stale-wide, never stale-narrow."""
         is_ttl = (r := self._by_name.get(rel)) is not None and r.ttl is not None
-        if self.compact_every == 1:
-            nxt = self._version[rel] + 1
-            p = self._path(rel, nxt)
-            merged = self._read_state(rel).unionByName(delta)
-            base = self._state_rows.get(rel)
-            bound = None if base is None or delta_rows is None else base + delta_rows
-            # exact: full rewrite
-            self._state_rows[rel] = self._net_write(rel, merged, p, net_fn, max_rows=bound)
-            self._version[rel] = nxt
-            cleanup.extend(self._segments.get(rel, []))
-            self._segments[rel] = [p]
+        live = self._segments.get(rel, [])
+        ranges = self._seg_ts.get(rel, {})
+        self._version[rel] += 1
+        p = self._path(rel, self._version[rel])
+        if 1 <= len(live) < self.compact_every:
+            # upper bound while appends accumulate: the next net can only
+            # shrink the true count
+            self._state_rows[rel] += self._write_state(rel, delta, p, max_rows=delta_rows)
+            self._segments[rel] = [*live, p]
             if is_ttl:
-                prior = self._seg_ts.get(rel, {}).values()
-                self._seg_ts[rel] = {p: _range_union([*prior, ts_range])}
+                self._seg_ts[rel] = {**ranges, p: ts_range or (None, None)}
             return
-        n = self._appends.get(rel, 0)
-        seg = self._seg_path(rel, n)
-        # upper bound while segments accumulate: appends add rows, the net
-        # reduction at compaction can only shrink the true count
-        n_seg = self._write_state(rel, delta, seg)
-        self._state_rows[rel] = self._state_rows.get(rel, 0) + n_seg
-        self._appends[rel] = n + 1
-        self._segments.setdefault(rel, []).append(seg)
-        if is_ttl:
-            self._seg_ts.setdefault(rel, {})[seg] = ts_range or (None, None)
-        if len(self._segments[rel]) > self.compact_every:
-            nxt = self._version[rel] + 1
-            cp = self._path(rel, nxt)
-            # exact again post-compaction
-            self._state_rows[rel] = self._net_write(
-                rel, self._read_state(rel), cp, net_fn, max_rows=self._state_rows[rel]
-            )
-            self._version[rel] = nxt
-            cleanup.extend(self._segments[rel])
-            self._segments[rel] = [cp]
-            if is_ttl:
-                self._seg_ts[rel] = {
-                    cp: _range_union(self._seg_ts.get(rel, {}).values())
-                }
-
-    def _net_write(
-        self,
-        rel: str,
-        df: DataFrame,
-        path: str,
-        net_fn=None,
-        max_rows: int | None = None,
-    ) -> int:
-        """Net a (possibly unmerged) weighted multiset and write it as one
-        state version with at most one exchange; returns the rows written.
-
-        A ``max_rows`` bound within the planner's broadcast rule
-        (``_fits_broadcast``) nets a ``coalesce(1)`` of the input in ONE
-        task: ``SinglePartition`` satisfies the net's clustering, so the
-        write plan has no exchange at all, and a bucketed write still lands
-        one file per bucket directory (the write sorts by ``_bucket``
-        first). A trickle batch's small states pay one job each instead of
-        a shuffle-map job plus a write job.
-
-        Otherwise a bucketed relation is repartitioned by ``_bucket`` FIRST;
-        the net's groupBy keys include ``_bucket``, so Catalyst elides the
-        aggregate's own exchange (HashPartitioning(_bucket) satisfies the
-        aggregate's clustering requirement: every group lives in one
-        partition), and the write's partitionBy sees data already
-        bucket-partitioned (round 9; round 8 paid two full-state exchanges).
-        Non-bucketed state shuffles once, in the net."""
-        net = net_fn or self._net
-        r = self._by_name.get(rel)
-        bucketed = r is not None and r.buckets > 0
-        if bucketed:
-            df = self._conform(rel, df)
-        if max_rows is not None and self._fits_broadcast([(df.schema, max_rows)]):
-            df = df.coalesce(1)
-        elif bucketed:
-            df = df.repartition(r.buckets, F.col(BUCKET))
-        # re-conform: the net's SUM may widen/reorder columns; a plain
-        # projection that preserves the child's partitioning
-        return self._write_state(
-            rel, self._conform(rel, net(df)), path, pre_partitioned=True
+        base = self._state_rows.get(rel)
+        bound = None if base is None or delta_rows is None else base + delta_rows
+        merged = self._read_state(rel).unionByName(delta)
+        # exact: the net of every live version and the delta
+        self._state_rows[rel] = self._write_state(
+            rel, merged, p, net_fn or self._net, max_rows=bound
         )
+        cleanup.extend(live)
+        self._segments[rel] = [p]
+        if is_ttl:
+            self._seg_ts[rel] = {p: _range_union([*ranges.values(), ts_range])}
 
     def _zone_col(self, r: RelSpec) -> Column:
         """Coarse event-time zone of a row — floor(ts / ttl_zone width), with
@@ -2242,58 +2157,80 @@ class IncrementalAcyclicQuery:
         return F.floor(ts / F.lit(w))
 
     def _write_state(
-        self, rel: str, df: DataFrame, path: str, pre_partitioned: bool = False
+        self,
+        rel: str,
+        df: DataFrame,
+        path: str,
+        net_fn=None,
+        max_rows: int | None = None,
     ) -> int:
-        """Write one state file set; returns the rows written. A bucketed
-        relation is partitioned on ``_bucket`` (parquet partition column) and
-        SORTED by ``_bucket`` then bucket_key within each write task, so the
-        layout stays one file per bucket directory whether one task writes
-        each bucket (hash-partitioned on ``_bucket``; at cluster scale the
-        same layout shards each bucket across executors) or one task writes
-        them all (a small state netted in one task, ``_net_write``). The key
-        sort within each file lets parquet page/rowgroup min-max statistics
-        make the pushed probe-key ``In`` filter prune within the bucket — together, the on-disk analogue of a keyed state store's
-        key-group + key index.
+        """Write one state version — an appended delta, or with ``net_fn``
+        the net of a (possibly unmerged) weighted multiset — with at most
+        one exchange; returns the rows written.
+
+        One partitioning rule serves both. A ``max_rows`` bound within the
+        planner's broadcast rule (``_fits_broadcast``) writes a
+        ``coalesce(1)`` of the input in ONE task: ``SinglePartition``
+        satisfies the net's clustering, so the write plan has no exchange at
+        all. A trickle batch's small states and appends pay one job each
+        instead of a shuffle-map job plus a write job. Otherwise a bucketed
+        relation is repartitioned by ``_bucket`` FIRST; the net's groupBy
+        keys include ``_bucket``, so Catalyst elides the aggregate's own
+        exchange (HashPartitioning(_bucket) satisfies the aggregate's
+        clustering requirement: every group lives in one partition), and the
+        write's partitionBy sees data already bucket-partitioned (round 9;
+        round 8 paid two full-state exchanges). Non-bucketed state shuffles
+        once, in the net.
+
+        A bucketed relation is written partitioned on ``_bucket`` (parquet
+        partition column) and SORTED by ``_bucket`` then bucket_key within
+        each write task, so the layout stays one file per bucket directory
+        whether one task writes each bucket (hash-partitioned on
+        ``_bucket``; at cluster scale the same layout shards each bucket
+        across executors) or one task writes them all. The key sort within
+        each file lets parquet page/rowgroup min-max statistics make the
+        pushed probe-key ``In`` filter prune within the bucket — together,
+        the on-disk analogue of a keyed state store's key-group + key index.
 
         A ttl relation's state is instead sorted by its event-time column, so
         the eviction band read ([old horizon, new horizon), a pushed range
         predicate) prunes to the closing rowgroups — fresh rows and the old-ts
-        eviction negations of a log-structured segment land in separate
+        eviction negations of an appended version land in separate
         rowgroups instead of widening every rowgroup's min-max. A relation
         that is BOTH bucketed and ttl keeps the key sort (the probe-key In
         pushdown runs on every delta-join term, eviction once per batch) —
         declaring ``ttl_zone`` inserts a coarse event-time zone AHEAD of the
         key sort, so rowgroups cluster by zone (narrow ts min/max: the band
-        read prunes by rowgroup even in a post-compaction segment spanning
-        the whole window) while keys stay sorted within each zone (the In
-        filter reads at most one rowgroup run per zone). Without ttl_zone,
-        band reads on bucketed state prune at segment granularity only —
-        documented trade-off."""
+        read prunes by rowgroup even in a netted version spanning the whole
+        window) while keys stay sorted within each zone (the In filter reads
+        at most one rowgroup run per zone). Without ttl_zone, band reads on
+        bucketed state prune at version granularity only — documented
+        trade-off."""
         from pyspark.sql import Observation
 
         r = self._by_name.get(rel)
+        bucketed = r is not None and r.buckets > 0
+        if max_rows is not None and self._fits_broadcast([(df.schema, max_rows)]):
+            df = df.coalesce(1)
+        elif bucketed:
+            df = df.repartition(r.buckets, F.col(BUCKET))
+        if net_fn is not None:
+            # re-conform: the net's SUM may widen/reorder columns; a plain
+            # projection that preserves the child's partitioning
+            df = self._conform(rel, net_fn(df))
         # every write gets its row count OBSERVED on the write plan itself (a
         # map-side CollectMetrics — no partitioning change, no extra job): it
         # feeds the cost-based probe-pruning gate (optimization round r11)
         # and the next write's row bound, both via _state_rows
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if r is not None and r.buckets > 0:
+        if bucketed:
             sort_cols: list = [F.col(BUCKET)]
             if r.ttl is not None and r.ttl_zone is not None:
                 sort_cols.append(self._zone_col(r))
             sort_cols += [F.col(c) for c in r.bucket_key]
-            # ``pre_partitioned`` (from _net_write): the input is already
-            # hash-partitioned on _bucket, or is one partition — repartitioning
-            # again would add back exactly the exchange the fused net+write
-            # elides
-            out = (
-                df
-                if pre_partitioned
-                else df.repartition(r.buckets, F.col(BUCKET))
-            )
             (
-                out.sortWithinPartitions(*sort_cols)
+                df.sortWithinPartitions(*sort_cols)
                 .write.mode("overwrite")
                 .partitionBy(BUCKET)
                 .parquet(path)

@@ -968,21 +968,35 @@ def test_fused_net_write_single_exchange(spark, tmp_path, monkeypatch):
     ingest job counts both deltas) within the broadcast rule, the net runs
     in one task: NO Exchange, and still one file per ``_bucket=``
     directory. Results themselves are covered by every other test; this
-    pins the PLAN."""
+    pins the PLAN: the one the bucketed write sorts within partitions and
+    hands to the parquet writer."""
     import os
+    import threading
 
     import flink_and_acyclic_schema_spark.streaming.acyclic as am
 
     captured: dict = {}
     real = am.IncrementalAcyclicQuery._write_state
+    df_cls = type(spark.range(1))  # the runtime class (Spark 4 classic)
+    real_sort = df_cls.sortWithinPartitions
+    local = threading.local()  # state writes run on commit-wave threads
 
-    def spy(self, rel, df, path, pre_partitioned=False):
-        if rel == "fact":
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            captured[rel] = (plan, pre_partitioned, path)
-        return real(self, rel, df, path, pre_partitioned)
+    def spy(self, rel, df, path, net_fn=None, max_rows=None):
+        local.write = (rel, path, net_fn, max_rows)
+        try:
+            return real(self, rel, df, path, net_fn, max_rows)
+        finally:
+            local.write = None
+
+    def sort_spy(self, *cols, **kwargs):
+        write = getattr(local, "write", None)
+        if write is not None and write[0] == "fact":
+            plan = self._jdf.queryExecution().executedPlan().toString()
+            captured["fact"] = (plan, *write[1:])
+        return real_sort(self, *cols, **kwargs)
 
     monkeypatch.setattr(am.IncrementalAcyclicQuery, "_write_state", spy)
+    monkeypatch.setattr(df_cls, "sortWithinPartitions", sort_spy)
     fact = RelSpec("fact", buckets=4, bucket_key=("k1",))
     dims = [(i, f"a{i}", 1) for i in range(10)]
 
@@ -1006,13 +1020,13 @@ def test_fused_net_write_single_exchange(spark, tmp_path, monkeypatch):
         assert got == {(i, i) for i in range(1, 8)} | {(9, 9)}
 
     run((fact,))
-    plan, pre_partitioned, _ = captured["fact"]
-    assert pre_partitioned is True
+    plan, _, net_fn, max_rows = captured["fact"]
+    assert net_fn is not None and max_rows is None
     assert plan.count("Exchange") == 1, plan
 
     run((fact, RelSpec("dim1", join_on=("d1", "k1"))))
-    plan, pre_partitioned, path = captured["fact"]
-    assert pre_partitioned is True
+    plan, path, net_fn, max_rows = captured["fact"]
+    assert net_fn is not None and max_rows is not None
     assert "Exchange" not in plan, plan
     buckets = [d for d in os.listdir(path) if d.startswith("_bucket=")]
     assert len(buckets) > 1, buckets
@@ -1760,10 +1774,11 @@ def test_factored_random_tree_shapes_match_per_term(
 
 def test_merge_engine_resumed_log_structured_continues_exactly(spark, tmp_path):
     """A merge-mode stream resumed mid-stream with compact_every=3 continues
-    exactly: every prefix equals a merge-mode twin's, appended segments
+    exactly: every prefix equals a merge-mode twin's, appended versions
     accumulate on top of the netted merge-mode version, and the third
-    log-structured batch compacts them back to one netted version
-    (linearity: the regimes differ only in when segments are netted)."""
+    log-structured batch, with no append slot left, nets them back to one
+    version (linearity: the regimes differ only in when versions are
+    netted)."""
     ops = []
     for i in range(4):
         batch = {
@@ -1783,14 +1798,59 @@ def test_merge_engine_resumed_log_structured_continues_exactly(spark, tmp_path):
             eng = IncrementalAcyclicQuery(
                 spark, sdir, CHAIN_SPEC, compact_every=3, resume=True
             )
-            assert eng._segments["leaf"] == [eng._path("leaf", 1)]
+            assert len(eng._segments["leaf"]) == 1 and eng._netted("leaf")
         eng.process_batch(b, batch_id=i)
         twin.process_batch(b, batch_id=i)
         assert _chain_result(eng.result()) == _chain_result(twin.result())
-        if i == 2:  # two appended segments on top of the merge-mode version
-            assert len(eng._segments["leaf"]) == 3
-            assert len(eng._segments["agg"]) == 3
-    # the third appended segment tipped compaction: one netted version again
-    assert eng._segments["leaf"] == [eng._path("leaf", 2)]
-    assert eng._segments["agg"] == [eng._path("agg", 2)]
+        if i == 2:  # two appended versions on top of the merge-mode version
+            assert len(eng._segments["leaf"]) == 3 and not eng._netted("leaf")
+            assert len(eng._segments["agg"]) == 3 and not eng._netted("agg")
+    # three live versions left no append slot: one netted version again
+    for rel in ("leaf", "agg"):
+        assert len(eng._segments[rel]) == 1 and eng._netted(rel)
+    assert _chain_result(eng.result())  # non-trivial
+
+
+def test_one_commit_rule_nets_first_and_writes_each_state_once(spark, tmp_path):
+    """compact_every=3 follows the same commit rule as merge mode: the first
+    batch nets each state into ONE physically netted version (a duplicate
+    row summed, a +1/-1 pair gone), the next two batches append, and the
+    fourth — no append slot left — nets every live version with its delta
+    in ONE write per state, one job per ``state_write:<rel>`` phase rather
+    than an append followed by a compaction. Every prefix's result equals a
+    compact_every=1 twin's."""
+    ops = [
+        {
+            "fact": [(1, 10, 1), (1, 10, 1), (2, 20, 1), (3, 7, 1), (3, 7, -1)],
+            "mid": [(1, 100, 1), (2, 101, 1), (2, 101, 1)],
+            "leaf": [(100, 1, 1), (101, 2, 1), (101, 5, 1), (101, 5, -1)],
+        }
+    ] + [
+        {
+            "fact": [(i, 5 * i, 1)],
+            "mid": [(i, 100 + i % 2, 1)],
+            "leaf": [(100 + i % 2, i, 1)] + ([(100, 1, -1)] if i == 3 else []),
+        }
+        for i in (1, 2, 3)
+    ]
+    dfs = _chain_batches(spark, ops)
+    eng = IncrementalAcyclicQuery(spark, str(tmp_path / "k3"), CHAIN_SPEC, compact_every=3)
+    twin = IncrementalAcyclicQuery(spark, str(tmp_path / "k1"), CHAIN_SPEC)
+    rels = ("fact", "mid", "leaf")
+    for i, b in enumerate(dfs):
+        eng.instrument = i == 3
+        eng.process_batch(b, batch_id=i)
+        twin.process_batch(b, batch_id=i)
+        assert _chain_result(eng.result()) == _chain_result(twin.result()), i
+        live = {rel: len(eng._segments[rel]) for rel in (*rels, "agg")}
+        assert live == dict.fromkeys(live, [1, 2, 3, 1][i]), (i, live)
+        if i == 0:  # one physically netted version per state
+            for rel in rels:
+                st = eng._read_state(rel)
+                assert st.count() == st.drop("weight").distinct().count(), rel
+                assert st.filter("weight = 0").count() == 0, rel
+            fact = eng._read_state("fact").select("k1", "v", "weight").collect()
+            assert {tuple(r) for r in fact} == {(1, 10, 2), (2, 20, 1)}
+    for rel in rels:
+        assert eng.last_profile[f"state_write:{rel}"]["jobs"] == 1, eng.last_profile
     assert _chain_result(eng.result())  # non-trivial

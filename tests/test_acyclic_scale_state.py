@@ -438,8 +438,8 @@ def test_empty_batch_advances_last_batch(spark, tmp_path):
 
 def test_bucketed_state_survives_resume(spark, tmp_path):
     """Crash-resume with bucketed state: the manifest-committed partitioned
-    dirs are re-read by schema inference (partition column discovered), the
-    next delta re-pins the canonical schema, and results still match the
+    dirs are re-read with the manifest-committed canonical schema (the
+    ``_bucket`` partition column included), and results still match the
     plain engine — the resume ∘ bucketing composition."""
     spec = _spec(li_extra={"buckets": 8, "bucket_key": ("l_key",)})
     sdir = str(tmp_path / "b")
@@ -716,19 +716,19 @@ def test_prune_gate_skips_small_and_empty_state(spark, tmp_path, monkeypatch):
 
 
 def test_state_rows_tracking_and_resume(spark, tmp_path):
-    """``_state_rows`` is exact after merge-mode rewrites and compactions, an
-    UPPER BOUND while log-structured segments accumulate, and rides the
-    atomic manifest across resume."""
+    """``_state_rows`` is exact after every net, an UPPER BOUND while
+    appended versions accumulate, and rides the atomic manifest across
+    resume."""
     spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
     state_dir = str(tmp_path / "rows_track")
     eng = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
-    _feed(spark, eng, BATCHES)  # 2 appended segments, no compaction yet
+    _feed(spark, eng, BATCHES)  # a netted version plus one append
     # appends accumulate an upper bound: 40 + 3 delta rows (one is a delete)
     assert eng._state_rows["lineitem"] == 43
     eng.process_batch(
         {"lineitem": spark.createDataFrame([(9, 9, 1)], LI_SCHEMA)}, batch_id=2
     )
-    eng.process_batch(  # 4th segment > compact_every=3 -> compaction, exact
+    eng.process_batch(  # 3 live versions: no append slot -> a net, exact
         {"lineitem": spark.createDataFrame([(10, 2, 1)], LI_SCHEMA)}, batch_id=3
     )
     assert len(eng._segments["lineitem"]) == 1
@@ -745,7 +745,7 @@ def test_state_rows_tracking_and_resume(spark, tmp_path):
 MANIFEST_KEYS = (
     "version",
     "segments",
-    "appends",
+    "schemas",
     "seg_ts",
     "watermarks",
     "emitted",
@@ -840,26 +840,23 @@ def test_resume_rejects_a_top_k_the_state_was_written_without(spark, tmp_path, c
 def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
     """Merge-mode state is always NETTED (merge-mode reads skip the lazy
     net, so a delete must physically cancel its state row) — also after a
-    cross-regime resume: a log-structured engine leaves ONE raw appended
-    segment holding a duplicate-key row and a +1/-1 pair; reopened with
-    compact_every=1, its first commit — on OTHER keys, or with an EMPTY
-    lineitem delta, which must not skip the rewrite of raw state — must net
-    that segment, keep ``_state_rows`` exact, and answer like a merge-mode
-    engine fed the same batches from the start."""
+    cross-regime resume: a log-structured engine leaves a netted version
+    plus ONE raw appended version, which together hold a duplicate-key row
+    and a +1/-1 pair; reopened with compact_every=1, its first commit — on
+    OTHER keys, or with an EMPTY lineitem delta, which must not skip the
+    rewrite of raw state — must net both versions, keep ``_state_rows``
+    exact, and answer like a merge-mode engine fed the same batches from
+    the start."""
     spec = _spec(li_extra={"buckets": 4, "bucket_key": ("l_key",)})
-    b0 = (
-        [(o, o % 4, 1) for o in range(8)],
-        # (1, 2) twice: a duplicate-key row; (30, 3) +1/-1: a zero-net pair
-        [(o, o + 1, 1) for o in range(8)] + [(1, 2, 1), (30, 3, 1), (30, 3, -1)],
-    )
+    b0 = ([(o, o % 4, 1) for o in range(8)], [(o, o + 1, 1) for o in range(8)])
+    # appended: (1, 2) again, a duplicate-key row; (30, 3) +1/-1, a zero-net pair
+    b1 = ([], [(1, 2, 1), (30, 3, 1), (30, 3, -1)])
     for case, li_delta in (("other_keys", [(20, 5, 1), (21, 6, 1)]), ("empty", [])):
-        b1 = ([(20, 1, 1)], li_delta)
+        b2 = ([(20, 1, 1)], li_delta)
         state_dir = str(tmp_path / f"cross_regime_{case}")
         log = IncrementalAcyclicQuery(spark, state_dir, spec, compact_every=3)
-        _feed(spark, log, [b0])
-        assert [p.rsplit("/", 1)[-1] for p in log._segments["lineitem"]] == [
-            "lineitem_seg0"
-        ]
+        _feed(spark, log, [b0, b1])
+        assert len(log._segments["lineitem"]) == 2 and not log._netted("lineitem")
         raw = log._read_state("lineitem")
         assert raw.count() > raw.dropDuplicates(["l_key", "l_qty"]).count()
         eng = IncrementalAcyclicQuery(
@@ -867,10 +864,10 @@ def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
         )
         eng.process_batch(
             {
-                "orders": spark.createDataFrame(b1[0], ORD_SCHEMA),
-                "lineitem": spark.createDataFrame(b1[1], LI_SCHEMA),
+                "orders": spark.createDataFrame(b2[0], ORD_SCHEMA),
+                "lineitem": spark.createDataFrame(b2[1], LI_SCHEMA),
             },
-            batch_id=1,
+            batch_id=2,
         )
         st = eng._read_state("lineitem")
         key_cols = [c for c in st.columns if c != "weight"]
@@ -879,8 +876,9 @@ def test_merge_mode_nets_a_raw_log_structured_segment(spark, tmp_path):
         assert st.filter("l_key = 30").count() == 0  # the +1/-1 pair canceled
         assert st.filter("l_key = 1 AND l_qty = 2").first()["weight"] == 2
         assert eng._state_rows["lineitem"] == st.count()
+        assert eng._netted("lineitem"), case
         got = sorted(tuple(r) for r in eng.result().collect())
-        want = _feed(spark, _engine(spark, tmp_path, spec), [b0, b1])
+        want = _feed(spark, _engine(spark, tmp_path, spec), [b0, b1, b2])
         assert got == want and got, case
 
 
@@ -933,11 +931,11 @@ def test_merge_mode_read_nets_raw_log_structured_segments(spark, tmp_path):
 def test_wide_probe_sample_covering_all_buckets_skips_fallback_scan(
     spark, tmp_path, monkeypatch
 ):
-    """When the capped distinct sample of an over-cap probe already covers
-    EVERY bucket, the fallback full-scan bucket-distinct is provably useless
-    (it could only confirm what the sample proved) — r11 skips it: exactly
-    one distinct() runs, and the result is the all-buckets trivial superset
-    with no key pushdown."""
+    """An over-cap probe does not prune: after exactly one capped distinct()
+    it returns ``None``, the unpruned scan — over KEY_PUSHDOWN_CAP distinct
+    keys realistically probe every bucket, so a bucket-id scan could only
+    confirm the all-buckets superset. A probe within the cap prunes to its
+    buckets and pushes its keys."""
     spec = _spec(li_extra={"buckets": 8, "bucket_key": ("l_key",)})
     eng = _engine(spark, tmp_path, spec)
     calls = {"n": 0}
@@ -952,18 +950,16 @@ def test_wide_probe_sample_covering_all_buckets_skips_fallback_scan(
         return orig_distinct(self)
 
     monkeypatch.setattr(df_cls, "distinct", counting_distinct)
+    # the engine probes only committed state, whose schema is pinned
+    eng._conform("lineitem", spark.createDataFrame([], LI_SCHEMA))
     # > KEY_PUSHDOWN_CAP distinct keys spread across all 8 buckets
     cap = IncrementalAcyclicQuery.KEY_PUSHDOWN_CAP
     wide_delta = eng._conform(
         "orders",
         spark.createDataFrame([(o, o % 4, 1) for o in range(2 * cap)], ORD_SCHEMA),
     ).localCheckpoint()
-    ids, key_vals = eng._probe_pruning(wide_delta, spec.relations[2], ("o_key",))
-    assert ids == list(range(8)) and key_vals is None
+    assert eng._probe_pruning(wide_delta, spec.relations[2], ("o_key",)) is None
     assert calls["n"] == 1  # the limit attempt only — no fallback scan
-    # an over-cap probe that does NOT cover all buckets still runs the
-    # fallback and prunes: keys chosen so every one hashes into the buckets
-    # of a 2-value seed is impractical — instead check the narrow direction:
     calls["n"] = 0
     narrow = eng._conform(
         "orders", spark.createDataFrame([(7, 3, 1)], ORD_SCHEMA)
@@ -1074,6 +1070,32 @@ def test_q10_trickle_batch_job_budget(spark, tmp_path):
     assert eng.topk_delta().count() == 0
     assert eng._last_batch == 2
     assert _q10_topk(eng) == _q10_topk(once)
+
+
+def test_resumed_q10_trickle_keeps_the_one_task_plan(spark, tmp_path):
+    """The state schemas ride the manifest, so an engine resumed right after
+    the bootstrap sizes its committed states without waiting for deltas to
+    re-pin them: its first trickle batch folds in one task with the same
+    per-phase job map as the engine that ran the bootstrap, and maintains
+    the same top-20."""
+    from flink_and_acyclic_schema_spark.plans.ivm_topk_ext import _q10_topk_spec
+
+    boot = _q10_batch(spark, tmp_path, **Q10_BOOT)
+    trickle = _q10_batch(spark, tmp_path, **Q10_TRICKLE)
+    jobs, tops = {}, {}
+    for resume in (False, True):
+        sdir = str(tmp_path / f"q10_resume_{resume}")
+        eng = IncrementalAcyclicQuery(spark, sdir, _q10_topk_spec())
+        eng.process_batch(boot, batch_id=0)
+        if resume:
+            eng = IncrementalAcyclicQuery(spark, sdir, _q10_topk_spec(), resume=True)
+        eng.instrument = True
+        eng.process_batch(trickle, batch_id=1)
+        assert eng.last_one_task, resume
+        jobs[resume] = {phase: p["jobs"] for phase, p in eng.last_profile.items()}
+        tops[resume] = _q10_topk(eng)
+    assert jobs[True] == jobs[False], jobs
+    assert tops[True] == tops[False] and tops[True]
 
 
 @pytest.fixture

@@ -580,12 +580,13 @@ def test_ttl_merge_resumed_log_structured_matches_recompute(spark, tmp_path):
             )
         eng.process_batch({"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i)
         twin.process_batch({"events": spark.createDataFrame(rows, EV_SCHEMA)}, batch_id=i)
-        if i == 2:  # two appended segments on top of the merge-mode version
+        if i == 2:  # two appended versions on top of the merge-mode version
             assert len(eng._segments["events"]) == 3
         assert sorted(tuple(r) for r in eng.result().collect()) == sorted(
             tuple(r) for r in twin.result().collect()
         )
-    assert eng._segments["events"] == [eng._path("events", 2)]  # compacted
+    # three live versions left no append slot: netted into one version
+    assert len(eng._segments["events"]) == 1 and eng._netted("events")
     got = sorted(tuple(r) for r in eng.result().collect())
     want = _recompute([r for b in batches for r in b])
     assert got == want and got  # exact and non-trivial

@@ -1,5 +1,6 @@
 """Measure per-batch IVM cost as state grows: merge-and-rewrite vs
-log-structured (streaming/acyclic.py's two state regimes).
+log-structured (streaming/acyclic.py's commit rule at compact_every=1 and
+at a compact_every larger than the stream).
 
 Setup isolates state IO from join work: orders is the tree ROOT (its state is
 never on the probe side of any delta-join term) and customer arrives once in
@@ -9,8 +10,10 @@ only component that scales with accumulated state is the state COMMIT:
 
 - merge mode (compact_every=1): read + net-merge + rewrite the full orders
   state every batch — per-batch cost grows linearly with total ingested rows;
-- log mode (compact_every > n_batches): append the delta as one new segment —
-  per-batch cost stays flat (the O(Δ) IVM promise at 100 TB).
+- log mode (compact_every > n_batches): the first batch nets its delta into
+  the first state version, like merge mode (there is no state to append
+  to); every later batch appends the delta as one more version — per-batch
+  cost stays flat (the O(Δ) IVM promise at 100 TB).
 
 The aggregate state is group-count-sized (constant) in both regimes.
 

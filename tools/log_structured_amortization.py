@@ -8,8 +8,9 @@ shape) over a LONG stream — default 16 micro-batches — once per regime:
 
 - merge-mode  (compact_every=1): every batch pays one fused full-state
   shuffle per changed bucketed relation;
-- log-structured (compact_every=K): batches append O(Δ) segments, every
-  K-th batch pays the compaction rewrite.
+- log-structured (compact_every=K): the first batch nets, the next K-1
+  append O(Δ) versions, and every K-th batch pays the netting rewrite —
+  one write per state, the same net merge mode pays every batch.
 
 Records per-batch engine seconds + profiled jobs and the CUMULATIVE series
 for both, plus the exactness guard (maintained top-20 == from-scratch ORDER
